@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 /** Driver-run benchmark: times every gated query at SPARK_GRAFT_SF_DIR and
   * prints one JSON line.
@@ -76,32 +75,7 @@ object Bench {
     val budgetSec = sys.env.getOrElse("SPARK_GRAFT_BENCH_BUDGET", "900").toDouble
     val jvmStart = java.lang.management.ManagementFactory.getRuntimeMXBean.getStartTime
     def elapsedSec: Double = (System.currentTimeMillis() - jvmStart) / 1e3
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // ContextCleaner frees shuffle files, broadcasts, and checkpoint RDD
-      // blocks only when a GC runs; with a large mostly-idle heap the JVM
-      // may not GC for the whole bench, so ~1000 query executions accumulate
-      // state and progressively slow the later ones (measured in r2: 2nd
-      // half of the run 3.5× the 1st). Checkpoint BLOCKS — the bulk of the
-      // accumulation — are now dropped explicitly after every query (see
-      // the cleanup below), so the periodic System.gc() is only a backstop
-      // for shuffle/broadcast registrations. r4's 30s interval was itself
-      // a measurement hazard: System.gc() is a stop-the-world FULL
-      // collection, and in the r4 driver environment those pauses landed
-      // on whatever query was running (a uniform ~4 s inflation across
-      // trivially-fast queries — q113 4.7 s driver vs 0.04 s recorded).
-      .config("spark.cleaner.periodicGC.interval", "300s")
-      // the whole-stage-codegen class cache holds only 100 entries by
-      // default; ~200 queries × several codegen stages each overflow it
-      // between rounds, so every round would silently recompile everything
-      // (measured in r3: 119 s vs 53 s for adjacent executions). Size it
-      // for the full suite.
-      .config("spark.sql.codegen.cache.maxEntries", "10000")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Graft.session(cpus.toInt)
 
     // optional regex over query names (builder-side scaling runs time just
     // the heavy pipelines at multiple SFs); the driver sets no filter and

@@ -23,7 +23,7 @@ import org.apache.spark.unsafe.types.UTF8String
   * eval path (higher-order functions are CodegenFallback), which makes
   * the suite's heaviest query both slower than it needs to be and
   * exposed to session-wide JIT profile pollution. This kernel is one
-  * tight loop per document with a thread-local MessageDigest — fused
+  * tight loop per document over the shared md5-60 helper — fused
   * into whole-stage codegen, immune to expression-eval profile state.
   *
   * 100 TB note: O(grams) digest work per document, map-side at the scan.
@@ -50,33 +50,18 @@ case class GramScore(child: Expression) extends UnaryExpression {
 
 object GramScore {
 
-  private val digests = new ThreadLocal[java.security.MessageDigest] {
-    override def initialValue(): java.security.MessageDigest =
-      java.security.MessageDigest.getInstance("MD5")
-  }
-
-  /** md5_60("w:" + g) % 2001 − 1000 — the per-gram weight. The first 15
-    * hex chars of the digest are bytes 0..6 plus the HIGH nibble of
-    * byte 7 (two hex chars per byte, big-endian within the string).
-    */
-  private def weight(md: java.security.MessageDigest, g: String): Long = {
-    val d = md.digest(("w:" + g).getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    var v = 0L
-    var i = 0
-    while (i < 7) { v = (v << 8) | (d(i) & 0xffL); i += 1 }
-    v = (v << 4) | ((d(7) & 0xf0L) >> 4)
-    v % 2001L - 1000L
-  }
+  /** md5_60("w:" + g) % 2001 − 1000 — the per-gram weight. */
+  private def weight(g: String): Long =
+    graft.functions.TextFunctions.md5Hash60Of("w:" + g) % 2001L - 1000L
 
   /** Static kernel shared by interpreted eval and generated code. */
   def score(s: UTF8String): Long = {
     val toks = s.toString.split(" ", -1) // negative limit: trailing empties kept
-    val md = digests.get()
     var sum = 0L
     var i = 0
     while (i < toks.length) {
-      sum += weight(md, toks(i))
-      if (i + 1 < toks.length) sum += weight(md, toks(i) + " " + toks(i + 1))
+      sum += weight(toks(i))
+      if (i + 1 < toks.length) sum += weight(toks(i) + " " + toks(i + 1))
       i += 1
     }
     sum

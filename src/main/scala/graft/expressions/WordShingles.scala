@@ -63,23 +63,6 @@ case class WordShingles(child: Expression, n: Int, distinct: Boolean, hashed: Bo
 
 object WordShingles {
 
-  private val digests = new ThreadLocal[java.security.MessageDigest] {
-    override def initialValue(): java.security.MessageDigest =
-      java.security.MessageDigest.getInstance("MD5")
-  }
-
-  /** md5Hash60: first 15 hex chars of md5(g) as a long — bytes 0..6 plus
-    * the high nibble of byte 7 (the [[GramScore]] law, without the "w:"
-    * prefix or the modular fold).
-    */
-  private def hash60(md: java.security.MessageDigest, g: String): Long = {
-    val d = md.digest(g.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    var v = 0L
-    var i = 0
-    while (i < 7) { v = (v << 8) | (d(i) & 0xffL); i += 1 }
-    (v << 4) | ((d(7) & 0xf0L) >> 4)
-  }
-
   /** Static kernel shared by interpreted eval and generated code. */
   def shingles(s: UTF8String, n: Int, distinct: Boolean, hashed: Boolean): ArrayData = {
     val toks = s.toString.split(" ", -1) // negative limit: trailing empties kept
@@ -90,7 +73,6 @@ object WordShingles {
     }
     // build each shingle once; reuse a single StringBuilder
     val sb = new java.lang.StringBuilder
-    val md = if (hashed) digests.get() else null
     if (hashed) {
       val out = new Array[Long](m)
       var i = 0
@@ -98,7 +80,7 @@ object WordShingles {
         sb.setLength(0)
         var k = 0
         while (k < n) { if (k > 0) sb.append(' '); sb.append(toks(i + k)); k += 1 }
-        out(i) = hash60(md, sb.toString)
+        out(i) = graft.functions.TextFunctions.md5Hash60Of(sb.toString)
         i += 1
       }
       if (!distinct) return ArrayData.toArrayData(out)

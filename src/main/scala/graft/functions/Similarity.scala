@@ -298,17 +298,6 @@ object Similarity {
     sqrt(aggregate(zip_with(a, b, (x, y) => (x - y) * (x - y)),
       lit(0.0), (acc, v) => acc + v))
 
-  /** [[TextFunctions.md5Hash60]] evaluated on the driver (same 60-bit law: first 15 hex
-    * chars of md5, non-negative), for deriving plan-time literal tables
-    * from the shared formula discipline.
-    */
-  private def md5Hash60Local(s: String): Long = {
-    val dig = java.security.MessageDigest.getInstance("MD5")
-      .digest(s.getBytes("UTF-8"))
-    java.lang.Long.parseLong(
-      dig.take(8).map(b => f"$b%02x").mkString.take(15), 16)
-  }
-
   /** Formula-derived product-quantization codebook: `m` subspaces ×
     * `ks` sub-centroids × `subDim` dims, component (md5Hash60("pq:m:j:d")
     * % 2001 - 1000)/1024 — dyadic, exactly representable in DOUBLE, the
@@ -321,7 +310,7 @@ object Similarity {
   private[graft] def pqCodebook(m: Int, ks: Int, subDim: Int)
       : IndexedSeq[IndexedSeq[IndexedSeq[Double]]] =
     (0 until m).map(mm => (0 until ks).map(j => (0 until subDim).map(d =>
-      ((md5Hash60Local(s"pq:$mm:$j:$d") % 2001) - 1000).toDouble / 1024.0)))
+      ((TextFunctions.md5Hash60Of(s"pq:$mm:$j:$d") % 2001) - 1000).toDouble / 1024.0)))
 
   /** Product-quantization encode (Jegou/Douze/Schmid, TPAMI 2011): split
     * the `dims`-dim DOUBLE vector into `m` contiguous subspaces and pick,

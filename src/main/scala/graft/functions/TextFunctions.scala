@@ -215,6 +215,22 @@ object TextFunctions {
   def md5Hash60(c: Column): Column =
     conv(substring(md5(c), 1, 15), 16, 10).cast("long")
 
+  private val md5s = ThreadLocal.withInitial[java.security.MessageDigest](
+    () => java.security.MessageDigest.getInstance("MD5"))
+
+  /** [[md5Hash60]] of one string on the JVM, for the native kernels and
+    * driver-side literal tables: the first 15 hex chars of md5 are bytes
+    * 0..6 plus the HIGH nibble of byte 7 (two hex chars per byte,
+    * big-endian within the string).
+    */
+  def md5Hash60Of(s: String): Long = {
+    val d = md5s.get().digest(s.getBytes(java.nio.charset.StandardCharsets.UTF_8))
+    var v = 0L
+    var i = 0
+    while (i < 7) { v = (v << 8) | (d(i) & 0xffL); i += 1 }
+    (v << 4) | ((d(7) & 0xf0L) >> 4)
+  }
+
   /** Document fingerprint: md5 of whitespace-normalized lowercase text.
     * Collapsing runs of whitespace + trim + lower makes the fingerprint
     * robust to formatting-only edits; md5 keeps it 128-bit

@@ -59,7 +59,7 @@ object CurationDagQueries {
     // in a group differ by 20 ≡ 2 (mod 3), so at most one would survive
     // the FILTER and the dedup election would stop shrinking anything).
     // Same predicate in the oracle's three documents scans; the FULL
-    // corpus DAG stays in the sf1 scaling rotation (BASELINE.md).
+    // corpus DAG's sf1 numbers are recorded in BASELINE.md.
     //
     // Quantizer width K is sized from the embeddings table's parquet
     // FOOTER row count (metadata-only, no scan job) — the r8 verdict
@@ -77,14 +77,8 @@ object CurationDagQueries {
     GQuery(
       "q229_curation_dag",
       (s, d) => {
-        // gate subset (see header comment); SPARK_GRAFT_Q229_FULL=1 runs
-        // the DAG on the whole corpus — builder-side scaling rotation
-        // only (BASELINE.md sf0.1→sf1 slope rows), never set by the
-        // driver, so the gate and its oracle always see the subset
-        val docs0 = Tables.documents(s, d)
-        val docs =
-          if (sys.env.contains("SPARK_GRAFT_Q229_FULL")) docs0
-          else docs0.filter(col("doc_id") % 120 < 40)
+        // gate subset (see header comment)
+        val docs = Tables.documents(s, d).filter(col("doc_id") % 120 < 40)
         val embFull = Tables.embeddings(s, d)
         val nEmb = Tables.parquetRowCount(s, s"$d/embeddings.parquet")
         val k = math.max(4, math.ceil(nEmb / 256.0).toInt)

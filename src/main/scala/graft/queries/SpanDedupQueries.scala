@@ -166,9 +166,9 @@ object SpanDedupQueries {
     // q176 precedent — same CTE ladder both engines): the pair join's
     // volume is quadratic in the planted-dup group size, so the subset
     // cuts the suite's heaviest fixed cost ~9x while exercising every
-    // operator in the span path. Full-corpus evidence lives in
-    // tools/SpanHotBench and the sf1 scaling runs (slope 0.42), not in
-    // the per-round gate.
+    // operator in the span path. Full-corpus evidence (the hot-gram
+    // shape and the sf1 scaling runs, slope 0.42) is recorded in
+    // BASELINE.md, not in the per-round gate.
     GQuery(
       "q175_exact_spans",
       (s, d) => exactSpans(Tables.documents(s, d).filter(col("doc_id") % 3 === 0), t = 8)

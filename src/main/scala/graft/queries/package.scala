@@ -11,25 +11,6 @@ package object queries {
     */
   def ntzLit(s: String): Column = lit(s).cast(TimestampNTZType)
 
-  /** Scoped session-conf override: set, run `body`, restore the prior value
-    * (or unset if there was none) even on failure. Session confs are read
-    * at EXECUTION time, so a query that needs the override must execute
-    * eagerly inside `body` (e.g. via an eager localCheckpoint) — restoring
-    * after merely building a lazy DataFrame would strip the override
-    * before it matters, and NOT restoring leaks the override to every
-    * later query in the shared session (the r6 cteRecursionRowLimit leak).
-    */
-  def withSessionConf[T](s: org.apache.spark.sql.SparkSession, key: String,
-      value: String)(body: => T): T = {
-    val prev = s.conf.getOption(key)
-    s.conf.set(key, value)
-    try body
-    finally prev match {
-      case Some(v) => s.conf.set(key, v)
-      case None => s.conf.unset(key)
-    }
-  }
-
   /** An isolated child session: own SQLConf and temp-view catalog over the
     * SHARED SparkContext (and table/block caches), for queries that need a
     * conf override or scratch views. Strictly stronger than save/restore

@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Deterministic scale-up of the driver fixtures: replicate each table K×
@@ -40,13 +40,7 @@ object GenScale {
 
   def main(args: Array[String]): Unit = {
     val (src, dest, k) = (args(0), args(1), args(2).toInt)
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")}]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Graft.session(sys.env.getOrElse("SPARK_GRAFT_CPUS", "8").toInt)
     // events.ts is TIMESTAMP(NANOS), which the parquet reader rejects;
     // surface it as raw nanos longs (Tables.events' own convention) and
     // write it back as plain BIGINT nanos — Tables.events converts either

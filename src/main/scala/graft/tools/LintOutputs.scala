@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import graft.OutputPolicy
 
 /** Dev tool: schema-only sweep of every gated query against OutputPolicy —
@@ -10,13 +9,7 @@ import graft.OutputPolicy
 object LintOutputs {
   def main(args: Array[String]): Unit = {
     val d = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.001")
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.Graft.session(8)
     var bad = 0
     graft.SparkEntry.queries.foreach { case (name, fn) =>
       try {

@@ -1,15 +1,10 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.execution.SparkPlan
-import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
-import org.apache.spark.sql.execution.exchange.{ReusedExchangeExec, ShuffleExchangeLike}
+import org.apache.spark.sql.SparkSession
 
-/** Measured shuffle volume of an EXECUTED DataFrame: records and bytes
-  * written, summed over every distinct shuffle exchange in the final
-  * adaptive plan (SQLMetrics, so the numbers are the engine's own
-  * accounting, not an estimate). Wall-time on a noisy box is a weak
-  * scale instrument; the volume a query actually moves through its
+/** Measured shuffle volume: records and bytes written, from the engine's
+  * own task metrics rather than an estimate. Wall-time on a noisy box is a
+  * weak scale instrument; the volume a query actually moves through its
   * exchanges is a deterministic fact of the plan and the data, so
   * PlanShapeSpec locks the heavy-tier queries to data-derived caps — a
   * scale regression (an extra corpus-sized exchange, an all-pairs
@@ -18,38 +13,13 @@ import org.apache.spark.sql.execution.exchange.{ReusedExchangeExec, ShuffleExcha
   */
 object ShuffleVolumes {
 
-  private def nodes(p: SparkPlan): Seq[SparkPlan] =
-    p +: (p match {
-      case a: AdaptiveSparkPlanExec => nodes(a.executedPlan)
-      case q: QueryStageExec => nodes(q.plan)
-      case _: ReusedExchangeExec => Seq.empty // metrics shared with the original
-      case _ => p.children.flatMap(nodes)
-    })
-
-  /** (records, bytes) across distinct exchanges. Call AFTER an action
-    * that executed THIS frame's own QueryExecution — `df.collect()`, not
-    * `df.count()`: count() wraps the logical plan in a NEW QueryExecution,
-    * leaving this one's adaptive plan unexecuted and every metric at 0.
-    */
-  def of(df: DataFrame): (Long, Long) = {
-    val ex = nodes(df.queryExecution.executedPlan)
-      .collect { case s: ShuffleExchangeLike => s }
-    val distinct = ex.foldLeft(Vector.empty[ShuffleExchangeLike]) { (acc, e) =>
-      if (acc.exists(_ eq e)) acc else acc :+ e
-    }
-    def sumOf(key: String): Long =
-      distinct.flatMap(e => e.metrics.get(key).map(_.value)).sum
-    (sumOf("shuffleRecordsWritten"), sumOf("shuffleBytesWritten"))
-  }
-
   /** TOTAL shuffle (records, bytes) written by every stage of every job
-    * the body runs — a SparkListener over the engine's own task metrics.
-    * Unlike [[of]] (which walks one frame's final adaptive plan), this
-    * also counts work the final plan hides: persist materialization
-    * (InMemoryTableScan's cached subtree) and localCheckpoint jobs of
-    * iterative pipelines. The listener bus is async, so the reading
-    * settles by polling until stable. Callers must not run concurrent
-    * jobs on the session during the measurement.
+    * the body runs — a SparkListener over the engine's own task metrics,
+    * so it also counts work a final adaptive plan hides: persist
+    * materialization (InMemoryTableScan's cached subtree) and
+    * localCheckpoint jobs of iterative pipelines. The listener bus is
+    * async, so the reading settles by polling until stable. Callers must
+    * not run concurrent jobs on the session during the measurement.
     */
   def measured(spark: SparkSession)(body: => Unit): (Long, Long) = {
     val rec = new java.util.concurrent.atomic.AtomicLong
@@ -73,36 +43,5 @@ object ShuffleVolumes {
       }
       cur
     } finally spark.sparkContext.removeSparkListener(listener)
-  }
-
-  /** Diagnostic main: volumes for the named queries (all heavy-tier locks
-    * by default) at args(0) (default sf0.001).
-    */
-  def main(args: Array[String]): Unit = {
-    val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
-    val names =
-      if (args.length > 1) args.drop(1).toSeq
-      else Seq("q229_curation_dag", "q185_canonical_docs", "q138_embed_clusters",
-        "q126_prefix_simjoin", "q81_dedup_clusters", "q223_cdc_chunks")
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", 4)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    names.foreach { n =>
-      var cnt = 0
-      var planRec = 0L; var planByt = 0L
-      val (rec, byt) = measured(spark) {
-        val df = graft.SparkEntry.queries(n)(spark, sfDir)
-        cnt = df.collect().length
-        val pv = of(df)
-        planRec = pv._1; planByt = pv._2
-      }
-      println(s"SHUFFLE $n rows=$cnt records=$rec bytes=$byt planRecords=$planRec planBytes=$planByt")
-      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = false))
-    }
-    spark.stop()
   }
 }

@@ -56,4 +56,50 @@ class GraftInstallSpec extends SparkTestBase {
     val e = intercept[Exception] { spark.sql("SELECT cosine_sim(array(1.0F))") }
     assert(e.getMessage.contains("two array<float>") || e.getMessage.toLowerCase.contains("argument"))
   }
+
+  test("src holds exactly one session builder call, in Graft.session") {
+    val call = """SparkSession\s*\.\s*builder\s*\(""".r
+    def scalaFiles(f: java.io.File): Seq[java.io.File] =
+      if (f.isDirectory) f.listFiles().toSeq.flatMap(scalaFiles)
+      else if (f.getName.endsWith(".scala")) Seq(f) else Seq.empty
+    val sites = scalaFiles(new java.io.File("src")).flatMap { f =>
+      val text = new String(java.nio.file.Files.readAllBytes(f.toPath), "UTF-8")
+      Seq.fill(call.findAllIn(text).size)(f.getPath)
+    }
+    assert(sites == Seq("src/main/scala/graft/Graft.scala"), sites)
+  }
+
+  /** Runs `body` on a factory-built session over `spark.newSession()`: a
+    * session no test has called `install` on (the builder hands back the
+    * thread's active session).
+    */
+  private def onFreshFactorySession(body: org.apache.spark.sql.SparkSession => Unit): Unit = {
+    val fresh = spark.newSession()
+    val prior = org.apache.spark.sql.SparkSession.getActiveSession
+    org.apache.spark.sql.SparkSession.setActiveSession(fresh)
+    try {
+      val s = Graft.session(4)
+      assert(s eq fresh)
+      body(s)
+    } finally prior match {
+      case Some(p) => org.apache.spark.sql.SparkSession.setActiveSession(p)
+      case None => org.apache.spark.sql.SparkSession.clearActiveSession()
+    }
+  }
+
+  test("a factory-built session resolves cosine_sim and misra_gries with no install call") {
+    onFreshFactorySession { s =>
+      assert(s.sql("SELECT cosine_sim(array(3.0F, 4.0F), array(3.0F, 4.0F))")
+        .head().getDouble(0) == 1.0)
+      assert(s.sql("SELECT misra_gries(x, 4) FROM VALUES ('a'), ('a'), ('b') AS t(x)")
+        .head().getMap[String, Long](0) == Map("a" -> 2L, "b" -> 1L))
+    }
+  }
+
+  test("a factory-built session holds AsOfStrategy exactly once") {
+    onFreshFactorySession { s =>
+      Graft.session(4)
+      assert(s.experimental.extraStrategies.count(_ == graft.plans.AsOfStrategy) == 1)
+    }
+  }
 }

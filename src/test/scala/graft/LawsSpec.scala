@@ -129,6 +129,15 @@ class LawsSpec extends SparkTestBase {
     })
   }
 
+  test("md5-60 helper equals the md5Hash60 column law, non-ASCII included") {
+    val piece = Gen.oneOf("a", "Z", "7", " ", "w:", "é", "ß", "ж", "日本", "😀", "")
+    val strs = Gen.listOfN(20, Gen.listOf(piece).map(_.mkString))
+    check(Prop.forAll(strs) { ss =>
+      ss.toDF("s").select(TF.md5Hash60(col("s"))).as[Long].collect().toSeq ==
+        ss.map(TF.md5Hash60Of)
+    })
+  }
+
   test("pq natives: DotProduct and PqEncode are bit-identical to the composed folds") {
     // the q244 exactness chain: oracle == composed folds (probed against
     // DuckDB's list_dot_product/list_distance) == native expressions

@@ -122,24 +122,23 @@ class SqlFeatureSpec extends SparkTestBase {
     // the rewrite changed the traversal direction, not the result: pin the
     // equivalence against the original (node, ancestor) up-walk program
     import org.apache.spark.sql.functions.col
-    graft.sources.Tables.customer(spark, sf).createOrReplaceTempView("q200_upwalk_cust")
-    val up = try {
-      graft.queries.withSessionConf(spark, "spark.sql.cteRecursionRowLimit", "20000000") {
-        spark.sql("""
-          |WITH RECURSIVE anc(node, anc_node) AS (
-          |  SELECT c_custkey, c_custkey FROM q200_upwalk_cust
-          |  UNION ALL
-          |  SELECT node, (anc_node - 1) DIV 2 FROM anc WHERE anc_node >= 1)
-          |SELECT a.anc_node AS node,
-          |       CAST(COUNT(*) AS BIGINT) AS n_desc,
-          |       CAST(SUM(CAST(round(c.c_acctbal * 100) AS BIGINT)) AS BIGINT)
-          |         AS subtree_bal_c
-          |FROM anc a JOIN q200_upwalk_cust c ON c.c_custkey = a.node
-          |WHERE a.anc_node <= 6
-          |GROUP BY a.anc_node
-          |ORDER BY node ASC""".stripMargin).localCheckpoint()
-      }
-    } finally spark.catalog.dropTempView("q200_upwalk_cust")
+    val iso = graft.queries.recursionSession(spark)
+    val cust = graft.queries.freshViewName("q200_upwalk_cust")
+    graft.sources.Tables.customer(iso, sf).createOrReplaceTempView(cust)
+    val up = try iso.sql(s"""
+      |WITH RECURSIVE anc(node, anc_node) AS (
+      |  SELECT c_custkey, c_custkey FROM $cust
+      |  UNION ALL
+      |  SELECT node, (anc_node - 1) DIV 2 FROM anc WHERE anc_node >= 1)
+      |SELECT a.anc_node AS node,
+      |       CAST(COUNT(*) AS BIGINT) AS n_desc,
+      |       CAST(SUM(CAST(round(c.c_acctbal * 100) AS BIGINT)) AS BIGINT)
+      |         AS subtree_bal_c
+      |FROM anc a JOIN $cust c ON c.c_custkey = a.node
+      |WHERE a.anc_node <= 6
+      |GROUP BY a.anc_node
+      |ORDER BY node ASC""".stripMargin)
+    finally iso.catalog.dropTempView(cust)
     val down = q("q200_recursive_rollup")
     assert(down.collect().toSeq == up.collect().toSeq)
     assert(down.select(col("node")).as[Long].collect().toSeq == (0L to 6L))
