@@ -24,6 +24,17 @@ import org.apache.spark.sql.functions._
   * would plug in: it sees an iterator over the partition, amortizing codec
   * init across rows — the same "batch-at-a-time extension" contract as the
   * reference's Operation/Cursor protocol (src/operation/mod.rs:35-40).
+  *
+  * Codec-boundary rule (decode each payload on every core, and once where
+  * the decode is costly): spread ids before synthesis
+  * (`graft.queries.mediaIds`) — a one-file table is one partition, so one
+  * task would build and decode every payload; only the 8-byte ids cross
+  * the exchange, and on multi-file input (the 100 TB shape) the spread is
+  * a no-op. A global sort straight over a decode runs the decode twice,
+  * because `RangePartitioner` samples by evaluating its child.
+  * [[sortDecoded]] trades that second decode pass for one extra shuffle
+  * of the decoded rows: worth it only when the decode costs more than the
+  * shuffle, so it goes only where a benchmark measured the gain.
   */
 object Multimodal {
 
@@ -35,6 +46,11 @@ object Multimodal {
   // process-wide (the flag only selects Memory- vs FileCache streams;
   // decoded bytes are identical).
   javax.imageio.ImageIO.setUseCache(false)
+
+  /** Ascending global sort of decoded rows behind a hash exchange on the
+    * sort keys, so the range sample reads shuffle output (rule above). */
+  def sortDecoded(keys: String*)(decoded: DataFrame): DataFrame =
+    decoded.repartition(keys.map(col): _*).orderBy(keys.map(col(_).asc): _*)
 
   /** A media row: payload + typed metadata (the engine-visible schema). */
   case class MediaRow(media_id: Long, payload: Array[Byte], media_type: String)

@@ -460,9 +460,7 @@ object CurationDagQueries {
       (s, d) => {
         import s.implicits._
         import org.apache.spark.sql.expressions.Window
-        val media = Tables.spread(
-            Tables.documents(s, d).filter(col("doc_id") % 3 === 0), col("doc_id"))
-          .select(col("doc_id")).as[Long]
+        val media = mediaIds(s, d).filter(col("doc_id") % 3 === 0)
           .mapPartitions { ids =>
             ids.map { id =>
               val key = id % 109

@@ -81,7 +81,7 @@ object FormatDepthQueries {
       "q233_g711_decode",
       (s, d) => {
         import s.implicits._
-        val media = Tables.documents(s, d).select(col("doc_id")).as[Long]
+        val media = mediaIds(s, d)
           .mapPartitions { ids =>
             ids.map { id =>
               Multimodal.MediaRow(id,
@@ -150,7 +150,7 @@ object FormatDepthQueries {
       "q234_adpcm_decode",
       (s, d) => {
         import s.implicits._
-        val media = Tables.documents(s, d).select(col("doc_id")).as[Long]
+        val media = mediaIds(s, d)
           .mapPartitions { ids =>
             ids.map { id =>
               Multimodal.MediaRow(id,
@@ -245,7 +245,7 @@ object FormatDepthQueries {
       "q236_image_preprocess",
       (s, d) => {
         import s.implicits._
-        val media = Tables.documents(s, d).select(col("doc_id")).as[Long]
+        val media = mediaIds(s, d)
           .mapPartitions { ids =>
             ids.map { id =>
               Multimodal.MediaRow(id,
@@ -312,7 +312,7 @@ object FormatDepthQueries {
       "q237_flac_samples",
       (s, d) => {
         import s.implicits._
-        val media = Tables.documents(s, d).select(col("doc_id")).as[Long]
+        val media = mediaIds(s, d)
           .mapPartitions { ids =>
             ids.map { id =>
               val k = (2 + id % 7).toInt
@@ -362,7 +362,7 @@ object FormatDepthQueries {
       "q238_audio_features",
       (s, d) => {
         import s.implicits._
-        val media = Tables.documents(s, d).select(col("doc_id")).as[Long]
+        val media = mediaIds(s, d)
           .mapPartitions { ids =>
             ids.map { id =>
               Multimodal.MediaRow(id,
@@ -428,12 +428,9 @@ object FormatDepthQueries {
       (s, d) => {
         import s.implicits._
         import org.apache.spark.sql.expressions.Window
-        val media = Tables.documents(s, d)
-          .select(col("doc_id"), (col("doc_id") % 89).as("key"))
-          .as[(Long, Long)]
-          .map { case (id, key) =>
-            Multimodal.MediaRow(id, Multimodal.ImageOps.synthGif(key), "image/gif")
-          }
+        val media = mediaIds(s, d).map { id =>
+          Multimodal.MediaRow(id, Multimodal.ImageOps.synthGif(id % 89), "image/gif")
+        }
         val frames = Multimodal.ImageOps.gifFrameFeatures(media)
           .select(col("media_id"), col("frame_idx"), col("sum_lum"))
         val w = Window.partitionBy(col("media_id")).orderBy(col("frame_idx").asc)
@@ -482,7 +479,7 @@ object FormatDepthQueries {
       "q240_png_text_tags",
       (s, d) => {
         import s.implicits._
-        val media = Tables.documents(s, d).select(col("doc_id")).as[Long]
+        val media = mediaIds(s, d)
           .mapPartitions { ids =>
             ids.map { id =>
               var png = Multimodal.ImageOps.synthPngRgb(id % 97)
@@ -522,7 +519,7 @@ object FormatDepthQueries {
       "q241_box_downscale",
       (s, d) => {
         import s.implicits._
-        val media = Tables.documents(s, d).select(col("doc_id")).as[Long]
+        val media = mediaIds(s, d)
           .mapPartitions { ids =>
             ids.map { id =>
               Multimodal.MediaRow(id,
@@ -541,7 +538,7 @@ object FormatDepthQueries {
             }
           }
         }.toDF("media_id", "n_px", "sum_r", "sum_g", "sum_b")
-          .orderBy(col("media_id").asc)
+          .transform(Multimodal.sortDecoded("media_id"))
       },
       Some("""WITH m AS (
              |  SELECT doc_id, doc_id % 97 AS key,
@@ -582,7 +579,7 @@ object FormatDepthQueries {
       "q242_jpeg_roundtrip",
       (s, d) => {
         import s.implicits._
-        val media = Tables.documents(s, d).select(col("doc_id")).as[Long]
+        val media = mediaIds(s, d)
           .mapPartitions { ids =>
             ids.map { id =>
               val key = (id % 97).toInt
@@ -662,7 +659,7 @@ object FormatDepthQueries {
       "q243_id3_tags",
       (s, d) => {
         import s.implicits._
-        val media = Tables.documents(s, d).select(col("doc_id")).as[Long]
+        val media = mediaIds(s, d)
           .mapPartitions { ids =>
             ids.map { id =>
               val tag = Multimodal.SyntheticMedia.id3Tag(
@@ -751,7 +748,7 @@ object FormatDepthQueries {
       (s, d) => {
         import s.implicits._
         import graft.sources.ProtoWire
-        val media = Tables.documents(s, d).select(col("doc_id")).as[Long]
+        val media = mediaIds(s, d)
           .mapPartitions { ids =>
             ids.map { id =>
               val key = id % 101
@@ -807,12 +804,9 @@ object FormatDepthQueries {
       (s, d) => {
         import s.implicits._
         import org.apache.spark.sql.expressions.Window
-        val media = Tables.spread(Tables.documents(s, d), col("doc_id"))
-          .select(col("doc_id"), (col("doc_id") % 97).as("key"))
-          .as[(Long, Long)]
-          .map { case (id, key) =>
-            Multimodal.MediaRow(id, Multimodal.ImageOps.synthPng(key), "image/png")
-          }
+        val media = mediaIds(s, d).map { id =>
+          Multimodal.MediaRow(id, Multimodal.ImageOps.synthPng(id % 97), "image/png")
+        }
         Multimodal.ImageOps.imageSpectralRows(media)
           .withColumn("dup_group_size",
             count(lit(1)).over(Window.partitionBy(col("phash"))))
@@ -873,7 +867,7 @@ object FormatDepthQueries {
       "q261_flac_stereo",
       (s, d) => {
         import s.implicits._
-        val media = Tables.documents(s, d).select(col("doc_id")).as[Long]
+        val media = mediaIds(s, d)
           .mapPartitions { ids =>
             ids.map { id =>
               val ns = (120 + id % 80).toInt
@@ -935,7 +929,7 @@ object FormatDepthQueries {
       "q262_msadpcm_decode",
       (s, d) => {
         import s.implicits._
-        val media = Tables.documents(s, d).select(col("doc_id")).as[Long]
+        val media = mediaIds(s, d)
           .mapPartitions { ids =>
             ids.map { id =>
               Multimodal.MediaRow(id,
@@ -985,7 +979,7 @@ object FormatDepthQueries {
       "q270_mjpeg_frames",
       (s, d) => {
         import s.implicits._
-        val media = Tables.documents(s, d).select(col("doc_id")).as[Long]
+        val media = mediaIds(s, d)
           .mapPartitions { ids =>
             ids.map { id =>
               Multimodal.MediaRow(id,

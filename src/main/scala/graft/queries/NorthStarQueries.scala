@@ -404,7 +404,7 @@ object NorthStarQueries {
       "q173_container_meta",
       (s, d) => {
         import s.implicits._
-        val media = Tables.documents(s, d).select(col("doc_id")).as[Long]
+        val media = mediaIds(s, d)
           .mapPartitions { ids =>
             ids.map { id =>
               if (id % 2 == 0)
@@ -429,7 +429,7 @@ object NorthStarQueries {
           .select(col("media_id"), col("media_kind"),
             col("sample_rate"), col("n_channels"), col("duration_ms"),
             col("n_tracks"), col("width"), col("height"), col("n_frames"))
-          .orderBy(col("media_id").asc)
+          .transform(Multimodal.sortDecoded("media_id"))
       },
       Some("""SELECT doc_id AS media_id,
              |  CASE WHEN doc_id % 2 = 0 THEN 'audio' ELSE 'video' END AS media_kind,
@@ -464,7 +464,7 @@ object NorthStarQueries {
       "q143_pcm_stats",
       (s, d) => {
         import s.implicits._
-        val media = Tables.documents(s, d).select(col("doc_id")).as[Long]
+        val media = mediaIds(s, d)
           .mapPartitions { ids =>
             ids.map { id =>
               Multimodal.MediaRow(id,
@@ -644,12 +644,9 @@ object NorthStarQueries {
       (s, d) => {
         import s.implicits._
         import org.apache.spark.sql.expressions.Window
-        val media = Tables.documents(s, d)
-          .select(col("doc_id"), (col("doc_id") % 97).as("key"))
-          .as[(Long, Long)]
-          .map { case (id, key) =>
-            Multimodal.MediaRow(id, Multimodal.ImageOps.synthPng(key), "image/png")
-          }
+        val media = mediaIds(s, d).map { id =>
+          Multimodal.MediaRow(id, Multimodal.ImageOps.synthPng(id % 97), "image/png")
+        }
         Multimodal.ImageOps.imageFeatures(media)
           .withColumn("dup_group_size",
             count(lit(1)).over(Window.partitionBy(col("dhash"))))
@@ -739,12 +736,9 @@ object NorthStarQueries {
       "q201_gif_frames",
       (s, d) => {
         import s.implicits._
-        val media = Tables.documents(s, d)
-          .select(col("doc_id"), (col("doc_id") % 89).as("key"))
-          .as[(Long, Long)]
-          .map { case (id, key) =>
-            Multimodal.MediaRow(id, Multimodal.ImageOps.synthGif(key), "image/gif")
-          }
+        val media = mediaIds(s, d).map { id =>
+          Multimodal.MediaRow(id, Multimodal.ImageOps.synthGif(id % 89), "image/gif")
+        }
         Multimodal.ImageOps.gifFrameFeatures(media)
           .orderBy(col("media_id").asc, col("frame_idx").asc)
       },
@@ -800,7 +794,7 @@ object NorthStarQueries {
       "q202_mp3_meta",
       (s, d) => {
         import s.implicits._
-        val media = Tables.documents(s, d).select(col("doc_id")).as[Long]
+        val media = mediaIds(s, d)
           .mapPartitions { ids =>
             ids.map { id =>
               Multimodal.MediaRow(id,
@@ -817,7 +811,7 @@ object NorthStarQueries {
           .select(col("media_id"), col("media_kind"), col("sample_rate"),
             col("n_channels"), col("bitrate_kbps"), col("duration_ms"),
             col("n_frames"))
-          .orderBy(col("media_id").asc)
+          .transform(Multimodal.sortDecoded("media_id"))
       },
       Some("""SELECT doc_id AS media_id, 'audio' AS media_kind,
              |  CAST(list_extract([44100,48000,32000],
@@ -849,7 +843,7 @@ object NorthStarQueries {
       "q203_flac_meta",
       (s, d) => {
         import s.implicits._
-        val media = Tables.documents(s, d).select(col("doc_id")).as[Long]
+        val media = mediaIds(s, d)
           .mapPartitions { ids =>
             ids.map { id =>
               Multimodal.MediaRow(id,
@@ -897,7 +891,7 @@ object NorthStarQueries {
       "q204_ogg_meta",
       (s, d) => {
         import s.implicits._
-        val media = Tables.documents(s, d).select(col("doc_id")).as[Long]
+        val media = mediaIds(s, d)
           .mapPartitions { ids =>
             ids.map { id =>
               Multimodal.MediaRow(id,
@@ -949,12 +943,9 @@ object NorthStarQueries {
       "q205_avi_frames",
       (s, d) => {
         import s.implicits._
-        val media = Tables.documents(s, d)
-          .select(col("doc_id"), (col("doc_id") % 97).as("key"))
-          .as[(Long, Long)]
-          .map { case (id, key) =>
-            Multimodal.MediaRow(id, Multimodal.SyntheticMedia.avi(key), "video/x-msvideo")
-          }
+        val media = mediaIds(s, d).map { id =>
+          Multimodal.MediaRow(id, Multimodal.SyntheticMedia.avi(id % 97), "video/x-msvideo")
+        }
         Multimodal.VideoOps.aviFrameFeatures(media)
           .orderBy(col("media_id").asc, col("frame_idx").asc)
       },
@@ -1011,7 +1002,7 @@ object NorthStarQueries {
       "q206_tar_members",
       (s, d) => {
         import s.implicits._
-        val media = Tables.documents(s, d).select(col("doc_id")).as[Long]
+        val media = mediaIds(s, d)
           .mapPartitions { ids =>
             ids.map { id =>
               Multimodal.MediaRow(id,
@@ -1057,7 +1048,7 @@ object NorthStarQueries {
       "q207_gzip_corpus",
       (s, d) => {
         import s.implicits._
-        val media = Tables.documents(s, d).select(col("doc_id")).as[Long]
+        val media = mediaIds(s, d)
           .mapPartitions { ids =>
             ids.map { id =>
               val full = Shards.SyntheticShards.gzipDoc(id % 103)
@@ -1103,7 +1094,7 @@ object NorthStarQueries {
       "q208_mixed_codecs",
       (s, d) => {
         import s.implicits._
-        val media = Tables.documents(s, d).select(col("doc_id")).as[Long]
+        val media = mediaIds(s, d)
           .mapPartitions { ids =>
             ids.map { id =>
               val key = id % 97
@@ -1116,7 +1107,7 @@ object NorthStarQueries {
               Multimodal.MediaRow(id, payload, "application/octet-stream")
             }
           }
-        Shards.decompressStatsRows(media).orderBy(col("media_id").asc)
+        Shards.decompressStatsRows(media).transform(Multimodal.sortDecoded("media_id"))
       },
       Some("""WITH k AS (
              |  SELECT doc_id, doc_id % 97 AS key, doc_id % 3 AS c,
@@ -1154,7 +1145,7 @@ object NorthStarQueries {
       "q209_wds_samples",
       (s, d) => {
         import s.implicits._
-        val media = Tables.documents(s, d).select(col("doc_id")).as[Long]
+        val media = mediaIds(s, d)
           .mapPartitions { ids =>
             ids.map { id =>
               Multimodal.MediaRow(id,
@@ -1206,7 +1197,7 @@ object NorthStarQueries {
       "q210_zip_members",
       (s, d) => {
         import s.implicits._
-        val media = Tables.documents(s, d).select(col("doc_id")).as[Long]
+        val media = mediaIds(s, d)
           .mapPartitions { ids =>
             ids.map { id =>
               val key = id % 109
@@ -1305,7 +1296,7 @@ object NorthStarQueries {
       "q212_tgz_shards",
       (s, d) => {
         import s.implicits._
-        val media = Tables.documents(s, d).select(col("doc_id")).as[Long]
+        val media = mediaIds(s, d)
           .mapPartitions { ids =>
             ids.map { id =>
               val tar = Shards.SyntheticShards.tarShard(id % 101)
@@ -1479,7 +1470,7 @@ object NorthStarQueries {
       "q227_warc_records",
       (s, d) => {
         import s.implicits._
-        val media = Tables.documents(s, d).select(col("doc_id")).as[Long]
+        val media = mediaIds(s, d)
           .mapPartitions { ids =>
             ids.map { id =>
               val key = id % 109

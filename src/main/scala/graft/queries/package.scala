@@ -1,8 +1,9 @@
 package graft
 
-import org.apache.spark.sql.Column
+import org.apache.spark.sql.{Column, Dataset, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.TimestampNTZType
+import graft.sources.Tables
 
 package object queries {
 
@@ -10,6 +11,11 @@ package object queries {
     * against parquet NTZ columns need no timezone coercion.
     */
   def ntzLit(s: String): Column = lit(s).cast(TimestampNTZType)
+
+  /** The media-synthesis id source: `documents.doc_id`, spread before
+    * synthesis (codec-boundary rule, `graft.multimodal.Multimodal`). */
+  def mediaIds(spark: SparkSession, sfDir: String): Dataset[Long] = Tables.spread(
+    Tables.documents(spark, sfDir).select(col("doc_id")), col("doc_id")).as(Encoders.scalaLong)
 
   /** An isolated child session: own SQLConf and temp-view catalog over the
     * SHARED SparkContext (and table/block caches), for queries that need a

@@ -4,16 +4,15 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.types._
 import graft.types._
 
-/** Fixture table catalog with explicit schemas (no inference — SURVEY.md §1.4:
-  * the reference binds operators against fixed, explicit schemas,
-  * reference src/schema.rs:43-67). One loader per driver parquet table
+/** Fixture table catalog with declared schemas (SURVEY.md §1.4: the
+  * reference binds operators against fixed, explicit schemas, reference
+  * src/schema.rs:43-67). One loader per fixture parquet table
   * (TESTDATA.md / FIXTURES.md §B).
   *
   * Scale note (100 TB design point): loaders read a single parquet path here,
   * but nothing below assumes a single file — `spark.read.parquet` over a
-  * directory of thousands of files partitions by `maxPartitionBytes`, and the
-  * explicit schema avoids a schema-inference scan over the footer of every
-  * file (which at 100 TB is itself a distributed job).
+  * directory of thousands of files partitions by `maxPartitionBytes`. Each
+  * load still infers its schema from the footers (see [[load]]).
   */
 object Tables {
 
@@ -84,10 +83,11 @@ object Tables {
 
   def names: Seq[String] = graftSchemas.keys.toSeq.sorted
 
-  /** Load a fixture table from `sfDir`. The parquet files carry their own
-    * (matching) physical schema; we assert compatibility rather than pass
-    * `.schema(...)` so the vectorized reader keeps its native column batch
-    * layout, and fail fast (bind-time error contract) on drift.
+  /** Load a fixture table from `sfDir`. The read passes no `.schema(...)`,
+    * so Spark infers the schema from the parquet footers (one Spark job per
+    * load); the result is then checked against [[graftSchemas]], failing
+    * fast on drift. Passing the declared schema is ROADMAP item 2; it must
+    * keep embeddings' `list<float>` (declared Vector) and events' nanos.
     */
   def load(spark: SparkSession, sfDir: String, table: String): DataFrame = {
     val expected = graftSchemas.getOrElse(table, throw AttributeMissing(s"table $table"))

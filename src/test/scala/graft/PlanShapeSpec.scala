@@ -338,6 +338,115 @@ class PlanShapeSpec extends SparkTestBase {
     }
   }
 
+  test("media-synthesis gates: ids spread before synthesis; sortDecoded gates shuffle before the range sort") {
+    // the codec-boundary rule (Multimodal scaladoc), read from the plan a
+    // noop write finally ran: (1) in all 31 gates the exchange beneath the
+    // lowest typed map (the synthesis feeding the decode) hash-partitions
+    // doc_id and carries doc_id alone — every core synthesizes and
+    // decodes, no payload moves; (2) in the gates that sort through
+    // sortDecoded (those where a benchmark measured the gain) every
+    // range-partitioning exchange reads a shuffle stage, never a
+    // MapPartitions pipeline — RangePartitioner's sample job evaluates its
+    // child, which would otherwise run the whole synthesis + decode a
+    // second time.
+    import org.apache.spark.sql.execution.{MapElementsExec, MapPartitionsExec, SparkPlan}
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+    import org.apache.spark.sql.execution.exchange.{Exchange, ShuffleExchangeExec}
+    import org.apache.spark.sql.catalyst.plans.physical.{HashPartitioning, RangePartitioning}
+    def finalNodes(p: SparkPlan): Seq[SparkPlan] = p match {
+      case a: AdaptiveSparkPlanExec => finalNodes(a.executedPlan)
+      case s: QueryStageExec => s +: finalNodes(s.plan)
+      case other => other +: other.children.flatMap(finalNodes)
+    }
+    def isTypedMap(p: SparkPlan) =
+      p.isInstanceOf[MapPartitionsExec] || p.isInstanceOf[MapElementsExec]
+    // the operators a task runs beneath p, down to the nearest exchanges
+    // (returned separately)
+    def pipelineBelow(p: SparkPlan): (Seq[SparkPlan], Seq[SparkPlan]) = {
+      val (ops, exchanges) = p.children.map {
+        case b @ (_: Exchange | _: QueryStageExec) => (Seq.empty, Seq(b))
+        case c => val (o, e) = pipelineBelow(c); (c +: o, e)
+      }.unzip
+      (ops.flatten, exchanges.flatten)
+    }
+    def shuffleOf(b: SparkPlan): Option[ShuffleExchangeExec] = b match {
+      case e: ShuffleExchangeExec => Some(e)
+      case s: QueryStageExec => shuffleOf(s.plan)
+      case _ => None
+    }
+    def finalWritePlan(name: String): SparkPlan = {
+      val df = SparkEntry.queries(name)(spark, sf)
+      val seen = new java.util.concurrent.LinkedBlockingQueue[SparkPlan]
+      val listener = new org.apache.spark.sql.util.QueryExecutionListener {
+        override def onSuccess(f: String,
+            qe: org.apache.spark.sql.execution.QueryExecution, ns: Long): Unit =
+          seen.put(qe.executedPlan)
+        override def onFailure(f: String,
+            qe: org.apache.spark.sql.execution.QueryExecution, e: Exception): Unit = ()
+      }
+      spark.listenerManager.register(listener)
+      try {
+        df.write.format("noop").mode("overwrite").save()
+        Iterator.continually(seen.poll(60, java.util.concurrent.TimeUnit.SECONDS))
+          .map { p => assert(p != null, s"$name: no write execution reported"); p }
+          .find(_.isInstanceOf[org.apache.spark.sql.execution.datasources.v2.V2TableWriteExec])
+          .get
+      } finally spark.listenerManager.unregister(listener)
+    }
+    val gates = Seq(
+      "q143_pcm_stats", "q173_container_meta", "q195_image_dhash", "q201_gif_frames",
+      "q202_mp3_meta", "q203_flac_meta", "q204_ogg_meta", "q205_avi_frames",
+      "q206_tar_members", "q207_gzip_corpus", "q208_mixed_codecs", "q209_wds_samples",
+      "q210_zip_members", "q212_tgz_shards", "q227_warc_records", "q233_g711_decode",
+      "q234_adpcm_decode", "q236_image_preprocess", "q237_flac_samples",
+      "q238_audio_features", "q239_scene_cuts", "q240_png_text_tags",
+      "q241_box_downscale", "q242_jpeg_roundtrip", "q243_id3_tags",
+      "q249_proto_records", "q250_image_phash", "q260_wds_image_dag",
+      "q261_flac_stereo", "q262_msadpcm_decode", "q270_mjpeg_frames")
+    assert(gates.distinct.size == 31)
+    val sortDecodedGates = Set(
+      "q173_container_meta", "q202_mp3_meta", "q208_mixed_codecs", "q241_box_downscale")
+    assert(sortDecodedGates.subsetOf(gates.toSet))
+    def violations(name: String, plan: SparkPlan): Seq[String] = {
+      val nodes = finalNodes(plan)
+      val synth = nodes.filter(n => isTypedMap(n) && !finalNodes(n).tail.exists(isTypedMap))
+      val spread =
+        if (synth.isEmpty) Seq("no typed map in the final plan")
+        else synth.map(pipelineBelow(_)._2).flatMap {
+          case Seq() => Seq("synthesis runs straight off the scan, no id exchange")
+          case below => below.map(shuffleOf).flatMap {
+            case Some(e) =>
+              val onId = e.outputPartitioning match {
+                case h: HashPartitioning =>
+                  h.expressions.flatMap(_.references.map(_.name)).distinct == Seq("doc_id")
+                case _ => false
+              }
+              val input = e.child.output.map(_.name)
+              (if (onId) Nil else Seq(s"ids spread by ${e.outputPartitioning}")) ++
+                (if (input == Seq("doc_id")) Nil else Seq(s"id exchange carries $input"))
+            case None => Seq("no shuffle below the synthesis")
+          }
+        }
+      val ranges = nodes.collect {
+        case e: ShuffleExchangeExec if e.outputPartitioning.isInstanceOf[RangePartitioning] => e
+      }
+      val sorted =
+        if (!sortDecodedGates(name)) Nil
+        else if (ranges.isEmpty) Seq("no final-order range exchange")
+        else ranges.map(pipelineBelow).flatMap { case (ops, below) =>
+          (if (ops.exists(isTypedMap)) Seq("range sample re-runs a MapPartitions pipeline")
+           else Nil) ++
+            (if (below.nonEmpty && below.forall(shuffleOf(_).isDefined)) Nil
+             else Seq("range exchange does not read a shuffle stage"))
+        }
+      spread ++ sorted
+    }
+    // every violation across the 31 gates, reported together
+    val problems =
+      gates.flatMap(name => violations(name, finalWritePlan(name)).map(v => s"$name: $v"))
+    if (problems.nonEmpty) fail(problems.mkString(s"${problems.size} violations:\n", "\n", ""))
+  }
+
   test("q235 blocklist scan: single corpus pass, no join in the plan") {
     // the Aho-Corasick claim: term matching is O(len) map work with the
     // automaton in the closure — a Join node would mean the op regressed

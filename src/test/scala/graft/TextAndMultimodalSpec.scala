@@ -58,6 +58,27 @@ class TextAndMultimodalSpec extends SparkTestBase {
     assert(meta.map(_.content_hash).toSeq == again.map(_.content_hash).toSeq)
   }
 
+  test("sortDecoded: a global sort over a decode runs the decode once, not twice") {
+    // RangePartitioner samples by evaluating its child in full, so an
+    // orderBy straight over a typed map runs the map for the sample job
+    // AND for the shuffle map stage. The first assertion pins that Spark
+    // behaviour (a Spark upgrade that changes it shows up here); the
+    // second, that sortDecoded's hash exchange makes the sample read
+    // shuffle output instead.
+    import spark.implicits._
+    import org.apache.spark.sql.DataFrame
+    val rows = 2000L
+    def runs(sort: DataFrame => DataFrame): Long = {
+      val calls = spark.sparkContext.longAccumulator("decode_calls")
+      val decoded = spark.range(0L, rows, 1L, 4).as[Long]
+        .map { id => calls.add(1); (id * 7919L) % rows }.toDF("k")
+      sort(decoded).write.format("noop").mode("overwrite").save()
+      calls.sum
+    }
+    assert(runs(_.orderBy(col("k").asc)) == 2 * rows)
+    assert(runs(_.transform(Multimodal.sortDecoded("k"))) == rows)
+  }
+
   test("real PNG/BMP payloads decode to true dimensions via javax.imageio") {
     import spark.implicits._
     // construct real images in memory: dimensions are ground truth the
