@@ -21,9 +21,10 @@ import org.apache.spark.sql.types._
   *  - when every similarity is null the lowest cluster id wins (the
   *    window form still emits rn=1 for such rows).
   *
-  * The input centroid array must be sorted by cluster id ascending (the
-  * [[graft.functions.KMeans]] builder uses sort_array), so a strict `>`
-  * scan gives the lower-id tie-break and slot 0 is the all-null fallback.
+  * The input centroid array must be sorted by cluster id ascending
+  * ([[graft.functions.KMeans]] sorts its literal on the driver), so a
+  * strict `>` scan gives the lower-id tie-break and slot 0 is the all-null
+  * fallback.
   *
   * Documented deviations from the window form (ADVICE r9 — intentional,
   * all unreachable from the KMeans/IVF callers and oracle-pinned there):
@@ -40,7 +41,7 @@ import org.apache.spark.sql.types._
   *
   * WHY: the window form shuffles N·k exploded rows (with the vector
   * attached) per assignment pass — at any scale the argmax needs no
-  * shuffle at all, just a broadcast of the k-row centroid table. This
+  * shuffle at all, just the k centroids shipped with the task. This
   * kernel makes assignment a pure map-side projection: the 100 TB cost of
   * one k-means iteration drops from a corpus-sized exchange to a scan.
   */

@@ -19,9 +19,8 @@ import org.apache.spark.sql.functions._
   * Components in MapReduce and Beyond", SoCC 2014), which contracts paths
   * in O(log² n) rounds with the same per-round shuffle shape.
   *
-  * Each generation of labels is localCheckpoint'ed (same pattern as
-  * KMeans.fit): plan depth stays constant per round instead of nesting one
-  * join level per iteration. Convergence is detected with a one-scalar
+  * Each generation of labels is localCheckpoint'ed: plan depth stays
+  * constant per round instead of nesting one join level per iteration. Convergence is detected with a one-scalar
   * count per round (never collecting data rows to the driver).
   */
 object Components {

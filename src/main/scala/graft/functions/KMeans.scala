@@ -1,34 +1,43 @@
 package graft.functions
 
-import org.apache.spark.sql.DataFrame
+import scala.collection.immutable.ArraySeq
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import graft.expressions.NearestCentroid
 
-/** Lloyd's k-means over an embedding column, expressed purely relationally
-  * (no MLlib dependency, no driver-side vectors beyond the k centroids):
-  * each iteration is assign (broadcast the k centroids collapsed to ONE
-  * array row, pick argmax cosine inside codegen) + recompute (the mergeable
-  * VectorCentroid aggregate) — i.e. one broadcast + one partial-aggregated
-  * shuffle of k rows per task per iteration, independent of corpus size.
-  * This turns [[Similarity.ivfTopK]] into a true learned-quantizer IVF
-  * instead of relying on a label column.
+/** Lloyd's k-means over an embedding column (no MLlib dependency), as a
+  * driver-resident loop with ONE Spark job per step: the k centroids are
+  * k × dims floats, so they live on the driver and never become a relation
+  * of their own.
+  *  - Seed: one `collect` of the k lowest-id vectors; cluster ids 0..k-1 in
+  *    id order.
+  *  - Each iteration: one pass over the input — the native
+  *    [[NearestCentroid]] kernel assigns every row against the centroids
+  *    as a literal, and each task folds its rows into k
+  *    [[Aggregators.VectorCentroid]] buffers (its own `zero`/`reduce`/
+  *    `merge`, so the arithmetic and the null/wrong-arity skipping are the
+  *    aggregate's). `treeAggregate` (depth 2) brings ≤ k buffers per task
+  *    back to the driver, which finishes them to floats. A cluster whose
+  *    buffer holds no rows keeps its previous centroid — otherwise k
+  *    silently shrinks across iterations.
   *
-  * Assignment is the native [[NearestCentroid]] kernel — a pure map-side
-  * projection. (Until r9 it was crossJoin(broadcast(centroids)) + a
-  * row_number window partitioned by id, which EXCHANGED N·k exploded rows
-  * — with the vector attached — per iteration; the argmax needs no shuffle
-  * at all. Semantics are identical by the kernel's contract: same cosine
-  * law, ties to the lower cluster id, all-null similarities fall back to
-  * the lowest cluster id.)
+  * Why on the driver: under AQE every shuffle or broadcast stage is its
+  * own job, and a job costs tens of milliseconds however little it reads,
+  * so a k-row state kept as a relation pays that for every relational
+  * step; here an iteration is a corpus scan and nothing else. At 100 TB an
+  * iteration is still one scan with ≤ k buffers per task, and
+  * `treeAggregate` bounds the driver's fan-in at about √partitions.
   *
-  * Determinism: initial centroids are the k lowest-id vectors (no RNG), and
-  * the argmax tie-break is the lowest cluster id — iterations are exactly
-  * reproducible.
+  * Determinism: no RNG, and the argmax tie-break is the lowest cluster id,
+  * so iterations are exactly reproducible. This turns
+  * [[Similarity.ivfTopK]] into a true learned-quantizer IVF instead of
+  * relying on a label column.
   */
 object KMeans {
 
   /** Returns (assignments df: idCol, cluster; centroids df: cluster,
-    * centroid array<float>).
+    * centroid array<float>). The centroids df is a local relation: reading
+    * it back starts no job.
     */
   def fit(
       df: DataFrame,
@@ -37,82 +46,56 @@ object KMeans {
       k: Int,
       dims: Int,
       iterations: Int): (DataFrame, DataFrame) = {
-    // localCheckpoint (eager) on each k-row centroid generation: cache()
-    // truncates execution but NOT lineage, so the logical plan would nest
-    // one broadcast-join level per iteration and analysis/codegen cost
-    // would grow linearly with iteration count. Checkpointing keeps the
-    // plan a constant-depth scan of k rows regardless of iterations
-    // (KMeansSpec asserts this). MEMORY_AND_DISK, not MEMORY_ONLY: a
-    // checkpointed RDD has NO lineage, so an LRU-evicted MEMORY_ONLY
-    // block is unrecomputable — a hard missing-block crash under storage
-    // pressure from corpus-sized caches in the same job (ADVICE r8).
-    // MEMORY_AND_DISK writes to disk only ON eviction, so the healthy
-    // path still does zero per-iteration disk writes (the r7 q68
-    // slow-disk concern was about eager writes, which this level never
-    // does). On a real cluster prefer reliable checkpoint() for fault
-    // tolerance; local[N] has no executor loss.
-    val CkptLevel = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-    // rank the k seed rows via one-row collect_list + sort_array +
-    // posexplode instead of an unpartitioned row_number window (r10,
-    // r9-verdict item 6): the input is k-row bounded by the limit either
-    // way, but the window form planned a partition-less WindowExec whose
-    // "single partition" warning is indistinguishable from a real
-    // corpus-sized window in a plan audit. Same rows, same order (ids are
-    // unique, struct sort orders by id first), zero-based cluster ids.
-    var centroids = df.orderBy(col(idCol).asc).limit(k)
-      .agg(sort_array(collect_list(struct(col(idCol), col(vecCol)))).as("a"))
-      .select(posexplode(col("a")).as(Seq("cluster", "s")))
-      .select(col("cluster").cast("int").as("cluster"),
-        col("s").getField(vecCol).as("centroid"))
-      .localCheckpoint(true, CkptLevel)
-
-    // Per-iteration reduce side sized to the k-row centroid relation (r10,
-    // guide §2.2): the recompute aggregate's MAP side runs at scan
-    // parallelism regardless (partial aggregation emits ≤ k rows per task);
-    // only the k-row final aggregate + centroid-update join live behind the
-    // shuffle, so session-default partition counts are pure per-iteration
-    // fixed cost. Checkpoints are already eager, so every iteration plans
-    // inside the scope.
-    IterLoop.withShufflePartitions(df.sparkSession,
-      IterLoop.partitionsFor(df.sparkSession, k.toLong)) {
-      for (_ <- 0 until iterations) {
-        // assignment carries the vector for free (it is a projection, not a
-        // join), so recompute reads it directly
-        val recomputed = assignAll(df.select(col(idCol), col(vecCol)), vecCol, centroids)
-          .groupBy(col("cluster"))
-          .agg(Aggregators.vectorCentroid(col(vecCol), dims).as("c"))
-          .select(col("cluster"), col("c").cast("array<float>").as("centroid"))
-        // clusters that captured no rows keep their previous centroid —
-        // otherwise k silently shrinks across iterations
-        centroids = centroids.select(col("cluster"), col("centroid").as("_prev"))
-          .join(recomputed.withColumnRenamed("centroid", "_new"), Seq("cluster"), "left")
-          .select(col("cluster"), coalesce(col("_new"), col("_prev")).as("centroid"))
-          .localCheckpoint(true, CkptLevel)
+    // null when the seed row's vector is null (the kernel skips it)
+    var centroids: Array[collection.Seq[Float]] = df.select(col(idCol), col(vecCol))
+      .orderBy(col(idCol).asc).limit(k).collect().map(_.getSeq[Float](1))
+    val n = centroids.length
+    val agg = new Aggregators.VectorCentroid(dims)
+    for (_ <- 0 until iterations) {
+      val cents = centroidLit(centroids.toSeq.zipWithIndex.map(_.swap))
+      val rows = df.select(NearestCentroid(col(vecCol), cents), col(vecCol)).queryExecution.toRdd
+      val bufs = rows.treeAggregate(Array.fill(n)(agg.zero))(
+        (b, r) => {
+          // a null vector has a null cluster: neither counted nor assigned
+          if (!r.isNullAt(0)) {
+            val c = r.getInt(0)
+            b(c) = agg.reduce(b(c), ArraySeq.unsafeWrapArray(r.getArray(1).toFloatArray()))
+          }
+          b
+        },
+        (x, y) => { for (c <- 0 until n) x(c) = agg.merge(x(c), y(c)); x },
+        depth = 2)
+      centroids = Array.tabulate(n) { c =>
+        if (bufs(c).n == 0) centroids(c) else agg.finish(bufs(c)).map(_.toFloat)
       }
     }
-    (assign(df, idCol, vecCol, centroids), centroids)
+    val spark = df.sparkSession
+    import spark.implicits._
+    val centroidDf = centroids.toSeq.zipWithIndex.map(_.swap).toDF("cluster", "centroid")
+    (assign(df, idCol, vecCol, centroidDf), centroidDf)
   }
 
-  /** Nearest-centroid assignment: (idCol, cluster) — a broadcast
-    * projection, no shuffle.
+  /** Nearest-centroid assignment: (idCol, cluster) — a projection, no
+    * shuffle.
     */
   def assign(df: DataFrame, idCol: String, vecCol: String, centroids: DataFrame): DataFrame =
     assignAll(df.select(col(idCol), col(vecCol)), vecCol, centroids)
       .select(col(idCol), col("cluster"))
 
   /** Nearest-centroid assignment keeping EVERY input column (+ cluster):
-    * the k-row centroid table is collapsed to one array row (sorted by
-    * cluster id — the kernel's tie-break contract), broadcast, and the
-    * argmax runs per row inside codegen. Callers that need the vector next
-    * to the cluster (IVF cell build, the recompute step) use this and skip
-    * the corpus-sized re-join by id an (id, cluster)-only result would
-    * force.
+    * the k-row centroid table is collected (no job when it is the local
+    * relation [[fit]] returns), sorted by cluster id on the driver — the
+    * kernel's tie-break contract — and the argmax runs per row inside
+    * codegen against it as a literal. Callers that need the vector next to
+    * the cluster (the IVF cell build) use this and skip the corpus-sized
+    * re-join by id an (id, cluster)-only result would force.
     */
   def assignAll(df: DataFrame, vecCol: String, centroids: DataFrame): DataFrame = {
-    val cents = centroids
-      .agg(sort_array(collect_list(struct(col("cluster"), col("centroid")))).as("_cents"))
-    df.crossJoin(broadcast(cents))
-      .withColumn("cluster", NearestCentroid(col(vecCol), col("_cents")))
-      .drop("_cents")
+    val cents = centroids.select(col("cluster"), col("centroid")).collect()
+      .map(r => (r.getInt(0), r.getSeq[Float](1))).sortBy(_._1)
+    df.withColumn("cluster", NearestCentroid(col(vecCol), centroidLit(cents.toSeq)))
   }
+
+  /** The kernel's array<struct<cluster int, centroid array<float>>>. */
+  private def centroidLit(cents: Seq[(Int, collection.Seq[Float])]): Column = typedLit(cents)
 }

@@ -295,8 +295,7 @@ object DepthQueries {
     // three iterations as CTEs. Per iteration: one edges⋈ranks join (the
     // scale shape: edges shuffle-partitioned by src, ranks tiny and
     // broadcast) + one groupBy(dst) — cost independent of iteration
-    // count; lazy localCheckpoint truncates the growing plan exactly like
-    // q68's k-means loop.
+    // count; lazy localCheckpoint truncates the growing plan.
     GQuery(
       "q115_pagerank",
       (s, d) => {

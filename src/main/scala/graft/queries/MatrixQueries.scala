@@ -115,7 +115,7 @@ object MatrixQueries {
     // 1929; the PCA/PageRank workhorse) in exact fixed point. After the
     // q160 Gram pass, every round is a d²-row join + d-row aggregate —
     // ARTIFACT-sized, corpus-independent, constant plan depth via
-    // localCheckpoint (the KMeans discipline). Normalization is L∞ at
+    // localCheckpoint. Normalization is L∞ at
     // scale 1000: v′ = trunc(1000·w / max|w|) — integer div truncates
     // identically in both engines (max|w| > 0 always: the Gram matrix
     // is PSD with positive diagonal and v₀ > 0). The w·1000 multiply

@@ -548,7 +548,7 @@ object NorthStarQueries {
       "corpus bigram counts (with duplicates), top-k"),
 
     // ------------------------------------------------------------------
-    // q68: IVF over a LEARNED quantizer — deterministic relational k-means
+    // q68: IVF over a LEARNED quantizer — deterministic driver-loop k-means
     // (lowest-id init, cosine argmax, mergeable centroid aggregate) trains
     // the cells, then probed-cell exact search. Gated at nprobe = 8 = k
     // cells (VERDICT r4): probing every learned cell makes the search
@@ -562,9 +562,9 @@ object NorthStarQueries {
         val emb = Tables.embeddings(s, d)
         val (_, centroids) = graft.functions.KMeans.fit(
           emb, "vec_id", "embedding", k = 8, dims = 64, iterations = 3)
-        // assignment is a broadcast projection (r9): the cell id lands next
-        // to the vector in one pass — no corpus self-join by id to re-attach
-        // the embedding to its cluster
+        // assignment is a projection against the centroids as a literal:
+        // the cell id lands next to the vector in one pass — no corpus
+        // self-join by id to re-attach the embedding to its cluster
         val cells = graft.functions.KMeans.assignAll(emb, "embedding", centroids)
         graft.functions.Similarity.ivfTopK(cells, cells.filter(col("vec_id") < 10),
             "vec_id", "embedding", "cluster", dims = 64, k = 5, nprobe = 8)

@@ -1,7 +1,11 @@
 package graft
 
+import java.util.concurrent.atomic.AtomicInteger
+import org.apache.spark.ListenerBusDrain
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import graft.functions.{KMeans, Similarity}
+import graft.functions.{Aggregators, KMeans, Similarity}
 
 class KMeansSpec extends SparkTestBase {
 
@@ -61,5 +65,100 @@ class KMeansSpec extends SparkTestBase {
         "vec_id", "embedding", Int.MaxValue)
       .collect().map(r => ((r.getLong(0), r.getLong(2)), r.getDouble(3))).toMap
     out.foreach(r => assert(truth((r.getLong(0), r.getLong(2))) == r.getDouble(3)))
+  }
+
+  /** Centroid float bits by cluster id. */
+  private def bits(centroids: DataFrame): Map[Int, Seq[Int]] =
+    centroids.collect().map(r => r.getInt(0) ->
+      r.getSeq[Float](1).map(java.lang.Float.floatToRawIntBits).toSeq).toMap
+
+  private def clusters(assigned: DataFrame): Map[Long, Any] =
+    assigned.collect().map(r => r.getLong(0) -> r.get(1)).toMap
+
+  /** Jobs the body starts on this thread, counted after the listener bus
+    * has delivered every event (jobs carry the thread's job group).
+    */
+  private def jobsStartedBy(body: => Unit): Int = {
+    val sc = spark.sparkContext
+    val group = s"kmeans-jobs-${java.util.UUID.randomUUID()}"
+    val jobs = new AtomicInteger
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (Option(e.properties).exists(_.getProperty("spark.jobGroup.id") == group))
+          jobs.incrementAndGet()
+    }
+    sc.addSparkListener(listener)
+    sc.setJobGroup(group, "KMeansSpec job budget")
+    try {
+      body
+      ListenerBusDrain(sc)
+      jobs.get
+    } finally {
+      sc.clearJobGroup()
+      sc.removeSparkListener(listener)
+    }
+  }
+
+  test("k-means job budget: one seed job plus one job per Lloyd step, none to assign") {
+    val emb = graft.sources.Tables.embeddings(spark, sf)
+    for (n <- Seq(0, 3)) {
+      var centroids: DataFrame = null
+      val fitJobs = jobsStartedBy {
+        centroids = KMeans.fit(emb, "vec_id", "embedding", k = 8, dims = 64, iterations = n)._2
+      }
+      assert(fitJobs == 1 + n, s"fit(iterations = $n) started $fitJobs jobs")
+      val assignJobs = jobsStartedBy { KMeans.assignAll(emb, "embedding", centroids) }
+      assert(assignJobs == 0, s"assignAll started $assignJobs jobs")
+    }
+  }
+
+  test("one driver Lloyd step matches the relational step bit for bit") {
+    val emb = graft.sources.Tables.embeddings(spark, sf)
+    val seeds = KMeans.fit(emb, "vec_id", "embedding", k = 8, dims = 64, iterations = 0)._2
+    val relational = bits(KMeans.assignAll(emb, "embedding", seeds)
+      .groupBy(col("cluster"))
+      .agg(Aggregators.vectorCentroid(col("embedding"), 64).as("c"))
+      .select(col("cluster"), col("c").cast("array<float>")))
+    // every seed captures rows, so no cluster falls back to its seed
+    assert(relational.size == 8)
+    val step = KMeans.fit(emb, "vec_id", "embedding", k = 8, dims = 64, iterations = 1)._2
+    assert(bits(step) == relational)
+  }
+
+  test("k-means gives the same assignments and centroid bits at 1 and 4 input partitions") {
+    val emb = graft.sources.Tables.embeddings(spark, sf)
+    val one = emb.coalesce(1)
+    val four = emb.repartition(4, col("vec_id"))
+    assert(one.rdd.getNumPartitions == 1 && four.rdd.getNumPartitions == 4)
+    val (a1, c1) = KMeans.fit(one, "vec_id", "embedding", k = 8, dims = 64, iterations = 3)
+    val (a4, c4) = KMeans.fit(four, "vec_id", "embedding", k = 8, dims = 64, iterations = 3)
+    assert(bits(c1) == bits(c4))
+    assert(clusters(a1) == clusters(a4))
+  }
+
+  test("k-means: a cluster that captures no rows keeps its seed") {
+    import spark.implicits._
+    val c1 = Array.tabulate(8)(i => if (i < 4) 1.0f else 0.0f)
+    val c2 = Array.tabulate(8)(i => if (i >= 4) 1.0f else 0.0f)
+    // ids 0 and 1 carry the same vector, so clusters 0 and 1 seed
+    // identically and cluster 1 loses every tie to cluster 0
+    val rows = (1 until 30).map(i => (i.toLong, blob(if (i % 2 == 0) c1 else c2, i)))
+    val df = ((0L, rows.head._2) +: rows).toDF("vec_id", "embedding")
+    val got = bits(KMeans.fit(df, "vec_id", "embedding", k = 3, dims = 8, iterations = 1)._2)
+    assert(got(1) == rows.head._2.toSeq.map(java.lang.Float.floatToRawIntBits))
+    assert(got(0) != got(1), "cluster 0 should have moved off the shared seed")
+  }
+
+  test("k-means: a null embedding is neither counted nor assigned") {
+    val emb = graft.sources.Tables.embeddings(spark, sf)
+    val withNull = emb.select(col("vec_id"), col("embedding"))
+      .unionByName(emb.agg((max(col("vec_id")) + 1).as("vec_id"))
+        .select(col("vec_id"), lit(null).cast("array<float>").as("embedding")))
+    val (plain, cPlain) = KMeans.fit(emb, "vec_id", "embedding", k = 8, dims = 64, iterations = 3)
+    val (nulled, cNulled) = KMeans.fit(withNull, "vec_id", "embedding", k = 8, dims = 64, iterations = 3)
+    assert(bits(cNulled) == bits(cPlain))
+    val got = clusters(nulled)
+    assert(got.size == clusters(plain).size + 1)
+    assert(got.count(_._2 == null) == 1)
   }
 }
