@@ -1,6 +1,7 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.graftbridge
 import org.apache.spark.sql.catalyst.expressions.{Expression, Literal}
 import org.apache.spark.sql.types.IntegerType
 import graft.expressions.{CosineSimilarity, MisraGriesAggregate}
@@ -13,6 +14,9 @@ import graft.plans.AsOfStrategy
   *  - [[Graft.install]] registers the planner strategy and SQL functions on
   *    a live session, for sessions handed to you (the driver contract
   *    passes one in). It is idempotent; the factory calls it.
+  *  - [[Graft.childSession]] is the one way to run with other execution
+  *    settings: a cached child of a session, its overrides set once at
+  *    creation. Nothing writes a setting onto a caller's session.
   *
   * After either, SQL can call `cosine_sim(a, b)` and `misra_gries(x, k)`,
   * and the as-of join plans through [[graft.plans.AsOfJoinExec]].
@@ -52,6 +56,37 @@ object Graft {
     functions.createOrReplaceTempFunction("cosine_sim", cosineSim, "built-in")
     functions.createOrReplaceTempFunction("misra_gries", misraGries, "built-in")
   }
+
+  // Weak in the parent, so a discarded parent does not pin its children. A
+  // child costs about a second to build (its own analyzer, rules and conf),
+  // so it is built once and reused for the life of its parent.
+  private val childSessions = new java.util.WeakHashMap[SparkSession,
+    java.util.Map[Seq[(String, String)], SparkSession]]()
+
+  /** A child of `parent` that differs from it only by `overrides`: a clone
+    * of the parent's session state (conf, functions, strategies, temp
+    * views as of creation) over the shared SparkContext and caches, with
+    * `overrides` set once, at creation. Plans built on the child read the
+    * child's conf; the parent's conf and catalog are never touched, so no
+    * restore can be missed and no concurrent query on the parent sees an
+    * override. Cached per (parent, overrides).
+    */
+  def childSession(parent: SparkSession, overrides: (String, String)*): SparkSession =
+    childSessions.synchronized {
+      childSessions.computeIfAbsent(parent, _ => new java.util.HashMap())
+        .computeIfAbsent(overrides.toSeq, _ => {
+          val child = graftbridge.cloneSession(parent)
+          overrides.foreach { case (k, v) => child.conf.set(k, v) }
+          child
+        })
+    }
+
+  /** `df`'s plan as a DataFrame of `session`: it and everything built on it
+    * from here on plan under `session`'s conf. Moving an already-checkpointed
+    * relation costs nothing; it keeps its recorded partitioning.
+    */
+  def onSession(session: SparkSession, df: DataFrame): DataFrame =
+    graftbridge.ofRows(session, graftbridge.analyzedPlan(df))
 
   private def cosineSim(children: Seq[Expression]): Expression = {
     require(children.size == 2, "cosine_sim(a, b) takes two array<float> args")

@@ -3,6 +3,7 @@ package graft.functions
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.Graft
 
 /** Relational BPE (Sennrich et al., ACL 2016): learn pair merges over a
   * word-frequency dictionary and apply them, entirely as DataFrame ops.
@@ -52,54 +53,50 @@ object Bpe {
     // the clamp keeps corpus-scale dictionaries at full parallelism). The
     // count materializes the one corpus-sized word aggregate, a job round 1
     // was about to run anyway.
-    var syms = initialSymbols(words).localCheckpoint(false, CkptLevel)
     val spark = words.sparkSession
-    val parts = IterLoop.partitionsFor(spark, syms.count())
+    var syms = initialSymbols(words).localCheckpoint(false, CkptLevel)
+    val loop = IterLoop.session(spark, IterLoop.partitionsFor(spark, syms.count()))
+    val dict = Graft.onSession(loop, words)
+    syms = Graft.onSession(loop, syms)
     var bests = Vector.empty[DataFrame]
-    IterLoop.withShufflePartitions(spark, parts) {
-      for (r <- 1 to nRounds) {
-        val withNext = syms.withColumn("nxt", lead(col("sym"), 1).over(wOrd))
-        val best = withNext.filter(col("nxt").isNotNull)
-          .join(words, Seq("word"))
-          .groupBy(col("sym"), col("nxt")).agg(sum(col("cnt")).as("c"))
-          .select(col("sym").as("a"), col("nxt").as("b"), col("c"))
-          .orderBy(col("c").desc, col("a").asc, col("b").asc).limit(1)
-          // consumed by the merge AND the caller; spill-on-eviction — these are
-          // 1-row / dictionary-sized tables, eviction-spill is free and the
-          // lineage-free block can never be lost to LRU (ADVICE r8)
-          .localCheckpoint(false, CkptLevel)
-        bests :+= best.select(lit(r.toLong).as("round"), col("a"), col("b"), col("c"))
-        // LEFT join on a constant key, not crossJoin: once pairs are
-        // exhausted `best` is EMPTY and a cross join would silently collapse
-        // every remaining symbol row (q156's encoder would lose the corpus);
-        // with the left join a/b are null → no match → symbols pass through
-        val marked = withNext.withColumn("_k", lit(1))
-          .join(broadcast(best.select(lit(1).as("_k"), col("a"), col("b"))),
-            Seq("_k"), "left")
-          .drop("_k")
-          .withColumn("m",
-            coalesce(col("sym") === col("a") && col("nxt") === col("b"), lit(false)))
-          .withColumn("rnm", sum(when(col("m"), 1L).otherwise(0L)).over(wOrd))
-          .withColumn("island", when(col("m"), col("pos") - col("rnm")))
-          .withColumn("irn", row_number().over(
-            Window.partitionBy(col("word"), col("island")).orderBy(col("pos"))))
-          .withColumn("take", col("m") && col("irn") % 2 === 1)
-          .withColumn("consumed",
-            coalesce(lag(col("take"), 1).over(wOrd), lit(false)))
-        syms = marked.filter(!col("consumed"))
-          .select(col("word"), col("pos"),
-            when(col("take"), concat(col("sym"), col("nxt")))
-              .otherwise(col("sym")).as("sym"))
-          .withColumn("pos2", row_number().over(wOrd).cast("long"))
-          .select(col("word"), col("pos2").as("pos"), col("sym"))
-          // EAGER (was lazy): each round must PLAN inside the scoped
-          // partition count above — the lazy cascade would plan every round
-          // at final-action time, after the conf is restored. Job count is
-          // unchanged (the cascade materialized one job per round anyway).
-          .localCheckpoint(true, CkptLevel)
-      }
+    for (r <- 1 to nRounds) {
+      val withNext = syms.withColumn("nxt", lead(col("sym"), 1).over(wOrd))
+      val best = withNext.filter(col("nxt").isNotNull)
+        .join(dict, Seq("word"))
+        .groupBy(col("sym"), col("nxt")).agg(sum(col("cnt")).as("c"))
+        .select(col("sym").as("a"), col("nxt").as("b"), col("c"))
+        .orderBy(col("c").desc, col("a").asc, col("b").asc).limit(1)
+        // consumed by the merge AND the caller; spill-on-eviction — these are
+        // 1-row / dictionary-sized tables, eviction-spill is free and the
+        // lineage-free block can never be lost to LRU (ADVICE r8)
+        .localCheckpoint(false, CkptLevel)
+      bests :+= best.select(lit(r.toLong).as("round"), col("a"), col("b"), col("c"))
+      // LEFT join on a constant key, not crossJoin: once pairs are
+      // exhausted `best` is EMPTY and a cross join would silently collapse
+      // every remaining symbol row (q156's encoder would lose the corpus);
+      // with the left join a/b are null → no match → symbols pass through
+      val marked = withNext.withColumn("_k", lit(1))
+        .join(broadcast(best.select(lit(1).as("_k"), col("a"), col("b"))),
+          Seq("_k"), "left")
+        .drop("_k")
+        .withColumn("m",
+          coalesce(col("sym") === col("a") && col("nxt") === col("b"), lit(false)))
+        .withColumn("rnm", sum(when(col("m"), 1L).otherwise(0L)).over(wOrd))
+        .withColumn("island", when(col("m"), col("pos") - col("rnm")))
+        .withColumn("irn", row_number().over(
+          Window.partitionBy(col("word"), col("island")).orderBy(col("pos"))))
+        .withColumn("take", col("m") && col("irn") % 2 === 1)
+        .withColumn("consumed",
+          coalesce(lag(col("take"), 1).over(wOrd), lit(false)))
+      syms = marked.filter(!col("consumed"))
+        .select(col("word"), col("pos"),
+          when(col("take"), concat(col("sym"), col("nxt")))
+            .otherwise(col("sym")).as("sym"))
+        .withColumn("pos2", row_number().over(wOrd).cast("long"))
+        .select(col("word"), col("pos2").as("pos"), col("sym"))
+        .localCheckpoint(true, CkptLevel)
     }
-    Trained(bests, syms)
+    Trained(bests.map(Graft.onSession(spark, _)), Graft.onSession(spark, syms))
   }
 
   /** DuckDB oracle fragments replaying the identical rounds. */

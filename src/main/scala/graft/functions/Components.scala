@@ -2,6 +2,7 @@ package graft.functions
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import graft.Graft
 
 /** Connected components over an undirected edge list — the clustering step
   * of a dedup pipeline: near-dup PAIRS (MinHash/SimHash/embedding) become
@@ -50,45 +51,44 @@ object Components {
     // LogicalRDD, so every round's edge-side exchange is planned away —
     // the per-round shuffle is labels only (r9, guide §2.4 "two operations
     // keyed the same way can share one exchange"). The partition COUNT
-    // must match the scoped loop partitions, or the per-round label
-    // exchange could not co-partition with it.
-    val und = e.union(e.select(col("dst").as("src"), col("src").as("dst")))
-      .distinct().repartition(parts, col("dst")).localCheckpoint()
-    IterLoop.withShufflePartitions(spark, parts) {
-      var labels = und.select(col("src").as("id")).distinct()
-        .select(col("id"), col("id").as("comp")).localCheckpoint()
-      // Round shape (r9 rework): one join + one union-aggregate per round —
-      // new comp(id) = min(own comp, min over neighbors' comps), identical
-      // to the previous join+agg+left-join form by the min identity. The
-      // old form additionally re-joined next against labels to COUNT
-      // changed rows (two more shuffles per round); convergence is instead
-      // read off a monotone invariant: per-id comp never increases, so the
-      // label sum strictly decreases iff any label changed. DECIMAL(38,0)
-      // sum — vertex ids can be 60-bit hashes, a BIGINT sum would overflow
-      // under ANSI. One scalar job per round, which doubles as the lazy
-      // checkpoint's materializer.
-      def labelSum(df: DataFrame): java.math.BigDecimal =
-        df.agg(sum(col("comp").cast("decimal(38,0)"))).head().getDecimal(0)
-      var lastSum = labelSum(labels)
-      // an EMPTY edge set (legitimate for the near-dup callers on a dup-free
-      // corpus) yields an empty labels frame and a NULL sum-over-zero-rows:
-      // short-circuit instead of NPEing on compareTo (ADVICE r9)
-      var changed = lastSum != null
-      var it = 0
-      while (changed && it < maxIters) {
-        val next = und.join(labels, und("dst") === labels("id"))
-          .select(und("src").as("id"), col("comp"))
-          .union(labels)
-          .groupBy(col("id")).agg(min(col("comp")).as("comp"))
-          .localCheckpoint(false)
-        val s = labelSum(next)
-        changed = s.compareTo(lastSum) != 0
-        lastSum = s
-        labels = next
-        it += 1
-      }
-      labels
+    // must match the loop session's, or the per-round label exchange
+    // could not co-partition with it.
+    val loop = IterLoop.session(spark, parts)
+    val und = Graft.onSession(loop, e.union(e.select(col("dst").as("src"), col("src").as("dst")))
+      .distinct().repartition(parts, col("dst")).localCheckpoint())
+    var labels = und.select(col("src").as("id")).distinct()
+      .select(col("id"), col("id").as("comp")).localCheckpoint()
+    // Round shape (r9 rework): one join + one union-aggregate per round —
+    // new comp(id) = min(own comp, min over neighbors' comps), identical
+    // to the previous join+agg+left-join form by the min identity. The
+    // old form additionally re-joined next against labels to COUNT
+    // changed rows (two more shuffles per round); convergence is instead
+    // read off a monotone invariant: per-id comp never increases, so the
+    // label sum strictly decreases iff any label changed. DECIMAL(38,0)
+    // sum — vertex ids can be 60-bit hashes, a BIGINT sum would overflow
+    // under ANSI. One scalar job per round, which doubles as the lazy
+    // checkpoint's materializer.
+    def labelSum(df: DataFrame): java.math.BigDecimal =
+      df.agg(sum(col("comp").cast("decimal(38,0)"))).head().getDecimal(0)
+    var lastSum = labelSum(labels)
+    // an EMPTY edge set (legitimate for the near-dup callers on a dup-free
+    // corpus) yields an empty labels frame and a NULL sum-over-zero-rows:
+    // short-circuit instead of NPEing on compareTo (ADVICE r9)
+    var changed = lastSum != null
+    var it = 0
+    while (changed && it < maxIters) {
+      val next = und.join(labels, und("dst") === labels("id"))
+        .select(und("src").as("id"), col("comp"))
+        .union(labels)
+        .groupBy(col("id")).agg(min(col("comp")).as("comp"))
+        .localCheckpoint(false)
+      val s = labelSum(next)
+      changed = s.compareTo(lastSum) != 0
+      lastSum = s
+      labels = next
+      it += 1
     }
+    Graft.onSession(spark, labels)
   }
 
   /** Large-star/small-star connected components (Kiveris et al., SoCC 2014)
@@ -159,8 +159,9 @@ object Components {
     // per-round reduce tasks sized to the live edge set (r10, guide §2.2 —
     // same inverse-scaling fix as the propagation loop above); clamps to
     // full parallelism, so corpus-sized graphs are unaffected
-    IterLoop.withShufflePartitions(e0.sparkSession,
-        IterLoop.partitionsFor(e0.sparkSession, curSig._1 * 2)) {
+    val spark = e0.sparkSession
+    cur = Graft.onSession(
+      IterLoop.session(spark, IterLoop.partitionsFor(spark, curSig._1 * 2)), cur)
     while (!done && it < maxIters) {
       // ---- large-star over the undirected view
       val bi = cur.union(cur.select(col("dst").as("src"), col("src").as("dst")))
@@ -186,7 +187,7 @@ object Components {
       curSig = ssSig
       it += 1
     }
-    }
+    cur = Graft.onSession(spark, cur)
     // a truncated run would silently hand back labels from a
     // partially-contracted edge set (vertices of one component under
     // different labels) — refuse, like every other correctness path here

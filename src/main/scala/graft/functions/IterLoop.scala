@@ -9,8 +9,6 @@ import org.apache.spark.sql.SparkSession
   * `spark.sql.shuffle.partitions = 32` a 12-round peel over a few thousand
   * rows schedules hundreds of near-empty tasks and runs SLOWER at 32 cores
   * than at 8 (BENCH_r09: q162 6.9 s @32c vs ≤4.3 s @8c, q170 8.8 s @32c).
-  * This is the batch twin of the r9 streaming-gate state-shard fix
-  * (EventStreams.withGateShufflePartitions).
   *
   * The count is derived from the MEASURED live row count, never a constant:
   * `partitionsFor(rows)` targets [[TargetRowsPerPartition]] rows per
@@ -20,20 +18,27 @@ import org.apache.spark.sql.SparkSession
   * tasks the data actually needs. Results are partitioning-independent
   * (hash partitioning only moves keys between reducers).
   *
-  * AQE cannot do this for the callers: every loop here pins its static
-  * relation's partitioning with `repartition(col)` + localCheckpoint so the
-  * per-round join reuses ONE exchange (guide §2.4), and a user-specified
-  * repartition is exactly what AQE's coalescing leaves alone.
+  * A loop plans on [[session]]: a cached child of the caller's session whose
+  * shuffle-partition count is the loop's (`graft.Graft.childSession`). It
+  * moves its inputs there with `Graft.onSession` and moves its result back,
+  * so the caller's session is never written and later work on the result
+  * plans at the caller's own settings. A plan-local `repartition(n, keys)`
+  * cannot do this for a join: when every join input has fewer partitions
+  * than the session default, EnsureRequirements re-shuffles both inputs to
+  * the default (its minimum-parallelism rule), so a two-input round would
+  * run at the session default whatever the inputs carry. Within a loop
+  * session, a static relation pinned once with `repartition(parts, key)` +
+  * localCheckpoint co-partitions with every round's exchange, so each round
+  * shuffles only the changing side (guide §2.4); AQE leaves that
+  * user-numbered repartition alone.
   */
 object IterLoop {
 
-  /** ~rows per reduce task inside an iterative loop. Small enough that a
+  /** ~rows per reduce task inside an iterative loop: small enough that a
     * gate-scale frontier collapses to a couple of tasks, large enough that
-    * a task amortizes its scheduling cost; env-overridable for production
-    * tuning (SPARK_GRAFT_LOOP_TARGET_ROWS).
+    * a task amortizes its scheduling cost.
     */
-  val TargetRowsPerPartition: Long =
-    sys.env.get("SPARK_GRAFT_LOOP_TARGET_ROWS").map(_.toLong).getOrElse(65536L)
+  val TargetRowsPerPartition: Long = 65536L
 
   /** Partition count for a loop whose live relation holds ~`rows` rows. */
   def partitionsFor(spark: SparkSession, rows: Long): Int = {
@@ -42,18 +47,7 @@ object IterLoop {
     math.max(1L, math.min(par.toLong, want)).toInt
   }
 
-  /** Scope `spark.sql.shuffle.partitions` to `n` for the loop body and
-    * restore it after (the EventStreams set/restore precedent — the conf
-    * is read per-shuffle at planning time, so the scope must cover every
-    * action the loop triggers, including lazy-checkpoint materializers).
-    */
-  def withShufflePartitions[T](spark: SparkSession, n: Int)(f: => T): T = {
-    val key = "spark.sql.shuffle.partitions"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key, math.max(1, n).toString)
-    try f finally prev match {
-      case Some(p) => spark.conf.set(key, p)
-      case None => spark.conf.unset(key)
-    }
-  }
+  /** The session a loop with `parts` shuffle partitions plans on. */
+  def session(spark: SparkSession, parts: Int): SparkSession =
+    graft.Graft.childSession(spark, "spark.sql.shuffle.partitions" -> parts.toString)
 }

@@ -639,7 +639,8 @@ object Shards {
   def streamShardGate(spark: SparkSession,
       totalShards: Long = 90, perBatch: Long = 30): DataFrame = {
     import spark.implicits._
-    val raw = spark.readStream.format("graft.sources.GraftStreamSource")
+    val raw = graft.streaming.EventStreams.gateSession(spark)
+      .readStream.format("graft.sources.GraftStreamSource")
       .option("maxRows", totalShards.toString)
       .option("rowsPerBatch", perBatch.toString)
       .load()

@@ -129,40 +129,36 @@ object MatrixQueries {
     GQuery(
       "q161_pca_power",
       (s, d) => {
-        val tri = gramTri(s, d)
-        val sym = tri.select(col("i").as("gi"), col("j").as("gj"), col("gram"))
-          .unionByName(tri.filter(col("i") =!= col("j"))
-            .select(col("j").as("gi"), col("i").as("gj"), col("gram")))
-          .localCheckpoint(false) // consumed once per round
-        var v = s.range(D).select(col("id").cast("int").as("dim"), lit(1000L).as("v"))
         // The 6 power rounds run on the d×d ARTIFACT (≤ d² = 4096 rows by
-        // construction, corpus-independent), so their per-round shuffles
-        // are sized to the artifact, not the session default (r10, guide
-        // §2.2 — the r9-verdict iterative-loop item). Checkpoints are
-        // EAGER inside the scope: the lazy cascade would otherwise plan
-        // (and size) every round's shuffle at final-action time, after
-        // the conf is restored; round count and job count are unchanged
-        // (each lazy checkpoint materialized as its own job anyway). The
-        // corpus-sized Gram pass materializes inside round 1's job with
-        // its map-side parallelism governed by the scan, not this conf.
-        graft.functions.IterLoop.withShufflePartitions(s,
-          graft.functions.IterLoop.partitionsFor(s, D.toLong * D)) {
-          for (_ <- 1 to Rounds) {
-            val w = sym.join(v, col("gj") === col("dim"))
-              .groupBy(col("gi"))
-              .agg(sum(col("gram") * col("v")).as("w"))
-            val mx = w.agg(max(abs(col("w"))).as("mx"))
-            v = w.crossJoin(broadcast(mx)) // 1-row side
-              .select(col("gi").as("dim"),
-                // INTEGER division truncates toward zero in BOTH engines
-                // (Spark `div`, DuckDB `//` on BIGINT/HUGEINT — verified:
-                // -7//2 = -3; DuckDB only floors on the double `/`+floor
-                // path), so plain div is the cross-engine-exact spelling.
-                expr("(CAST(w AS DECIMAL(38,0)) * 1000) div mx").cast("long").as("v"))
-              .localCheckpoint() // eager: plans THIS round inside the scope
-          }
+        // construction, corpus-independent), so they plan on a loop session
+        // whose shuffles are sized to the artifact, not the session default
+        // (r10, guide §2.2 — the r9-verdict iterative-loop item). The
+        // corpus-sized Gram pass materializes inside round 1's job with its
+        // map-side parallelism governed by the scan.
+        val loop = graft.functions.IterLoop.session(s,
+          graft.functions.IterLoop.partitionsFor(s, D.toLong * D))
+        val tri = gramTri(s, d)
+        val sym = graft.Graft.onSession(loop,
+          tri.select(col("i").as("gi"), col("j").as("gj"), col("gram"))
+            .unionByName(tri.filter(col("i") =!= col("j"))
+              .select(col("j").as("gi"), col("i").as("gj"), col("gram")))
+            .localCheckpoint(false)) // consumed once per round
+        var v = loop.range(D).select(col("id").cast("int").as("dim"), lit(1000L).as("v"))
+        for (_ <- 1 to Rounds) {
+          val w = sym.join(v, col("gj") === col("dim"))
+            .groupBy(col("gi"))
+            .agg(sum(col("gram") * col("v")).as("w"))
+          val mx = w.agg(max(abs(col("w"))).as("mx"))
+          v = w.crossJoin(broadcast(mx)) // 1-row side
+            .select(col("gi").as("dim"),
+              // INTEGER division truncates toward zero in BOTH engines
+              // (Spark `div`, DuckDB `//` on BIGINT/HUGEINT — verified:
+              // -7//2 = -3; DuckDB only floors on the double `/`+floor
+              // path), so plain div is the cross-engine-exact spelling.
+              expr("(CAST(w AS DECIMAL(38,0)) * 1000) div mx").cast("long").as("v"))
+            .localCheckpoint()
         }
-        v.orderBy(col("dim").asc)
+        graft.Graft.onSession(s, v).orderBy(col("dim").asc)
       },
       Some(powerOracle),
       doc = "PCA dominant eigenvector: fixed-point power iteration on the Gram artifact")

@@ -313,28 +313,29 @@ object MiningQueries {
         // Per-round reduce tasks sized to the LIVE edge set, not the session
         // default (r10, guide §2.2 — the r9-verdict inverse-scaling item:
         // 12 rounds × 32 near-empty reduce tasks made q162 slower at 32
-        // cores than at 8). partitionsFor clamps to full parallelism, so a
-        // corpus-sized edge set is unaffected. The pair-core materialization
-        // and its count above run OUTSIDE the scope at full parallelism.
-        graft.functions.IterLoop.withShufflePartitions(s,
-          graft.functions.IterLoop.partitionsFor(s, nEdges)) {
-          for (_ <- 1 to KcoreRounds if !converged) {
-            val keep = edges.select(col("u").as("node"))
-              .unionByName(edges.select(col("v").as("node")))
-              .groupBy(col("node")).agg(count(lit(1)).as("deg"))
-              .filter(col("deg") >= KcoreK)
-              .select(col("node"))
-              .localCheckpoint(false) // consumed by both semi joins
-            val next = edges
-              .join(keep, edges("u") === keep("node"), "left_semi")
-              .join(keep, edges("v") === keep("node"), "left_semi")
-              .localCheckpoint(false) // constant plan depth across rounds
-            val m = next.count()
-            converged = m == nEdges
-            edges = next
-            nEdges = m
-          }
+        // cores than at 8): the rounds plan on a loop session. partitionsFor
+        // clamps to full parallelism, so a corpus-sized edge set is
+        // unaffected. The pair-core materialization and its count above run
+        // on the caller's session at full parallelism.
+        edges = graft.Graft.onSession(graft.functions.IterLoop.session(s,
+          graft.functions.IterLoop.partitionsFor(s, nEdges)), edges)
+        for (_ <- 1 to KcoreRounds if !converged) {
+          val keep = edges.select(col("u").as("node"))
+            .unionByName(edges.select(col("v").as("node")))
+            .groupBy(col("node")).agg(count(lit(1)).as("deg"))
+            .filter(col("deg") >= KcoreK)
+            .select(col("node"))
+            .localCheckpoint(false) // consumed by both semi joins
+          val next = edges
+            .join(keep, edges("u") === keep("node"), "left_semi")
+            .join(keep, edges("v") === keep("node"), "left_semi")
+            .localCheckpoint(false) // constant plan depth across rounds
+          val m = next.count()
+          converged = m == nEdges
+          edges = next
+          nEdges = m
         }
+        edges = graft.Graft.onSession(s, edges)
         edges.select(col("u").as("node"))
           .unionByName(edges.select(col("v").as("node")))
           .groupBy(col("node")).agg(count(lit(1)).as("deg"))

@@ -237,7 +237,7 @@ object SqlFeatureQueries {
         // is shared across invocations.
         import org.apache.spark.sql.functions.{col, lag}
         import org.apache.spark.sql.expressions.Window
-        val iso = recursionSession(s)
+        val iso = graft.Graft.childSession(s, RecursionRowLimit)
         val edges = freshViewName("g_rec_edges")
         // The recursion re-scans the materialized edge relation EVERY
         // iteration (~25×), so its checkpoint block count is a per-
@@ -318,7 +318,7 @@ object SqlFeatureQueries {
     GQuery(
       "q200_recursive_rollup",
       (s, d) => {
-        val iso = recursionSession(s)
+        val iso = graft.Graft.childSession(s, RecursionRowLimit)
         val cust = freshViewName("g_rec_customer")
         // same right-sizing as q199's edge relation (r10): the recursion
         // re-scans this checkpoint once per depth level (~log₂ n), so its

@@ -17,63 +17,21 @@ package object queries {
   def mediaIds(spark: SparkSession, sfDir: String): Dataset[Long] = Tables.spread(
     Tables.documents(spark, sfDir).select(col("doc_id")), col("doc_id")).as(Encoders.scalaLong)
 
-  /** An isolated child session: own SQLConf and temp-view catalog over the
-    * SHARED SparkContext (and table/block caches), for queries that need a
-    * conf override or scratch views. Strictly stronger than save/restore
-    * on the caller's session: nothing SHARED is ever mutated, so there is
-    * no restore to get wrong, no window where a concurrent query on the
-    * parent session observes the override, and nothing leaks to the
-    * parent if the query throws. Whether the child is discarded after one
-    * use or cached (see [[recursionSession]]) is the caller's choice —
-    * either way the parent is untouched. Execution-relevant session confs
-    * are mirrored from the parent (they normally arrive via SparkConf at
-    * context creation, but a caller may have set them on the session
-    * after creation).
+  /** The override the recursive gates (q199/q200) run under, in their
+    * cached child session (`graft.Graft.childSession`): the recursion
+    * row-limit guardrail raised to 20 M — needed headroom for the gated
+    * recursions, whose cumulative iteration output is LINEAR in the input
+    * but crosses the 1 M default well inside gated territory (q199's
+    * counter reaches n_orders = 1.5 M at sf1, i.e. the default trips below
+    * sf1; q200's ~3n crosses near sf2.2). The caller's session keeps the
+    * default: a runaway recursion authored against it still trips.
     */
-  def isolatedSession(s: org.apache.spark.sql.SparkSession): org.apache.spark.sql.SparkSession = {
-    val iso = s.newSession()
-    Seq("spark.sql.shuffle.partitions", "spark.sql.session.timeZone")
-      .foreach(k => s.conf.getOption(k).foreach(v => iso.conf.set(k, v)))
-    iso
-  }
-
-  // One recursion child per parent session, weak-keyed so a discarded
-  // parent doesn't pin its child. newSession() builds a fresh
-  // SessionState (analyzer, rule chains, conf) — ~1–1.5 s of first-use
-  // cost that a per-invocation child would pay on EVERY bench round;
-  // caching pays it once per parent. The child's conf is set ONCE at
-  // creation and never mutated afterwards, so concurrent queries on the
-  // cached child cannot race on conf; scratch views stay safe via
-  // per-invocation unique names.
-  private val recSessions = java.util.Collections.synchronizedMap(
-    new java.util.WeakHashMap[org.apache.spark.sql.SparkSession, org.apache.spark.sql.SparkSession]())
-
-  /** The shared RECURSION session for `s`: an isolated child (own SQLConf
-    * + temp-view catalog over the shared SparkContext) with the recursion
-    * row-limit guardrail pre-raised to 20 M — needed headroom for the
-    * gated recursions, whose cumulative iteration output is LINEAR in the
-    * input but crosses the 1 M default well inside gated territory
-    * (q199's counter reaches n_orders = 1.5 M at sf1, i.e. the default
-    * trips below sf1; q200's ~3n crosses near sf2.2). The PARENT
-    * session's guardrail, conf, and catalog are never touched: a runaway
-    * recursion authored against the shared session still trips the
-    * default limit.
-    */
-  def recursionSession(s: org.apache.spark.sql.SparkSession): org.apache.spark.sql.SparkSession =
-    recSessions.synchronized {
-      var iso = recSessions.get(s)
-      if (iso == null) {
-        iso = isolatedSession(s)
-        iso.conf.set("spark.sql.cteRecursionRowLimit", "20000000")
-        recSessions.put(s, iso)
-      }
-      iso
-    }
+  val RecursionRowLimit: (String, String) = "spark.sql.cteRecursionRowLimit" -> "20000000"
 
   private val viewCounter = new java.util.concurrent.atomic.AtomicLong()
 
-  /** A per-invocation-unique temp-view name: the cached recursion session
-    * is shared across invocations, so a fixed scratch-view name would race
+  /** A per-invocation-unique temp-view name: a cached child session is
+    * shared across invocations, so a fixed scratch-view name would race
     * under concurrent execution of the same query.
     */
   def freshViewName(prefix: String): String =

@@ -210,23 +210,22 @@ object EventStreams {
     * each batch dynamically OVERWRITES its own batch_id partition — a
     * replayed batch rewrites the same partition instead of appending dups.
     */
-  def runForeachBatch(df: DataFrame, outDir: String, checkpoint: String): Unit =
-    withGateShufflePartitions(df.sparkSession) {
-      val q = df.writeStream
-        .outputMode("append")
-        .option("checkpointLocation", checkpoint)
-        .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-          batch.withColumn("batch_id", lit(batchId))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("batch_id")
-            .parquet(outDir)
-          ()
-        }
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-    }
+  def runForeachBatch(df: DataFrame, outDir: String, checkpoint: String): Unit = {
+    val q = df.writeStream
+      .outputMode("append")
+      .option("checkpointLocation", checkpoint)
+      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], batchId: Long) =>
+        batch.withColumn("batch_id", lit(batchId))
+          .write.mode("overwrite")
+          .option("partitionOverwriteMode", "dynamic")
+          .partitionBy("batch_id")
+          .parquet(outDir)
+        ()
+      }
+      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+      .start()
+    q.awaitTermination()
+  }
 
   /** Event-time-timer sessionization (the §2.10 timer tier of
     * transformWithState, complementing [[UserProfileProcessor]]'s
@@ -325,7 +324,12 @@ object EventStreams {
     */
   def streamSessionGate(spark: SparkSession, users: Long = 20): DataFrame = {
     import spark.implicits._
-    val raw = spark.readStream.format("graft.sources.GraftStreamSource")
+    // transformWithState keeps timers in their own column family — only
+    // the RocksDB provider supports that (the HDFS-backed default hard-
+    // rejects it), so this gate's session also overrides the provider
+    val raw = gateSession(spark, "spark.sql.streaming.stateStore.providerClass" ->
+        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
+      .readStream.format("graft.sources.GraftStreamSource")
       .option("maxRows", (users * 12).toString)
       .option("rowsPerBatch", (users * 11 / 2).toString)
       .load()
@@ -348,66 +352,43 @@ object EventStreams {
         org.apache.spark.sql.streaming.TimeMode.EventTime(),
         org.apache.spark.sql.streaming.OutputMode.Append(),
         org.apache.spark.sql.Encoders.product[SessionRow])
-    // transformWithState keeps timers in their own column family — only
-    // the RocksDB provider supports that (the HDFS-backed default hard-
-    // rejects it). Scoped set/restore: the conf is read at query START,
-    // so this cannot retroactively affect other running streams.
-    val providerKey = "spark.sql.streaming.stateStore.providerClass"
-    val prevProvider = spark.conf.getOption(providerKey)
-    spark.conf.set(providerKey,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try runToMemoryDetached(sessions.toDF(), "stream_sessions", "append")(
+    runToMemoryDetached(sessions.toDF(), "stream_sessions", "append")(
       _.orderBy(col("user_id").asc, col("session_start_s").asc))
-    finally prevProvider match {
-      case Some(p) => spark.conf.set(providerKey, p)
-      case None => spark.conf.unset(providerKey)
-    }
   }
 
-  /** Scope the session's shuffle-partition count down while a BOUNDED gate
-    * stream starts and drains (r9, guide §2.2/§1.2-3): a stateful
-    * streaming operator creates ONE state-store instance per shuffle
-    * partition (pinned into the checkpoint at first start), and every
-    * micro-batch pays a load+commit per instance. The gate streams here
-    * carry ≤ a few hundred rows over ≤ ~100 keys by construction, so at
-    * `spark.sql.shuffle.partitions = 32` the per-batch state-store
-    * machinery outweighs the data by orders of magnitude — 3 batches × 32
-    * RocksDB/HDFS store commits for 100 keys. The partition count is
-    * derived from the gate's bounded key space (capped at 8 — generous for
-    * ≤100-key state at ANY core count), env-overridable for a production-
-    * scale run; it never exceeds the session's parallelism. Results are
-    * partitioning-independent (state sharding only moves keys between
-    * stores), and the conf is read at query START, so the scoped
-    * set/restore cannot affect other running streams (the q186 provider
-    * set/restore precedent). Restored before the caller's batch-side post
-    * processing, which keeps full parallelism.
+  /** The session a BOUNDED gate stream runs on (r9, guide §2.2/§1.2-3): a
+    * cached child of `spark` (`graft.Graft.childSession`) with
+    * `spark.sql.shuffle.partitions = min(8, parallelism)`, plus `extra`
+    * overrides. A stateful streaming operator creates ONE state-store
+    * instance per shuffle partition (pinned into the checkpoint at first
+    * start), and every micro-batch pays a load+commit per instance. The
+    * gate streams carry ≤ a few hundred rows over ≤ ~100 keys by
+    * construction, so at `spark.sql.shuffle.partitions = 32` the per-batch
+    * state-store machinery outweighs the data by orders of magnitude — 3
+    * batches × 32 RocksDB/HDFS store commits for 100 keys. The cap of 8 is
+    * generous for ≤100-key state at ANY core count, and a constant because
+    * only these bounded gates use it; an unbounded stream sizes its state
+    * shards from its own key volume. Results are partitioning-independent
+    * (state sharding only moves keys between stores). The gate's
+    * batch-side post-processing plans on the same child: it is
+    * gate-output-sized.
     */
-  private def withGateShufflePartitions[T](spark: org.apache.spark.sql.SparkSession)(f: => T): T = {
-    val key = "spark.sql.shuffle.partitions"
-    val prev = spark.conf.getOption(key)
-    val parts = sys.env.getOrElse("SPARK_GRAFT_STREAM_PARTS",
-      math.min(8, spark.sparkContext.defaultParallelism).toString)
-    spark.conf.set(key, parts)
-    try f finally prev match {
-      case Some(p) => spark.conf.set(key, p)
-      case None => spark.conf.unset(key)
-    }
-  }
+  def gateSession(spark: SparkSession, extra: (String, String)*): SparkSession =
+    graft.Graft.childSession(spark, ("spark.sql.shuffle.partitions" ->
+      math.min(8, spark.sparkContext.defaultParallelism).toString) +: extra: _*)
 
   /** Run a streaming query over a bounded directory to completion using the
     * memory sink; returns the materialized result. Test/driver utility —
     * production sinks are writeStream.parquet/kafka with checkpoints.
     */
   def runToMemory(df: DataFrame, name: String, outputMode: String): DataFrame = {
-    withGateShufflePartitions(df.sparkSession) {
-      val q = df.writeStream
-        .format("memory")
-        .queryName(name)
-        .outputMode(outputMode)
-        .start()
-      q.processAllAvailable()
-      q.stop()
-    }
+    val q = df.writeStream
+      .format("memory")
+      .queryName(name)
+      .outputMode(outputMode)
+      .start()
+    q.processAllAvailable()
+    q.stop()
     df.sparkSession.table(name)
   }
 
@@ -462,7 +443,7 @@ object EventStreams {
       spark: SparkSession,
       totalRows: Long = 300,
       keySpace: Long = 100): DataFrame = {
-    val raw = spark.readStream.format("graft.sources.GraftStreamSource")
+    val raw = gateSession(spark).readStream.format("graft.sources.GraftStreamSource")
       .option("maxRows", totalRows.toString)
       .option("rowsPerBatch", keySpace.toString)
       .load()
@@ -514,22 +495,20 @@ object EventStreams {
     val p = new org.apache.hadoop.fs.Path(dir)
     p.getFileSystem(spark.sessionState.newHadoopConf()).delete(p, true)
     val ckpt = java.nio.file.Files.createTempDirectory("graft_txsink_ckpt").toString
-    val raw = spark.readStream.format("graft.sources.GraftStreamSource")
+    val raw = gateSession(spark).readStream.format("graft.sources.GraftStreamSource")
       .option("maxRows", totalRows.toString)
       .option("rowsPerBatch", rowsPerBatch.toString)
       .load()
     val rows = raw.select(col("id"), (col("id") % 7).as("k"))
-    withGateShufflePartitions(spark) {
-      val q = rows.writeStream
-        .option("checkpointLocation", ckpt)
-        .foreachBatch { (batch: DataFrame, batchId: Long) =>
-          graft.sources.TxLog.idempotentAppend(
-            batch.sparkSession, dir, batch, "q267_sink", batchId)
-          ()
-        }
-        .start()
-      try q.processAllAvailable() finally q.stop()
-    }
+    val q = rows.writeStream
+      .option("checkpointLocation", ckpt)
+      .foreachBatch { (batch: DataFrame, batchId: Long) =>
+        graft.sources.TxLog.idempotentAppend(
+          batch.sparkSession, dir, batch, "q267_sink", batchId)
+        ()
+      }
+      .start()
+    try q.processAllAvailable() finally q.stop()
     // the restart/at-least-once case the idempotent sink exists for:
     // re-deliver batch 0 verbatim — the table must not change
     val replay = spark.range(0, rowsPerBatch).toDF("id")
@@ -545,7 +524,7 @@ object EventStreams {
       spark: SparkSession,
       totalRows: Long = 300,
       keySpace: Long = 100): DataFrame = {
-    val raw = spark.readStream.format("graft.sources.GraftStreamSource")
+    val raw = gateSession(spark).readStream.format("graft.sources.GraftStreamSource")
       .option("maxRows", totalRows.toString)
       .option("rowsPerBatch", keySpace.toString)
       .load()
@@ -588,7 +567,7 @@ object EventStreams {
       spark: SparkSession,
       totalRows: Long = 300,
       keySpace: Long = 100): DataFrame = {
-    val raw = spark.readStream.format("graft.sources.GraftStreamSource")
+    val raw = gateSession(spark).readStream.format("graft.sources.GraftStreamSource")
       .option("maxRows", totalRows.toString)
       .option("rowsPerBatch", keySpace.toString)
       .load()

@@ -18,6 +18,11 @@ package object graftbridge {
     org.apache.spark.sql.classic.Dataset.ofRows(
       spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession], plan)
 
+  /** A copy of `spark`'s session state over the same SparkContext
+    * (classic `cloneSession`: conf, functions, strategies, temp views). */
+  def cloneSession(spark: SparkSession): SparkSession =
+    spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession].cloneSession()
+
   /** The analyzed logical plan behind a DataFrame. */
   def analyzedPlan(df: DataFrame): org.apache.spark.sql.catalyst.plans.logical.LogicalPlan =
     df.queryExecution.analyzed

@@ -10,6 +10,11 @@ import graft.streaming.EventStreams
   */
 class StreamingSpec extends SparkTestBase {
 
+  /** The state-store override the RocksDB tests run their streams under,
+    * on a child session: the shared test session keeps its provider. */
+  private val RocksDb = "spark.sql.streaming.stateStore.providerClass" ->
+    "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
+
   private def eventsDir = {
     // file-source streams read directories; stage the single fixture file
     val dir = java.nio.file.Files.createTempDirectory("events_stream")
@@ -190,68 +195,52 @@ class StreamingSpec extends SparkTestBase {
     // state) the default HDFS-backed in-memory provider OOMs; RocksDB spills
     // state to local disk and incrementally checkpoints. Same query, same
     // results — provider choice must be invisible to semantics.
-    val prev = spark.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
-      import org.apache.spark.sql.streaming.Trigger
-      val stream = EventStreams.readEvents(spark, eventsDir)
-      val agg = EventStreams.tumblingCounts(stream, "10 minutes", "1 hour")
-      val q = agg.writeStream.format("memory").queryName("t_rocksdb")
-        .outputMode("append").trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
-      val progress = q.recentProgress.filter(_.stateOperators.nonEmpty)
-      assert(progress.nonEmpty, "no stateful progress recorded")
-      // the provider actually in use surfaces through its custom metrics
-      val metrics = progress.last.stateOperators.head.customMetrics
-      assert(metrics.keySet.asScala.exists(_.toLowerCase.contains("rocksdb")),
-        s"no rocksdb metrics: ${metrics.keySet}")
-      val got = spark.table("t_rocksdb")
-        .select(col("bucket_start").cast("timestamp").cast("long"), col("event_type"), col("n"))
-        .collect().map(r => (r.getLong(0), r.getString(1), r.getLong(2))).toSet
-      val batch = graft.sources.Tables.events(spark, sf)
-        .groupBy(window(col("ts"), "10 minutes").as("w"), col("event_type"))
-        .agg(count(lit(1)).as("n"))
-        .select(col("w.start").cast("timestamp").cast("long"), col("event_type"), col("n"))
-        .collect().map(r => (r.getLong(0), r.getString(1), r.getLong(2))).toSet
-      assert(got.nonEmpty && got.subsetOf(batch))
-    } finally {
-      prev match {
-        case Some(p) => spark.conf.set("spark.sql.streaming.stateStore.providerClass", p)
-        case None => spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-      }
-    }
+    val rocks = Graft.childSession(spark, RocksDb)
+    import org.apache.spark.sql.streaming.Trigger
+    val stream = EventStreams.readEvents(rocks, eventsDir)
+    val agg = EventStreams.tumblingCounts(stream, "10 minutes", "1 hour")
+    val q = agg.writeStream.format("memory").queryName("t_rocksdb")
+      .outputMode("append").trigger(Trigger.AvailableNow()).start()
+    q.awaitTermination()
+    val progress = q.recentProgress.filter(_.stateOperators.nonEmpty)
+    assert(progress.nonEmpty, "no stateful progress recorded")
+    // the provider actually in use surfaces through its custom metrics
+    val metrics = progress.last.stateOperators.head.customMetrics
+    assert(metrics.keySet.asScala.exists(_.toLowerCase.contains("rocksdb")),
+      s"no rocksdb metrics: ${metrics.keySet}")
+    val got = rocks.table("t_rocksdb")
+      .select(col("bucket_start").cast("timestamp").cast("long"), col("event_type"), col("n"))
+      .collect().map(r => (r.getLong(0), r.getString(1), r.getLong(2))).toSet
+    rocks.catalog.dropTempView("t_rocksdb")
+    val batch = graft.sources.Tables.events(spark, sf)
+      .groupBy(window(col("ts"), "10 minutes").as("w"), col("event_type"))
+      .agg(count(lit(1)).as("n"))
+      .select(col("w.start").cast("timestamp").cast("long"), col("event_type"), col("n"))
+      .collect().map(r => (r.getLong(0), r.getString(1), r.getLong(2))).toSet
+    assert(got.nonEmpty && got.subsetOf(batch))
   }
 
   test("transformWithState (Spark 4 StatefulProcessor) agrees with flatMapGroupsWithState") {
     // the new typed-state API must be a drop-in semantic replacement for
     // the GroupState tier — same inputs, same final per-user profile
-    val prev = spark.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
-      import org.apache.spark.sql.streaming.Trigger
-      val stream = EventStreams.readEvents(spark, eventsDir)
-      val q = EventStreams.userProfilesTws(stream)
-        .writeStream.format("memory").queryName("t_tws")
-        .outputMode("update").trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
-      val got = spark.table("t_tws")
-        .groupBy(col("user_id"))
-        .agg(max(col("n_events")).as("n_events"), max(col("n_purchases")).as("n_purchases"))
-        .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
-      val want = graft.sources.Tables.events(spark, sf)
-        .groupBy(col("user_id"))
-        .agg(count(lit(1)).as("n_events"),
-          sum(when(col("event_type") === "purchase", 1L).otherwise(0L)).as("n_purchases"))
-        .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
-      assert(got == want)
-    } finally {
-      prev match {
-        case Some(p) => spark.conf.set("spark.sql.streaming.stateStore.providerClass", p)
-        case None => spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-      }
-    }
+    val rocks = Graft.childSession(spark, RocksDb)
+    import org.apache.spark.sql.streaming.Trigger
+    val stream = EventStreams.readEvents(rocks, eventsDir)
+    val q = EventStreams.userProfilesTws(stream)
+      .writeStream.format("memory").queryName("t_tws")
+      .outputMode("update").trigger(Trigger.AvailableNow()).start()
+    q.awaitTermination()
+    val got = rocks.table("t_tws")
+      .groupBy(col("user_id"))
+      .agg(max(col("n_events")).as("n_events"), max(col("n_purchases")).as("n_purchases"))
+      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
+    rocks.catalog.dropTempView("t_tws")
+    val want = graft.sources.Tables.events(spark, sf)
+      .groupBy(col("user_id"))
+      .agg(count(lit(1)).as("n_events"),
+        sum(when(col("event_type") === "purchase", 1L).otherwise(0L)).as("n_purchases"))
+      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
+    assert(got == want)
   }
 
   test("stream reader path == batch reader path (ts encoding parity)") {
