@@ -17,6 +17,9 @@ import graft.plans.AsOfStrategy
   *  - [[Graft.childSession]] is the one way to run with other execution
   *    settings: a cached child of a session, its overrides set once at
   *    creation. Nothing writes a setting onto a caller's session.
+  *  - [[Graft.scratch]] is where every query writes its own files: a
+  *    fresh, empty directory per call, under one root per JVM that is
+  *    deleted at exit. The session's warehouse lives under the same root.
   *
   * After either, SQL can call `cosine_sim(a, b)` and `misra_gries(x, k)`,
   * and the as-of join plans through [[graft.plans.AsOfJoinExec]].
@@ -41,13 +44,25 @@ object Graft {
       // multi-second pauses on whatever query is running (r4: 30 s made a
       // 0.04 s query read 4.7 s).
       .config("spark.cleaner.periodicGC.interval", "300s")
-      .config("spark.sql.warehouse.dir",
-        java.nio.file.Files.createTempDirectory("graft_wh").toString)
+      // a static conf, fixed when the first session is built: a path under
+      // the per-JVM root, so later factory calls create nothing
+      .config("spark.sql.warehouse.dir", s"$scratchRoot/warehouse")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     install(spark)
     spark
   }
+
+  // One per JVM, under java.io.tmpdir; Spark's shutdown hook deletes it.
+  private lazy val scratchRoot: java.io.File = graftbridge.shutdownDeletedTempDir("graft")
+
+  /** A fresh, empty directory `<root>/<name>-<unique>` for one execution's
+    * writes. No two calls share a directory, so queries that run at once
+    * never see each other's files. Nothing is deleted before exit: a
+    * returned DataFrame may read its directory lazily.
+    */
+  def scratch(name: String): String =
+    java.nio.file.Files.createTempDirectory(scratchRoot.toPath, s"$name-").toString
 
   /** Idempotently install on a live session. */
   def install(spark: SparkSession): Unit = {

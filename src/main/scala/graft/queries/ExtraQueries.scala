@@ -2,7 +2,7 @@ package graft.queries
 
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
-import graft.GQuery
+import graft.{GQuery, Graft}
 import graft.sources.Tables
 import graft.plans.AsOfJoinCustom
 
@@ -43,7 +43,7 @@ object ExtraQueries {
     GQuery(
       "q48_csv_roundtrip",
       (s, d) => {
-        val tmp = s"/tmp/graft_csv_${d.replaceAll("[^0-9.]", "")}_${ProcessHandle.current.pid}"
+        val tmp = Graft.scratch("csv")
         val src = Tables.lineitem(s, d)
           .select(col("l_orderkey"), col("l_linenumber"), col("l_quantity"),
             col("l_returnflag"))
@@ -64,7 +64,7 @@ object ExtraQueries {
     GQuery(
       "q49_json_roundtrip",
       (s, d) => {
-        val tmp = s"/tmp/graft_json_${d.replaceAll("[^0-9.]", "")}_${ProcessHandle.current.pid}"
+        val tmp = Graft.scratch("json")
         val src = Tables.orders(s, d)
           .select(col("o_orderkey"), col("o_custkey"), col("o_orderstatus"))
         src.write.mode("overwrite").json(tmp)
@@ -267,7 +267,7 @@ object ExtraQueries {
     GQuery(
       "q58_orc_roundtrip",
       (s, d) => {
-        val tmp = s"/tmp/graft_orc_${d.replaceAll("[^0-9.]", "")}_${ProcessHandle.current.pid}"
+        val tmp = Graft.scratch("orc")
         Tables.supplier(s, d).write.mode("overwrite").orc(tmp)
         s.read.schema("s_suppkey LONG, s_name STRING, s_nationkey INT, s_acctbal DOUBLE")
           .orc(tmp)
@@ -289,7 +289,7 @@ object ExtraQueries {
     GQuery(
       "q59_partitioned_parquet",
       (s, d) => {
-        val tmp = s"/tmp/graft_part_${d.replaceAll("[^0-9.]", "")}_${ProcessHandle.current.pid}"
+        val tmp = Graft.scratch("part")
         Tables.lineitem(s, d)
           .select(col("l_orderkey"), col("l_linenumber"), col("l_quantity"), col("l_returnflag"))
           .write.mode("overwrite")
@@ -595,7 +595,7 @@ object ExtraQueries {
     GQuery(
       "q137_dynamic_overwrite",
       (s, d) => {
-        val tmp = s"/tmp/graft_dpo_${d.replaceAll("[^0-9.]", "")}_${ProcessHandle.current.pid}"
+        val tmp = Graft.scratch("dpo")
         val docs = Tables.documents(s, d)
         docs.write.mode("overwrite").partitionBy("source").parquet(tmp)
         val wCap = org.apache.spark.sql.expressions.Window

@@ -2,7 +2,7 @@ package graft.queries
 
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
-import graft.GQuery
+import graft.{GQuery, Graft}
 import graft.sources.{AvroIO, Tables}
 import graft.functions.Automaton
 import graft.multimodal.Multimodal
@@ -51,7 +51,7 @@ object FormatDepthQueries {
     GQuery(
       "q232_avro_roundtrip",
       (s, d) => {
-        val tmp = s"/tmp/graft_avro_${d.replaceAll("[^0-9.]", "")}_${ProcessHandle.current.pid}"
+        val tmp = Graft.scratch("avro")
         val src = Tables.supplier(s, d)
           .select(col("s_suppkey"), col("s_name"), col("s_nationkey"), col("s_acctbal"))
         AvroIO.write(src, tmp)
@@ -708,7 +708,7 @@ object FormatDepthQueries {
     GQuery(
       "q248_arrow_roundtrip",
       (s, d) => {
-        val tmp = s"/tmp/graft_arrow_${d.replaceAll("[^0-9.]", "")}_${ProcessHandle.current.pid}"
+        val tmp = Graft.scratch("arrow")
         val src = Tables.supplier(s, d)
           .select(col("s_suppkey"), col("s_name"), col("s_nationkey"),
             col("s_acctbal").cast("double").as("bal"),

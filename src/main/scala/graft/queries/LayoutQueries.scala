@@ -2,7 +2,7 @@ package graft.queries
 
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
-import graft.GQuery
+import graft.{GQuery, Graft}
 import graft.sources.Tables
 
 /** Data-layout lifecycle operators (SURVEY.md §2.1 extension): the table-
@@ -22,9 +22,6 @@ import graft.sources.Tables
   * cannot see (file counts, rows-per-file caps) are pinned by LayoutSpec.
   */
 object LayoutQueries {
-
-  private def tmpDir(name: String, d: String): String =
-    s"/tmp/graft_${name}_${d.replaceAll("[^0-9.]", "")}_${ProcessHandle.current.pid}"
 
   def all: Seq[GQuery] = Seq(
 
@@ -46,7 +43,7 @@ object LayoutQueries {
     GQuery(
       "q182_compaction",
       (s, d) => {
-        val tmp = tmpDir("compact", d)
+        val tmp = Graft.scratch("compact")
         Tables.documents(s, d)
           .select(col("doc_id"), col("text"), col("n_chars"))
           .repartition(64)
@@ -84,7 +81,7 @@ object LayoutQueries {
     GQuery(
       "q183_schema_evolution",
       (s, d) => {
-        val tmp = tmpDir("evolve", d)
+        val tmp = Graft.scratch("evolve")
         val o = Tables.orders(s, d)
         o.filter(col("o_orderkey") % 2 === 0)
           .select(col("o_orderkey"), col("o_totalprice"))
@@ -207,9 +204,7 @@ object LayoutQueries {
     GQuery(
       "q264_txlog_snapshot",
       (s, d) => {
-        val dir = tmpDir("txlog", d)
-        val p = new org.apache.hadoop.fs.Path(dir)
-        p.getFileSystem(s.sessionState.newHadoopConf()).delete(p, true)
+        val dir = Graft.scratch("txlog")
         // one parquet scan feeds all four lifecycle writes (r10, guide §6 /
         // r9-verdict item 7): the narrow projection is materialized once and
         // each commit's filter reads the checkpoint blocks instead of
@@ -244,9 +239,7 @@ object LayoutQueries {
     GQuery(
       "q265_txlog_timetravel",
       (s, d) => {
-        val dir = tmpDir("txlogtt", d)
-        val p = new org.apache.hadoop.fs.Path(dir)
-        p.getFileSystem(s.sessionState.newHadoopConf()).delete(p, true)
+        val dir = Graft.scratch("txlogtt")
         // one scan feeds the four versioned writes (r10, guide §6)
         val li = Tables.lineitem(s, d).select(col("l_orderkey"), col("l_quantity"))
           .localCheckpoint(false)
@@ -297,9 +290,7 @@ object LayoutQueries {
     GQuery(
       "q266_txlog_merge",
       (s, d) => {
-        val dir = tmpDir("txlogmg", d)
-        val p = new org.apache.hadoop.fs.Path(dir)
-        p.getFileSystem(s.sessionState.newHadoopConf()).delete(p, true)
+        val dir = Graft.scratch("txlogmg")
         // one scan feeds the seed append and both merge-source slices (r10)
         val ords = Tables.orders(s, d)
           .select(col("o_orderkey"), col("o_custkey"), col("o_orderstatus"))
@@ -346,7 +337,7 @@ object LayoutQueries {
     GQuery(
       "q267_txlog_stream_sink",
       (s, d) => graft.streaming.EventStreams.streamTxLogGate(
-        s, tmpDir("txlogsink", d), totalRows = 300, rowsPerBatch = 100),
+        s, Graft.scratch("txlogsink"), totalRows = 300, rowsPerBatch = 100),
       Some("""SELECT i % 7 AS k,
              |       CAST(COUNT(*) AS BIGINT) AS n,
              |       CAST(SUM(i) AS BIGINT) AS sum_id
@@ -370,9 +361,7 @@ object LayoutQueries {
     GQuery(
       "q268_txlog_optimize",
       (s, d) => {
-        val dir = tmpDir("txlogopt", d)
-        val p = new org.apache.hadoop.fs.Path(dir)
-        p.getFileSystem(s.sessionState.newHadoopConf()).delete(p, true)
+        val dir = Graft.scratch("txlogopt")
         // one scan feeds both interleaved appends (r10, guide §6)
         val li = Tables.lineitem(s, d)
           .select(col("l_orderkey"), col("l_quantity"), col("l_returnflag"))
@@ -405,9 +394,7 @@ object LayoutQueries {
     GQuery(
       "q269_txlog_changes",
       (s, d) => {
-        val dir = tmpDir("txlogcdc", d)
-        val p = new org.apache.hadoop.fs.Path(dir)
-        p.getFileSystem(s.sessionState.newHadoopConf()).delete(p, true)
+        val dir = Graft.scratch("txlogcdc")
         // one scan feeds the four lifecycle writes (r10, guide §6)
         val ords = Tables.orders(s, d).select(col("o_orderkey"), col("o_custkey"))
           .localCheckpoint(false)

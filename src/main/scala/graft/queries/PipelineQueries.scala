@@ -4,7 +4,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 
-import graft.GQuery
+import graft.{GQuery, Graft}
 import graft.expressions.MisraGriesAggregate
 import graft.functions.{Packing, TextFunctions => TF}
 import graft.sources.Tables
@@ -281,7 +281,7 @@ object PipelineQueries {
     GQuery(
       "q89_text_roundtrip",
       (s, d) => {
-        val tmp = s"/tmp/graft_text_${d.replaceAll("[^0-9.]", "")}_${ProcessHandle.current.pid}"
+        val tmp = Graft.scratch("text")
         Tables.documents(s, d)
           .select(concat_ws("\t", col("doc_id").cast("string"), col("text")).as("value"))
           .write.mode("overwrite").text(tmp)

@@ -171,12 +171,8 @@ object ScaleQueries {
     GQuery(
       "q79_bucketed_join",
       (s, d) => {
-        // pid-suffixed EXTERNAL tables under /tmp (same scratch pattern as
-        // q58/q59): a fresh JVM's in-memory catalog forgets managed tables
-        // but their warehouse directories survive, and re-creating a
-        // managed table over an existing location is LOCATION_ALREADY_EXISTS
-        val tag = d.replaceAll("[^0-9]", "") + "_" + ProcessHandle.current.pid
-        val base = s"/tmp/graft_bkt_$tag"
+        // managed tables in the session's warehouse, one pair per fixture dir
+        val tag = f"${d.hashCode}%08x"
         val ot = s"g_orders_bkt_$tag"
         val ct = s"g_cust_bkt_$tag"
         // write the bucketed tables once per session: the gate (and the
@@ -184,11 +180,9 @@ object ScaleQueries {
         // pay-once write-side shuffle the layout amortizes
         if (!s.catalog.tableExists(ot)) {
           Tables.orders(s, d).write.mode("overwrite")
-            .option("path", s"$base/orders")
             .bucketBy(8, "o_custkey").sortBy("o_custkey")
             .format("parquet").saveAsTable(ot)
           Tables.customer(s, d).write.mode("overwrite")
-            .option("path", s"$base/customer")
             .bucketBy(8, "c_custkey").sortBy("c_custkey")
             .format("parquet").saveAsTable(ct)
         }

@@ -492,9 +492,7 @@ object EventStreams {
       dir: String,
       totalRows: Long = 300,
       rowsPerBatch: Long = 100): DataFrame = {
-    val p = new org.apache.hadoop.fs.Path(dir)
-    p.getFileSystem(spark.sessionState.newHadoopConf()).delete(p, true)
-    val ckpt = java.nio.file.Files.createTempDirectory("graft_txsink_ckpt").toString
+    val ckpt = graft.Graft.scratch("txsink_ckpt")
     val raw = gateSession(spark).readStream.format("graft.sources.GraftStreamSource")
       .option("maxRows", totalRows.toString)
       .option("rowsPerBatch", rowsPerBatch.toString)

@@ -26,4 +26,9 @@ package object graftbridge {
   /** The analyzed logical plan behind a DataFrame. */
   def analyzedPlan(df: DataFrame): org.apache.spark.sql.catalyst.plans.logical.LogicalPlan =
     df.queryExecution.analyzed
+
+  /** A new directory under `java.io.tmpdir` that Spark's shutdown hook
+    * deletes, recursively, when the JVM exits. */
+  def shutdownDeletedTempDir(namePrefix: String): java.io.File =
+    org.apache.spark.util.Utils.createTempDir(namePrefix = namePrefix)
 }

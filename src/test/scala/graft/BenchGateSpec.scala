@@ -37,8 +37,7 @@ class BenchGateSpec extends AnyFunSuite {
   }
 
   test("loadBaseline parses the flat medians file and tolerates absence") {
-    val f = java.io.File.createTempFile("bench_baseline", ".json")
-    f.deleteOnExit()
+    val f = new java.io.File(Graft.scratch("bench_baseline"), "bench_baseline.json")
     java.nio.file.Files.writeString(f.toPath,
       """{"q01_project":0.0963,"q125_winnow_overlap":0.8045}""")
     val b = Bench.loadBaseline(f.getAbsolutePath)
@@ -50,8 +49,7 @@ class BenchGateSpec extends AnyFunSuite {
     // the review-found hazard: every query name recurs in "spread" with a
     // ratio ~1.0 — a whole-line scan would last-wins overwrite each median
     // with it and flag healthy heavy queries against garbage baselines
-    val f = java.io.File.createTempFile("bench_line", ".json")
-    f.deleteOnExit()
+    val f = new java.io.File(Graft.scratch("bench_line"), "bench_line.json")
     java.nio.file.Files.writeString(f.toPath,
       """{"metric":"total","value":86.3,"unit":"sec","queries":{"qa":2.5431,"qb":0.1049},""" +
         """"spread":{"qa":1.21,"qb":1.05},"reps":5,"failed":[],"sf":"/x"}""")
@@ -64,8 +62,7 @@ class BenchGateSpec extends AnyFunSuite {
     // BEFORE the final line; a baseline captured as `Bench > file` must
     // bind to the final medians, not the codegen-inflated warmup pass —
     // thresholds set from warmup times would never flag a regression
-    val f = java.io.File.createTempFile("bench_stdout", ".json")
-    f.deleteOnExit()
+    val f = new java.io.File(Graft.scratch("bench_stdout"), "bench_stdout.json")
     java.nio.file.Files.writeString(f.toPath,
       """{"metric":"partial","phase":"warmup","value":153.1,"queries":{"qa":50.1,"qb":9.7},"failed":[],"sf":"/x"}""" + "\n" +
         """{"metric":"partial","phase":"round1","value":12.0,"queries":{"qa":10.2,"qb":1.8},"failed":[],"sf":"/x"}""" + "\n" +
@@ -73,8 +70,7 @@ class BenchGateSpec extends AnyFunSuite {
     assert(Bench.loadBaseline(f.getAbsolutePath) == Map("qa" -> 2.5, "qb" -> 0.6))
     // a killed run with ONLY partials: the LAST partial wins (closest to
     // steady state), never the warmup line
-    val g = java.io.File.createTempFile("bench_stdout_dnf", ".json")
-    g.deleteOnExit()
+    val g = new java.io.File(Graft.scratch("bench_stdout_dnf"), "bench_stdout_dnf.json")
     java.nio.file.Files.writeString(g.toPath,
       """{"metric":"partial","phase":"warmup","value":153.1,"queries":{"qa":50.1,"qb":9.7},"failed":[],"sf":"/x"}""" + "\n" +
         """{"metric":"partial","phase":"round1","value":12.0,"queries":{"qa":10.2,"qb":1.8},"failed":[],"sf":"/x"}""")

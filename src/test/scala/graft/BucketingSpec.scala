@@ -57,7 +57,7 @@ class BucketingSpec extends SparkTestBase {
     // output must not wipe the other days. Static overwrite (the default)
     // truncates the whole table first — at 100 TB that is the difference
     // between re-writing one partition and destroying the corpus.
-    val dir = java.nio.file.Files.createTempDirectory("graft_dpo").toString
+    val dir = Graft.scratch("dpo")
     val docs = graft.sources.Tables.documents(spark, sf)
       .select(col("doc_id"), col("source"), col("n_chars"))
     docs.write.mode("overwrite").partitionBy("source").parquet(dir)

@@ -59,7 +59,7 @@ class ConnectorSpec extends SparkTestBase {
 
   test("micro-batch stream source: offset-bounded batches, exactly-once into the sink") {
     GraftCollectSink.clear("t_stream")
-    val ckpt = java.nio.file.Files.createTempDirectory("graft_ckpt_s1").toString
+    val ckpt = Graft.scratch("ckpt_s1")
     val q = spark.readStream.format("graft.sources.GraftStreamSource")
       .option("maxRows", 100).option("rowsPerBatch", 30).load()
       .writeStream
@@ -85,7 +85,7 @@ class ConnectorSpec extends SparkTestBase {
     // the batch's own partition/table): replays then converge instead of
     // duplicating. This test demonstrates exactly that upgrade.
     GraftCollectSink.names.filter(_.startsWith("t_restart#")).foreach(GraftCollectSink.clear)
-    val ckpt = java.nio.file.Files.createTempDirectory("graft_ckpt_s2").toString
+    val ckpt = Graft.scratch("ckpt_s2")
     def run(maxRows: Int): Unit = {
       val q = spark.readStream.format("graft.sources.GraftStreamSource")
         .option("maxRows", maxRows).option("rowsPerBatch", 25).load()

@@ -128,18 +128,25 @@ class ExecutionSettingsSpec extends SparkTestBase {
   }
 
   test("loop, gate, recursion and plain queries run at once on one session") {
-    // Two of each from 4 threads on the shared session, three times over:
-    // each must return its sequential rows, and the session must keep
-    // every setting. Under set/restore an interleaved restore left q162's
-    // partition count behind on the session in 9 of 10 such mixes.
-    val names = Seq("q162_kcore", "q172_stream_dedup", "q199_recursive_chain", "q04_agg_groupby")
+    // Two of each from 4 threads on the shared session, the two copies of
+    // a query submitted side by side, three times over: each must return
+    // its sequential rows, and the session must keep every setting. Under
+    // set/restore an interleaved restore left q162's partition count
+    // behind on the session in 9 of 10 such mixes. With hand-built /tmp
+    // paths the two copies of a writer (q264, q48) shared one directory:
+    // this test failed in 10 of 10 tries, each at its first mix, with wrong
+    // rows or a FileNotFoundException. Side by side is what makes them
+    // overlap; with each query's copies a full round apart, 0 of 10 tries
+    // of 6 mixes failed.
+    val names = Seq("q162_kcore", "q172_stream_dedup", "q199_recursive_chain", "q04_agg_groupby",
+      "q264_txlog_snapshot", "q48_csv_roundtrip")
     def rows(name: String): Seq[String] = q(name).collect().map(_.toString).toSeq
     val sequential = names.map(n => n -> rows(n)).toMap
     val before = Verify.settings(spark)
     val pool = Executors.newFixedThreadPool(4)
     try {
       for (_ <- 1 to 3) {
-        val runs = (names ++ names).map(n => n -> pool.submit(() => rows(n)))
+        val runs = names.flatMap(n => Seq(n, n)).map(n => n -> pool.submit(() => rows(n)))
         runs.foreach { case (n, f) =>
           assert(f.get(10, TimeUnit.MINUTES) == sequential(n), s"$n differs when run concurrently")
         }

@@ -30,7 +30,7 @@ class FormatDepthSpec extends SparkTestBase {
       Row(2L, null, null, false, null),
       Row(3L, "", -0.0, true, Array.empty[Byte]))
     val df = spark.createDataFrame(rows.asJava, schema).repartition(2)
-    val tmp = java.nio.file.Files.createTempDirectory("graft_avro_spec").toString
+    val tmp = Graft.scratch("avro_spec")
     AvroIO.write(df, tmp)
     val back = AvroIO.read(spark, tmp, schema).collect()
       .sortBy(_.getLong(0))
@@ -43,7 +43,7 @@ class FormatDepthSpec extends SparkTestBase {
 
   test("avro read skips non-OCF payloads (corrupt-shard contract)") {
     val schema = StructType(Seq(StructField("id", LongType, nullable = false)))
-    val tmp = java.nio.file.Files.createTempDirectory("graft_avro_bad").toString
+    val tmp = Graft.scratch("avro_bad")
     java.nio.file.Files.write(
       java.nio.file.Paths.get(tmp, "junk.avro"),
       "not an avro file at all".getBytes)
@@ -64,7 +64,7 @@ class FormatDepthSpec extends SparkTestBase {
       StructField("score", DoubleType, nullable = false)))
     val rows = Seq(Row(7L, "seven", 0.5), Row(8L, null, 1.5))
     val df = spark.createDataFrame(rows.asJava, writerSchema)
-    val tmp = java.nio.file.Files.createTempDirectory("graft_avro_evo").toString
+    val tmp = Graft.scratch("avro_evo")
     AvroIO.write(df, tmp)
     // reader drops the middle column: Avro resolves by FIELD NAME against
     // the writer schema in the file header, so this must read cleanly
@@ -96,7 +96,7 @@ class FormatDepthSpec extends SparkTestBase {
         if (i % 7 == 0) null else Array[Byte]((i % 127).toByte))
     }
     val df = spark.createDataFrame(rows.asJava, schema).coalesce(1)
-    val tmp = java.nio.file.Files.createTempDirectory("graft_arrow_spec").toString
+    val tmp = Graft.scratch("arrow_spec")
     ArrowIO.write(df, tmp)
     val back = ArrowIO.read(spark, tmp, schema).collect().sortBy(_.getLong(0))
     assert(back.length == ArrowIO.BatchRows + 10)
@@ -113,7 +113,7 @@ class FormatDepthSpec extends SparkTestBase {
   test("arrow read: corrupt payload and missing expected column yield zero rows") {
     import graft.sources.ArrowIO
     val schema = StructType(Seq(StructField("id", LongType, nullable = false)))
-    val tmp = java.nio.file.Files.createTempDirectory("graft_arrow_bad").toString
+    val tmp = Graft.scratch("arrow_bad")
     java.nio.file.Files.write(
       java.nio.file.Paths.get(tmp, "junk.arrow"),
       "definitely not an arrow ipc file".getBytes)
@@ -121,7 +121,7 @@ class FormatDepthSpec extends SparkTestBase {
     // valid file, but the expected column name is absent
     import scala.jdk.CollectionConverters._
     val other = StructType(Seq(StructField("something_else", LongType, nullable = false)))
-    val tmp2 = java.nio.file.Files.createTempDirectory("graft_arrow_miss").toString
+    val tmp2 = Graft.scratch("arrow_miss")
     ArrowIO.write(spark.createDataFrame(Seq(Row(1L)).asJava, other), tmp2)
     assert(ArrowIO.read(spark, tmp2, schema).count() == 0)
   }
@@ -131,10 +131,10 @@ class FormatDepthSpec extends SparkTestBase {
     import graft.sources.ArrowIO
     val schema = StructType(Seq(StructField("id", LongType, nullable = false)))
     val empty = spark.createDataFrame(Seq.empty[Row].asJava, schema)
-    val tmpA = java.nio.file.Files.createTempDirectory("graft_arrow_empty").toString
+    val tmpA = Graft.scratch("arrow_empty")
     ArrowIO.write(empty, tmpA)
     assert(ArrowIO.read(spark, tmpA, schema).count() == 0)
-    val tmpV = java.nio.file.Files.createTempDirectory("graft_avro_empty").toString
+    val tmpV = Graft.scratch("avro_empty")
     AvroIO.write(empty, tmpV)
     assert(AvroIO.read(spark, tmpV, schema).count() == 0)
   }
@@ -143,7 +143,7 @@ class FormatDepthSpec extends SparkTestBase {
     import scala.jdk.CollectionConverters._
     import graft.sources.ArrowIO
     val writerSchema = StructType(Seq(StructField("id", IntegerType, nullable = false)))
-    val tmp = java.nio.file.Files.createTempDirectory("graft_arrow_drift").toString
+    val tmp = Graft.scratch("arrow_drift")
     ArrowIO.write(spark.createDataFrame(Seq(Row(7)).asJava, writerSchema), tmp)
     val readerSchema = StructType(Seq(StructField("id", LongType, nullable = false)))
     assert(ArrowIO.read(spark, tmp, readerSchema).count() == 0)
@@ -165,7 +165,7 @@ class FormatDepthSpec extends SparkTestBase {
       StructField("score", DoubleType, nullable = false)))
     val rows = Seq(Row(7L, "seven", 0.5), Row(8L, null, 1.5))
     val df = spark.createDataFrame(rows.asJava, writerSchema)
-    val tmp = java.nio.file.Files.createTempDirectory("graft_arrow_evo").toString
+    val tmp = Graft.scratch("arrow_evo")
     ArrowIO.write(df, tmp)
     val readerSchema = StructType(Seq(
       StructField("id", LongType, nullable = false),
@@ -181,13 +181,13 @@ class FormatDepthSpec extends SparkTestBase {
     val schema = StructType(Seq(StructField("id", LongType, nullable = false)))
     val rows = (0L until 100L).map(Row(_))
     val df = spark.createDataFrame(rows.asJava, schema).coalesce(1)
-    val tmp = java.nio.file.Files.createTempDirectory("graft_arrow_trunc").toString
+    val tmp = Graft.scratch("arrow_trunc")
     ArrowIO.write(df, tmp)
     val part = new java.io.File(tmp).listFiles().filter(_.getName.endsWith(".arrow")).head
     val bytes = java.nio.file.Files.readAllBytes(part.toPath)
     // chop the footer off: the IPC file format resolves batches via the
     // footer, so a torn tail must surface as corrupt, not crash
-    val tmp3 = java.nio.file.Files.createTempDirectory("graft_arrow_torn").toString
+    val tmp3 = Graft.scratch("arrow_torn")
     java.nio.file.Files.write(
       java.nio.file.Paths.get(tmp3, "torn.arrow"), bytes.take(bytes.length / 2))
     assert(ArrowIO.read(spark, tmp3, schema).count() == 0)

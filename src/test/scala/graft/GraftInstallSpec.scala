@@ -57,11 +57,19 @@ class GraftInstallSpec extends SparkTestBase {
     assert(e.getMessage.contains("two array<float>") || e.getMessage.toLowerCase.contains("argument"))
   }
 
+  private def scalaFiles(f: java.io.File): Seq[java.io.File] =
+    if (f.isDirectory) f.listFiles().toSeq.flatMap(scalaFiles)
+    else if (f.getName.endsWith(".scala")) Seq(f) else Seq.empty
+
+  /** Every line of every Scala file under `dir`, trimmed, with its path. */
+  private def sourceLines(dir: String): Seq[(String, String)] =
+    scalaFiles(new java.io.File(dir)).flatMap { f =>
+      new String(java.nio.file.Files.readAllBytes(f.toPath), "UTF-8").split("\n").toSeq
+        .map(l => f.getPath -> l.trim)
+    }
+
   test("src holds exactly one session builder call, in Graft.session") {
     val call = """SparkSession\s*\.\s*builder\s*\(""".r
-    def scalaFiles(f: java.io.File): Seq[java.io.File] =
-      if (f.isDirectory) f.listFiles().toSeq.flatMap(scalaFiles)
-      else if (f.getName.endsWith(".scala")) Seq(f) else Seq.empty
     val sites = scalaFiles(new java.io.File("src")).flatMap { f =>
       val text = new String(java.nio.file.Files.readAllBytes(f.toPath), "UTF-8")
       Seq.fill(call.findAllIn(text).size)(f.getPath)
@@ -86,15 +94,28 @@ class GraftInstallSpec extends SparkTestBase {
       "src/main/scala/graft/streaming/EventStreams.scala" ->
         """spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")""")
     val write = """conf\s*\.\s*(set|unset)\s*\(|setConf\s*\(""".r
-    def scalaFiles(f: java.io.File): Seq[java.io.File] =
-      if (f.isDirectory) f.listFiles().toSeq.flatMap(scalaFiles)
-      else if (f.getName.endsWith(".scala")) Seq(f) else Seq.empty
-    val sites = scalaFiles(new java.io.File("src/main")).flatMap { f =>
-      val lines = new String(java.nio.file.Files.readAllBytes(f.toPath), "UTF-8").split("\n")
-      lines.map(_.trim).filter(l => write.findFirstIn(l).isDefined).map(f.getPath -> _)
-    }
+    val sites = sourceLines("src/main").filter { case (_, l) => write.findFirstIn(l).isDefined }
     val extra = sites.filterNot(allowed.contains)
     assert(extra.isEmpty, s"conf writes outside the allow-list: ${extra.mkString("; ")}")
+  }
+
+  test("src/main writes files only under Graft.scratch") {
+    // A hand-built path is shared by every execution in the JVM (a second
+    // run overwrites the first's files under it) and outlives the JVM; a
+    // Graft.scratch directory is fresh per call and deleted at exit. This
+    // list may only shrink.
+    val allowed = Set(
+      "src/main/scala/graft/Graft.scala" ->
+        """java.nio.file.Files.createTempDirectory(scratchRoot.toPath, s"$name-").toString""",
+      "src/main/scala/org/apache/spark/sql/graftbridge.scala" ->
+        "org.apache.spark.util.Utils.createTempDir(namePrefix = namePrefix)",
+      // a robots.txt path in the data, not a file the query writes
+      "src/main/scala/graft/queries/SemanticCurationQueries.scala" ->
+        """.when(col("doc_id") % 5 === 2, lit("/tmp/t"))""")
+    val handMade = """"/tmp|createTempDir|createTempFile|ProcessHandle|tmpDir\(""".r
+    val sites = sourceLines("src/main").filter { case (_, l) => handMade.findFirstIn(l).isDefined }
+    val extra = sites.filterNot(allowed.contains)
+    assert(extra.isEmpty, s"scratch paths outside Graft.scratch: ${extra.mkString("; ")}")
   }
 
   /** Runs `body` on a factory-built session over `spark.newSession()`: a

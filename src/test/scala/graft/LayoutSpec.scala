@@ -10,15 +10,24 @@ import org.apache.spark.sql.functions._
   */
 class LayoutSpec extends SparkTestBase {
 
-  private def dataFiles(dir: String): Seq[java.io.File] =
-    new java.io.File(dir).listFiles((_, n) => n.endsWith(".parquet")).toSeq
+  private def dataFiles(dir: java.io.File): Seq[java.io.File] =
+    dir.listFiles((_, n) => n.endsWith(".parquet")).toSeq
+
+  /** The directories a query's result reads, found from the result. */
+  private def inputDirs(df: org.apache.spark.sql.DataFrame): Seq[java.io.File] =
+    df.inputFiles.toSeq.map(f => new java.io.File(new java.net.URI(f)).getParentFile).distinct
+
+  /** Runs q182 and returns its compacted output directory. */
+  private def compaction(): java.io.File = {
+    val df = queries.LayoutQueries.all.find(_.name == "q182_compaction").get.fn(spark, sf)
+    df.collect() // run the pipeline; dirs remain for inspection
+    inputDirs(df).head
+  }
 
   test("q182 compaction: fewer files, per-file record cap, disjoint key ranges") {
-    val q = queries.LayoutQueries.all.find(_.name == "q182_compaction").get
-    q.fn(spark, sf).collect() // run the pipeline; dirs remain for inspection
-    val tmp = s"/tmp/graft_compact_${sf.replaceAll("[^0-9.]", "")}_${ProcessHandle.current.pid}"
-    val frag = dataFiles(s"$tmp/frag")
-    val compact = dataFiles(s"$tmp/compact")
+    val dir = compaction()
+    val frag = dataFiles(new java.io.File(dir.getParentFile, "frag"))
+    val compact = dataFiles(dir)
     assert(frag.nonEmpty && compact.nonEmpty)
     assert(compact.size < frag.size,
       s"compaction must reduce file count: ${frag.size} -> ${compact.size}")
@@ -41,17 +50,15 @@ class LayoutSpec extends SparkTestBase {
   }
 
   test("q182 layout enables row-group pruning: key predicate reads a fraction of the rows") {
-    // the compacted layout from the previous test: 4 range-partitioned,
-    // within-sorted files => parquet footer min/max stats are tight per
-    // row group, so a key-range predicate prunes whole row groups at scan
-    // time — the read-side payoff compaction exists for
-    val tmp = s"/tmp/graft_compact_${sf.replaceAll("[^0-9.]", "")}_${ProcessHandle.current.pid}"
-    if (!new java.io.File(s"$tmp/compact").isDirectory)
-      queries.LayoutQueries.all.find(_.name == "q182_compaction").get.fn(spark, sf).collect()
-    val total = spark.read.parquet(s"$tmp/compact").count()
-    val cut = spark.read.parquet(s"$tmp/compact")
+    // the compacted layout: 4 range-partitioned, within-sorted files =>
+    // parquet footer min/max stats are tight per row group, so a key-range
+    // predicate prunes whole row groups at scan time — the read-side payoff
+    // compaction exists for
+    val compact = compaction().getPath
+    val total = spark.read.parquet(compact).count()
+    val cut = spark.read.parquet(compact)
       .agg(min(col("doc_id"))).head.getLong(0) + total / 8
-    val pruned = spark.read.parquet(s"$tmp/compact").filter(col("doc_id") <= cut)
+    val pruned = spark.read.parquet(compact).filter(col("doc_id") <= cut)
     pruned.collect()
     val scanRows = pruned.queryExecution.executedPlan.collect {
       case f: org.apache.spark.sql.execution.FileSourceScanExec =>
@@ -64,9 +71,10 @@ class LayoutSpec extends SparkTestBase {
   }
 
   test("q183 schema evolution: merged schema has the evolved column, v1 rows null-fill") {
-    val tmp = s"/tmp/graft_evolve_${sf.replaceAll("[^0-9.]", "")}_${ProcessHandle.current.pid}"
-    queries.LayoutQueries.all.find(_.name == "q183_schema_evolution").get
-      .fn(spark, sf).collect()
+    val df = queries.LayoutQueries.all.find(_.name == "q183_schema_evolution").get.fn(spark, sf)
+    df.collect()
+    // v1 and v2 are siblings: the parent of either directory the result reads
+    val tmp = inputDirs(df).head.getParent
     val merged = spark.read.option("mergeSchema", "true").parquet(s"$tmp/v1", s"$tmp/v2")
     assert(merged.columns.toSet == Set("o_orderkey", "o_totalprice", "o_orderpriority"))
     // every even-key (v1) row must carry a NULL evolved column, every odd a value

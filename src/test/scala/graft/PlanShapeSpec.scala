@@ -86,7 +86,7 @@ class PlanShapeSpec extends SparkTestBase {
     // side prunes the partitioned fact's directories via a runtime subquery
     // — the fact filter is dynamicpruning#N, not a static literal
     import spark.implicits._
-    val tmp = java.nio.file.Files.createTempDirectory("graft_dpp").toString
+    val tmp = Graft.scratch("dpp")
     graft.sources.Tables.lineitem(spark, sf)
       .select(col("l_orderkey"), col("l_quantity"), col("l_returnflag"))
       .write.mode("overwrite").partitionBy("l_returnflag").parquet(tmp)
@@ -94,7 +94,7 @@ class PlanShapeSpec extends SparkTestBase {
     // heuristic rejects expensive subqueries — and (b) a real relation:
     // a filtered in-memory Seq gets constant-folded to a bare
     // LocalRelation, and DPP requires a surviving selective Filter node
-    val dimTmp = java.nio.file.Files.createTempDirectory("graft_dpp_dim").toString
+    val dimTmp = Graft.scratch("dpp_dim")
     Seq(("A", 1L), ("N", 2L), ("R", 3L)).toDF("flag", "ns")
       .write.mode("overwrite").parquet(dimTmp)
     val dim = spark.read.parquet(dimTmp).filter(col("ns") === 1L)

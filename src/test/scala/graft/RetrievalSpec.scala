@@ -120,7 +120,7 @@ class RetrievalSpec extends SparkTestBase {
     // "ababab"x2 + "ababx"x1. Round 1 must take the NON-consecutive (a,b)
     // matches at 1/3/5 all at once; round 2 hits the consecutive-run case
     // ((ab)(ab)(ab) -> take 1st, skip overlapping 2nd) — the "aaa" shape.
-    val dir = java.nio.file.Files.createTempDirectory("bpe").toString
+    val dir = Graft.scratch("bpe")
     Seq((1L, "ababab ababab ababx", "en", "test", 19L))
       .toDF("doc_id", "text", "lang", "source", "n_chars")
       .write.mode("overwrite").parquet(s"$dir/documents.parquet")
@@ -143,7 +143,7 @@ class RetrievalSpec extends SparkTestBase {
 
   test("q156 BPE encoding conserves words and fully merges the hand corpus") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("bpe_enc").toString
+    val dir = Graft.scratch("bpe_enc")
     Seq((1L, "ababab ababab ababx", "en", "test", 19L))
       .toDF("doc_id", "text", "lang", "source", "n_chars")
       .write.mode("overwrite").parquet(s"$dir/documents.parquet")
@@ -167,7 +167,7 @@ class RetrievalSpec extends SparkTestBase {
 
   test("q228 tokenize: hand corpus gets the exact vocabulary-rank id sequence") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("bpe_tok").toString
+    val dir = Graft.scratch("bpe_tok")
     Seq((1L, "ababab ababab ababx", "en", "test", 19L))
       .toDF("doc_id", "text", "lang", "source", "n_chars")
       .write.mode("overwrite").parquet(s"$dir/documents.parquet")

@@ -17,7 +17,7 @@ class StreamingSpec extends SparkTestBase {
 
   private def eventsDir = {
     // file-source streams read directories; stage the single fixture file
-    val dir = java.nio.file.Files.createTempDirectory("events_stream")
+    val dir = java.nio.file.Paths.get(Graft.scratch("events_stream"))
     java.nio.file.Files.copy(
       java.nio.file.Paths.get(s"$sf/events.parquet"),
       dir.resolve("events.parquet"))
@@ -146,28 +146,28 @@ class StreamingSpec extends SparkTestBase {
   }
 
   test("foreachBatch sink writes each micro-batch exactly once") {
-    val out = java.nio.file.Files.createTempDirectory("fb_out")
-    val ckpt = java.nio.file.Files.createTempDirectory("fb_ckpt")
+    val out = Graft.scratch("fb_out")
+    val ckpt = Graft.scratch("fb_ckpt")
     val stream = EventStreams.readEvents(spark, eventsDir)
       .select(col("event_id"), col("user_id"))
-    EventStreams.runForeachBatch(stream, out.toString, ckpt.toString)
-    val written = spark.read.parquet(out.toString)
+    EventStreams.runForeachBatch(stream, out, ckpt)
+    val written = spark.read.parquet(out)
     assert(written.count() == graft.sources.Tables.events(spark, sf).count())
     assert(written.groupBy(col("event_id")).count().filter(col("count") > 1).count() == 0)
   }
 
   test("checkpoint recovery: restart processes only new files, no dup/loss") {
     import org.apache.spark.sql.streaming.Trigger
-    val src = java.nio.file.Files.createTempDirectory("events_ckpt_src")
-    val ckpt = java.nio.file.Files.createTempDirectory("events_ckpt")
-    val outDir = java.nio.file.Files.createTempDirectory("events_ckpt_out")
+    val src = java.nio.file.Paths.get(Graft.scratch("events_ckpt_src"))
+    val ckpt = Graft.scratch("events_ckpt")
+    val outDir = Graft.scratch("events_ckpt_out")
 
     def runOnce(): Unit = {
       val stream = EventStreams.readEvents(spark, src.toString)
         .select(col("event_id"), col("user_id"))
       val q = stream.writeStream.format("parquet")
-        .option("path", outDir.toString)
-        .option("checkpointLocation", ckpt.toString)
+        .option("path", outDir)
+        .option("checkpointLocation", ckpt)
         .trigger(Trigger.AvailableNow())
         .start()
       q.awaitTermination()
@@ -177,7 +177,7 @@ class StreamingSpec extends SparkTestBase {
     java.nio.file.Files.copy(java.nio.file.Paths.get(s"$sf/events.parquet"),
       src.resolve("a.parquet"))
     runOnce()
-    val afterA = spark.read.parquet(outDir.toString).count()
+    val afterA = spark.read.parquet(outDir).count()
 
     // second incarnation (same checkpoint) sees A again plus new file B (a
     // second copy) — exactly-once means A is NOT reprocessed: the total
@@ -185,7 +185,7 @@ class StreamingSpec extends SparkTestBase {
     java.nio.file.Files.copy(java.nio.file.Paths.get(s"$sf/events.parquet"),
       src.resolve("b.parquet"))
     runOnce()
-    val afterB = spark.read.parquet(outDir.toString)
+    val afterB = spark.read.parquet(outDir)
     assert(afterB.count() == 2 * afterA)
     assert(afterB.groupBy(col("event_id")).count().filter(col("count") =!= 2).count() == 0)
   }

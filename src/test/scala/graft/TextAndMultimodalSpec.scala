@@ -142,7 +142,7 @@ class TextAndMultimodalSpec extends SparkTestBase {
   test("binaryFile source ingests opaque payloads with file metadata") {
     // the ingestion front door for the multimodal (§2.11) pipeline: raw
     // image/audio bytes land as (path, modificationTime, length, content)
-    val dir = java.nio.file.Files.createTempDirectory("graft_binsrc")
+    val dir = java.nio.file.Paths.get(Graft.scratch("binsrc"))
     val payloads = Map("a.bin" -> Array[Byte](1, 2, 3, 4, 5),
       "b.bin" -> Array.tabulate[Byte](300)(i => (i % 127).toByte))
     payloads.foreach { case (name, bytes) =>

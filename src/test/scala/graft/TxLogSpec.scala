@@ -11,11 +11,8 @@ import graft.sources.TxLog
 class TxLogSpec extends SparkTestBase {
   import spark.implicits._
 
-  private def freshDir(): String = {
-    val d = java.nio.file.Files.createTempDirectory("txlog").toString
-    java.nio.file.Files.delete(java.nio.file.Paths.get(d))
-    d
-  }
+  /** A table path whose directory does not exist yet. */
+  private def freshDir(): String = s"${Graft.scratch("txlog")}/table"
 
   private def batch(lo: Int, hi: Int) =
     (lo until hi).map(i => (i.toLong, s"v$i")).toDF("id", "s")
