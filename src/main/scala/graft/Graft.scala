@@ -16,7 +16,9 @@ import graft.plans.AsOfStrategy
   *    passes one in). It is idempotent; the factory calls it.
   *  - [[Graft.childSession]] is the one way to run with other execution
   *    settings: a cached child of a session, its overrides set once at
-  *    creation. Nothing writes a setting onto a caller's session.
+  *    creation. Nothing writes a setting onto a caller's session. It
+  *    scopes read settings too: the events loaders read on a child that
+  *    sets `nanosAsLong`, and their scans keep that setting on any session.
   *  - [[Graft.scratch]] is where every query writes its own files: a
   *    fresh, empty directory per call, under one root per JVM that is
   *    deleted at exit. The session's warehouse lives under the same root.

@@ -4,15 +4,6 @@ import java.nio.file.{Files, Paths}
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
 
-  /** The session conf a query must leave as it found it. The one exclusion,
-    * `spark.sql.legacy.parquet.nanosAsLong`, is set for good by
-    * `Tables.load` and `EventStreams.readEvents`: it has no per-read form,
-    * and moving it to session construction waits on the benchmark's own
-    * session (ROADMAP).
-    */
-  def settings(spark: org.apache.spark.sql.SparkSession): Map[String, String] =
-    spark.conf.getAll - "spark.sql.legacy.parquet.nanosAsLong"
-
   def main(args: Array[String]): Unit = {
     val (sfDir, outDir) = (args(0), args(1))
     // Optional third arg: regex over query names, for fast local iteration
@@ -22,7 +13,7 @@ object Verify {
     val spark = Graft.session(sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt)
     new java.io.File(outDir).mkdirs()
     SparkEntry.queries.filter(kv => keep(kv._1)).foreach { case (name, fn) =>
-      val before = settings(spark)
+      val before = spark.conf.getAll
       try {
         val df = fn(spark, sfDir)
         // Output-type lint (OutputPolicy): fail LOUDLY here rather than
@@ -31,7 +22,7 @@ object Verify {
         df.coalesce(1).write.mode("overwrite").parquet(s"$outDir/$name")
         // a query is a function of (session, dir): one that leaves a
         // setting behind changes every query after it
-        val after = settings(spark)
+        val after = spark.conf.getAll
         if (after != before) throw new IllegalStateException("changed session conf from " +
           s"${before.toSet -- after.toSet} to ${after.toSet -- before.toSet}")
       } catch { case e: Throwable =>
@@ -39,12 +30,7 @@ object Verify {
         // a STALE dump from an earlier run would otherwise be compared in
         // this query's place and could read green — delete it so a failed
         // query is an explicit per-query red at the driver, never silent
-        def rm(f: java.io.File): Unit = {
-          if (f.isDirectory) f.listFiles().foreach(rm)
-          f.delete(): Unit
-        }
-        val dir = new java.io.File(s"$outDir/$name")
-        if (dir.exists()) rm(dir)
+        org.apache.spark.sql.graftbridge.deleteRecursively(new java.io.File(s"$outDir/$name"))
       }
       // Blocks persisted by this query (lazy localCheckpoints) are garbage
       // once its dump completes; drop them now instead of waiting for a GC

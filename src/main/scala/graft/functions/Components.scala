@@ -29,6 +29,7 @@ object Components {
   /** @param edges undirected edge list (each pair listed once is enough)
     * @return (id, component) for every vertex appearing in an edge, where
     *         component = min vertex id in the connected component.
+    * @throws IllegalStateException if labels still change after `maxIters` rounds
     */
   def connectedComponents(
       edges: DataFrame,
@@ -88,6 +89,12 @@ object Components {
       labels = next
       it += 1
     }
+    // a truncated run would hand back partly propagated labels (one
+    // component under several labels) — refuse, as the star path does
+    if (changed)
+      throw new IllegalStateException(
+        s"connectedComponents did not converge in $maxIters rounds " +
+          "(O(diameter) rounds — use connectedComponentsStar for long chains)")
     Graft.onSession(spark, labels)
   }
 

@@ -388,7 +388,7 @@ object ScaleQueries {
     // cross-engine, no float score). This is document survivorship: the
     // q129 rule-cascade shape specialized to corpus curation, where
     // "best" means richest text rather than freshest record. Scale: the
-    // cluster assignment is q81's O(log²n) star pipeline; the election
+    // cluster assignment is q81's min-label propagation; the election
     // adds ONE window over clusters (partitioned by cluster — never
     // global) and an aggregation, both on the cluster-sized (tiny
     // relative to corpus) membership table.

@@ -2,6 +2,7 @@ package graft.sources
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.types._
+import graft.Graft
 import graft.types._
 
 /** Fixture table catalog with declared schemas (SURVEY.md §1.4: the
@@ -13,6 +14,9 @@ import graft.types._
   * but nothing below assumes a single file — `spark.read.parquet` over a
   * directory of thousands of files partitions by `maxPartitionBytes`. Each
   * load still infers its schema from the footers (see [[load]]).
+  *
+  * The shipped `events` files store `ts` as timestamp[us]; older ones store
+  * TIMESTAMP(NANOS), which [[load]] still accepts and truncates to µs.
   */
 object Tables {
 
@@ -83,41 +87,45 @@ object Tables {
 
   def names: Seq[String] = graftSchemas.keys.toSeq.sorted
 
+  /** The one setting under which a TIMESTAMP(NANOS) column reads, as raw
+    * longs; set only on a child session (see [[load]]). */
+  private[graft] val nanosAsLong: (String, String) = "spark.sql.legacy.parquet.nanosAsLong" -> "true"
+
   /** Load a fixture table from `sfDir`. The read passes no `.schema(...)`,
     * so Spark infers the schema from the parquet footers (one Spark job per
     * load); the result is then checked against [[graftSchemas]], failing
     * fast on drift. Passing the declared schema is ROADMAP item 2; it must
-    * keep embeddings' `list<float>` (declared Vector) and events' nanos.
+    * keep embeddings' `list<float>` (declared Vector) and the older
+    * events encoding, TIMESTAMP(NANOS).
     */
   def load(spark: SparkSession, sfDir: String, table: String): DataFrame = {
     val expected = graftSchemas.getOrElse(table, throw AttributeMissing(s"table $table"))
-    // events.ts is TIMESTAMP(NANOS), which Spark's parquet reader rejects;
-    // NOTE: nanosAsLong is a session-wide conf with no per-read form — after
-    // this loader runs, other TIMESTAMP(NANOS) parquet in the same session
-    // also surfaces as LongType nanos instead of erroring (documented,
-    // deliberate: the alternative set/restore dance races with lazy plan
-    // execution).
-    // read it as raw nanos (legacy long mode) and truncate to microsecond NTZ
-    // — the same ns→µs truncation DuckDB applies, so both engines see
-    // identical values. `DIV` keeps the arithmetic in 64-bit integers
-    // (a double roundtrip would lose precision above 2^53 ns ≈ 104 days).
+    // events.ts may be TIMESTAMP(NANOS), which Spark's parquet reader
+    // rejects unless nanosAsLong is set; that conf has no per-read form, so
+    // the read runs on a cached child session that sets it, and the frame
+    // moves back to `spark` (the scan keeps reading under the child's
+    // conf). The raw nanos are truncated to microsecond NTZ — the same
+    // ns→µs truncation DuckDB applies, so both engines see identical
+    // values. `DIV` keeps the arithmetic in 64-bit integers (a double
+    // roundtrip would lose precision above 2^53 ns ≈ 104 days).
     val df =
       if (table == "events") {
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        val raw = spark.read.parquet(s"$sfDir/$table.parquet")
-        raw.schema("ts").dataType match {
-          // driver fixture encoding: TIMESTAMP(NANOS) surfaced as raw longs
+        val raw = Graft.childSession(spark, nanosAsLong)
+          .read.parquet(s"$sfDir/$table.parquet")
+        Graft.onSession(spark, raw.schema("ts").dataType match {
+          // TIMESTAMP(NANOS) surfaced as raw longs
           case org.apache.spark.sql.types.LongType =>
             raw.withColumn("ts",
               org.apache.spark.sql.functions.timestamp_micros(
                 org.apache.spark.sql.functions.expr("ts DIV 1000"))
                 .cast(TimestampNTZType))
-          // scaled datasets (GenScale) write plain µs timestamps — accept
-          // both encodings so the loader isn't coupled to the quirk
+          // the shipped fixtures and GenScale's output are plain µs
+          // timestamps — accept both encodings so the loader isn't coupled
+          // to either
           case _ =>
             raw.withColumn("ts", org.apache.spark.sql.functions.col("ts")
               .cast(TimestampNTZType))
-        }
+        })
       } else spark.read.parquet(s"$sfDir/$table.parquet")
     val got = df.schema
     expected.attrs.foreach { a =>

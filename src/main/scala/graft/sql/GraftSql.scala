@@ -37,9 +37,7 @@ object GraftSql {
     * Only tables whose name appears in the text are registered — a cheap
     * over-approximation (a name inside a string literal also registers)
     * that is always safe, and it matters: registering a table costs a
-    * parquet footer read, and loading `events` in particular flips the
-    * session-wide nanosAsLong conf (Tables.scala) — a side effect no
-    * query that never mentions events should pay. The match is
+    * parquet footer read. The match is
     * case-INsensitive because Catalyst resolves identifiers
     * case-insensitively: `FROM Orders` is legal SQL that must bind the
     * `orders` view (ADVICE r4).

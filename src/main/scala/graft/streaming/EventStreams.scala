@@ -20,51 +20,36 @@ import org.apache.spark.sql.types._
   */
 object EventStreams {
 
-  /** The streaming-side schema, parameterized on the fixture's physical ts
-    * encoding (raw nanos long vs plain µs timestamp) — see [[readEvents]].
-    */
-  private def rawSchema(tsType: DataType) = StructType(Seq(
-    StructField("event_id", LongType, nullable = true),
-    StructField("ts", tsType, nullable = true),
-    StructField("user_id", LongType, nullable = true),
-    StructField("event_type", StringType, nullable = true),
-    StructField("value", DoubleType, nullable = true),
-    StructField("props", StringType, nullable = true)))
-
   /** File-source stream over a directory of events parquet. Watermarks
     * require TIMESTAMP (not NTZ), so ts stays an instant here; under the
     * UTC session timezone it is value-identical to the batch loader's NTZ.
     *
     * The fixture's ts column has shipped in two encodings over time —
-    * TIMESTAMP(NANOS) (which Spark only reads as raw longs, via
+    * TIMESTAMP(NANOS) (which Spark only reads as raw longs, under
     * `nanosAsLong`) and plain timestamp[us]. File-source streams need an
     * explicit schema, so peek the footer with a one-off batch read (schema
-    * inference only — no data scan) and dispatch exactly like the batch
-    * loader (`sources/Tables.scala`). Hard-coding either encoding breaks
-    * event time by 1000× when the fixture carries the other one.
+    * inference only — no data scan) and declare that read's own schema —
+    * a mismatched request crashes the vectorized reader mid-batch — then
+    * dispatch on ts exactly like the batch loader (`sources/Tables.scala`).
+    * Both reads run on the loader's child session, so the caller's conf is
+    * never written; the stream moves back to `spark`.
     */
   def readEvents(spark: SparkSession, dir: String): DataFrame = {
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    val nanos = graft.Graft.childSession(spark, graft.sources.Tables.nanosAsLong)
     // An empty watch directory (start-stream-then-add-files, the pattern
     // the checkpoint-recovery test approximates) has no footer to peek:
-    // fall back to the shipped fixtures' encoding (timestamp[us] NTZ).
-    val footerTs = try spark.read.parquet(dir).schema("ts").dataType
-      catch { case _: org.apache.spark.sql.AnalysisException => TimestampNTZType }
-    footerTs match {
-      case LongType => // nanos-as-long fixture: truncate ns → µs like the batch loader
-        spark.readStream
-          .schema(rawSchema(LongType))
-          .parquet(dir)
-          .withColumn("ts", timestamp_micros(expr("ts DIV 1000")))
-      case other => // timestamp fixture (NTZ µs, or LTZ if UTC-adjusted): declare the
-        // footer's OWN type — a mismatched request crashes the vectorized
-        // reader mid-batch — then cast to instant (no-op for LTZ; under
-        // the UTC session timezone value-identical for NTZ)
-        spark.readStream
-          .schema(rawSchema(other))
-          .parquet(dir)
-          .withColumn("ts", col("ts").cast(TimestampType))
-    }
+    // fall back to the declared schema (timestamp[us] NTZ, as shipped).
+    val schema = try nanos.read.parquet(dir).schema
+      catch { case _: org.apache.spark.sql.AnalysisException =>
+        graft.sources.Tables.graftSchemas("events").struct }
+    val raw = nanos.readStream.schema(schema).parquet(dir)
+    graft.Graft.onSession(spark, schema("ts").dataType match {
+      case LongType => // raw nanos: truncate ns → µs like the batch loader
+        raw.withColumn("ts", timestamp_micros(expr("ts DIV 1000")))
+      case _ => // NTZ µs, or LTZ if UTC-adjusted: cast to instant (no-op
+        // for LTZ; under the UTC session timezone value-identical for NTZ)
+        raw.withColumn("ts", col("ts").cast(TimestampType))
+    })
   }
 
   /** Tumbling event-time counts with a watermark (late data beyond the

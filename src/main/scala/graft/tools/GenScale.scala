@@ -41,12 +41,6 @@ object GenScale {
   def main(args: Array[String]): Unit = {
     val (src, dest, k) = (args(0), args(1), args(2).toInt)
     val spark = graft.Graft.session(sys.env.getOrElse("SPARK_GRAFT_CPUS", "8").toInt)
-    // events.ts is TIMESTAMP(NANOS), which the parquet reader rejects;
-    // surface it as raw nanos longs (Tables.events' own convention) and
-    // write it back as plain BIGINT nanos — Tables.events converts either
-    // encoding to µs NTZ identically. Only NANOS-annotated columns are
-    // affected; every other timestamp reads normally.
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     new java.io.File(dest).mkdirs()
 
     /** K replicas of `df`, transformed per replica, single-file parquet.
@@ -58,7 +52,7 @@ object GenScale {
       * sf0.1 key range, the tightest of the pads).
       */
     def gen(table: String, pads: (String, Long)*)(replica: (DataFrame, Int) => DataFrame): Unit = {
-      val base = spark.read.parquet(s"$src/$table.parquet")
+      val base = graft.sources.Tables.load(spark, src, table)
       pads.foreach { case (c, pad) =>
         val r = base.agg(min(col(c).cast("long")), max(col(c).cast("long"))).head
         val (mn, mx) = (r.getLong(0), r.getLong(1))
@@ -81,11 +75,7 @@ object GenScale {
       val target = java.nio.file.Paths.get(s"$dest/$table.parquet")
       java.nio.file.Files.deleteIfExists(target)
       java.nio.file.Files.move(part.toPath, target)
-      def rm(f: java.io.File): Unit = {
-        if (f.isDirectory) f.listFiles().foreach(rm)
-        f.delete(): Unit
-      }
-      rm(new java.io.File(tmp))
+      org.apache.spark.sql.graftbridge.deleteRecursively(new java.io.File(tmp))
       println(s"[genscale] $table: ${spark.read.parquet(s"$dest/$table.parquet").count()} rows")
     }
 
@@ -106,26 +96,13 @@ object GenScale {
       // aligned with the shifted dimension keys
       .withColumn("l_partkey", shift("l_partkey", 100000L, i))
       .withColumn("l_suppkey", shift("l_suppkey", 1000L, i)))
-    gen("events", "event_id" -> 1000000L, "user_id" -> 100000L)((df, i) => {
-      val shifted = df
-        .withColumn("event_id", shift("event_id", 1000000L, i))
-        // SAME pad as c_custkey: events.user_id joins customer.c_custkey
-        // (q140's enrichment), so replica-k users must land on replica-k
-        // customers — a misaligned pad would silently change the join's
-        // match rate at scale
-        .withColumn("user_id", shift("user_id", 100000L, i))
-      // the fixture's TIMESTAMP(NANOS) surfaces as raw nanos longs (conf
-      // above); write back as plain µs NTZ — the same ns→µs truncation
-      // Tables.events applies — so DuckDB oracles over ts work against the
-      // scaled dataset. A chained run (scaling a GenScale output again)
-      // reads ts already converted; pass it through like Tables.events.
-      shifted.schema("ts").dataType match {
-        case org.apache.spark.sql.types.LongType =>
-          shifted.withColumn("ts", timestamp_micros(expr("ts DIV 1000"))
-            .cast(org.apache.spark.sql.types.TimestampNTZType))
-        case _ => shifted
-      }
-    })
+    gen("events", "event_id" -> 1000000L, "user_id" -> 100000L)((df, i) => df
+      .withColumn("event_id", shift("event_id", 1000000L, i))
+      // SAME pad as c_custkey: events.user_id joins customer.c_custkey
+      // (q140's enrichment), so replica-k users must land on replica-k
+      // customers — a misaligned pad would silently change the join's
+      // match rate at scale
+      .withColumn("user_id", shift("user_id", 100000L, i)))
     gen("documents", "doc_id" -> 10000L)((df, i) => {
       // 10000 % 50 == 0 keeps the q117 chain structure per replica
       val shifted = df.withColumn("doc_id", shift("doc_id", 10000L, i))

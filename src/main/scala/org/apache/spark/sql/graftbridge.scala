@@ -31,4 +31,8 @@ package object graftbridge {
     * deletes, recursively, when the JVM exits. */
   def shutdownDeletedTempDir(namePrefix: String): java.io.File =
     org.apache.spark.util.Utils.createTempDir(namePrefix = namePrefix)
+
+  /** Deletes `f` and, for a directory, everything under it; a missing `f`
+    * is no error. */
+  def deleteRecursively(f: java.io.File): Unit = org.apache.spark.util.Utils.deleteRecursively(f)
 }

@@ -30,6 +30,13 @@ class ComponentsSpec extends SparkTestBase {
     assert(run(e1) == run(e1.reverse.map { case (a, b) => (b, a) }))
   }
 
+  test("components: a path longer than maxIters rounds throws instead of truncating") {
+    // a 64-link path needs 64 propagation rounds; the default stops at 20
+    val path = (1L to 65L).sliding(2).map(w => (w.head, w.last)).toSeq
+    val e = intercept[IllegalStateException](run(path))
+    assert(e.getMessage.contains("did not converge"), e.getMessage)
+  }
+
   private def runStar(edges: Seq[(Long, Long)]): Map[Long, Long] = {
     import spark.implicits._
     Components.connectedComponentsStar(edges.toDF("s", "t"), "s", "t")

@@ -84,15 +84,7 @@ class GraftInstallSpec extends SparkTestBase {
     // may only shrink.
     val allowed = Set(
       "src/main/scala/graft/Graft.scala" ->
-        "overrides.foreach { case (k, v) => child.conf.set(k, v) }",
-      "src/main/scala/graft/tools/GenScale.scala" ->
-        """spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")""",
-      // nanosAsLong has no per-read form; ROADMAP moves it to session
-      // construction with the next benchmark change
-      "src/main/scala/graft/sources/Tables.scala" ->
-        """spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")""",
-      "src/main/scala/graft/streaming/EventStreams.scala" ->
-        """spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")""")
+        "overrides.foreach { case (k, v) => child.conf.set(k, v) }")
     val write = """conf\s*\.\s*(set|unset)\s*\(|setConf\s*\(""".r
     val sites = sourceLines("src/main").filter { case (_, l) => write.findFirstIn(l).isDefined }
     val extra = sites.filterNot(allowed.contains)

@@ -1,8 +1,5 @@
 package graft
 
-import java.util.concurrent.atomic.AtomicInteger
-import org.apache.spark.ListenerBusDrain
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.functions.{Aggregators, KMeans, Similarity}
@@ -75,29 +72,8 @@ class KMeansSpec extends SparkTestBase {
   private def clusters(assigned: DataFrame): Map[Long, Any] =
     assigned.collect().map(r => r.getLong(0) -> r.get(1)).toMap
 
-  /** Jobs the body starts on this thread, counted after the listener bus
-    * has delivered every event (jobs carry the thread's job group).
-    */
-  private def jobsStartedBy(body: => Unit): Int = {
-    val sc = spark.sparkContext
-    val group = s"kmeans-jobs-${java.util.UUID.randomUUID()}"
-    val jobs = new AtomicInteger
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        if (Option(e.properties).exists(_.getProperty("spark.jobGroup.id") == group))
-          jobs.incrementAndGet()
-    }
-    sc.addSparkListener(listener)
-    sc.setJobGroup(group, "KMeansSpec job budget")
-    try {
-      body
-      ListenerBusDrain(sc)
-      jobs.get
-    } finally {
-      sc.clearJobGroup()
-      sc.removeSparkListener(listener)
-    }
-  }
+  private def jobsStartedBy(body: => Unit): Int =
+    new JobGroupCounter().run(spark.sparkContext)(body).jobs.get
 
   test("k-means job budget: one seed job plus one job per Lloyd step, none to assign") {
     val emb = graft.sources.Tables.embeddings(spark, sf)

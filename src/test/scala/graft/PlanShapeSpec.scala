@@ -561,7 +561,7 @@ class PlanShapeSpec extends SparkTestBase {
     // instrument — the volume a query MOVES through its shuffles is a
     // deterministic fact of plan + data. Volumes are TOTAL stage shuffle
     // writes (SparkListener over the engine's own task metrics —
-    // graft.tools.ShuffleVolumes.measured), so persist materialization
+    // ShuffleVolumes.measured), so persist materialization
     // and localCheckpoint jobs count too, not just the final adaptive
     // plan. Caps sit ~2.5–3× the healthy volume at this fixture
     // (records/bytes measured on a clean session): an all-pairs blowup
@@ -577,7 +577,7 @@ class PlanShapeSpec extends SparkTestBase {
       ("q81_dedup_clusters",  /*  9.6k/321k */ 25000L, 1000000L),
       ("q223_cdc_chunks",     /*  4.0k/225k */ 11000L,  700000L))
     caps.foreach { case (name, recCap, byteCap) =>
-      val (rec, byt) = graft.tools.ShuffleVolumes.measured(spark) {
+      val (rec, byt) = ShuffleVolumes.measured(spark) {
         SparkEntry.queries(name)(spark, sf).collect()
       }
       assert(rec > 0, s"$name: no shuffle traffic recorded (instrument broken?)")

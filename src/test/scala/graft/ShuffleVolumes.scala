@@ -1,5 +1,7 @@
-package graft.tools
+package graft
 
+import java.util.concurrent.atomic.AtomicLong
+import org.apache.spark.scheduler.SparkListenerStageCompleted
 import org.apache.spark.sql.SparkSession
 
 /** Measured shuffle volume: records and bytes written, from the engine's
@@ -17,31 +19,20 @@ object ShuffleVolumes {
     * the body runs — a SparkListener over the engine's own task metrics,
     * so it also counts work a final adaptive plan hides: persist
     * materialization (InMemoryTableScan's cached subtree) and
-    * localCheckpoint jobs of iterative pipelines. The listener bus is
-    * async, so the reading settles by polling until stable. Callers must
-    * not run concurrent jobs on the session during the measurement.
+    * localCheckpoint jobs of iterative pipelines. Read after the listener
+    * bus has drained ([[JobGroupCounter.run]]). Callers must not run
+    * concurrent jobs on the session during the measurement.
     */
   def measured(spark: SparkSession)(body: => Unit): (Long, Long) = {
-    val rec = new java.util.concurrent.atomic.AtomicLong
-    val byt = new java.util.concurrent.atomic.AtomicLong
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onStageCompleted(
-          e: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit = {
+    val rec = new AtomicLong
+    val byt = new AtomicLong
+    new JobGroupCounter {
+      override def onStageCompleted(e: SparkListenerStageCompleted): Unit = {
         val m = e.stageInfo.taskMetrics.shuffleWriteMetrics
         rec.addAndGet(m.recordsWritten)
         byt.addAndGet(m.bytesWritten)
       }
-    }
-    spark.sparkContext.addSparkListener(listener)
-    try {
-      body
-      var prev = (-1L, -1L)
-      var cur = (rec.get, byt.get)
-      var spins = 0
-      while (prev != cur && spins < 100) {
-        Thread.sleep(50); prev = cur; cur = (rec.get, byt.get); spins += 1
-      }
-      cur
-    } finally spark.sparkContext.removeSparkListener(listener)
+    }.run(spark.sparkContext)(body)
+    (rec.get, byt.get)
   }
 }

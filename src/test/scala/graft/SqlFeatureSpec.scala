@@ -124,8 +124,7 @@ class SqlFeatureSpec extends SparkTestBase {
     // shared session, the recursive gates its cteRecursionRowLimit. All of
     // them now plan on cached child sessions whose conf is set once at
     // creation, so the shared session is never written at all: compare the
-    // whole conf map, not one key. Verify.settings excludes only
-    // nanosAsLong (see ROADMAP: it has no per-read form yet).
+    // whole conf map, not one key.
     val touched = Seq(
       "q117_chain_components", "q150_bpe_merges", "q161_pca_power", "q162_kcore",
       "q172_stream_dedup", "q186_stream_sessions", "q213_stream_shards",
@@ -133,9 +132,9 @@ class SqlFeatureSpec extends SparkTestBase {
       "q199_recursive_chain", "q200_recursive_rollup")
     def views = spark.catalog.listTables().collect().map(_.name).toSet
     val failures = touched.flatMap { name =>
-      val (confBefore, viewsBefore) = (Verify.settings(spark), views)
+      val (confBefore, viewsBefore) = (spark.conf.getAll, views)
       q(name).collect()
-      val (confAfter, viewsAfter) = (Verify.settings(spark), views)
+      val (confAfter, viewsAfter) = (spark.conf.getAll, views)
       val changed = (confBefore.keySet ++ confAfter.keySet)
         .filter(k => confBefore.get(k) != confAfter.get(k))
       (if (changed.isEmpty) Nil else Seq(s"$name changed conf ${changed.mkString(", ")}")) ++

@@ -249,12 +249,11 @@ class StreamingSpec extends SparkTestBase {
     // changes (r5: nanos-as-long → timestamp[us]) and only one reader
     // adapts, every event-time test above fails with opaque subset
     // mismatches — this test fails FIRST and names the encoding.
-    // nanosAsLong first: under a TIMESTAMP(NANOS) fixture a bare read
-    // throws PARQUET_TYPE_ILLEGAL before the diagnostic below can fire,
-    // and whether some earlier test already set the session-wide conf is
-    // run-order luck — this test must hold in isolation too
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val encoding = spark.read.parquet(s"$sf/events.parquet").schema("ts").dataType.simpleString
+    // peek on the loaders' child session: under a TIMESTAMP(NANOS) fixture
+    // a bare read throws PARQUET_TYPE_ILLEGAL before the diagnostic below
+    // can fire
+    val encoding = Graft.childSession(spark, graft.sources.Tables.nanosAsLong)
+      .read.parquet(s"$sf/events.parquet").schema("ts").dataType.simpleString
     val stream = EventStreams.readEvents(spark, eventsDir)
       .select(col("event_id"), col("ts").cast("long").as("ts_s"))
     val got = EventStreams.runToMemory(stream, "t_encoding", "append")
@@ -268,6 +267,44 @@ class StreamingSpec extends SparkTestBase {
       s"stream vs batch reader divergence for fixture ts encoding '$encoding': " +
         s"stream (count,min,max,sum)=$got, batch=$want — " +
         "readEvents and Tables.load must dispatch on the SAME footer schema")
+  }
+
+  test("a TIMESTAMP(NANOS) events file loads as truncated µs through both readers, session conf unset") {
+    // The shipped fixtures store ts as timestamp[us]; write the older
+    // TIMESTAMP(NANOS) encoding, which a bare read rejects.
+    import org.apache.parquet.example.data.simple.SimpleGroupFactory
+    import org.apache.parquet.hadoop.example.ExampleParquetWriter
+    import org.apache.parquet.schema.MessageTypeParser
+    val dir = Graft.scratch("events_nanos")
+    val schema = MessageTypeParser.parseMessageType(
+      """message events {
+        |  required int64 event_id;
+        |  required int64 ts (TIMESTAMP(NANOS,false));
+        |  required int64 user_id;
+        |  required binary event_type (STRING);
+        |  required double value;
+        |  required binary props (STRING);
+        |}""".stripMargin)
+    val nanos = Seq(1700000000123456789L, 1700000060000000999L, 1700003600999999000L)
+    val writer = ExampleParquetWriter
+      .builder(new org.apache.hadoop.fs.Path(s"$dir/events.parquet")).withType(schema).build()
+    val rows = new SimpleGroupFactory(schema)
+    try nanos.zipWithIndex.foreach { case (ns, i) =>
+      writer.write(rows.newGroup().append("event_id", i.toLong).append("ts", ns)
+        .append("user_id", 7L).append("event_type", "click").append("value", 1.0)
+        .append("props", "{}"))
+    } finally writer.close()
+    val bare = intercept[Exception](spark.read.parquet(dir).collect())
+    assert(bare.getMessage.contains("PARQUET_TYPE_ILLEGAL"), bare.getMessage)
+
+    def micros(df: org.apache.spark.sql.DataFrame): Seq[Long] =
+      df.select(unix_micros(col("ts").cast("timestamp"))).collect().map(_.getLong(0)).toSeq.sorted
+    val want = nanos.map(_ / 1000)
+    assert(micros(graft.sources.Tables.events(spark, dir)) == want)
+    assert(micros(EventStreams.runToMemory(
+      EventStreams.readEvents(spark, dir), "t_nanos", "append")) == want)
+    assert(spark.conf.getAll.get(graft.sources.Tables.nanosAsLong._1).isEmpty,
+      "an events loader wrote nanosAsLong onto the caller's session")
   }
 
   test("dropDuplicatesWithinWatermark removes duplicate event_ids") {
