@@ -22,6 +22,8 @@ import graft.plans.AsOfStrategy
   *  - [[Graft.scratch]] is where every query writes its own files: a
   *    fresh, empty directory per call, under one root per JVM that is
   *    deleted at exit. The session's warehouse lives under the same root.
+  *  - SQL text binds its tables on a throwaway clone
+  *    ([[graft.sql.GraftSql.sql]]), never as views on a caller's session.
   *
   * After either, SQL can call `cosine_sim(a, b)` and `misra_gries(x, k)`,
   * and the as-of join plans through [[graft.plans.AsOfJoinExec]].
@@ -75,8 +77,11 @@ object Graft {
   }
 
   // Weak in the parent, so a discarded parent does not pin its children. A
-  // child costs about a second to build (its own analyzer, rules and conf),
-  // so it is built once and reused for the life of its parent.
+  // child is cheap to build: cloneSession took 1.0 ms (median of 30, sf0.1,
+  // local[4]), and binding five tables and analyzing q131's text took 60 ms
+  // on a fresh clone and on a cached child alike. But each session adds a
+  // listener to the shared listener bus until a GC collects it, so a child
+  // is built once per (parent, overrides) and reused for its parent's life.
   private val childSessions = new java.util.WeakHashMap[SparkSession,
     java.util.Map[Seq[(String, String)], SparkSession]]()
 

@@ -12,8 +12,9 @@ object Verify {
     def keep(n: String) = nameFilter.forall(_.findFirstIn(n).isDefined)
     val spark = Graft.session(sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt)
     new java.io.File(outDir).mkdirs()
+    def views = spark.catalog.listTables().collect().filter(_.isTemporary).map(_.name).toSet
     SparkEntry.queries.filter(kv => keep(kv._1)).foreach { case (name, fn) =>
-      val before = spark.conf.getAll
+      val (before, viewsBefore) = (spark.conf.getAll, views)
       try {
         val df = fn(spark, sfDir)
         // Output-type lint (OutputPolicy): fail LOUDLY here rather than
@@ -21,10 +22,12 @@ object Verify {
         OutputPolicy.enforce(name, df.schema)
         df.coalesce(1).write.mode("overwrite").parquet(s"$outDir/$name")
         // a query is a function of (session, dir): one that leaves a
-        // setting behind changes every query after it
-        val after = spark.conf.getAll
+        // setting or a temp view behind changes every query after it
+        val (after, viewsAfter) = (spark.conf.getAll, views)
         if (after != before) throw new IllegalStateException("changed session conf from " +
           s"${before.toSet -- after.toSet} to ${after.toSet -- before.toSet}")
+        if (viewsAfter != viewsBefore) throw new IllegalStateException("changed temp views: " +
+          s"added ${viewsAfter -- viewsBefore}, dropped ${viewsBefore -- viewsAfter}")
       } catch { case e: Throwable =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
         // a STALE dump from an earlier run would otherwise be compared in

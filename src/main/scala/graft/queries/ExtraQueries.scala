@@ -4,6 +4,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 import graft.{GQuery, Graft}
 import graft.sources.Tables
+import graft.sql.GraftSql
 import graft.plans.AsOfJoinCustom
 
 /** Second-wave coverage: the custom physical as-of operator, file
@@ -103,14 +104,11 @@ object ExtraQueries {
     // so the linear interpolation arithmetic is exact on both engines.
     GQuery(
       "q51_percentiles",
-      (s, d) => {
-        Tables.lineitem(s, d).createOrReplaceTempView("g_li_pct")
-        s.sql("""SELECT l_returnflag AS flag,
+      (s, d) => GraftSql.run(s, d, """SELECT l_returnflag AS flag,
                 |       percentile(l_quantity, 0.5) AS p50,
                 |       percentile(l_quantity, 0.9) AS p90,
                 |       min(l_quantity) AS qmin, max(l_quantity) AS qmax
-                |FROM g_li_pct GROUP BY 1 ORDER BY flag ASC""".stripMargin)
-      },
+                |FROM lineitem GROUP BY 1 ORDER BY flag ASC""".stripMargin),
       Some("""SELECT l_returnflag AS flag,
              |       quantile_cont(l_quantity, 0.5) AS p50,
              |       quantile_cont(l_quantity, 0.9) AS p90,

@@ -7,6 +7,7 @@ import org.apache.spark.sql.types.DecimalType
 import graft.GQuery
 import graft.functions.{TextFunctions => TF}
 import graft.sources.Tables
+import graft.sql.GraftSql
 
 /** Graph / temporal / corpus-statistics round-out (round 3): triangle
   * counting, SCD2 merge, sweep-line concurrency, Kneser-Ney continuation
@@ -340,24 +341,21 @@ object GraphTemporalQueries {
     // never an epsilon. Output: the outlier rows per return flag.
     GQuery(
       "q123_mad_outliers",
-      (s, d) => {
-        Tables.lineitem(s, d).createOrReplaceTempView("g_mad_li")
-        s.sql("""WITH med AS (
+      (s, d) => GraftSql.run(s, d, """WITH med AS (
                 |  SELECT l_returnflag AS flag, percentile(l_quantity, 0.5) AS med
-                |  FROM g_mad_li GROUP BY 1),
+                |  FROM lineitem GROUP BY 1),
                 |dev AS (
                 |  SELECT m.flag, m.med,
                 |         percentile(abs(l.l_quantity - m.med), 0.5) AS mad
-                |  FROM g_mad_li l JOIN med m ON l.l_returnflag = m.flag
+                |  FROM lineitem l JOIN med m ON l.l_returnflag = m.flag
                 |  GROUP BY m.flag, m.med)
                 |SELECT d.flag, d.med, d.mad,
                 |       CAST(COUNT(*) AS BIGINT) AS n_rows,
                 |       CAST(SUM(CASE WHEN abs(l.l_quantity - d.med) > 3 * d.mad
                 |                     THEN 1 ELSE 0 END) AS BIGINT) AS n_outliers
-                |FROM g_mad_li l JOIN dev d ON l.l_returnflag = d.flag
+                |FROM lineitem l JOIN dev d ON l.l_returnflag = d.flag
                 |GROUP BY d.flag, d.med, d.mad
-                |ORDER BY flag ASC""".stripMargin)
-      },
+                |ORDER BY flag ASC""".stripMargin),
       Some("""WITH med AS (
              |  SELECT l_returnflag AS flag, quantile_cont(l_quantity, 0.5) AS med
              |  FROM lineitem GROUP BY 1),

@@ -6,6 +6,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.types.DecimalType
 import graft.GQuery
 import graft.sources.Tables
+import graft.sql.GraftSql
 import graft.ops._
 import graft.ops.Relational._
 
@@ -228,22 +229,15 @@ object RelationalQueries {
 
     // ------------------------------------------------------------------
     // q09: explicit grouping sets.
-    GQuery(
-      "q09_grouping_sets",
-      (s, d) => {
-        Tables.lineitem(s, d).createOrReplaceTempView("g_lineitem")
-        s.sql("""SELECT l_returnflag AS flag, l_linestatus AS status,
-                |       COUNT(*) AS n, SUM(l_quantity) AS sum_qty
-                |FROM g_lineitem
-                |GROUP BY GROUPING SETS ((l_returnflag), (l_linestatus), ())
-                |ORDER BY flag ASC NULLS FIRST, status ASC NULLS FIRST""".stripMargin)
-      },
-      Some("""SELECT l_returnflag AS flag, l_linestatus AS status,
-             |       COUNT(*) AS n, SUM(l_quantity) AS sum_qty
-             |FROM lineitem
-             |GROUP BY GROUPING SETS ((l_returnflag), (l_linestatus), ())
-             |ORDER BY flag ASC NULLS FIRST, status ASC NULLS FIRST""".stripMargin),
-      "explicit GROUPING SETS"),
+    {
+      val text = """SELECT l_returnflag AS flag, l_linestatus AS status,
+                   |       COUNT(*) AS n, SUM(l_quantity) AS sum_qty
+                   |FROM lineitem
+                   |GROUP BY GROUPING SETS ((l_returnflag), (l_linestatus), ())
+                   |ORDER BY flag ASC NULLS FIRST, status ASC NULLS FIRST""".stripMargin
+      GQuery("q09_grouping_sets", (s, d) => GraftSql.run(s, d, text), Some(text),
+        "explicit GROUPING SETS")
+    },
 
     // ------------------------------------------------------------------
     // q10: star join — fact-to-fact shuffle join (orders⋈lineitem) plus

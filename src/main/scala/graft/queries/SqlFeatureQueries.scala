@@ -7,6 +7,7 @@ import org.apache.spark.sql.types.DecimalType
 import graft.GQuery
 import graft.functions.{TextFunctions => TF}
 import graft.sources.Tables
+import graft.sql.GraftSql
 
 /** SQL-engine-depth gates: the subquery/decorrelation surface (correlated
   * scalar subqueries, EXISTS anti-join, lateral top-k) plus unpivot and an
@@ -36,11 +37,9 @@ object SqlFeatureQueries {
     // accumulation-order-dependent and not hash-gateable.
     GQuery(
       "q104_scalar_subquery",
-      (s, d) => {
-        Tables.orders(s, d).createOrReplaceTempView("g_sq_orders")
-        // decimal cents stay internal to the filter; the projection leaves
-        // as DOUBLE (OutputPolicy — exact at these magnitudes)
-        s.sql("""SELECT o_orderkey, o_custkey, CAST(price AS DOUBLE) AS price,
+      // decimal cents stay internal to the filter; the projection leaves
+      // as DOUBLE (OutputPolicy — exact at these magnitudes)
+      (s, d) => GraftSql.run(s, d, """SELECT o_orderkey, o_custkey, CAST(price AS DOUBLE) AS price,
                 |       CAST(cs.s AS DOUBLE) AS cust_sum, cs.c AS cust_cnt
                 |FROM (
                 |  SELECT o_orderkey, o_custkey,
@@ -48,12 +47,11 @@ object SqlFeatureQueries {
                 |         (SELECT named_struct(
                 |                   's', CAST(SUM(CAST(o2.o_totalprice AS DECIMAL(18,2))) AS DECIMAL(28,2)),
                 |                   'c', COUNT(*))
-                |            FROM g_sq_orders o2 WHERE o2.o_custkey = o.o_custkey) AS cs
-                |  FROM g_sq_orders o)
+                |            FROM orders o2 WHERE o2.o_custkey = o.o_custkey) AS cs
+                |  FROM orders o)
                 |WHERE 2 * CAST(price * 100 AS BIGINT) * cs.c
                 |      > 3 * CAST(cs.s * 100 AS BIGINT)
-                |ORDER BY o_orderkey ASC""".stripMargin)
-      },
+                |ORDER BY o_orderkey ASC""".stripMargin),
       Some("""SELECT o_orderkey, o_custkey, CAST(price AS DOUBLE) AS price,
              |       CAST(cust_sum AS DOUBLE) AS cust_sum, cust_cnt
              |FROM (
@@ -77,25 +75,16 @@ object SqlFeatureQueries {
     // (BroadcastNestedLoop — quadratic, a 100 TB bug); the spec locks the
     // scalable plan in. Inner predicate is pushed below the join so the
     // anti side scans only qualifying orders.
-    GQuery(
-      "q105_exists_anti",
-      (s, d) => {
-        Tables.customer(s, d).createOrReplaceTempView("g_sq_customer")
-        Tables.orders(s, d).createOrReplaceTempView("g_sq_orders")
-        s.sql("""SELECT c_custkey, c_name, CAST(c_acctbal AS DOUBLE) AS acctbal
-                |FROM g_sq_customer c
-                |WHERE NOT EXISTS (SELECT 1 FROM g_sq_orders o
-                |                  WHERE o.o_custkey = c.c_custkey
-                |                    AND o.o_totalprice > 300000)
-                |ORDER BY c_custkey ASC""".stripMargin)
-      },
-      Some("""SELECT c_custkey, c_name, CAST(c_acctbal AS DOUBLE) AS acctbal
-             |FROM customer c
-             |WHERE NOT EXISTS (SELECT 1 FROM orders o
-             |                  WHERE o.o_custkey = c.c_custkey
-             |                    AND o.o_totalprice > 300000)
-             |ORDER BY c_custkey ASC""".stripMargin),
-      "NOT EXISTS as shuffle-able left-anti join (vs null-aware NOT IN trap)"),
+    {
+      val text = """SELECT c_custkey, c_name, CAST(c_acctbal AS DOUBLE) AS acctbal
+                   |FROM customer c
+                   |WHERE NOT EXISTS (SELECT 1 FROM orders o
+                   |                  WHERE o.o_custkey = c.c_custkey
+                   |                    AND o.o_totalprice > 300000)
+                   |ORDER BY c_custkey ASC""".stripMargin
+      GQuery("q105_exists_anti", (s, d) => GraftSql.run(s, d, text), Some(text),
+        "NOT EXISTS as shuffle-able left-anti join (vs null-aware NOT IN trap)")
+    },
 
     // ------------------------------------------------------------------
     // q106: lateral top-k — each nation's two richest customers via a
@@ -107,19 +96,15 @@ object SqlFeatureQueries {
     // window forms are semantically equal; proving that IS the gate).
     GQuery(
       "q106_lateral_topk",
-      (s, d) => {
-        Tables.nation(s, d).createOrReplaceTempView("g_sq_nation")
-        Tables.customer(s, d).createOrReplaceTempView("g_sq_customer")
-        s.sql("""SELECT n.n_nationkey, n.n_name, t.c_custkey, t.acctbal
-                |FROM g_sq_nation n
+      (s, d) => GraftSql.run(s, d, """SELECT n.n_nationkey, n.n_name, t.c_custkey, t.acctbal
+                |FROM nation n
                 |JOIN LATERAL (
                 |  SELECT c_custkey, CAST(c_acctbal AS DOUBLE) AS acctbal
-                |  FROM g_sq_customer c
+                |  FROM customer c
                 |  WHERE c.c_nationkey = n.n_nationkey
                 |  ORDER BY c_acctbal DESC, c_custkey ASC
                 |  LIMIT 2) t
-                |ORDER BY n.n_nationkey ASC, t.acctbal DESC, t.c_custkey ASC""".stripMargin)
-      },
+                |ORDER BY n.n_nationkey ASC, t.acctbal DESC, t.c_custkey ASC""".stripMargin),
       Some("""SELECT n_nationkey, n_name, c_custkey, acctbal FROM (
              |  SELECT n.n_nationkey, n.n_name, c.c_custkey,
              |         CAST(c.c_acctbal AS DOUBLE) AS acctbal,
@@ -227,18 +212,16 @@ object SqlFeatureQueries {
         //
         // Isolation: the recursion guardrail raise (the 1 M default
         // counts CUMULATIVE iteration output, which reaches n_orders —
-        // 1.5 M at sf1) and the edge temp view live in the cached
-        // recursion child session over the shared SparkContext. The
-        // SHARED session's runaway-recursion guardrail and catalog are
-        // never touched — no save/restore to race under concurrent
-        // execution, nothing leaks to it if the query throws
-        // (SqlFeatureSpec pins both). The scratch view is
-        // invocation-unique and dropped in a finally: the child's catalog
-        // is shared across invocations.
+        // 1.5 M at sf1) lives in the cached recursion child session over
+        // the shared SparkContext, and GraftSql.sql binds the edge
+        // relation on a throwaway clone of that child. The SHARED
+        // session's runaway-recursion guardrail and catalog are never
+        // touched — no save/restore to race under concurrent execution,
+        // nothing leaks to it if the query throws (SqlFeatureSpec pins
+        // both).
         import org.apache.spark.sql.functions.{col, lag}
         import org.apache.spark.sql.expressions.Window
         val iso = graft.Graft.childSession(s, RecursionRowLimit)
-        val edges = freshViewName("g_rec_edges")
         // The recursion re-scans the materialized edge relation EVERY
         // iteration (~25×), so its checkpoint block count is a per-
         // iteration fixed cost (r10, guide §2.2 — the r9-verdict
@@ -249,27 +232,25 @@ object SqlFeatureQueries {
         // RELATION, not the session's shuffle partitions.)
         val edgeParts = graft.functions.IterLoop.partitionsFor(
           iso, Tables.parquetRowCount(iso, s"$d/orders.parquet"))
-        Tables.orders(iso, d)
+        val edges = Tables.orders(iso, d)
           .select(col("o_custkey").as("ck"), col("o_orderkey").as("ok"),
             lag(col("o_orderkey"), 1).over(Window.partitionBy(col("o_custkey"))
               .orderBy(col("o_orderdate").asc, col("o_orderkey").asc)).as("prev_ok"))
           .coalesce(edgeParts)
           .localCheckpoint(false)
-          .createOrReplaceTempView(edges)
-        try iso.sql(s"""
+        GraftSql.sql(iso, """
             |WITH RECURSIVE walk(ck, ok, step) AS (
-            |  SELECT ck, ok, CAST(1 AS BIGINT) FROM $edges WHERE prev_ok IS NULL
+            |  SELECT ck, ok, CAST(1 AS BIGINT) FROM edges WHERE prev_ok IS NULL
             |  UNION ALL
             |  SELECT /*+ BROADCAST(w) */ e.ck, e.ok, w.step + 1
-            |  FROM walk w JOIN $edges e ON e.prev_ok = w.ok)
+            |  FROM walk w JOIN edges e ON e.prev_ok = w.ok)
             |SELECT ck AS custkey, CAST(COUNT(*) AS BIGINT) AS n_orders,
             |       CAST(MAX(step) AS BIGINT) AS depth,
             |       CAST(SUM(step * ok) AS BIGINT) AS path_checksum,
             |       MAX(step) = COUNT(*) AS complete
             |FROM walk GROUP BY ck
             |ORDER BY custkey ASC
-            |""".stripMargin).localCheckpoint()
-        finally iso.catalog.dropTempView(edges)
+            |""".stripMargin, "edges" -> edges).localCheckpoint()
       },
       Some("""WITH RECURSIVE e AS (
              |  SELECT o_custkey AS ck, o_orderkey AS ok,
@@ -311,26 +292,25 @@ object SqlFeatureQueries {
     // the queried subtrees, never the whole hierarchy; the
     // unbounded-closure alternative remains q81's star algorithm.
     // Isolation: the walk runs in the cached recursion child session
-    // (scratch view in its private catalog; guardrail raised there as
-    // SCALE HEADROOM — cumulative rows are linear in n but cross the 1 M
-    // DEFAULT around n ≈ 333 k, i.e. sf ≳ 2.2). The shared session's
-    // guardrail and catalog are untouched even if the query throws.
+    // (guardrail raised there as SCALE HEADROOM — cumulative rows are
+    // linear in n but cross the 1 M DEFAULT around n ≈ 333 k, i.e.
+    // sf ≳ 2.2), its customer relation bound by GraftSql.sql on a
+    // throwaway clone. The shared session's guardrail and catalog are
+    // untouched even if the query throws.
     GQuery(
       "q200_recursive_rollup",
       (s, d) => {
         val iso = graft.Graft.childSession(s, RecursionRowLimit)
-        val cust = freshViewName("g_rec_customer")
         // same right-sizing as q199's edge relation (r10): the recursion
         // re-scans this checkpoint once per depth level (~log₂ n), so its
         // block count is a per-iteration fixed cost; the footer-derived
         // clamp keeps corpus-scale inputs at full parallelism
-        Tables.customer(iso, d)
+        val cust = Tables.customer(iso, d)
           .select(col("c_custkey"), col("c_acctbal"))
           .coalesce(graft.functions.IterLoop.partitionsFor(
             iso, Tables.parquetRowCount(iso, s"$d/customer.parquet")))
           .localCheckpoint(false)
-          .createOrReplaceTempView(cust)
-        try iso.sql(s"""
+        GraftSql.sql(iso, """
           |WITH RECURSIVE sub(root, node) AS (
           |  SELECT CAST(r AS BIGINT), CAST(r AS BIGINT)
           |  FROM VALUES (0),(1),(2),(3),(4),(5),(6) AS roots(r)
@@ -338,19 +318,15 @@ object SqlFeatureQueries {
           |  SELECT s.root, c.c_custkey
           |  FROM sub s
           |  CROSS JOIN VALUES (1),(2) AS off(d)
-          |  JOIN $cust c ON c.c_custkey = 2 * s.node + off.d)
+          |  JOIN customer c ON c.c_custkey = 2 * s.node + off.d)
           |SELECT sub.root AS node,
           |       CAST(COUNT(*) AS BIGINT) AS n_desc,
           |       CAST(SUM(CAST(round(c.c_acctbal * 100) AS BIGINT)) AS BIGINT)
           |         AS subtree_bal_c
-          |FROM sub JOIN $cust c ON c.c_custkey = sub.node
+          |FROM sub JOIN customer c ON c.c_custkey = sub.node
           |GROUP BY sub.root
           |ORDER BY node ASC
-          |""".stripMargin)
-        // sql() is eager through the analyzer: the view is resolved into
-        // the returned plan, so dropping it now (even on the throw path)
-        // cannot break later execution
-        finally iso.catalog.dropTempView(cust)
+          |""".stripMargin, "customer" -> cust)
       },
       Some("""WITH RECURSIVE sub(root, node) AS (
              |  SELECT CAST(r AS BIGINT), CAST(r AS BIGINT)

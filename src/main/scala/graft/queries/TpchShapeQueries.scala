@@ -2,6 +2,7 @@ package graft.queries
 
 import graft.GQuery
 import graft.sources.Tables
+import graft.sql.GraftSql
 
 /** The four hardest remaining TPC-H decorrelation shapes (VERDICT r3 item 5),
   * adapted to the fixture schema (which has no partsupp table — lineitem
@@ -20,7 +21,7 @@ import graft.sources.Tables
   *    anti hash joins on the same key carrying an inequality residual (the
   *    null-aware-anti / nested-loop trap shape, avoided).
   *
-  * All four run through spark.sql so the gate covers the SQL→Catalyst
+  * All four run as SQL text (GraftSql.run) so the gate covers the SQL→Catalyst
   * decorrelation path (RewriteCorrelatedScalarSubquery /
   * RewritePredicateSubquery / DecorrelateInnerQuery); TpchShapeSpec locks
   * the plans to hash joins (no BroadcastNestedLoop, no CartesianProduct).
@@ -38,16 +39,6 @@ import graft.sources.Tables
   */
 object TpchShapeQueries {
 
-  private def views(s: org.apache.spark.sql.SparkSession, d: String): Unit = {
-    Tables.region(s, d).createOrReplaceTempView("g_tpch_region")
-    Tables.nation(s, d).createOrReplaceTempView("g_tpch_nation")
-    Tables.supplier(s, d).createOrReplaceTempView("g_tpch_supplier")
-    Tables.customer(s, d).createOrReplaceTempView("g_tpch_customer")
-    Tables.part(s, d).createOrReplaceTempView("g_tpch_part")
-    Tables.orders(s, d).createOrReplaceTempView("g_tpch_orders")
-    Tables.lineitem(s, d).createOrReplaceTempView("g_tpch_lineitem")
-  }
-
   val all: Seq[GQuery] = Seq(
     // ------------------------------------------------------------------
     // q131: TPC-H Q2 shape — cheapest-supplier-per-part in a region. The
@@ -57,42 +48,25 @@ object TpchShapeQueries {
     // is exact cross-engine. DISTINCT collapses multiple min-priced
     // lineitems from the same supplier (Q2 answers per supplier, not per
     // shipment); (p_partkey, s_suppkey) then keys the output totally.
-    GQuery(
-      "q131_min_cost_supplier",
-      (s, d) => {
-        views(s, d)
-        s.sql("""SELECT DISTINCT p.p_partkey, p.p_name, s.s_suppkey, s.s_name,
-                |       l.l_extendedprice AS price
-                |FROM g_tpch_part p
-                |JOIN g_tpch_lineitem l ON l.l_partkey = p.p_partkey
-                |JOIN g_tpch_supplier s ON s.s_suppkey = l.l_suppkey
-                |JOIN g_tpch_nation n ON n.n_nationkey = s.s_nationkey
-                |JOIN g_tpch_region r ON r.r_regionkey = n.n_regionkey
-                |WHERE r.r_name = 'EUROPE' AND p.p_size <= 5
-                |  AND l.l_extendedprice = (
-                |    SELECT MIN(l2.l_extendedprice) FROM g_tpch_lineitem l2
-                |    JOIN g_tpch_supplier s2 ON s2.s_suppkey = l2.l_suppkey
-                |    JOIN g_tpch_nation n2 ON n2.n_nationkey = s2.s_nationkey
-                |    JOIN g_tpch_region r2 ON r2.r_regionkey = n2.n_regionkey
-                |    WHERE l2.l_partkey = p.p_partkey AND r2.r_name = 'EUROPE')
-                |ORDER BY p_partkey ASC, s_suppkey ASC""".stripMargin)
-      },
-      Some("""SELECT DISTINCT p.p_partkey, p.p_name, s.s_suppkey, s.s_name,
-             |       l.l_extendedprice AS price
-             |FROM part p
-             |JOIN lineitem l ON l.l_partkey = p.p_partkey
-             |JOIN supplier s ON s.s_suppkey = l.l_suppkey
-             |JOIN nation n ON n.n_nationkey = s.s_nationkey
-             |JOIN region r ON r.r_regionkey = n.n_regionkey
-             |WHERE r.r_name = 'EUROPE' AND p.p_size <= 5
-             |  AND l.l_extendedprice = (
-             |    SELECT MIN(l2.l_extendedprice) FROM lineitem l2
-             |    JOIN supplier s2 ON s2.s_suppkey = l2.l_suppkey
-             |    JOIN nation n2 ON n2.n_nationkey = s2.s_nationkey
-             |    JOIN region r2 ON r2.r_regionkey = n2.n_regionkey
-             |    WHERE l2.l_partkey = p.p_partkey AND r2.r_name = 'EUROPE')
-             |ORDER BY p_partkey ASC, s_suppkey ASC""".stripMargin),
-      "TPC-H Q2 shape: correlated min-cost subquery decorrelated to agg+join"),
+    {
+      val text = """SELECT DISTINCT p.p_partkey, p.p_name, s.s_suppkey, s.s_name,
+                   |       l.l_extendedprice AS price
+                   |FROM part p
+                   |JOIN lineitem l ON l.l_partkey = p.p_partkey
+                   |JOIN supplier s ON s.s_suppkey = l.l_suppkey
+                   |JOIN nation n ON n.n_nationkey = s.s_nationkey
+                   |JOIN region r ON r.r_regionkey = n.n_regionkey
+                   |WHERE r.r_name = 'EUROPE' AND p.p_size <= 5
+                   |  AND l.l_extendedprice = (
+                   |    SELECT MIN(l2.l_extendedprice) FROM lineitem l2
+                   |    JOIN supplier s2 ON s2.s_suppkey = l2.l_suppkey
+                   |    JOIN nation n2 ON n2.n_nationkey = s2.s_nationkey
+                   |    JOIN region r2 ON r2.r_regionkey = n2.n_regionkey
+                   |    WHERE l2.l_partkey = p.p_partkey AND r2.r_name = 'EUROPE')
+                   |ORDER BY p_partkey ASC, s_suppkey ASC""".stripMargin
+      GQuery("q131_min_cost_supplier", (s, d) => GraftSql.run(s, d, text), Some(text),
+        "TPC-H Q2 shape: correlated min-cost subquery decorrelated to agg+join")
+    },
 
     // ------------------------------------------------------------------
     // q132: TPC-H Q15 shape — top supplier(s) by quarterly revenue. The
@@ -103,21 +77,18 @@ object TpchShapeQueries {
     // round(price·100)·(100 − round(disc·100)) summed as BIGINT.
     GQuery(
       "q132_top_revenue_supplier",
-      (s, d) => {
-        views(s, d)
-        s.sql("""WITH revenue AS (
+      (s, d) => GraftSql.run(s, d, """WITH revenue AS (
                 |  SELECT l_suppkey,
                 |         SUM(CAST(round(l_extendedprice * 100) AS BIGINT)
                 |             * (100 - CAST(round(l_discount * 100) AS BIGINT))) AS total
-                |  FROM g_tpch_lineitem
+                |  FROM lineitem
                 |  WHERE l_shipdate >= TIMESTAMP_NTZ '1997-01-01 00:00:00'
                 |    AND l_shipdate <  TIMESTAMP_NTZ '1997-04-01 00:00:00'
                 |  GROUP BY l_suppkey)
                 |SELECT s.s_suppkey, s.s_name, r.total AS total_revenue
-                |FROM g_tpch_supplier s JOIN revenue r ON r.l_suppkey = s.s_suppkey
+                |FROM supplier s JOIN revenue r ON r.l_suppkey = s.s_suppkey
                 |WHERE r.total = (SELECT MAX(total) FROM revenue)
-                |ORDER BY s_suppkey ASC""".stripMargin)
-      },
+                |ORDER BY s_suppkey ASC""".stripMargin),
       Some("""WITH revenue AS (
              |  SELECT l_suppkey,
              |         SUM(CAST(round(l_extendedprice * 100) AS BIGINT)
@@ -140,38 +111,23 @@ object TpchShapeQueries {
     // aggregate; the correlated total decorrelates to a per-part SUM
     // joined on l_partkey; the outer IN is a third semi join. Quantities
     // are integral doubles — sums and the 8× comparison are exact.
-    GQuery(
-      "q133_excess_share_suppliers",
-      (s, d) => {
-        views(s, d)
-        s.sql("""SELECT s.s_suppkey, s.s_name FROM g_tpch_supplier s
-                |WHERE s.s_suppkey IN (
-                |  SELECT sup.l_suppkey FROM (
-                |    SELECT l_partkey, l_suppkey, SUM(l_quantity) AS q
-                |    FROM g_tpch_lineitem
-                |    WHERE l_partkey IN (SELECT p_partkey FROM g_tpch_part WHERE p_size <= 10)
-                |    GROUP BY l_partkey, l_suppkey) sup
-                |  WHERE 8 * sup.q > (SELECT SUM(l2.l_quantity)
-                |                     FROM g_tpch_lineitem l2
-                |                     WHERE l2.l_partkey = sup.l_partkey))
-                |AND s.s_nationkey IN (SELECT n_nationkey FROM g_tpch_nation
-                |                      WHERE n_regionkey = 2)
-                |ORDER BY s_suppkey ASC""".stripMargin)
-      },
-      Some("""SELECT s.s_suppkey, s.s_name FROM supplier s
-             |WHERE s.s_suppkey IN (
-             |  SELECT sup.l_suppkey FROM (
-             |    SELECT l_partkey, l_suppkey, SUM(l_quantity) AS q
-             |    FROM lineitem
-             |    WHERE l_partkey IN (SELECT p_partkey FROM part WHERE p_size <= 10)
-             |    GROUP BY l_partkey, l_suppkey) sup
-             |  WHERE 8 * sup.q > (SELECT SUM(l2.l_quantity)
-             |                     FROM lineitem l2
-             |                     WHERE l2.l_partkey = sup.l_partkey))
-             |AND s.s_nationkey IN (SELECT n_nationkey FROM nation
-             |                      WHERE n_regionkey = 2)
-             |ORDER BY s_suppkey ASC""".stripMargin),
-      "TPC-H Q20 shape: nested IN + correlated share-of-total aggregate"),
+    {
+      val text = """SELECT s.s_suppkey, s.s_name FROM supplier s
+                   |WHERE s.s_suppkey IN (
+                   |  SELECT sup.l_suppkey FROM (
+                   |    SELECT l_partkey, l_suppkey, SUM(l_quantity) AS q
+                   |    FROM lineitem
+                   |    WHERE l_partkey IN (SELECT p_partkey FROM part WHERE p_size <= 10)
+                   |    GROUP BY l_partkey, l_suppkey) sup
+                   |  WHERE 8 * sup.q > (SELECT SUM(l2.l_quantity)
+                   |                     FROM lineitem l2
+                   |                     WHERE l2.l_partkey = sup.l_partkey))
+                   |AND s.s_nationkey IN (SELECT n_nationkey FROM nation
+                   |                      WHERE n_regionkey = 2)
+                   |ORDER BY s_suppkey ASC""".stripMargin
+      GQuery("q133_excess_share_suppliers", (s, d) => GraftSql.run(s, d, text), Some(text),
+        "TPC-H Q20 shape: nested IN + correlated share-of-total aggregate")
+    },
 
     // ------------------------------------------------------------------
     // q134: TPC-H Q21 shape — the supplier whose shipment was the ONLY
@@ -181,40 +137,24 @@ object TpchShapeQueries {
     // residual; NOT EXISTS → left anti likewise. Neither may plan as a
     // nested loop: both keep their equi-key, which is what makes the
     // shape runnable at 100 TB (TpchShapeSpec locks this).
-    GQuery(
-      "q134_lone_returned_supplier",
-      (s, d) => {
-        views(s, d)
-        s.sql("""SELECT s.s_name, CAST(COUNT(*) AS BIGINT) AS numwait
-                |FROM g_tpch_supplier s
-                |JOIN g_tpch_lineitem l1 ON l1.l_suppkey = s.s_suppkey
-                |JOIN g_tpch_orders o ON o.o_orderkey = l1.l_orderkey
-                |WHERE o.o_orderstatus = 'F' AND l1.l_returnflag = 'R'
-                |  AND EXISTS (SELECT 1 FROM g_tpch_lineitem l2
-                |              WHERE l2.l_orderkey = l1.l_orderkey
-                |                AND l2.l_suppkey <> l1.l_suppkey)
-                |  AND NOT EXISTS (SELECT 1 FROM g_tpch_lineitem l3
-                |                  WHERE l3.l_orderkey = l1.l_orderkey
-                |                    AND l3.l_suppkey <> l1.l_suppkey
-                |                    AND l3.l_returnflag = 'R')
-                |GROUP BY s.s_name
-                |ORDER BY numwait DESC, s_name ASC""".stripMargin)
-      },
-      Some("""SELECT s.s_name, CAST(COUNT(*) AS BIGINT) AS numwait
-             |FROM supplier s
-             |JOIN lineitem l1 ON l1.l_suppkey = s.s_suppkey
-             |JOIN orders o ON o.o_orderkey = l1.l_orderkey
-             |WHERE o.o_orderstatus = 'F' AND l1.l_returnflag = 'R'
-             |  AND EXISTS (SELECT 1 FROM lineitem l2
-             |              WHERE l2.l_orderkey = l1.l_orderkey
-             |                AND l2.l_suppkey <> l1.l_suppkey)
-             |  AND NOT EXISTS (SELECT 1 FROM lineitem l3
-             |                  WHERE l3.l_orderkey = l1.l_orderkey
-             |                    AND l3.l_suppkey <> l1.l_suppkey
-             |                    AND l3.l_returnflag = 'R')
-             |GROUP BY s.s_name
-             |ORDER BY numwait DESC, s_name ASC""".stripMargin),
-      "TPC-H Q21 shape: EXISTS semi + NOT EXISTS anti with non-equi residual"),
+    {
+      val text = """SELECT s.s_name, CAST(COUNT(*) AS BIGINT) AS numwait
+                   |FROM supplier s
+                   |JOIN lineitem l1 ON l1.l_suppkey = s.s_suppkey
+                   |JOIN orders o ON o.o_orderkey = l1.l_orderkey
+                   |WHERE o.o_orderstatus = 'F' AND l1.l_returnflag = 'R'
+                   |  AND EXISTS (SELECT 1 FROM lineitem l2
+                   |              WHERE l2.l_orderkey = l1.l_orderkey
+                   |                AND l2.l_suppkey <> l1.l_suppkey)
+                   |  AND NOT EXISTS (SELECT 1 FROM lineitem l3
+                   |                  WHERE l3.l_orderkey = l1.l_orderkey
+                   |                    AND l3.l_suppkey <> l1.l_suppkey
+                   |                    AND l3.l_returnflag = 'R')
+                   |GROUP BY s.s_name
+                   |ORDER BY numwait DESC, s_name ASC""".stripMargin
+      GQuery("q134_lone_returned_supplier", (s, d) => GraftSql.run(s, d, text), Some(text),
+        "TPC-H Q21 shape: EXISTS semi + NOT EXISTS anti with non-equi residual")
+    },
 
     // ------------------------------------------------------------------
     // q142: TPC-H Q22 shape — "global customer outlook": customers in
@@ -231,24 +171,21 @@ object TpchShapeQueries {
     // averaging anywhere.
     GQuery(
       "q142_no_order_outlook",
-      (s, d) => {
-        views(s, d)
-        s.sql("""SELECT c_custkey % 10 AS cc, CAST(COUNT(*) AS BIGINT) AS numcust,
+      (s, d) => GraftSql.run(s, d, """SELECT c_custkey % 10 AS cc, CAST(COUNT(*) AS BIGINT) AS numcust,
                 |       SUM(CAST(round(c_acctbal * 100) AS BIGINT)) AS totcents
-                |FROM g_tpch_customer c
+                |FROM customer c
                 |WHERE c_custkey % 10 IN (1, 3, 5, 7)
                 |  AND CAST(round(c_acctbal * 100) AS BIGINT) *
-                |      (SELECT COUNT(*) FROM g_tpch_customer
+                |      (SELECT COUNT(*) FROM customer
                 |       WHERE c_custkey % 10 IN (1, 3, 5, 7) AND c_acctbal > 0)
                 |    > (SELECT SUM(CAST(round(c_acctbal * 100) AS BIGINT))
-                |       FROM g_tpch_customer
+                |       FROM customer
                 |       WHERE c_custkey % 10 IN (1, 3, 5, 7) AND c_acctbal > 0)
-                |  AND NOT EXISTS (SELECT 1 FROM g_tpch_orders o
+                |  AND NOT EXISTS (SELECT 1 FROM orders o
                 |                  WHERE o.o_custkey = c.c_custkey
                 |                    AND o.o_orderdate >= TIMESTAMP_NTZ '2000-01-01 00:00:00')
                 |GROUP BY c_custkey % 10
-                |ORDER BY cc ASC""".stripMargin)
-      },
+                |ORDER BY cc ASC""".stripMargin),
       Some("""SELECT c_custkey % 10 AS cc, CAST(COUNT(*) AS BIGINT) AS numcust,
              |       CAST(SUM(CAST(round(c_acctbal * 100) AS BIGINT)) AS BIGINT)
              |         AS totcents
@@ -277,34 +214,21 @@ object TpchShapeQueries {
     // spelled as the integer cross-multiplication qty·5·cnt < sum —
     // quantities are integral doubles, so both engines compare exact
     // BIGINTs and the float-boundary hazard of 0.2·avg never exists.
-    GQuery(
-      "q164_small_qty_revenue",
-      (s, d) => {
-        views(s, d)
-        s.sql("""SELECT CAST(SUM(CAST(round(l.l_extendedprice * 100) AS BIGINT)) AS BIGINT)
-                |         AS rev_cents,
-                |       CAST(COUNT(*) AS BIGINT) AS n_lines
-                |FROM g_tpch_lineitem l
-                |JOIN g_tpch_part p ON p.p_partkey = l.l_partkey
-                |WHERE p.p_brand = 'Brand#4'
-                |  AND CAST(l.l_quantity AS BIGINT) * 5 *
-                |      (SELECT COUNT(*) FROM g_tpch_lineitem l2
-                |       WHERE l2.l_partkey = l.l_partkey)
-                |    < (SELECT SUM(CAST(l2.l_quantity AS BIGINT)) FROM g_tpch_lineitem l2
-                |       WHERE l2.l_partkey = l.l_partkey)""".stripMargin)
-      },
-      Some("""SELECT CAST(SUM(CAST(round(l.l_extendedprice * 100) AS BIGINT)) AS BIGINT)
-             |         AS rev_cents,
-             |       CAST(COUNT(*) AS BIGINT) AS n_lines
-             |FROM lineitem l
-             |JOIN part p ON p.p_partkey = l.l_partkey
-             |WHERE p.p_brand = 'Brand#4'
-             |  AND CAST(l.l_quantity AS BIGINT) * 5 *
-             |      (SELECT COUNT(*) FROM lineitem l2
-             |       WHERE l2.l_partkey = l.l_partkey)
-             |    < (SELECT SUM(CAST(l2.l_quantity AS BIGINT)) FROM lineitem l2
-             |       WHERE l2.l_partkey = l.l_partkey)""".stripMargin),
-      "TPC-H Q17 shape: correlated avg-quantity predicate decorrelated, integer-exact"),
+    {
+      val text = """SELECT CAST(SUM(CAST(round(l.l_extendedprice * 100) AS BIGINT)) AS BIGINT)
+                   |         AS rev_cents,
+                   |       CAST(COUNT(*) AS BIGINT) AS n_lines
+                   |FROM lineitem l
+                   |JOIN part p ON p.p_partkey = l.l_partkey
+                   |WHERE p.p_brand = 'Brand#4'
+                   |  AND CAST(l.l_quantity AS BIGINT) * 5 *
+                   |      (SELECT COUNT(*) FROM lineitem l2
+                   |       WHERE l2.l_partkey = l.l_partkey)
+                   |    < (SELECT SUM(CAST(l2.l_quantity AS BIGINT)) FROM lineitem l2
+                   |       WHERE l2.l_partkey = l.l_partkey)""".stripMargin
+      GQuery("q164_small_qty_revenue", (s, d) => GraftSql.run(s, d, text), Some(text),
+        "TPC-H Q17 shape: correlated avg-quantity predicate decorrelated, integer-exact")
+    },
 
     // ------------------------------------------------------------------
     // q165: TPC-H Q18 shape — large-volume customers. IN over a grouped
@@ -316,22 +240,19 @@ object TpchShapeQueries {
     // 100 TB run needs. Quantities integral → exact BIGINT totals.
     GQuery(
       "q165_large_volume_customers",
-      (s, d) => {
-        views(s, d)
-        s.sql("""SELECT c.c_custkey, o.o_orderkey,
+      (s, d) => GraftSql.run(s, d, """SELECT c.c_custkey, o.o_orderkey,
                 |       CAST(floor(CAST(CAST(o.o_orderdate AS TIMESTAMP) AS BIGINT) / 86400)
                 |         AS BIGINT) AS order_day,
                 |       CAST(SUM(CAST(l.l_quantity AS BIGINT)) AS BIGINT) AS total_qty
-                |FROM g_tpch_customer c
-                |JOIN g_tpch_orders o ON o.o_custkey = c.c_custkey
-                |JOIN g_tpch_lineitem l ON l.l_orderkey = o.o_orderkey
+                |FROM customer c
+                |JOIN orders o ON o.o_custkey = c.c_custkey
+                |JOIN lineitem l ON l.l_orderkey = o.o_orderkey
                 |WHERE o.o_orderkey IN (
-                |  SELECT l2.l_orderkey FROM g_tpch_lineitem l2
+                |  SELECT l2.l_orderkey FROM lineitem l2
                 |  GROUP BY l2.l_orderkey
                 |  HAVING SUM(CAST(l2.l_quantity AS BIGINT)) > 300)
                 |GROUP BY c.c_custkey, o.o_orderkey, o.o_orderdate
-                |ORDER BY total_qty DESC, o_orderkey ASC""".stripMargin)
-      },
+                |ORDER BY total_qty DESC, o_orderkey ASC""".stripMargin),
       Some("""SELECT c.c_custkey, o.o_orderkey,
              |       CAST(floor(epoch(o.o_orderdate) / 86400) AS BIGINT) AS order_day,
              |       CAST(SUM(CAST(l.l_quantity AS BIGINT)) AS BIGINT) AS total_qty
@@ -648,37 +569,23 @@ object TpchShapeQueries {
     // s_suppkey is non-null so it degenerates to a plain anti hash join,
     // never BNLJ), then COUNT(DISTINCT supplier) per (brand, type, size)
     // — a two-phase distinct aggregate keyed by part attributes. Runs
-    // through spark.sql: this wave's SQL→Catalyst subquery-rewrite gate.
+    // as SQL text (GraftSql.run): this wave's SQL→Catalyst subquery-rewrite gate.
     // 100 TB: the pair-distinct is one lineitem-sized shuffle on
     // (partkey, suppkey); part broadcasts; the exclusion list is tiny.
-    GQuery(
-      "q193_supplier_counts",
-      (s, d) => {
-        views(s, d)
-        s.sql("""
-          |SELECT p.p_brand, p.p_type, p.p_size,
-          |       COUNT(DISTINCT ps.l_suppkey) AS supplier_cnt
-          |FROM (SELECT DISTINCT l_partkey, l_suppkey FROM g_tpch_lineitem) ps
-          |JOIN g_tpch_part p ON p.p_partkey = ps.l_partkey
-          |WHERE p.p_brand <> 'Brand#45'
-          |  AND p.p_size IN (1, 4, 7, 14, 23, 36, 45, 49)
-          |  AND ps.l_suppkey NOT IN
-          |      (SELECT s_suppkey FROM g_tpch_supplier WHERE s_acctbal < 0)
-          |GROUP BY p.p_brand, p.p_type, p.p_size
-          |ORDER BY supplier_cnt DESC, p_brand ASC, p_type ASC, p_size ASC
-          |""".stripMargin)
-      },
-      Some("""SELECT p.p_brand, p.p_type, p.p_size,
-             |       COUNT(DISTINCT ps.l_suppkey) AS supplier_cnt
-             |FROM (SELECT DISTINCT l_partkey, l_suppkey FROM lineitem) ps
-             |JOIN part p ON p.p_partkey = ps.l_partkey
-             |WHERE p.p_brand <> 'Brand#45'
-             |  AND p.p_size IN (1, 4, 7, 14, 23, 36, 45, 49)
-             |  AND ps.l_suppkey NOT IN
-             |      (SELECT s_suppkey FROM supplier WHERE s_acctbal < 0)
-             |GROUP BY p.p_brand, p.p_type, p.p_size
-             |ORDER BY supplier_cnt DESC, p_brand ASC, p_type ASC, p_size ASC""".stripMargin),
-      "TPC-H Q16 shape: NOT IN anti join + COUNT DISTINCT per part attribute"),
+    {
+      val text = """SELECT p.p_brand, p.p_type, p.p_size,
+                   |       COUNT(DISTINCT ps.l_suppkey) AS supplier_cnt
+                   |FROM (SELECT DISTINCT l_partkey, l_suppkey FROM lineitem) ps
+                   |JOIN part p ON p.p_partkey = ps.l_partkey
+                   |WHERE p.p_brand <> 'Brand#45'
+                   |  AND p.p_size IN (1, 4, 7, 14, 23, 36, 45, 49)
+                   |  AND ps.l_suppkey NOT IN
+                   |      (SELECT s_suppkey FROM supplier WHERE s_acctbal < 0)
+                   |GROUP BY p.p_brand, p.p_type, p.p_size
+                   |ORDER BY supplier_cnt DESC, p_brand ASC, p_type ASC, p_size ASC""".stripMargin
+      GQuery("q193_supplier_counts", (s, d) => GraftSql.run(s, d, text), Some(text),
+        "TPC-H Q16 shape: NOT IN anti join + COUNT DISTINCT per part attribute")
+    },
 
     // ------------------------------------------------------------------
     // q194 / Q11 shape: important-stock selection — per-part value from a
@@ -699,16 +606,14 @@ object TpchShapeQueries {
     // 100 TB: one lineitem-sized shuffle on partkey, dims broadcast.
     GQuery(
       "q194_important_parts",
-      (s, d) => {
-        views(s, d)
-        s.sql("""
+      (s, d) => GraftSql.run(s, d, """
           |WITH v AS (
           |  SELECT l_partkey,
           |         SUM(CAST(round(l_extendedprice*100) AS BIGINT)
           |             * CAST(round(l_quantity) AS BIGINT)) AS val_c
-          |  FROM g_tpch_lineitem
-          |  JOIN g_tpch_supplier ON l_suppkey = s_suppkey
-          |  JOIN g_tpch_nation   ON s_nationkey = n_nationkey
+          |  FROM lineitem
+          |  JOIN supplier ON l_suppkey = s_suppkey
+          |  JOIN nation   ON s_nationkey = n_nationkey
           |  WHERE n_name IN ('NATION_1', 'NATION_2', 'NATION_3')
           |  GROUP BY l_partkey)
           |SELECT l_partkey, val_c
@@ -717,8 +622,7 @@ object TpchShapeQueries {
           |      > CAST(12 AS DECIMAL(38,0))
           |        * (SELECT SUM(CAST(val_c AS DECIMAL(38,0))) FROM v)
           |ORDER BY val_c DESC, l_partkey ASC
-          |""".stripMargin)
-      },
+          |""".stripMargin),
       Some("""WITH v AS (
              |  SELECT l_partkey,
              |         SUM(CAST(round(l_extendedprice*100) AS BIGINT)

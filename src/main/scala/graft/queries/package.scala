@@ -28,15 +28,6 @@ package object queries {
     */
   val RecursionRowLimit: (String, String) = "spark.sql.cteRecursionRowLimit" -> "20000000"
 
-  private val viewCounter = new java.util.concurrent.atomic.AtomicLong()
-
-  /** A per-invocation-unique temp-view name: a cached child session is
-    * shared across invocations, so a fixed scratch-view name would race
-    * under concurrent execution of the same query.
-    */
-  def freshViewName(prefix: String): String =
-    prefix + "_" + viewCounter.incrementAndGet()
-
   /** Epoch seconds of an NTZ timestamp under the UTC session clock.
     * NTZ has no direct numeric cast; route through TIMESTAMP (identity under
     * the UTC session timezone) then LONG (truncates sub-second, matching

@@ -140,4 +140,31 @@ class ExecutionSettingsSpec extends SparkTestBase {
       }
     } finally pool.shutdown()
   }
+
+  test("SQL gates on two fixture dirs run at once on one session") {
+    // Each query on sf0.001 and on sf0.01, the two submitted side by side
+    // from 4 threads, three times over: each must return its own dir's
+    // sequential rows. With tables bound as fixed-name views on the
+    // caller's session, one run resolved the other's view and read the
+    // other dir's tables: this test's body failed in 10 of 10 tries, each
+    // in its first round (q131, q105 and q149 wrong in every try, q09 in
+    // one).
+    val dirs = Seq(sf, java.nio.file.Paths.get(sf).resolveSibling("sf0.01").toString)
+    val names = Seq("q131_min_cost_supplier", "q105_exists_anti", "q09_grouping_sets",
+      "q149_sql_frontend")
+    def rows(name: String, dir: String): Seq[String] =
+      SparkEntry.queries(name)(spark, dir).collect().map(_.toString).toSeq
+    val sequential = (for (n <- names; d <- dirs) yield (n, d) -> rows(n, d)).toMap
+    names.foreach(n => assert(sequential((n, dirs(0))) != sequential((n, dirs(1))),
+      s"$n returns the same rows on both dirs, so a swap would not show"))
+    val pool = Executors.newFixedThreadPool(4)
+    try {
+      for (_ <- 1 to 3) {
+        val runs = for (n <- names; d <- dirs) yield (n, d) -> pool.submit(() => rows(n, d))
+        runs.foreach { case (k, f) =>
+          assert(f.get(10, TimeUnit.MINUTES) == sequential(k), s"$k differs when run concurrently")
+        }
+      }
+    } finally pool.shutdown()
+  }
 }

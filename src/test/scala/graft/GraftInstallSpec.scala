@@ -6,11 +6,11 @@ class GraftInstallSpec extends SparkTestBase {
 
   test("install registers cosine_sim for SQL and the as-of strategy") {
     Graft.install(spark)
-    graft.sources.Tables.embeddings(spark, sf).createOrReplaceTempView("g_emb")
-    val viaSql = spark.sql(
+    val viaSql = graft.sql.GraftSql.sql(spark,
       """SELECT a.vec_id, cosine_sim(a.embedding, b.embedding) AS s
-        |FROM g_emb a JOIN g_emb b ON b.vec_id = a.vec_id + 1
-        |WHERE a.vec_id < 5 ORDER BY a.vec_id""".stripMargin)
+        |FROM embeddings a JOIN embeddings b ON b.vec_id = a.vec_id + 1
+        |WHERE a.vec_id < 5 ORDER BY a.vec_id""".stripMargin,
+      "embeddings" -> graft.sources.Tables.embeddings(spark, sf))
       .collect().map(r => (r.getLong(0), r.getDouble(1)))
     val viaApi = {
       val e = graft.sources.Tables.embeddings(spark, sf)
@@ -27,11 +27,11 @@ class GraftInstallSpec extends SparkTestBase {
 
   test("install registers misra_gries as a SQL aggregate") {
     Graft.install(spark)
-    graft.sources.Tables.documents(spark, sf).createOrReplaceTempView("g_docs")
     // k=64 >= fixture vocab -> sketch is exact: compare against plain counts
-    val viaSql = spark.sql(
+    val viaSql = graft.sql.GraftSql.sql(spark,
       """SELECT misra_gries(term, 64) AS m FROM
-        |  (SELECT explode(split(text, ' ')) AS term FROM g_docs)""".stripMargin)
+        |  (SELECT explode(split(text, ' ')) AS term FROM documents)""".stripMargin,
+      "documents" -> graft.sources.Tables.documents(spark, sf))
       .collect()(0).getMap[String, Long](0)
     val exact = graft.sources.Tables.documents(spark, sf)
       .select(explode(split(col("text"), " ")).as("term"))
@@ -108,6 +108,22 @@ class GraftInstallSpec extends SparkTestBase {
     val sites = sourceLines("src/main").filter { case (_, l) => handMade.findFirstIn(l).isDefined }
     val extra = sites.filterNot(allowed.contains)
     assert(extra.isEmpty, s"scratch paths outside Graft.scratch: ${extra.mkString("; ")}")
+  }
+
+  test("src/main registers temp views only in GraftSql.sql and drops only the memory sink's") {
+    // A view on a caller's session is shared by every query on it: two
+    // runs on different dirs under one fixed name read each other's
+    // tables. SQL text binds its tables through GraftSql.sql, on a
+    // throwaway clone; the memory sink names its own view. This list may
+    // only shrink.
+    val allowed = Set(
+      "src/main/scala/graft/sql/GraftSql.scala" ->
+        "tables.foreach { case (name, df) => Graft.onSession(clone, df).createOrReplaceTempView(name) }",
+      "src/main/scala/graft/streaming/EventStreams.scala" ->
+        "spark.catalog.dropTempView(name)")
+    val view = """createOrReplaceTempView|createTempView|createGlobalTempView|dropTempView""".r
+    val sites = sourceLines("src/main").filter { case (_, l) => view.findFirstIn(l).isDefined }
+    assert(sites.toSet == allowed, s"temp-view sites: ${sites.mkString("; ")}")
   }
 
   /** Runs `body` on a factory-built session over `spark.newSession()`: a
