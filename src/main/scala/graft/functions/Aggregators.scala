@@ -1,6 +1,9 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, Encoder}
+import scala.collection.immutable.ArraySeq
+import scala.collection.mutable
+import org.apache.spark.sql.{Column, DataFrame, Encoder}
+import org.apache.spark.sql.catalyst.CatalystTypeConverters
 import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
 import org.apache.spark.sql.expressions.Aggregator
 import org.apache.spark.sql.functions.udaf
@@ -44,4 +47,33 @@ object Aggregators {
   /** Column-API centroid aggregate over an array<float> column. */
   def vectorCentroid(vec: Column, dims: Int): Column =
     udaf(new VectorCentroid(dims), ExpressionEncoder[Seq[Float]]()).apply(vec)
+
+  /** One [[VectorCentroid]] buffer per non-null key of `keyed`'s
+    * (key, array<float> vector) rows, folded on the driver in ONE Spark
+    * job: each task reduces its rows into a buffer per key with the
+    * aggregate's own `reduce`, and `treeAggregate` (depth 2) merges the
+    * per-task maps on the way to the driver. A null or wrong-arity vector
+    * still creates its key's buffer, holding no rows, as a relational group
+    * of such rows does. Keys come back as Scala values.
+    *
+    * For state bounded by the key count (k-means clusters, IVF cells): the
+    * relational `groupBy(key).agg(vectorCentroid)` costs an exchange, and
+    * under AQE a job of its own, every time it is read.
+    */
+  private[graft] def centroidBuffers(keyed: DataFrame, dims: Int): collection.Map[Any, CentroidBuf] = {
+    val agg = new VectorCentroid(dims)
+    val keyType = keyed.schema.head.dataType
+    val toKey = CatalystTypeConverters.createToScalaConverter(keyType)
+    keyed.queryExecution.toRdd.treeAggregate(mutable.HashMap.empty[Any, CentroidBuf])(
+      (m, r) => {
+        if (!r.isNullAt(0)) {
+          val k = toKey(r.get(0, keyType))
+          val v = if (r.isNullAt(1)) null else ArraySeq.unsafeWrapArray(r.getArray(1).toFloatArray())
+          m(k) = agg.reduce(m.getOrElse(k, agg.zero), v)
+        }
+        m
+      },
+      (x, y) => { y.foreach { case (k, b) => x(k) = x.get(k).fold(b)(agg.merge(_, b)) }; x },
+      depth = 2)
+  }
 }

@@ -1,6 +1,5 @@
 package graft.functions
 
-import scala.collection.immutable.ArraySeq
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import graft.expressions.NearestCentroid
@@ -13,13 +12,12 @@ import graft.expressions.NearestCentroid
   *    id order.
   *  - Each iteration: one pass over the input — the native
   *    [[NearestCentroid]] kernel assigns every row against the centroids
-  *    as a literal, and each task folds its rows into k
-  *    [[Aggregators.VectorCentroid]] buffers (its own `zero`/`reduce`/
-  *    `merge`, so the arithmetic and the null/wrong-arity skipping are the
-  *    aggregate's). `treeAggregate` (depth 2) brings ≤ k buffers per task
-  *    back to the driver, which finishes them to floats. A cluster whose
-  *    buffer holds no rows keeps its previous centroid — otherwise k
-  *    silently shrinks across iterations.
+  *    as a literal, and [[Aggregators.centroidBuffers]] folds the rows into
+  *    ≤ k [[Aggregators.VectorCentroid]] buffers per task (the aggregate's
+  *    own arithmetic and null/wrong-arity skipping), merged by
+  *    `treeAggregate` on the way to the driver, which finishes them to
+  *    floats. A cluster whose buffer holds no rows keeps its previous
+  *    centroid — otherwise k silently shrinks across iterations.
   *
   * Why on the driver: under AQE every shuffle or broadcast stage is its
   * own job, and a job costs tens of milliseconds however little it reads,
@@ -53,20 +51,11 @@ object KMeans {
     val agg = new Aggregators.VectorCentroid(dims)
     for (_ <- 0 until iterations) {
       val cents = centroidLit(centroids.toSeq.zipWithIndex.map(_.swap))
-      val rows = df.select(NearestCentroid(col(vecCol), cents), col(vecCol)).queryExecution.toRdd
-      val bufs = rows.treeAggregate(Array.fill(n)(agg.zero))(
-        (b, r) => {
-          // a null vector has a null cluster: neither counted nor assigned
-          if (!r.isNullAt(0)) {
-            val c = r.getInt(0)
-            b(c) = agg.reduce(b(c), ArraySeq.unsafeWrapArray(r.getArray(1).toFloatArray()))
-          }
-          b
-        },
-        (x, y) => { for (c <- 0 until n) x(c) = agg.merge(x(c), y(c)); x },
-        depth = 2)
+      // a null vector has a null cluster: neither counted nor assigned
+      val bufs = Aggregators.centroidBuffers(
+        df.select(NearestCentroid(col(vecCol), cents), col(vecCol)), dims)
       centroids = Array.tabulate(n) { c =>
-        if (bufs(c).n == 0) centroids(c) else agg.finish(bufs(c)).map(_.toFloat)
+        bufs.get(c).filter(_.n > 0).fold(centroids(c))(agg.finish(_).map(_.toFloat))
       }
     }
     val spark = df.sparkSession

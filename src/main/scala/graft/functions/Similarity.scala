@@ -1,8 +1,10 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row, graftbridge}
+import org.apache.spark.sql.catalyst.expressions.Literal
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ArrayType, FloatType, StructField, StructType}
 import graft.expressions.CosineSimilarity
 
 /** Similarity search over embedding columns (SURVEY.md §2.11).
@@ -22,30 +24,22 @@ object Similarity {
 
   def cosine(a: Column, b: Column): Column = CosineSimilarity(a, b)
 
-  /** Per-query top-k without a per-query straggler: a naive
-    * Window.partitionBy(query_id) funnels ALL corpus similarities for one
-    * query into one task. Instead prune to a local top-k per (query, input
-    * partition) first — Q×P groups spread across the cluster — then take
-    * the global top-k over the surviving Q×P×k rows. Any local superset of
-    * the global top-k preserves the result exactly, so output is unchanged.
+  /** Per-query top-k by (sim desc, neighbor_id asc), as one rank window
+    * per query_id. A window over all of one query's similarities would
+    * funnel them into one task, but Spark's `InferWindowGroupLimit` plans a
+    * partial `WindowGroupLimit` below the hash exchange (k ≤
+    * `spark.sql.optimizer.windowGroupLimitThreshold`, 1000 by default): each
+    * input partition keeps its local top-k per query, so the shuffle
+    * carries at most Q×P×k rows, and the final window ranks those. Any
+    * local superset of the global top-k preserves the result exactly.
     * Input: (query_id, neighbor_id, sim). Output adds rank.
     */
-  private[graft] def topKPerQuery(scored: DataFrame, k: Int): DataFrame = {
-    // spark_partition_id is nondeterministic → materialize it as a column
-    // first (allowed in Project), then window over plain columns
-    val local = Window
-      .partitionBy(col("query_id"), col("_pid"))
-      .orderBy(col("sim").desc, col("neighbor_id").asc)
-    val global = Window.partitionBy(col("query_id"))
-      .orderBy(col("sim").desc, col("neighbor_id").asc)
+  private[graft] def topKPerQuery(scored: DataFrame, k: Int): DataFrame =
     scored
-      .withColumn("_pid", spark_partition_id())
-      .withColumn("_lrn", row_number().over(local))
-      .filter(col("_lrn") <= k)
-      .withColumn("rank", row_number().over(global))
+      .withColumn("rank", row_number().over(Window.partitionBy(col("query_id"))
+        .orderBy(col("sim").desc, col("neighbor_id").asc)))
       .filter(col("rank") <= k)
       .select(col("query_id"), col("rank"), col("neighbor_id"), col("sim"))
-  }
 
   /** Exact top-k neighbors for each query vector (self-pairs excluded).
     * Output: (query_id, rank, neighbor_id, sim).
@@ -149,39 +143,57 @@ object Similarity {
     * search", TPAMI 2011 — without the PQ refinement) — the other classic
     * ANN scale path next to [[lshTopK]]:
     *
-    *   1. a coarse quantizer: centroids of a partition column (here any
-    *      blocking key; with k-means labels it is textbook IVF), computed
-    *      with the mergeable [[Aggregators.vectorCentroid]] UDAF,
-    *   2. each query probes the `nprobe` nearest centroids (broadcast —
-    *      centroid count is tiny),
+    *   1. a coarse quantizer: the centroid of each non-null value of a
+    *      partition column (here any blocking key; with k-means labels it
+    *      is textbook IVF), folded on the driver by [[cellCentroids]] in one
+    *      job; the cells ride the plan as a literal (bounded by driver
+    *      memory, like any broadcast), which each query row explodes — no
+    *      join, and no broadcast job;
+    *   2. each query probes the `nprobe` nearest centroids (a rank window
+    *      over queries × cells; skipped when `nprobe` covers every cell);
     *   3. exact cosine only within the probed cells.
     *
     * Pairwise work drops from Q×N to Q×(N·nprobe/cells); the corpus is
-    * scanned once, shuffled only by its cell key.
+    * scanned once for the centroids and once for the search, and the
+    * probed (query, cell) pairs broadcast to it.
     */
   def ivfTopK(
       corpus: DataFrame, queries: DataFrame,
       idCol: String, vecCol: String, cellCol: String,
       dims: Int, k: Int, nprobe: Int): DataFrame = {
-    val cells = corpus.groupBy(col(cellCol).as("cell"))
-      .agg(Aggregators.vectorCentroid(col(vecCol), dims).as("centroid"))
-      .select(col("cell"), col("centroid").cast("array<float>").as("centroid"))
-    val q = queries.select(col(idCol).as("query_id"), col(vecCol).as("qvec"))
-    val wProbe = Window.partitionBy(col("query_id"))
-      .orderBy(col("csim").desc, col("cell").asc)
-    val probed = q.crossJoin(broadcast(cells))
-      .select(col("query_id"), col("qvec"), col("cell"),
-        cosine(col("qvec"), col("centroid")).as("csim"))
-      .withColumn("cr", row_number().over(wProbe))
-      .filter(col("cr") <= nprobe)
-      .select(col("query_id"), col("qvec"), col("cell"))
+    val centroids = cellCentroids(corpus, cellCol, vecCol, dims)
+    val cells = graftbridge.toColumn(Literal.create(centroids, ArrayType(StructType(Seq(
+      StructField("cell", corpus.schema(cellCol).dataType),
+      StructField("centroid", ArrayType(FloatType)))))))
+    val pairs = queries.select(col(idCol).as("query_id"), col(vecCol).as("qvec"),
+        explode(cells).as("c"))
+      .select(col("query_id"), col("qvec"), col("c.cell").as("cell"), col("c.centroid").as("centroid"))
+    val probed =
+      if (nprobe >= centroids.size) pairs // every cell is probed: nothing to rank
+      else pairs
+        .withColumn("cr", row_number().over(Window.partitionBy(col("query_id"))
+          .orderBy(cosine(col("qvec"), col("centroid")).desc, col("cell").asc)))
+        .filter(col("cr") <= nprobe)
     val c = corpus.select(col(cellCol).as("cell"), col(idCol).as("neighbor_id"),
       col(vecCol).as("cvec"))
     topKPerQuery(
-      c.join(broadcast(probed), Seq("cell"))
+      c.join(broadcast(probed.select(col("query_id"), col("qvec"), col("cell"))), Seq("cell"))
         .filter(col("neighbor_id") =!= col("query_id"))
         .select(col("query_id"), col("neighbor_id"), cosine(col("qvec"), col("cvec")).as("sim")),
       k)
+  }
+
+  /** (cell, centroid array<float>) for each non-null `cellCol` value of
+    * `corpus`: the [[Aggregators.VectorCentroid]] mean of its vectors, as
+    * `groupBy(cell).agg(vectorCentroid).cast("array<float>")` gives it (an
+    * empty array for a cell whose vectors are all null), folded on the
+    * driver in one job by [[Aggregators.centroidBuffers]].
+    */
+  private[graft] def cellCentroids(corpus: DataFrame, cellCol: String, vecCol: String,
+      dims: Int): Seq[Row] = {
+    val agg = new Aggregators.VectorCentroid(dims)
+    Aggregators.centroidBuffers(corpus.select(col(cellCol), col(vecCol)), dims).toSeq
+      .map { case (cell, b) => Row(cell, agg.finish(b).map(_.toFloat)) }
   }
 
   /** Int8 scalar quantization of an embedding column: per-vector symmetric

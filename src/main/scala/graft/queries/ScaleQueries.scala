@@ -15,6 +15,36 @@ object ScaleQueries {
 
   private def dec(c: org.apache.spark.sql.Column) = c.cast(DecimalType(18, 2))
 
+  /** q177's Bloom filter: m = 65536 bits in 2048 longs of 32 bits each,
+    * k = 3 hashes. Its bit layout is engine-internal (the oracle is the
+    * plain join), so bit r of a key is one codegen'd xxhash64 over
+    * (key, r) rather than an oracle-replayable md5 chain (r9; was 3 md5s
+    * per lineitem row — the probe side's dominant cost).
+    */
+  private[graft] val BloomBits = 65536L
+  private[graft] val BloomHashes = 3
+  private[graft] def bloomIndex(key: org.apache.spark.sql.Column, r: Int) =
+    pmod(xxhash64(key, lit(r)), lit(BloomBits))
+
+  /** The Bloom filter words of `df`'s `key` column, folded on the driver:
+    * each task ORs its keys' bits into one 2048-long array and
+    * `treeAggregate` (depth 2) ORs the arrays together — one job, where a
+    * relational `bit_or` per word pays a shuffle, a join against the word
+    * ids and a collecting aggregate, each under AQE a job of its own.
+    */
+  private[graft] def bloomWords(df: org.apache.spark.sql.DataFrame, key: String): Array[Long] =
+    df.select((0 until BloomHashes).map(bloomIndex(col(key), _)): _*).queryExecution.toRdd
+      .treeAggregate(new Array[Long]((BloomBits / 32).toInt))(
+        (w, row) => {
+          for (r <- 0 until BloomHashes) {
+            val i = row.getLong(r)
+            w((i / 32).toInt) |= 1L << (i % 32)
+          }
+          w
+        },
+        (a, b) => { for (i <- a.indices) a(i) |= b(i); a },
+        depth = 2)
+
   val all: Seq[GQuery] = Seq(
     // ------------------------------------------------------------------
     // q75: salted equi-join on a deliberately hot key. l_returnflag has 3
@@ -306,60 +336,37 @@ object ScaleQueries {
     // technique Spark's own InjectRuntimeFilter automates for shuffle
     // joins, spelled explicitly so it composes anywhere (pre-shuffle
     // probe pruning, multi-stage reuse of one filter, cross-job reuse).
-    // Build side: the SELECTIVE orders subset's keys fold RELATIONALLY
-    // into a 2048-word bitset (groupBy-bit_or — no driver collect,
-    // treeAggregate-equivalent); the 16 KB word array broadcasts via a
-    // 1-row crossJoin. Probe side: 3 hash bit-tests evaluate MAP-SIDE
-    // (codegen arithmetic over element_at — no explode, no shuffle, no
-    // UDF) BEFORE lineitem reaches the join shuffle, cutting shuffled
-    // probe volume to ~|match| + FPR·|probe| (m=65536, k=3, n≈1.5k keys
-    // → FPR ≈ 3e-4). The exact join then removes false positives, which
-    // is why the oracle is the PLAIN join — bloom correctness shows up
-    // as result invariance, and PlanShapeSpec pins the reduction + the
-    // no-false-negative guarantee via observe() telemetry.
+    // Build side: the SELECTIVE orders subset's keys fold ON THE DRIVER
+    // into a 2048-word bitset ([[bloomWords]]: one treeAggregate job, no
+    // shuffle); the 16 KB word array rides the plan as a literal. Probe
+    // side: 3 hash bit-tests evaluate MAP-SIDE (codegen arithmetic over
+    // element_at — no explode, no join, no UDF) BEFORE lineitem reaches
+    // the join shuffle, cutting shuffled probe volume to ~|match| +
+    // FPR·|probe| (m=65536, k=3, n≈1.5k keys → FPR ≈ 3e-4). The exact
+    // join then removes false positives, which is why the oracle is the
+    // PLAIN join — bloom correctness shows up as result invariance, and
+    // PlanShapeSpec pins the reduction + the no-false-negative guarantee
+    // via observe() telemetry.
     GQuery(
       "q177_bloom_semijoin",
       (s, d) => {
-        import graft.functions.{TextFunctions => TF}
-        val mBits = 65536L
-        val nWords = (mBits / 32L).toInt
-        val kHash = 3
-        // the filter's bit layout is ENGINE-INTERNAL (the oracle is the
-        // plain join — bloom correctness is result invariance), so the
-        // index hash needs no oracle-replayable md5: xxhash64 over the
-        // (key, round) pair is one codegen'd mix per probe instead of a
-        // digest + hex + base-conversion chain (r9; was 3 md5s per
-        // lineitem row — the probe side's dominant cost)
-        def idx(key: org.apache.spark.sql.Column, r: Int) =
-          pmod(xxhash64(key, lit(r)), lit(mBits))
         val sel = Tables.orders(s, d).filter(col("o_totalprice") > 450000.0)
           .select(col("o_orderkey"), col("o_orderpriority"))
           .localCheckpoint(false) // consumed by the build AND the exact join
-        val rs = explode(array((0 until kHash).map(lit(_)): _*)).as("r")
-        val cells = sel.select(col("o_orderkey"), rs)
-          .select(pmod(xxhash64(col("o_orderkey"), col("r")), lit(mBits)).as("idx"))
-          .select((col("idx") / 32).cast("long").as("word_id"),
-            expr("shiftleft(1L, CAST(idx % 32 AS INT))").as("contrib"))
-        val words = cells.groupBy(col("word_id"))
-          .agg(expr("bit_or(contrib)").as("w"))
-        val bf = s.range(nWords).select(col("id").as("word_id"))
-          .join(words, Seq("word_id"), "left")
-          .select(col("word_id"), coalesce(col("w"), lit(0L)).as("w"))
-          .agg(expr("transform(array_sort(collect_list(struct(word_id, w))), x -> x.w)")
-            .as("bf"))
+        val bf = typedLit(bloomWords(sel, "o_orderkey"))
         val probe = Tables.lineitem(s, d)
           .select(col("l_orderkey"), col("l_quantity"),
             col("l_extendedprice"), col("l_discount"))
           .observe("bloom_probe_in", count(lit(1)).as("rows_in"))
-          .crossJoin(broadcast(bf)) // 1-row side
-        val hit = (0 until kHash).map { r =>
-          expr(s"(shiftright(element_at(bf, CAST(idx_$r / 32 AS INT) + 1)," +
-            s" CAST(idx_$r % 32 AS INT)) & 1L) = 1L")
+        val hit = (0 until BloomHashes).map { r =>
+          val i = col(s"idx_$r")
+          call_function("shiftright", element_at(bf, (i / 32).cast("int") + 1),
+            (i % 32).cast("int")).bitwiseAND(lit(1L)) === lit(1L)
         }.reduce(_ && _)
-        val filtered = (0 until kHash)
-          .foldLeft(probe)((df, r) => df.withColumn(s"idx_$r", idx(col("l_orderkey"), r)))
+        val filtered = (0 until BloomHashes)
+          .foldLeft(probe)((df, r) => df.withColumn(s"idx_$r", bloomIndex(col("l_orderkey"), r)))
           .filter(hit)
-          .drop((0 until kHash).map(r => s"idx_$r") :+ "bf": _*)
+          .drop((0 until BloomHashes).map(r => s"idx_$r"): _*)
           .observe("bloom_probe_out", count(lit(1)).as("rows_out"))
         filtered.join(sel, col("l_orderkey") === col("o_orderkey"))
           .groupBy(col("o_orderpriority"))
@@ -378,7 +385,7 @@ object ScaleQueries {
              |FROM lineitem JOIN orders ON l_orderkey = o_orderkey
              |WHERE o_totalprice > 450000.0
              |GROUP BY o_orderpriority ORDER BY o_orderpriority ASC""".stripMargin),
-      "bloom-filter semi-join reduction: relational bitset build, map-side probe prefilter"),
+      "bloom-filter semi-join reduction: driver-folded bitset build, map-side probe prefilter"),
 
     // ------------------------------------------------------------------
     // q185: canonical-document selection — the dedup APPLICATION step

@@ -1,6 +1,12 @@
 package graft.sources
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.hadoop.conf.Configuration
+import org.apache.hadoop.fs.{FileStatus, Path}
+import org.apache.parquet.hadoop.{Footer, ParquetFileReader}
+import org.apache.parquet.hadoop.util.HadoopInputFile
+import org.apache.spark.sql.{DataFrame, SparkSession, graftbridge}
+import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetToSparkSchemaConverter}
+import org.apache.spark.sql.functions.{col, expr, timestamp_micros}
 import org.apache.spark.sql.types._
 import graft.Graft
 import graft.types._
@@ -12,8 +18,8 @@ import graft.types._
   *
   * Scale note (100 TB design point): loaders read a single parquet path here,
   * but nothing below assumes a single file — `spark.read.parquet` over a
-  * directory of thousands of files partitions by `maxPartitionBytes`. Each
-  * load still infers its schema from the footers (see [[load]]).
+  * directory of thousands of files partitions by `maxPartitionBytes`. A
+  * load reads one footer on the driver and starts no job (see [[load]]).
   *
   * The shipped `events` files store `ts` as timestamp[us]; older ones store
   * TIMESTAMP(NANOS), which [[load]] still accepts and truncates to µs.
@@ -91,42 +97,39 @@ object Tables {
     * longs; set only on a child session (see [[load]]). */
   private[graft] val nanosAsLong: (String, String) = "spark.sql.legacy.parquet.nanosAsLong" -> "true"
 
-  /** Load a fixture table from `sfDir`. The read passes no `.schema(...)`,
-    * so Spark infers the schema from the parquet footers (one Spark job per
-    * load); the result is then checked against [[graftSchemas]], failing
-    * fast on drift. Passing the declared schema is ROADMAP item 2; it must
-    * keep embeddings' `list<float>` (declared Vector) and the older
-    * events encoding, TIMESTAMP(NANOS).
+  /** Load a fixture table from `sfDir`, starting no Spark job. The schema
+    * is read on the driver from one data file's footer ([[parquetSchema]],
+    * Spark's own footer→schema conversion under the reading session's conf),
+    * checked against [[graftSchemas]] so drift fails fast with a typed error,
+    * and passed to the read as `.schema(...)` — a bare `spark.read.parquet`
+    * would infer the same schema with one footer job per call, and passing
+    * the declared schema alone would read a missing column as silent nulls.
     */
   def load(spark: SparkSession, sfDir: String, table: String): DataFrame = {
     val expected = graftSchemas.getOrElse(table, throw AttributeMissing(s"table $table"))
+    val path = s"$sfDir/$table.parquet"
     // events.ts may be TIMESTAMP(NANOS), which Spark's parquet reader
     // rejects unless nanosAsLong is set; that conf has no per-read form, so
-    // the read runs on a cached child session that sets it, and the frame
-    // moves back to `spark` (the scan keeps reading under the child's
-    // conf). The raw nanos are truncated to microsecond NTZ — the same
-    // ns→µs truncation DuckDB applies, so both engines see identical
-    // values. `DIV` keeps the arithmetic in 64-bit integers (a double
-    // roundtrip would lose precision above 2^53 ns ≈ 104 days).
+    // events read on a cached child session that sets it (its footer then
+    // converts to a long), and the frame moves back to `spark` (the scan
+    // keeps reading under the child's conf).
+    val reader = if (table == "events") Graft.childSession(spark, nanosAsLong) else spark
+    val footer = parquetSchema(reader, path)
+      .getOrElse(throw new java.io.FileNotFoundException(s"no parquet data file under $path"))
+    val raw = reader.read.schema(footer).parquet(path)
     val df =
-      if (table == "events") {
-        val raw = Graft.childSession(spark, nanosAsLong)
-          .read.parquet(s"$sfDir/$table.parquet")
-        Graft.onSession(spark, raw.schema("ts").dataType match {
-          // TIMESTAMP(NANOS) surfaced as raw longs
-          case org.apache.spark.sql.types.LongType =>
-            raw.withColumn("ts",
-              org.apache.spark.sql.functions.timestamp_micros(
-                org.apache.spark.sql.functions.expr("ts DIV 1000"))
-                .cast(TimestampNTZType))
-          // the shipped fixtures and GenScale's output are plain µs
-          // timestamps — accept both encodings so the loader isn't coupled
-          // to either
-          case _ =>
-            raw.withColumn("ts", org.apache.spark.sql.functions.col("ts")
-              .cast(TimestampNTZType))
-        })
-      } else spark.read.parquet(s"$sfDir/$table.parquet")
+      // (an events file without ts fails the check below)
+      if (table != "events" || !footer.fieldNames.contains("ts")) raw
+      else Graft.onSession(spark, raw.withColumn("ts", footer("ts").dataType match {
+        // TIMESTAMP(NANOS) surfaced as raw longs, truncated to microsecond
+        // NTZ — the same ns→µs truncation DuckDB applies, so both engines
+        // see identical values. `DIV` keeps the arithmetic in 64-bit
+        // integers (a double roundtrip would lose precision above 2^53 ns ≈
+        // 104 days).
+        case LongType => timestamp_micros(expr("ts DIV 1000")).cast(TimestampNTZType)
+        // the shipped fixtures and GenScale's output are plain µs timestamps
+        case _ => col("ts").cast(TimestampNTZType)
+      }))
     val got = df.schema
     expected.attrs.foreach { a =>
       val f = got.fields.find(_.name == a.name).getOrElse(throw AttributeMissing(s"$table.${a.name}"))
@@ -180,20 +183,44 @@ object Tables {
     * a directory of part-files and a single `.parquet` file both work.
     */
   def parquetRowCount(spark: SparkSession, path: String): Long = {
+    val (conf, files) = parquetFiles(spark, path)
+    files.map { f =>
+      val r = ParquetFileReader.open(HadoopInputFile.fromPath(f, conf))
+      try r.getRecordCount finally r.close()
+    }.sum
+  }
+
+  /** The schema `spark.read.parquet(path)` would infer, read on the driver
+    * from the first data file's footer, with no Spark job: Spark's inference
+    * reads that one footer too (no schema merging), in a job of its own.
+    * The conversion is Spark's, under `spark`'s conf, so settings such as
+    * nanosAsLong apply, and every field is nullable, as a file source reads
+    * it. None when `path` holds no data file.
+    */
+  private[graft] def parquetSchema(spark: SparkSession, path: String): Option[StructType] = {
+    val (conf, files) = parquetFiles(spark, path)
+    files.headOption.map { f =>
+      val r = ParquetFileReader.open(HadoopInputFile.fromPath(f, conf))
+      val footer = try r.getFooter finally r.close()
+      graftbridge.asNullable(ParquetFileFormat.readSchemaFromFooter(new Footer(f, footer),
+        new ParquetToSparkSchemaConverter(spark.sessionState.conf)))
+    }
+  }
+
+  /** The data files of a parquet table — one `.parquet` file or a directory
+    * of part-files — in path order, hidden files (`_SUCCESS`, `.crc`)
+    * skipped, with the Hadoop conf to open them under. */
+  private def parquetFiles(spark: SparkSession, path: String): (Configuration, Seq[Path]) = {
     val conf = spark.sessionState.newHadoopConf()
-    val p = new org.apache.hadoop.fs.Path(path)
+    val p = new Path(path)
     val fs = p.getFileSystem(conf)
-    def dataFiles(st: org.apache.hadoop.fs.FileStatus): Seq[org.apache.hadoop.fs.Path] =
-      if (st.isDirectory) fs.listStatus(st.getPath).toSeq.flatMap(dataFiles)
+    def dataFiles(st: FileStatus): Seq[Path] =
+      if (st.isDirectory) fs.listStatus(st.getPath).toSeq.sortBy(_.getPath.toString).flatMap(dataFiles)
       else {
         val n = st.getPath.getName
         if (n.startsWith("_") || n.startsWith(".")) Seq.empty else Seq(st.getPath)
       }
-    dataFiles(fs.getFileStatus(p)).map { f =>
-      val in = org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(f, conf)
-      val r = org.apache.parquet.hadoop.ParquetFileReader.open(in)
-      try r.getRecordCount finally r.close()
-    }.sum
+    (conf, dataFiles(fs.getFileStatus(p)))
   }
 
   def region(spark: SparkSession, d: String): DataFrame = load(spark, d, "region")

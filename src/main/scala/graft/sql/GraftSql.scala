@@ -44,17 +44,21 @@ object GraftSql {
   /** One SQL text over the fixture tables of `sfDir`, each bound to its own
     * name.
     *
-    * Only tables whose name appears in the text are loaded — a cheap
-    * over-approximation (a name inside a string literal also loads) that
-    * is always safe, and it matters: loading a table costs a schema
-    * inference job. The match is case-INsensitive because Catalyst resolves
-    * identifiers case-insensitively: `FROM Orders` is legal SQL that must
-    * bind `orders` (ADVICE r4). Tables load on `spark` itself, so a loader
-    * that runs on a cached child session keys its cache on `spark`.
+    * Only the tables the text names ([[tablesNamedIn]]) are loaded: a load
+    * starts no job, but still lists its files and reads a footer. Tables
+    * load on `spark` itself, so a loader that runs on a cached child
+    * session keys its cache on `spark`.
     */
-  def run(spark: SparkSession, sfDir: String, sqlText: String): DataFrame = {
-    val lower = sqlText.toLowerCase
-    sql(spark, sqlText, Tables.names.filter(n => lower.contains(n.toLowerCase))
-      .map(t => t -> Tables.load(spark, sfDir, t)): _*)
-  }
+  def run(spark: SparkSession, sfDir: String, sqlText: String): DataFrame =
+    sql(spark, sqlText, tablesNamedIn(sqlText).map(t => t -> Tables.load(spark, sfDir, t)): _*)
+
+  /** The fixture tables whose name appears in `sqlText` as a whole word —
+    * `n_regionkey` names no `region` — case-INsensitively, because Catalyst
+    * resolves identifiers case-insensitively: `FROM Orders` is legal SQL
+    * that must bind `orders` (ADVICE r4). A cheap over-approximation (a name
+    * inside a string literal or used as an alias also counts) that is
+    * always safe.
+    */
+  private[graft] def tablesNamedIn(sqlText: String): Seq[String] =
+    Tables.names.filter(n => s"(?i)\\b$n\\b".r.findFirstIn(sqlText).isDefined)
 }

@@ -27,21 +27,20 @@ object EventStreams {
     * The fixture's ts column has shipped in two encodings over time —
     * TIMESTAMP(NANOS) (which Spark only reads as raw longs, under
     * `nanosAsLong`) and plain timestamp[us]. File-source streams need an
-    * explicit schema, so peek the footer with a one-off batch read (schema
-    * inference only — no data scan) and declare that read's own schema —
-    * a mismatched request crashes the vectorized reader mid-batch — then
-    * dispatch on ts exactly like the batch loader (`sources/Tables.scala`).
-    * Both reads run on the loader's child session, so the caller's conf is
-    * never written; the stream moves back to `spark`.
+    * explicit schema, so read one footer on the driver
+    * ([[graft.sources.Tables.parquetSchema]], no Spark job) and declare
+    * exactly that schema — a mismatched request crashes the vectorized
+    * reader mid-batch — then dispatch on ts exactly like the batch loader
+    * (`sources/Tables.scala`). Both run on the loader's child session, so
+    * the caller's conf is never written; the stream moves back to `spark`.
     */
   def readEvents(spark: SparkSession, dir: String): DataFrame = {
     val nanos = graft.Graft.childSession(spark, graft.sources.Tables.nanosAsLong)
     // An empty watch directory (start-stream-then-add-files, the pattern
     // the checkpoint-recovery test approximates) has no footer to peek:
     // fall back to the declared schema (timestamp[us] NTZ, as shipped).
-    val schema = try nanos.read.parquet(dir).schema
-      catch { case _: org.apache.spark.sql.AnalysisException =>
-        graft.sources.Tables.graftSchemas("events").struct }
+    val schema = graft.sources.Tables.parquetSchema(nanos, dir)
+      .getOrElse(graft.sources.Tables.graftSchemas("events").struct)
     val raw = nanos.readStream.schema(schema).parquet(dir)
     graft.Graft.onSession(spark, schema("ts").dataType match {
       case LongType => // raw nanos: truncate ns → µs like the batch loader

@@ -35,4 +35,9 @@ package object graftbridge {
   /** Deletes `f` and, for a directory, everything under it; a missing `f`
     * is no error. */
   def deleteRecursively(f: java.io.File): Unit = org.apache.spark.util.Utils.deleteRecursively(f)
+
+  /** `t` with every field, array element and map value nullable, as a
+    * file source reads any schema (`StructType.asNullable`). */
+  def asNullable(t: org.apache.spark.sql.types.StructType): org.apache.spark.sql.types.StructType =
+    t.asNullable
 }

@@ -1,0 +1,31 @@
+package graft
+
+import java.nio.file.Paths
+import graft.sources.Tables
+
+/** Per-query Spark job budgets at sf0.1, the scale the benchmark runs.
+  * Under AQE every job costs tens of milliseconds however little it reads,
+  * so a job that only moves a small, bounded state is a fixed cost per
+  * query. A budget may only shrink.
+  */
+class JobBudgetSpec extends SparkTestBase {
+
+  private val sf01 = Paths.get(sf).resolveSibling("sf0.1").toString
+
+  private def jobsStartedBy(body: => Unit): Int =
+    new JobGroupCounter().run(spark.sparkContext)(body).jobs.get
+
+  test("Tables.load starts no job, for each of the ten tables") {
+    val started = Tables.names.map(t => t -> jobsStartedBy(Tables.load(spark, sf01, t)))
+    assert(started.forall(_._2 == 0), started.mkString(", "))
+  }
+
+  // build plus the noop write perfbench times
+  for ((name, budget) <- Seq("q177_bloom_semijoin" -> 6, "q68_ivf_kmeans" -> 10))
+    test(s"$name starts at most $budget jobs per execution") {
+      val jobs = jobsStartedBy(
+        SparkEntry.queries(name)(spark, sf01).write.format("noop").mode("overwrite").save())
+      info(s"$jobs jobs")
+      assert(jobs <= budget, s"$name started $jobs jobs, budget $budget")
+    }
+}

@@ -137,4 +137,73 @@ class KMeansSpec extends SparkTestBase {
     assert(got.size == clusters(plain).size + 1)
     assert(got.count(_._2 == null) == 1)
   }
+
+  /** The fixture embeddings plus a row with a null cell, a null vector in
+    * cell 0, and cell 99, whose only vector is null. */
+  private def ivfCorpus: DataFrame = {
+    val emb = graft.sources.Tables.embeddings(spark, sf)
+      .select(col("vec_id"), col("embedding"), col("label"))
+    val one = emb.filter(col("vec_id") === 1)
+    emb
+      .unionByName(one.select(lit(1000000L).as("vec_id"), col("embedding"),
+        lit(null).cast("int").as("label")))
+      .unionByName(one.select(lit(1000001L).as("vec_id"),
+        lit(null).cast("array<float>").as("embedding"), lit(0).as("label")))
+      .unionByName(one.select(lit(1000002L).as("vec_id"),
+        lit(null).cast("array<float>").as("embedding"), lit(99).as("label")))
+  }
+
+  /** Cell centroid float bits by cell, non-null cells only. */
+  private def cellBits(rows: Seq[org.apache.spark.sql.Row]): Map[Any, Seq[Int]] =
+    rows.filter(!_.isNullAt(0)).map(r => r.get(0) ->
+      r.getSeq[Float](1).map(java.lang.Float.floatToRawIntBits).toSeq).toMap
+
+  /** The IVF cells as a relational aggregate, as ivfTopK built them before
+    * they were folded on the driver. */
+  private def relationalCells(corpus: DataFrame): DataFrame =
+    corpus.groupBy(col("label").as("cell"))
+      .agg(Aggregators.vectorCentroid(col("embedding"), 64).as("centroid"))
+      .select(col("cell"), col("centroid").cast("array<float>").as("centroid"))
+
+  /** ivfTopK over relational cells with the probe window always on — its
+    * form before the cells were folded on the driver, restricted to
+    * non-null cells (a null cell joins no corpus row, so probing it only
+    * wasted one of the `nprobe` slots). */
+  private def relationalIvf(corpus: DataFrame, queries: DataFrame, nprobe: Int): DataFrame = {
+    import org.apache.spark.sql.expressions.Window
+    val cells = relationalCells(corpus).filter(col("cell").isNotNull)
+    val q = queries.select(col("vec_id").as("query_id"), col("embedding").as("qvec"))
+    val probed = q.crossJoin(broadcast(cells))
+      .withColumn("cr", row_number().over(Window.partitionBy(col("query_id"))
+        .orderBy(Similarity.cosine(col("qvec"), col("centroid")).desc, col("cell").asc)))
+      .filter(col("cr") <= nprobe)
+      .select(col("query_id"), col("qvec"), col("cell"))
+    val c = corpus.select(col("label").as("cell"), col("vec_id").as("neighbor_id"),
+      col("embedding").as("cvec"))
+    Similarity.topKPerQuery(
+      c.join(broadcast(probed), Seq("cell"))
+        .filter(col("neighbor_id") =!= col("query_id"))
+        .select(col("query_id"), col("neighbor_id"),
+          Similarity.cosine(col("qvec"), col("cvec")).as("sim")),
+      5)
+  }
+
+  test("IVF cells folded on the driver match the relational centroids bit for bit, and so do the searches") {
+    val corpus = ivfCorpus
+    val relational = relationalCells(corpus).collect().toSeq
+    assert(relational.exists(_.isNullAt(0)), "the corpus should hold a null cell")
+    val want = cellBits(relational)
+    assert(want(99).isEmpty, "a cell of null vectors has an empty centroid")
+    for (input <- Seq(corpus.coalesce(1), corpus.repartition(4, col("vec_id")))) {
+      assert(cellBits(Similarity.cellCentroids(input, "label", "embedding", 64)) == want)
+      val queries = input.filter(col("vec_id") < 10)
+      // 11 non-null cells: a partial probe, all of them, and more than all
+      for (nprobe <- Seq(3, want.size, want.size + 5)) {
+        val got = Similarity.ivfTopK(input, queries, "vec_id", "embedding", "label",
+          dims = 64, k = 5, nprobe = nprobe).collect().toSet
+        assert(got.nonEmpty)
+        assert(got == relationalIvf(input, queries, nprobe).collect().toSet, s"nprobe $nprobe")
+      }
+    }
+  }
 }

@@ -1,6 +1,9 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.functions.Similarity
 import graft.ops.Skew
 
 /** Locks in the plan shapes the 100 TB design depends on: predicate
@@ -585,5 +588,67 @@ class PlanShapeSpec extends SparkTestBase {
       assert(byt <= byteCap, s"$name shuffle bytes $byt > cap $byteCap")
       spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = false))
     }
+  }
+
+  /** topKPerQuery's form before it relied on Spark's partial
+    * WindowGroupLimit: a local top-k per (query, input partition), then
+    * the global one. */
+  private def twoWindowTopK(scored: DataFrame, k: Int): DataFrame = {
+    val order = Seq(col("sim").desc, col("neighbor_id").asc)
+    scored
+      .withColumn("_pid", spark_partition_id())
+      .withColumn("_lrn", row_number().over(
+        Window.partitionBy(col("query_id"), col("_pid")).orderBy(order: _*)))
+      .filter(col("_lrn") <= k)
+      .withColumn("rank", row_number().over(Window.partitionBy(col("query_id")).orderBy(order: _*)))
+      .filter(col("rank") <= k)
+      .select(col("query_id"), col("rank"), col("neighbor_id"), col("sim"))
+  }
+
+  test("topKPerQuery equals the two-window form on tied sims over 4 partitions") {
+    import spark.implicits._
+    // 11 distinct sims over 200 neighbors per query: every rank cut falls in a tie
+    val scored = (for (q <- 0L until 5L; n <- 0L until 200L) yield (q, n, (n * 7 % 11) / 4.0))
+      .toDF("query_id", "neighbor_id", "sim").repartition(4)
+    assert(scored.rdd.getNumPartitions == 4)
+    for (k <- Seq(1, 3, 10, 250))
+      assert(Similarity.topKPerQuery(scored, k).collect().toSet ==
+        twoWindowTopK(scored, k).collect().toSet, s"k $k")
+  }
+
+  test("q68 top-k is one rank window: a partial WindowGroupLimit below the hash exchange, no _pid") {
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    import org.apache.spark.sql.execution.window.{Partial, WindowGroupLimitExec}
+    val plan = SparkEntry.queries("q68_ivf_kmeans")(spark, sf).queryExecution.executedPlan match {
+      case a: AdaptiveSparkPlanExec => a.initialPlan
+      case p => p
+    }
+    val belowExchanges = plan.collect { case e: ShuffleExchangeExec => e.child }
+    assert(belowExchanges.exists {
+      case w: WindowGroupLimitExec => w.mode == Partial
+      case _ => false
+    }, plan.treeString)
+    assert(!plan.exists(_.output.exists(_.name == "_pid")), plan.treeString)
+  }
+
+  test("q177's driver-folded Bloom words equal the relational bit_or words") {
+    import graft.queries.ScaleQueries.{BloomBits, BloomHashes, bloomWords}
+    val sel = sources.Tables.orders(spark, sf).filter(col("o_totalprice") > 450000.0)
+    val nWords = (BloomBits / 32).toInt
+    // the build as it ran before the fold moved to the driver
+    val words = sel
+      .select(col("o_orderkey"), explode(array((0 until BloomHashes).map(lit(_)): _*)).as("r"))
+      .select(pmod(xxhash64(col("o_orderkey"), col("r")), lit(BloomBits)).as("idx"))
+      .select((col("idx") / 32).cast("long").as("word_id"),
+        expr("shiftleft(1L, CAST(idx % 32 AS INT))").as("contrib"))
+      .groupBy(col("word_id")).agg(expr("bit_or(contrib)").as("w"))
+    val relational = spark.range(nWords).select(col("id").as("word_id"))
+      .join(words, Seq("word_id"), "left")
+      .select(col("word_id"), coalesce(col("w"), lit(0L)).as("w"))
+      .collect().sortBy(_.getLong(0)).map(_.getLong(1))
+    assert(relational.count(_ != 0L) > 100)
+    for (input <- Seq(sel.coalesce(1), sel.repartition(4)))
+      assert(bloomWords(input, "o_orderkey").toSeq == relational.toSeq)
   }
 }

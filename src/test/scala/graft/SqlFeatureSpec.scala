@@ -188,4 +188,32 @@ class SqlFeatureSpec extends SparkTestBase {
     }
     assert(left.isEmpty, left.mkString("; "))
   }
+
+  test("GraftSql.run loads exactly the tables its text reads, for every gate that runs SQL text") {
+    // The text is the origin of the plan nodes the parser made; the tables
+    // it reads are the files its analyzed plan scans.
+    val runGates = Seq("q09_grouping_sets", "q51_percentiles", "q104_scalar_subquery",
+      "q105_exists_anti", "q106_lateral_topk", "q123_mad_outliers", "q131_min_cost_supplier",
+      "q132_top_revenue_supplier", "q133_excess_share_suppliers", "q134_lone_returned_supplier",
+      "q142_no_order_outlook", "q149_sql_frontend", "q164_small_qty_revenue",
+      "q165_large_volume_customers", "q193_supplier_counts", "q194_important_parts")
+    val wrong = runGates.flatMap { name =>
+      val df = q(name)
+      val texts = df.queryExecution.logical.collectWithSubqueries {
+        case p if p.origin.sqlText.isDefined => p.origin.sqlText.get
+      }.distinct
+      assert(texts.size == 1, s"$name: ${texts.size} SQL texts")
+      val loaded = graft.sql.GraftSql.tablesNamedIn(texts.head).toSet
+      val read = df.inputFiles.map(f => new java.io.File(new java.net.URI(f).getPath)
+        .getName.stripSuffix(".parquet")).toSet
+      if (loaded == read) None else Some(s"$name loads ${loaded.toSeq.sorted} but reads ${read.toSeq.sorted}")
+    }
+    assert(wrong.isEmpty, wrong.mkString("; "))
+  }
+
+  test("GraftSql.tablesNamedIn matches whole words, case-insensitively") {
+    val named = graft.sql.GraftSql.tablesNamedIn _
+    assert(named("SELECT n_regionkey, l_partkey FROM nation JOIN lineitem") == Seq("lineitem", "nation"))
+    assert(named("select * from Orders o, PART") == Seq("orders", "part"))
+  }
 }

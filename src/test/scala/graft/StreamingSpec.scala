@@ -296,6 +296,10 @@ class StreamingSpec extends SparkTestBase {
     } finally writer.close()
     val bare = intercept[Exception](spark.read.parquet(dir).collect())
     assert(bare.getMessage.contains("PARQUET_TYPE_ILLEGAL"), bare.getMessage)
+    // the footer schema the loaders declare is the child session's inferred one
+    val nanosReader = Graft.childSession(spark, graft.sources.Tables.nanosAsLong)
+    assert(graft.sources.Tables.parquetSchema(nanosReader, dir) ==
+      Some(nanosReader.read.parquet(dir).schema))
 
     def micros(df: org.apache.spark.sql.DataFrame): Seq[Long] =
       df.select(unix_micros(col("ts").cast("timestamp"))).collect().map(_.getLong(0)).toSeq.sorted
