@@ -497,21 +497,12 @@ object FlacCodec {
     * frames). The STREAMINFO total-sample count bounds the walk.
     */
   def decodeStats(p: Array[Byte]): (Long, Long, Long, Int) = {
-    if (!Multimodal.ContainerCodec.isFlac(p)) return (0L, 0L, 0L, 0)
-    val (_, ch, bps, total, _) = Multimodal.ContainerCodec.parseFlac(p)
-    if ((ch != 1 && ch != 2) || bps != 16) return (0L, 0L, 0L, 0)
-    // step over the metadata blocks to the first frame
-    var off = 4
-    var last = false
-    while (!last && off + 4 <= p.length) {
-      val hdr = p(off) & 0xff
-      last = (hdr & 0x80) != 0
-      val len = ((p(off + 1) & 0xff) << 16) | ((p(off + 2) & 0xff) << 8) |
-        (p(off + 3) & 0xff)
-      off += 4 + len
-      if (off < 0 || off > p.length) return (0L, 0L, 0L, 0)
-    }
-    if (!last) return (0L, 0L, 0L, 0)
+    val f = Multimodal.ContainerCodec.walkFlac(p)
+    if (f == null || (f.channels != 1 && f.channels != 2) || f.bits != 16 ||
+      f.frameOff < 0) return (0L, 0L, 0L, 0)
+    val ch = f.channels
+    val total = f.total
+    var off = f.frameOff
     var n = 0L; var sumV = 0L; var sumAbs = 0L; var peak = 0
     def emit(v: Int): Unit = {
       sumV += v

@@ -35,17 +35,19 @@ import org.apache.spark.sql.functions._
   * [[sortDecoded]] trades that second decode pass for one extra shuffle
   * of the decoded rows: worth it only when the decode costs more than the
   * shuffle, so it goes only where a benchmark measured the gain.
+  *
+  * One-walk rule: each byte format has ONE bounds-checked walk, and
+  * consumers never re-walk the bytes — they call the walk and read what
+  * they need from its layout or visits, or extend the layout. Here:
+  * `walkWav` (RIFF/WAV), `walkAviList` (AVI LIST chunks), `walkFlac`
+  * (FLAC metadata blocks), `synchsafe` (ID3v2 sizes), and
+  * [[ImageOps.withReader]] / [[ImageOps.read]] / [[ImageOps.write]]
+  * (javax.imageio; [[ImageOps.synthGif]]'s multi-frame sequence writer
+  * is the one other encoder); [[Shards]] holds the tar walk and the capped
+  * inflate. A bounds fix or a fuzz property then lands once, not once
+  * per copy (GraftInstallSpec locks each walk's marker to its walk).
   */
 object Multimodal {
-
-  // ImageIO.read(InputStream)/write(..., OutputStream) wrap their argument
-  // in an ImageInput/OutputStream via createImageInput/OutputStream, which
-  // with the default useCache=true is a FILE-backed cache: every decode and
-  // every synth round-trips the payload through a temp file on disk. All
-  // payloads here are in-memory byte arrays — disable the disk cache
-  // process-wide (the flag only selects Memory- vs FileCache streams;
-  // decoded bytes are identical).
-  javax.imageio.ImageIO.setUseCache(false)
 
   /** Ascending global sort of decoded rows behind a hash exchange on the
     * sort keys, so the range sample reads shuffle output (rule above). */
@@ -91,8 +93,8 @@ object Multimodal {
     * or silently falling back to fake dimensions.
     *
     * Deliberately HEADER-ONLY: `ImageReader.getWidth/getHeight(0)` parse
-    * image metadata without allocating the raster. A full `ImageIO.read`
-    * would (a) decode every pixel of every image just to emit metadata —
+    * image metadata without allocating the raster. A full decode
+    * ([[ImageOps.read]]) would (a) decode every pixel of every image just to emit metadata —
     * pure waste at corpus scale — and (b) allocate whatever the header
     * DECLARES: a 38-byte payload claiming 40000×40000 is a 6.4 GB
     * allocation and an executor-killing OutOfMemoryError on attacker- or
@@ -122,38 +124,30 @@ object Multimodal {
 
     def decode(payload: Array[Byte]): (String, Int, Int, Int) = {
       val hex = md5Hex(payload)
-      val iis = new javax.imageio.stream.MemoryCacheImageInputStream(
-        new java.io.ByteArrayInputStream(payload))
-      try {
-        val readers = javax.imageio.ImageIO.getImageReaders(iis)
-        if (!readers.hasNext) (hex, 0, 0, 0)
-        else {
-          val r = readers.next()
-          try {
-            r.setInput(iis)
-            // GIF is the one still-image container with REAL multi-frame
-            // content (animations): count frames with getNumImages(true) —
-            // a block-structure walk that skips each frame's LZW data
-            // without decoding pixels, so it stays metadata-priced. Every
-            // other format reports 1 (getNumImages would be 1 anyway, and
-            // the allowSearch scan is wasted work on a 100 TB corpus).
-            val w = r.getWidth(0)
-            val h = r.getHeight(0)
-            val frames =
-              if (startsWith(payload, 'G', 'I', 'F', '8'))
-                // truncated animation data: the header dims above stand,
-                // but the block walk can hit EOF — degrade to 1 frame
-                // instead of discarding the whole record as corrupt
-                try r.getNumImages(true)
-                catch { case scala.util.control.NonFatal(_) => 1 }
-              else 1
-            (hex, w, h, frames)
-          } catch {
-            // corrupt header: decodes to nothing, never fails the task
-            case scala.util.control.NonFatal(_) => (hex, 0, 0, 0)
-          } finally r.dispose()
+      ImageOps.withReader(payload, (hex, 0, 0, 0)) { r =>
+        try {
+          // GIF is the one still-image container with REAL multi-frame
+          // content (animations): count frames with getNumImages(true) —
+          // a block-structure walk that skips each frame's LZW data
+          // without decoding pixels, so it stays metadata-priced. Every
+          // other format reports 1 (getNumImages would be 1 anyway, and
+          // the allowSearch scan is wasted work on a 100 TB corpus).
+          val w = r.getWidth(0)
+          val h = r.getHeight(0)
+          val frames =
+            if (startsWith(payload, 'G', 'I', 'F', '8'))
+              // truncated animation data: the header dims above stand,
+              // but the block walk can hit EOF — degrade to 1 frame
+              // instead of discarding the whole record as corrupt
+              try r.getNumImages(true)
+              catch { case scala.util.control.NonFatal(_) => 1 }
+            else 1
+          (hex, w, h, frames)
+        } catch {
+          // corrupt header: decodes to nothing, never fails the task
+          case scala.util.control.NonFatal(_) => (hex, 0, 0, 0)
         }
-      } finally iis.close()
+      }
     }
   }
 
@@ -174,10 +168,8 @@ object Multimodal {
     * never an exception out of the task.
     */
   object ContainerCodec {
-    /** Little-endian u32 read — THE authoritative copy for every RIFF-
-      * family walk in this file (parseWav/parseAvi/pcmStats/VideoOps):
-      * a bounds-handling fix applied here cannot silently miss a
-      * duplicated local copy.
+    /** Little-endian u32 read — the one copy for every RIFF-family walk
+      * in this file (the one-walk rule).
       */
     private[multimodal] def le32(p: Array[Byte], o: Int): Long =
       (p(o) & 0xffL) | ((p(o + 1) & 0xffL) << 8) |
@@ -197,13 +189,11 @@ object Multimodal {
         tag: Int, channels: Int, rate: Int, byteRate: Long, blockAlign: Int,
         bits: Int, spbExt: Int, factSamples: Long, dataOff: Int, dataLen: Int)
 
-    /** THE authoritative RIFF chunk walk for every WAV consumer in this
-      * file (parseWav / pcmStats / pcmFeatures / g711Stats / adpcmStats):
+    /** THE RIFF chunk walk for every WAV consumer in this file
+      * (parseWav / pcmStats / pcmFeatures / g711Stats / adpcmStats):
       * [id(4) size(4LE) payload(size, padded to even)], every read
       * bounds-checked, data size clamped to the bytes actually present,
-      * zero/overflowing steps abort. One copy, so a bounds-handling fix
-      * cannot silently miss a duplicated local walk (the le32 rule,
-      * promoted to the whole walk).
+      * zero/overflowing steps abort.
       */
     private[multimodal] def walkWav(p: Array[Byte]): WavLayout = {
       def le16(o: Int) = (p(o) & 0xff) | ((p(o + 1) & 0xff) << 8)
@@ -372,13 +362,10 @@ object Multimodal {
       if (!isMp3(p)) return (0, 0, 0, 0L, 0L)
       var off: Long =
         if (hasId3v2(p)) {
-          // ID3v2: 10-byte header; size = 4 SYNCHSAFE bytes (7 bits
-          // each), EXCLUDING the optional 10-byte footer (flags bit 4 —
-          // v2.4 §3.1: a footered tag may not be padded, and the size
-          // field does not count the footer)
-          val sz = ((p(6) & 0x7f) << 21) | ((p(7) & 0x7f) << 14) |
-            ((p(8) & 0x7f) << 7) | (p(9) & 0x7f)
-          10L + sz + (if ((p(5) & 0x10) != 0) 10L else 0L)
+          // ID3v2: 10-byte header + tag body, EXCLUDING the optional
+          // 10-byte footer (flags bit 4 — v2.4 §3.1: a footered tag may
+          // not be padded, and the size field does not count the footer)
+          10L + synchsafe(p, 6) + (if ((p(5) & 0x10) != 0) 10L else 0L)
         } else 0L
       // tolerate zero padding between the tag and the first frame (some
       // encoders leave it outside the declared tag size); only 0x00 bytes
@@ -416,48 +403,67 @@ object Multimodal {
       else (sr, ch, kbps0, frames, frames * 1152L * 1000L / sr)
     }
 
-    /** (sample_rate, n_channels, bits_per_sample, total_samples,
-      * duration_ms) from a FLAC STREAMINFO block, or zeros. FLAC metadata
-      * is a block walk (public spec, RFC 9639): after the "fLaC" magic,
-      * each block is [1-byte header: last-flag(1) + type(7)] [3-byte BE
-      * length] [payload]; STREAMINFO (type 0, 34 bytes, spec-required
-      * first) packs sample rate (20 bits), channels−1 (3), bits−1 (5) and
-      * a 36-bit total-sample count into the 8 bytes after the block/frame
-      * size fields. Header-priced like the other container walks; FLAC
-      * SAMPLE decode stays behind [[FakeCodec]].
+    /** What a FLAC consumer needs from the metadata block walk: the
+      * first STREAMINFO's fields (all zero when there is none, or when
+      * its sample rate is the invalid 0) and the offset of the first
+      * audio frame — just past the block that carries the last-block
+      * flag, or -1 when the walk never reaches one inside the payload.
       */
-    def parseFlac(p: Array[Byte]): (Int, Int, Int, Long, Long) = {
-      if (!isFlac(p)) return (0, 0, 0, 0L, 0L)
-      // Long offset: block lengths are attacker-controlled 24-bit values,
-      // and an Int accumulator could wrap negative near a 2 GiB payload
-      // and index out of bounds — same never-throw discipline as the MP4
-      // walk's entry_count clamp and the MP3 walk's Long offset
+    private[multimodal] final case class FlacLayout(
+        rate: Int, channels: Int, bits: Int, total: Long, frameOff: Int)
+
+    /** THE FLAC metadata walk — for parseFlac and FlacCodec.decodeStats
+      * (public spec, RFC 9639): after the "fLaC" magic, each block is
+      * [1-byte header: last-flag(1) + type(7)] [3-byte BE length]
+      * [payload]; STREAMINFO (type 0, 34 bytes, spec-required first)
+      * packs sample rate (20 bits), channels−1 (3), bits−1 (5) and a
+      * 36-bit total-sample count into the 8 bytes after the block/frame
+      * size fields. A truncated later block leaves the STREAMINFO read
+      * before it standing. Long offset: block lengths are attacker-
+      * controlled 24-bit values, and an Int accumulator could wrap
+      * negative near a 2 GiB payload. `null` for non-FLAC payloads.
+      */
+    private[multimodal] def walkFlac(p: Array[Byte]): FlacLayout = {
+      if (!isFlac(p)) return null
+      var rate = 0; var channels = 0; var bits = 0; var total = 0L
+      var infoSeen = false
       var off = 4L
-      var done = false
-      while (!done && off + 4 <= p.length) {
+      var last = false
+      while (!last && off + 4 <= p.length) {
         val o = off.toInt
         val hdr = p(o) & 0xff
-        val last = (hdr & 0x80) != 0
-        val typ = hdr & 0x7f
         val len = ((p(o + 1) & 0xff) << 16) | ((p(o + 2) & 0xff) << 8) |
           (p(o + 3) & 0xff)
-        if (typ == 0 && len >= 34 && off + 4 + 34 <= p.length) {
+        if (!infoSeen && (hdr & 0x7f) == 0 && len >= 34 && off + 4 + 34 <= p.length) {
+          infoSeen = true
           // bytes 10..17 of STREAMINFO: sr(20) ch-1(3) bps-1(5) total(36)
           val base = o + 4 + 10
           var packed = 0L
           var i = 0
           while (i < 8) { packed = (packed << 8) | (p(base + i) & 0xffL); i += 1 }
-          val sr = (packed >>> 44).toInt
-          val ch = ((packed >>> 41) & 0x7).toInt + 1
-          val bps = ((packed >>> 36) & 0x1f).toInt + 1
-          val total = packed & 0xfffffffffL // low 36 bits
-          return if (sr <= 0) (0, 0, 0, 0L, 0L)
-          else (sr, ch, bps, total, total * 1000L / sr)
+          rate = (packed >>> 44).toInt
+          if (rate > 0) {
+            channels = ((packed >>> 41) & 0x7).toInt + 1
+            bits = ((packed >>> 36) & 0x1f).toInt + 1
+            total = packed & 0xfffffffffL // low 36 bits
+          }
         }
         off += 4 + len
-        done = last
+        last = (hdr & 0x80) != 0
       }
-      (0, 0, 0, 0L, 0L)
+      FlacLayout(rate, channels, bits, total,
+        if (last && off <= p.length) off.toInt else -1)
+    }
+
+    /** (sample_rate, n_channels, bits_per_sample, total_samples,
+      * duration_ms) from a FLAC STREAMINFO block ([[walkFlac]]), or
+      * zeros. Header-priced like the other container walks; FLAC SAMPLE
+      * decode is [[FlacCodec]].
+      */
+    def parseFlac(p: Array[Byte]): (Int, Int, Int, Long, Long) = {
+      val f = walkFlac(p)
+      if (f == null || f.rate <= 0) (0, 0, 0, 0L, 0L)
+      else (f.rate, f.channels, f.bits, f.total, f.total * 1000L / f.rate)
     }
 
     def isFlac(p: Array[Byte]): Boolean =
@@ -475,9 +481,7 @@ object Multimodal {
     def id3TextFrames(p: Array[Byte]): Seq[(String, String)] = {
       if (!hasId3v2(p)) return Nil
       val v24 = p(3) == 4
-      val tagSize = ((p(6) & 0x7f) << 21) | ((p(7) & 0x7f) << 14) |
-        ((p(8) & 0x7f) << 7) | (p(9) & 0x7f)
-      val end = math.min(10L + tagSize, p.length.toLong).toInt
+      val end = math.min(10L + synchsafe(p, 6), p.length.toLong).toInt
       val out = Seq.newBuilder[(String, String)]
       var off = 10
       var done = false
@@ -486,8 +490,7 @@ object Multimodal {
         else {
           val id = new String(p, off, 4, java.nio.charset.StandardCharsets.US_ASCII)
           val sz =
-            if (v24) ((p(off + 4) & 0x7f) << 21) | ((p(off + 5) & 0x7f) << 14) |
-              ((p(off + 6) & 0x7f) << 7) | (p(off + 7) & 0x7f)
+            if (v24) synchsafe(p, off + 4)
             else ((p(off + 4) & 0xff) << 24) | ((p(off + 5) & 0xff) << 16) |
               ((p(off + 6) & 0xff) << 8) | (p(off + 7) & 0xff)
           if (sz < 0 || off + 10L + sz > end) done = true
@@ -527,6 +530,12 @@ object Multimodal {
         p(3) >= 2 && p(3) <= 4 && (p(4) & 0xff) != 0xff &&
         (p(6) & 0x80) == 0 && (p(7) & 0x80) == 0 &&
         (p(8) & 0x80) == 0 && (p(9) & 0x80) == 0
+
+    /** The ID3v2 SYNCHSAFE integer at `o`: 4 bytes, 7 bits each — the
+      * tag size at 6 (header and footer not counted) and v2.4 frame sizes.
+      */
+    private def synchsafe(p: Array[Byte], o: Int): Int =
+      ((p(o) & 0x7f) << 21) | ((p(o + 1) & 0x7f) << 14) | ((p(o + 2) & 0x7f) << 7) | (p(o + 3) & 0x7f)
 
     def isMp3(p: Array[Byte]): Boolean =
       p.length >= 4 &&
@@ -638,48 +647,58 @@ object Multimodal {
         p(0) == 'R' && p(1) == 'I' && p(2) == 'F' && p(3) == 'F' &&
         p(8) == 'A' && p(9) == 'V' && p(10) == 'I' && p(11) == ' '
 
-    /** (width, height, total_frames, usec_per_frame, duration_ms) from an
-      * AVI main header ('avih' inside LIST/hdrl — the public RIFF/AVI
-      * layout), or zeros. Chunk walk only: fourcc + LE32 size, bodies
-      * padded to even length per RIFF; every read bounds-checked, any
-      * structural violation reports the corrupt-media contract. Frame
-      * PIXEL decode for the uncompressed-DIB case is [[VideoOps]]; this
-      * is the header-priced metadata half.
+    /** THE AVI chunk walk — every AVI consumer (parseAvi, VideoOps'
+      * frame decoders) reads chunks through it. Visits (fourcc offset,
+      * size) of each leaf chunk inside every top-level LIST of type
+      * `listType` ("hdrl", "movi"); the leaf body is p[off + 8, off + 8 +
+      * size). RIFF layout: fourcc + LE32 size, bodies padded to even
+      * length. Long offsets: chunk sizes are attacker-controlled u32 (the
+      * never-throw discipline of the MP3/FLAC/Ogg walks). A truncated
+      * LIST is walked up to the bytes actually present (parseWav's clamp
+      * rule); a truncated LEAF ends that LIST's walk, never partially
+      * read. Non-AVI payloads visit nothing.
       */
-    def parseAvi(p: Array[Byte]): (Int, Int, Long, Long, Long) = {
-      def le32(o: Int): Long = ContainerCodec.le32(p, o)
-      def fcc(o: Int, s: String): Boolean = ContainerCodec.fccIs(p, o, s)
-      if (!isAvi(p)) return (0, 0, 0L, 0L, 0L)
-      var w = 0L; var h = 0L; var n = 0L; var mspf = 0L
-      // Long offsets: chunk sizes are attacker-controlled u32 — the
-      // never-throw discipline of the MP3/FLAC/Ogg walks. A truncated
-      // LIST is walked up to the bytes actually present (parseWav's clamp
-      // rule); a truncated LEAF chunk is skipped, never partially read.
+    private[multimodal] def walkAviList(p: Array[Byte], listType: String)(
+        visit: (Int, Int) => Unit): Unit = {
+      if (!isAvi(p)) return
       var off = 12L
       while (off + 12 <= p.length) {
         val o = off.toInt
-        val size = le32(o + 4)
+        val size = le32(p, o + 4)
         val body = off + 8
-        if (fcc(o, "LIST") && size >= 4 && fcc(o + 8, "hdrl")) {
+        if (fccIs(p, o, "LIST") && size >= 4 && fccIs(p, o + 8, listType)) {
           var so = body + 4
           val end = math.min(body + size, p.length.toLong)
           var sok = true
           while (sok && so + 8 <= end) {
-            val s = so.toInt
-            val ssz = le32(s + 4)
+            val ssz = le32(p, so.toInt + 4)
             if (so + 8 + ssz > end) sok = false
             else {
-              if (fcc(s, "avih") && ssz >= 40) {
-                mspf = le32(s + 8)
-                n = le32(s + 8 + 16)
-                w = le32(s + 8 + 32)
-                h = le32(s + 8 + 36)
-              }
+              visit(so.toInt, ssz.toInt)
               so += 8 + ssz + (ssz & 1)
             }
           }
         }
         off = body + size + (size & 1)
+      }
+    }
+
+    /** (width, height, total_frames, usec_per_frame, duration_ms) from an
+      * AVI main header ('avih' inside LIST/hdrl — the public RIFF/AVI
+      * layout, read by [[walkAviList]]), or zeros. Any structural
+      * violation reports the corrupt-media contract. Frame PIXEL decode
+      * for the uncompressed-DIB case is [[VideoOps]]; this is the
+      * header-priced metadata half.
+      */
+    def parseAvi(p: Array[Byte]): (Int, Int, Long, Long, Long) = {
+      var w = 0L; var h = 0L; var n = 0L; var mspf = 0L
+      walkAviList(p, "hdrl") { (s, ssz) =>
+        if (fccIs(p, s, "avih") && ssz >= 40) {
+          mspf = le32(p, s + 8)
+          n = le32(p, s + 8 + 16)
+          w = le32(p, s + 8 + 32)
+          h = le32(p, s + 8 + 36)
+        }
       }
       // DWORD fields above Int.MaxValue are physically impossible declared
       // dimensions → corrupt, not a negative-Int surprise downstream
@@ -1248,6 +1267,70 @@ object Multimodal {
     */
   object ImageOps {
 
+    // ImageIO's stream-based write wraps its argument in a
+    // createImageOutputStream, which with the default useCache=true is a
+    // FILE-backed cache: every synth would round-trip the payload through
+    // a temp file on disk. All payloads here are in-memory byte arrays,
+    // so the disk cache is off process-wide (the flag only selects
+    // Memory- vs FileCache streams; encoded bytes are identical). Set
+    // here, in the object that owns [[withReader]] and [[write]], so it
+    // is set before any read or write.
+    javax.imageio.ImageIO.setUseCache(false)
+
+    /** Runs `f` on the first `javax.imageio` reader that claims `bytes`
+      * (its input set to an in-memory stream; disposed after), or returns
+      * `none` when no reader does. THE reader-open of the image tier:
+      * [[read]], [[ImageCodec.decode]] and [[gifFrameFeatures]]. Metadata
+      * is ignored, as `ImageIO.read` does: the PNG reader then skips the
+      * ancillary chunks, whose zTXt/iTXt/iCCP inflate has no size cap (a
+      * deflate bomb in a text chunk would exhaust the executor) and whose
+      * parse errors would lose an image with intact pixels. Random access
+      * stays on for `getNumImages(true)` and `read(i)`.
+      */
+    private[multimodal] def withReader[T](bytes: Array[Byte], none: T)(
+        f: javax.imageio.ImageReader => T): T = {
+      val iis = new javax.imageio.stream.MemoryCacheImageInputStream(
+        new java.io.ByteArrayInputStream(bytes))
+      try {
+        val readers = javax.imageio.ImageIO.getImageReaders(iis)
+        if (!readers.hasNext) none
+        else {
+          val r = readers.next()
+          try { r.setInput(iis, false, true); f(r) } finally r.dispose()
+        }
+      } finally iis.close()
+    }
+
+    /** THE full image decode: the first image of an encoded
+      * PNG/JPEG/GIF/BMP, or null when the bytes do not decode — unknown
+      * format, corrupt or truncated data. A JPEG cut inside its
+      * entropy-coded scan decodes "successfully" to a gray-filled image
+      * with only a "premature end of data segment" warning, so that
+      * warning (and libjpeg's "premature end of JPEG file") counts as
+      * corrupt. Other warnings keep the image: "N extraneous bytes before
+      * marker", common in camera and web JPEGs, and a missing EOI marker
+      * after a complete scan lose no pixels. Every caller maps null to
+      * the corrupt-media contract (no row), never a task failure.
+      */
+    def read(bytes: Array[Byte]): java.awt.image.BufferedImage =
+      try withReader[java.awt.image.BufferedImage](bytes, null) { r =>
+        var cut = false
+        r.addIIOReadWarningListener((_, msg) =>
+          if (msg != null && msg.toLowerCase(java.util.Locale.ROOT).contains("premature end")) cut = true)
+        val img = r.read(0)
+        if (cut) null else img
+      } catch { case scala.util.control.NonFatal(_) => null }
+
+    /** Encode `img` in `format` ("png", "jpg", ...) with the JDK writer.
+      * The one single-image encode; [[synthGif]]'s multi-frame sequence
+      * writer is the one other encoder.
+      */
+    def write(img: java.awt.image.BufferedImage, format: String): Array[Byte] = {
+      val bos = new java.io.ByteArrayOutputStream()
+      javax.imageio.ImageIO.write(img, format, bos)
+      bos.toByteArray
+    }
+
     /** Luminance grid of `img` downsampled to tw×th by top-left
       * nearest-neighbor (src = floor(dst·srcDim/dstDim)) — explicit
       * integer sampling, bit-reproducible everywhere. Luminance = the
@@ -1294,9 +1377,7 @@ object Multimodal {
         }
         y += 1
       }
-      val bos = new java.io.ByteArrayOutputStream()
-      javax.imageio.ImageIO.write(img, "png", bos)
-      bos.toByteArray
+      write(img, "png")
     }
 
     /** Deterministic COLOR PNG: w = 12 + key%11, h = 12 + key%7, channel
@@ -1321,9 +1402,7 @@ object Multimodal {
         }
         y += 1
       }
-      val bos = new java.io.ByteArrayOutputStream()
-      javax.imageio.ImageIO.write(img, "png", bos)
-      bos.toByteArray
+      write(img, "png")
     }
 
     /** Nearest-neighbor resize to tw×th, packed 0xRRGGBB row-major — the
@@ -1548,32 +1627,22 @@ object Multimodal {
       import media.sparkSession.implicits._
       media.mapPartitions { rows =>
         rows.filter(_.payload != null).flatMap { r =>
-          val iis = new javax.imageio.stream.MemoryCacheImageInputStream(
-            new java.io.ByteArrayInputStream(r.payload))
-          try {
-            val readers = javax.imageio.ImageIO.getImageReaders(iis)
-            if (!readers.hasNext) Seq.empty
-            else {
-              val rd = readers.next()
-              try {
-                rd.setInput(iis)
-                val n =
-                  try rd.getNumImages(true)
-                  catch { case scala.util.control.NonFatal(_) => 0 }
-                (0 until n).flatMap { i =>
-                  val img =
-                    try rd.read(i)
-                    catch { case scala.util.control.NonFatal(_) => null }
-                  if (img == null || img.getWidth < 8 || img.getHeight < 8) None
-                  else {
-                    val g = lumaGrid(img, 8, 8)
-                    Some((r.media_id, i, n, img.getWidth, img.getHeight,
-                      g.map(_.map(_.toLong).sum).sum, dHash56(g)))
-                  }
-                }
-              } finally rd.dispose()
+          withReader(r.payload, IndexedSeq.empty[(Long, Int, Int, Int, Int, Long, Long)]) { rd =>
+            val n =
+              try rd.getNumImages(true)
+              catch { case scala.util.control.NonFatal(_) => 0 }
+            (0 until n).flatMap { i =>
+              val img =
+                try rd.read(i)
+                catch { case scala.util.control.NonFatal(_) => null }
+              if (img == null || img.getWidth < 8 || img.getHeight < 8) None
+              else {
+                val g = lumaGrid(img, 8, 8)
+                Some((r.media_id, i, n, img.getWidth, img.getHeight,
+                  g.map(_.map(_.toLong).sum).sum, dHash56(g)))
+              }
             }
-          } finally iis.close()
+          }
         }
       }.toDF("media_id", "frame_idx", "n_frames", "width", "height", "sum_lum", "dhash")
     }
@@ -1586,9 +1655,7 @@ object Multimodal {
       import media.sparkSession.implicits._
       media.mapPartitions { rows =>
         rows.filter(_.payload != null).flatMap { r =>
-          val img =
-            try javax.imageio.ImageIO.read(new java.io.ByteArrayInputStream(r.payload))
-            catch { case scala.util.control.NonFatal(_) => null }
+          val img = read(r.payload)
           if (img == null || img.getWidth < 8 || img.getHeight < 8) None
           else {
             val g = lumaGrid(img, 8, 8)
@@ -1657,9 +1724,7 @@ object Multimodal {
       import media.sparkSession.implicits._
       media.mapPartitions { rows =>
         rows.filter(_.payload != null).flatMap { r =>
-          val img =
-            try javax.imageio.ImageIO.read(new java.io.ByteArrayInputStream(r.payload))
-            catch { case scala.util.control.NonFatal(_) => null }
+          val img = read(r.payload)
           if (img == null || img.getWidth < 16 || img.getHeight < 16) None
           else Some((r.media_id, img.getWidth, img.getHeight,
             whtHash16(lumaGrid(img, 16, 16))))
@@ -1703,8 +1768,6 @@ object Multimodal {
 
     private[graft] def decodeAviFrames(id: Long, p: Array[Byte])
         : Seq[(Long, Int, Long, Int, Int, Long, Long, Long)] = {
-      def le32(o: Int): Long = ContainerCodec.le32(p, o)
-      def fcc(o: Int, s: String): Boolean = ContainerCodec.fccIs(p, o, s)
       val (w, h, n, _, durMs) = ContainerCodec.parseAvi(p)
       // frames smaller than the 8×8 grid carry no stable fingerprint —
       // same floor as the image tiers
@@ -1720,44 +1783,23 @@ object Multimodal {
       val rowBytes = rowBytesL.toInt
       val out = Seq.newBuilder[(Long, Int, Long, Int, Int, Long, Long, Long)]
       var idx = 0
-      var off = 12L
-      // truncated LIST → walk the bytes present (the container clamp
-      // rule); a truncated FRAME chunk is dropped, never partially decoded
-      while (off + 12 <= p.length) {
-        val o = off.toInt
-        val size = le32(o + 4)
-        val body = off + 8
-        if (fcc(o, "LIST") && size >= 4 && fcc(o + 8, "movi")) {
-          var so = body + 4
-          val end = math.min(body + size, p.length.toLong)
-          var sok = true
-          while (sok && so + 8 <= end) {
-            val s = so.toInt
-            val ssz = le32(s + 4)
-            if (so + 8 + ssz > end) sok = false
-            else {
-              // '00db' = stream 0 uncompressed DIB; '00dc' = compressed
-              // (kept for stream position, never decoded here)
-              val isDib = fcc(s, "00db")
-              val isVideoChunk = isDib || fcc(s, "00dc")
-              if (isDib && ssz == frameSize) {
-                val base = s + 8
-                // bottom-up DIB: logical row y lives at file row h-1-y;
-                // BGR byte order → the blue channel is byte 0 of a pixel
-                val g = Array.tabulate(8, 8) { (y, x) =>
-                  val sy = y * h / 8
-                  val sx = x * w / 8
-                  p(base + (h - 1 - sy) * rowBytes + 3 * sx) & 0xff
-                }
-                out += ((id, idx, n, w, h, durMs,
-                  g.map(_.map(_.toLong).sum).sum, ImageOps.dHash56(g)))
-              }
-              if (isVideoChunk) idx += 1
-              so += 8 + ssz + (ssz & 1)
-            }
+      ContainerCodec.walkAviList(p, "movi") { (s, ssz) =>
+        // '00db' = stream 0 uncompressed DIB; '00dc' = compressed
+        // (kept for stream position, never decoded here)
+        val isDib = ContainerCodec.fccIs(p, s, "00db")
+        if (isDib && ssz == frameSize) {
+          val base = s + 8
+          // bottom-up DIB: logical row y lives at file row h-1-y;
+          // BGR byte order → the blue channel is byte 0 of a pixel
+          val g = Array.tabulate(8, 8) { (y, x) =>
+            val sy = y * h / 8
+            val sx = x * w / 8
+            p(base + (h - 1 - sy) * rowBytes + 3 * sx) & 0xff
           }
+          out += ((id, idx, n, w, h, durMs,
+            g.map(_.map(_.toLong).sum).sum, ImageOps.dHash56(g)))
         }
-        off = body + size + (size & 1)
+        if (isDib || ContainerCodec.fccIs(p, s, "00dc")) idx += 1
       }
       out.result()
     }
@@ -1784,52 +1826,29 @@ object Multimodal {
 
     private[graft] def decodeMjpegFrames(id: Long, p: Array[Byte])
         : Seq[(Long, Int, Long, Int, Int, Long, Long, Long)] = {
-      def le32(o: Int): Long = ContainerCodec.le32(p, o)
-      def fcc(o: Int, s: String): Boolean = ContainerCodec.fccIs(p, o, s)
       val (w, h, n, _, _) = ContainerCodec.parseAvi(p)
       if (w <= 0 || h <= 0) return Seq.empty
       val out = Seq.newBuilder[(Long, Int, Long, Int, Int, Long, Long, Long)]
       var idx = 0
-      var off = 12L
-      while (off + 12 <= p.length) {
-        val o = off.toInt
-        val size = le32(o + 4)
-        val body = off + 8
-        if (fcc(o, "LIST") && size >= 4 && fcc(o + 8, "movi")) {
-          var so = body + 4
-          val end = math.min(body + size, p.length.toLong)
-          var sok = true
-          while (sok && so + 8 <= end) {
-            val s2 = so.toInt
-            val ssz = le32(s2 + 4)
-            if (so + 8 + ssz > end) sok = false
-            else {
-              if (fcc(s2, "00dc") && ssz >= 4) {
-                val bytes = java.util.Arrays.copyOfRange(p, s2 + 8, (so + 8 + ssz).toInt)
-                val img =
-                  try javax.imageio.ImageIO.read(new java.io.ByteArrayInputStream(bytes))
-                  catch { case _: Exception => null }
-                if (img != null && img.getWidth == w && img.getHeight == h) {
-                  var sr = 0L; var sg = 0L; var sb = 0L
-                  var y = 0
-                  while (y < h) {
-                    var x = 0
-                    while (x < w) {
-                      val rgb = img.getRGB(x, y)
-                      sr += (rgb >> 16) & 0xff; sg += (rgb >> 8) & 0xff; sb += rgb & 0xff
-                      x += 1
-                    }
-                    y += 1
-                  }
-                  out += ((id, idx, n, w, h, sr, sg, sb))
-                }
-                idx += 1
+      ContainerCodec.walkAviList(p, "movi") { (s, ssz) =>
+        if (ContainerCodec.fccIs(p, s, "00dc") && ssz >= 4) {
+          val img = ImageOps.read(java.util.Arrays.copyOfRange(p, s + 8, s + 8 + ssz))
+          if (img != null && img.getWidth == w && img.getHeight == h) {
+            var sr = 0L; var sg = 0L; var sb = 0L
+            var y = 0
+            while (y < h) {
+              var x = 0
+              while (x < w) {
+                val rgb = img.getRGB(x, y)
+                sr += (rgb >> 16) & 0xff; sg += (rgb >> 8) & 0xff; sb += rgb & 0xff
+                x += 1
               }
-              so += 8 + ssz + (ssz & 1)
+              y += 1
             }
+            out += ((id, idx, n, w, h, sr, sg, sb))
           }
+          idx += 1
         }
-        off = body + size + (size & 1)
       }
       out.result()
     }
@@ -2417,9 +2436,7 @@ object Multimodal {
           }
           y += 1
         }
-        val bos = new java.io.ByteArrayOutputStream()
-        javax.imageio.ImageIO.write(img, "jpg", bos)
-        bos.toByteArray
+        ImageOps.write(img, "jpg")
       }
       val frameSpace = frames.map(fb => 8 + fb.length + (fb.length & 1)).sum
       val maxFrame = frames.map(_.length).max

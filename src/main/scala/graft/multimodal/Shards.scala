@@ -34,12 +34,13 @@ import org.apache.spark.sql.functions.col
   *    the payload even though the compressed encoding itself is
   *    producer-specific (which is why gates oracle the DECOMPRESSED
   *    features only).
+  *
+  * One-walk rule (as in [[Multimodal]]): `ArchiveCodec.walkTar` is the
+  * one ustar walk and `readCapped` the one bomb-capped read of a
+  * decompressing stream; every tar, gzip, zstd and zip consumer calls
+  * them and never re-walks the bytes.
   */
 object Shards {
-
-  // disk-cache-free ImageIO streams (see Multimodal's initializer) — this
-  // object's task closures can run before any Multimodal code is touched
-  javax.imageio.ImageIO.setUseCache(false)
 
   /** One tar member's metadata + content fingerprint: byte_sum is the
     * plain Σ of unsigned byte values — integer-exact, so a SQL oracle
@@ -79,103 +80,86 @@ object Shards {
       if (seen) v else -1L
     }
 
-    private def isUstar(p: Array[Byte], base: Int): Boolean =
-      base + 263 <= p.length &&
-        p(base + 257) == 'u' && p(base + 258) == 's' && p(base + 259) == 't' &&
-        p(base + 260) == 'a' && p(base + 261) == 'r'
+    /** True iff [[walkTar]] visits at least one regular-file member. */
+    def isTar(p: Array[Byte]): Boolean = {
+      var seen = false
+      walkTar(p)((_, _, _, _) => seen = true)
+      seen
+    }
 
-    /** True iff the payload starts with a valid ustar header block. */
-    def isTar(p: Array[Byte]): Boolean =
-      p.length >= 512 && isUstar(p, 0) && octal(p, 124, 12) >= 0
-
-    /** Walk every member of a ustar archive. Truncated archives yield
-      * the members fully present (the container clamp rule); a header
-      * that is neither ustar nor all-zero ends the walk; non-file
-      * members (directories, links — typeflag ≠ '0'/NUL) advance the
-      * stream but emit no row.
+    /** THE ustar walk — every tar consumer ([[tarMembers]],
+      * [[tarMemberBytes]], [[isTar]]) reads members through it, so a
+      * bounds fix lands once. Visits (member_idx, name, body offset,
+      * size) of each regular-file member (typeflag '0'/NUL); other
+      * members (directories, links) advance the stream and the index but
+      * are not visited. An all-zero block, a header that is not ustar, or
+      * a non-octal size ends the walk; a truncated member is dropped with
+      * everything after it (the container clamp rule). Bodies are padded
+      * to the next 512 boundary.
       */
-    def tarMembers(id: Long, p: Array[Byte]): Seq[TarMember] = {
-      val out = Seq.newBuilder[TarMember]
+    private[multimodal] def walkTar(p: Array[Byte])(visit: (Int, String, Int, Int) => Unit): Unit = {
+      def isUstar(base: Int): Boolean =
+        base + 263 <= p.length &&
+          p(base + 257) == 'u' && p(base + 258) == 's' && p(base + 259) == 't' &&
+          p(base + 260) == 'a' && p(base + 261) == 'r'
       var off = 0L
       var idx = 0
       var done = false
       while (!done && off + 512 <= p.length) {
         val base = off.toInt
-        // terminator: an all-zero block
         var allZero = true
         var i = base
         while (allZero && i < base + 512) { if (p(i) != 0) allZero = false; i += 1 }
-        if (allZero) done = true
-        else if (!isUstar(p, base)) done = true
+        val size = if (allZero || !isUstar(base)) -1L else octal(p, base + 124, 12)
+        if (size < 0 || off + 512 + size > p.length) done = true
         else {
-          val size = octal(p, base + 124, 12)
-          if (size < 0) done = true
-          else {
-            val dataEnd = off + 512 + size
-            val typeflag = p(base + 156)
-            if (dataEnd > p.length) done = true // truncated member: dropped
-            else {
-              if (typeflag == '0' || typeflag == 0) {
-                var nameEnd = base
-                while (nameEnd < base + 100 && p(nameEnd) != 0) nameEnd += 1
-                val name = new String(p, base, nameEnd - base,
-                  java.nio.charset.StandardCharsets.US_ASCII)
-                var sum = 0L
-                var j = (off + 512).toInt
-                val e = dataEnd.toInt
-                while (j < e) { sum += p(j) & 0xff; j += 1 }
-                out += TarMember(id, idx, name, size, sum)
-              }
-              idx += 1
-              // body padded to the next 512 boundary
-              off = off + 512 + ((size + 511L) / 512L) * 512L
-            }
+          val typeflag = p(base + 156)
+          if (typeflag == '0' || typeflag == 0) {
+            var nameEnd = base
+            while (nameEnd < base + 100 && p(nameEnd) != 0) nameEnd += 1
+            visit(idx, new String(p, base, nameEnd - base,
+              java.nio.charset.StandardCharsets.US_ASCII), base + 512, size.toInt)
           }
+          idx += 1
+          off = off + 512 + ((size + 511L) / 512L) * 512L
         }
+      }
+    }
+
+    /** Every regular-file member of a ustar archive with its size and
+      * byte sum ([[walkTar]]'s contract).
+      */
+    def tarMembers(id: Long, p: Array[Byte]): Seq[TarMember] = {
+      val out = Seq.newBuilder[TarMember]
+      walkTar(p) { (idx, name, off, size) =>
+        out += TarMember(id, idx, name, size, byteSum(p, off, off + size))
       }
       out.result()
     }
 
     /** The [[tarMembers]] walk with member BODIES — for codec-boundary
       * composites that must decode member content in the same task
-      * (q260's WDS image pipeline). Same contracts: corrupt header or
-      * truncated member ends the walk at the valid prefix; only regular
-      * files are emitted. Payload slices never leave the boundary — the
-      * caller reduces them to features before returning rows.
+      * (q260's WDS image pipeline). Payload slices never leave the
+      * boundary — the caller reduces them to features before returning
+      * rows.
       */
     def tarMemberBytes(p: Array[Byte]): Seq[(String, Array[Byte])] = {
       val out = Seq.newBuilder[(String, Array[Byte])]
-      var off = 0L
-      var done = false
-      while (!done && off + 512 <= p.length) {
-        val base = off.toInt
-        var allZero = true
-        var i = base
-        while (allZero && i < base + 512) { if (p(i) != 0) allZero = false; i += 1 }
-        if (allZero) done = true
-        else if (!isUstar(p, base)) done = true
-        else {
-          val size = octal(p, base + 124, 12)
-          if (size < 0) done = true
-          else {
-            val dataEnd = off + 512 + size
-            val typeflag = p(base + 156)
-            if (dataEnd > p.length) done = true
-            else {
-              if (typeflag == '0' || typeflag == 0) {
-                var nameEnd = base
-                while (nameEnd < base + 100 && p(nameEnd) != 0) nameEnd += 1
-                val name = new String(p, base, nameEnd - base,
-                  java.nio.charset.StandardCharsets.US_ASCII)
-                out += ((name, java.util.Arrays.copyOfRange(
-                  p, (off + 512).toInt, dataEnd.toInt)))
-              }
-              off = off + 512 + ((size + 511L) / 512L) * 512L
-            }
-          }
-        }
+      walkTar(p) { (_, name, off, size) =>
+        out += ((name, java.util.Arrays.copyOfRange(p, off, off + size)))
       }
       out.result()
+    }
+
+    /** Σ of the unsigned bytes in p[from, until) — the integer-exact
+      * content fingerprint of tar/zip members, WARC records and
+      * decompressed streams.
+      */
+    private[multimodal] def byteSum(p: Array[Byte], from: Int, until: Int): Long = {
+      var sum = 0L
+      var i = from
+      while (i < until) { sum += p(i) & 0xff; i += 1 }
+      sum
     }
 
     /** Write a POSIX ustar archive from (name, body) members — the
@@ -238,36 +222,59 @@ object Shards {
       h
     }
 
-    /** Shared decompress-and-fingerprint loop: (decompressed_len,
-      * byte_sum) of the stream `mk` yields, or (-1, 0) if construction
-      * or any read throws IOException (truncation, bad header, CRC
-      * failure — JDK GZIPInputStream parses the header EAGERLY in its
-      * constructor, so `mk` runs inside the try) or the inflated size
-      * exceeds `maxOut` — the decompression-bomb cap that degrades a
+    /** THE bounded read of a decompressing stream: hands `in`'s bytes
+      * to `chunk` 8 KB at a time and stops once more than `maxOut` bytes
+      * have come out — the decompression-bomb cap that degrades a
       * few-KB-inflates-to-GBs payload to the corrupt-media contract
       * instead of an executor OOM (the ImageCodec header-only lesson
-      * applied to compression).
+      * applied to compression). Returns the bytes read, or -1 past the
+      * cap (the overflowing chunk is not handed on). Read errors
+      * propagate: each caller keeps its own corrupt-stream result.
       */
-    private def streamStats(mk: () => java.io.InputStream, maxOut: Long): (Long, Long) = {
+    private def readCapped(in: java.io.InputStream, maxOut: Long)(
+        chunk: (Array[Byte], Int) => Unit): Long = {
+      val buf = new Array[Byte](8192)
+      var total = 0L
+      var n = in.read(buf)
+      while (n > 0) {
+        total += n
+        if (total > maxOut) return -1L
+        chunk(buf, n)
+        n = in.read(buf)
+      }
+      total
+    }
+
+    /** [[readCapped]] over the whole stream `mk` opens: -1 for a bomb, or
+      * when construction or any read throws IOException (truncation, bad
+      * header, CRC failure — JDK GZIPInputStream parses the header
+      * EAGERLY in its constructor, so `mk` runs inside the try).
+      */
+    private def inflateCapped(mk: () => java.io.InputStream, maxOut: Long)(
+        chunk: (Array[Byte], Int) => Unit): Long = {
       var in: java.io.InputStream = null
       try {
         in = mk()
-        val buf = new Array[Byte](8192)
-        var len = 0L
-        var sum = 0L
-        var n = in.read(buf)
-        while (n > 0) {
-          var i = 0
-          while (i < n) { sum += buf(i) & 0xff; i += 1 }
-          len += n
-          if (len > maxOut) return (-1L, 0L)
-          n = in.read(buf)
-        }
-        (len, sum)
+        readCapped(in, maxOut)(chunk)
       } catch {
-        case _: java.io.IOException => (-1L, 0L)
+        case _: java.io.IOException => -1L
       } finally if (in != null) in.close()
     }
+
+    /** (decompressed_len, byte_sum) of the stream `mk` opens, or (-1, 0)
+      * for a corrupt stream or one inflating past `maxOut`.
+      */
+    private def streamStats(mk: () => java.io.InputStream, maxOut: Long): (Long, Long) = {
+      var sum = 0L
+      val len = inflateCapped(mk, maxOut)((buf, n) => sum += byteSum(buf, 0, n))
+      if (len < 0) (-1L, 0L) else (len, sum)
+    }
+
+    private def gzipIn(p: Array[Byte]): () => java.io.InputStream =
+      () => new java.util.zip.GZIPInputStream(new java.io.ByteArrayInputStream(p))
+
+    private def zstdIn(p: Array[Byte]): () => java.io.InputStream =
+      () => new com.github.luben.zstd.ZstdInputStream(new java.io.ByteArrayInputStream(p))
 
     /** gzip magic (RFC 1952 §2.3.1): 0x1f 0x8b. */
     def isGzip(p: Array[Byte]): Boolean =
@@ -283,8 +290,7 @@ object Shards {
       */
     def gunzipStats(p: Array[Byte], maxOut: Long = 64L << 20): (Long, Long) =
       if (p.length < 18 || !isGzip(p)) (-1L, 0L)
-      else streamStats(() => new java.util.zip.GZIPInputStream(
-        new java.io.ByteArrayInputStream(p)), maxOut)
+      else streamStats(gzipIn(p), maxOut)
 
     /** REAL deflate COMPRESSION length (RFC 1951 via the JDK Deflater,
       * fixed level/strategy, no preset dictionary) — the compression-
@@ -317,8 +323,7 @@ object Shards {
       */
     def unzstdStats(p: Array[Byte], maxOut: Long = 64L << 20): (Long, Long) =
       if (!isZstd(p)) (-1L, 0L)
-      else streamStats(() => new com.github.luben.zstd.ZstdInputStream(
-        new java.io.ByteArrayInputStream(p)), maxOut)
+      else streamStats(zstdIn(p), maxOut)
 
     /** Materialized magic-dispatched decompression for COMPOSITION
       * operators ([[Shards.compressedTarMemberRows]] needs the archive
@@ -328,29 +333,13 @@ object Shards {
       * map task — callers must not retain the result past the row.
       */
     def decompressBytes(p: Array[Byte], maxOut: Long = 64L << 20): Array[Byte] = {
-      val mk: () => java.io.InputStream =
-        if (isGzip(p) && p.length >= 18)
-          () => new java.util.zip.GZIPInputStream(new java.io.ByteArrayInputStream(p))
-        else if (isZstd(p))
-          () => new com.github.luben.zstd.ZstdInputStream(new java.io.ByteArrayInputStream(p))
+      val mk =
+        if (isGzip(p) && p.length >= 18) gzipIn(p)
+        else if (isZstd(p)) zstdIn(p)
         else return null
-      var in: java.io.InputStream = null
-      try {
-        in = mk()
-        val bos = new java.io.ByteArrayOutputStream()
-        val buf = new Array[Byte](8192)
-        var total = 0L
-        var n = in.read(buf)
-        while (n > 0) {
-          total += n
-          if (total > maxOut) return null
-          bos.write(buf, 0, n)
-          n = in.read(buf)
-        }
-        bos.toByteArray
-      } catch {
-        case _: java.io.IOException => null
-      } finally if (in != null) in.close()
+      val bos = new java.io.ByteArrayOutputStream()
+      if (inflateCapped(mk, maxOut)((buf, n) => bos.write(buf, 0, n)) < 0) null
+      else bos.toByteArray
     }
 
     /** Magic-dispatched decompression over the codecs a shard corpus
@@ -391,23 +380,16 @@ object Shards {
       try {
         in = new java.util.zip.ZipInputStream(
           new java.io.ByteArrayInputStream(p))
-        val buf = new Array[Byte](8192)
         var idx = 0
         var e = in.getNextEntry
         var ok = true
         while (ok && e != null) {
           if (!e.isDirectory) {
-            var len = 0L
             var sum = 0L
-            var n = in.read(buf)
-            while (ok && n > 0) {
-              var i = 0
-              while (i < n) { sum += buf(i) & 0xff; i += 1 }
-              len += n
-              if (len > maxOut) ok = false else n = in.read(buf)
-            }
+            val len = readCapped(in, maxOut)((buf, n) => sum += byteSum(buf, 0, n))
             // emit only after the FULL member read (a read that threw
             // or tripped the bomb cap never emits a partial row)
+            ok = len >= 0
             if (ok) out += TarMember(id, idx, e.getName, len, sum)
           }
           idx += 1
@@ -522,10 +504,8 @@ object Shards {
             // body + the two-CRLF record separator must be fully present
             if (bodyEnd + 4 > p.length) done = true
             else {
-              var sum = 0L
-              var j = cur
               val e = bodyEnd.toInt
-              while (j < e) { sum += p(j) & 0xff; j += 1 }
+              val sum = ArchiveCodec.byteSum(p, cur, e)
               if (p(e) == '\r' && p(e + 1) == '\n' && p(e + 2) == '\r' && p(e + 3) == '\n') {
                 out += WarcRecord(id, idx,
                   if (warcType == null) "" else warcType,
@@ -749,9 +729,7 @@ object Shards {
             val byExt = parts.map(p => p._2 -> p._3).toMap
             (byExt.get("png"), byExt.get("cls")) match {
               case (Some(png), Some(cls)) =>
-                val img =
-                  try javax.imageio.ImageIO.read(new java.io.ByteArrayInputStream(png))
-                  catch { case scala.util.control.NonFatal(_) => null }
+                val img = Multimodal.ImageOps.read(png)
                 if (img == null || img.getWidth < 16 || img.getHeight < 16) None
                 else Some((r.media_id, sampleKey, img.getWidth, img.getHeight,
                   Multimodal.ImageOps.whtHash16(

@@ -26,10 +26,6 @@ import graft.multimodal.Multimodal
   */
 object FormatDepthQueries {
 
-  // disk-cache-free ImageIO streams (see Multimodal's initializer) — the
-  // JPEG/MJPEG gates here call ImageIO.read/write directly in closures
-  javax.imageio.ImageIO.setUseCache(false)
-
   /** q235's blocklist — border-free terms (no proper prefix == suffix),
     * which makes the AC occurrence count equal DuckDB's replace-based
     * non-overlapping count; unlikely-in-fixture spellings keep injected
@@ -254,8 +250,7 @@ object FormatDepthQueries {
           }
         media.mapPartitions { rows =>
           rows.flatMap { r =>
-            val img = javax.imageio.ImageIO.read(
-              new java.io.ByteArrayInputStream(r.payload))
+            val img = Multimodal.ImageOps.read(r.payload)
             if (img == null) Iterator.empty
             else {
               val (rr, rg, rb) = Multimodal.ImageOps.channelSums(
@@ -528,8 +523,7 @@ object FormatDepthQueries {
           }
         media.mapPartitions { rows =>
           rows.flatMap { r =>
-            val img = javax.imageio.ImageIO.read(
-              new java.io.ByteArrayInputStream(r.payload))
+            val img = Multimodal.ImageOps.read(r.payload)
             if (img == null) Iterator.empty
             else {
               val pix = Multimodal.ImageOps.downscaleBoxRgb(img, 2)
@@ -599,15 +593,12 @@ object FormatDepthQueries {
                 }
                 y += 1
               }
-              val bos = new java.io.ByteArrayOutputStream()
-              javax.imageio.ImageIO.write(img, "jpg", bos)
-              Multimodal.MediaRow(id, bos.toByteArray, "image/jpeg")
+              Multimodal.MediaRow(id, Multimodal.ImageOps.write(img, "jpg"), "image/jpeg")
             }
           }
         media.mapPartitions { rows =>
           rows.flatMap { r =>
-            val img = javax.imageio.ImageIO.read(
-              new java.io.ByteArrayInputStream(r.payload))
+            val img = Multimodal.ImageOps.read(r.payload)
             if (img == null) Iterator.empty
             else {
               val key = (r.media_id % 97).toInt

@@ -317,10 +317,10 @@ object TxLog {
     snapshot(spark, dir, asOf).rows
 
   def append(spark: SparkSession, dir: String, df: DataFrame): Long =
-    commitLoop(spark, dir, df, overwriteAll = false)
+    commitLoop(spark, dir, df, overwriteAll = false, Map.empty)
 
   def overwrite(spark: SparkSession, dir: String, df: DataFrame): Long =
-    commitLoop(spark, dir, df, overwriteAll = true)
+    commitLoop(spark, dir, df, overwriteAll = true, Map.empty)
 
   /** Idempotent append — the exactly-once STREAMING SINK primitive (the
     * public Delta `txn` action shape): the entry records (appId,
@@ -335,24 +335,7 @@ object TxLog {
     require(appId.nonEmpty, "txlog idempotentAppend needs a stable appId")
     val pre = snapshot(spark, dir, None)
     if (pre.txns.get(appId).exists(_ >= batchId)) return pre.version // replay: no-op
-    val (addRel, counts, stats) = writeData(spark, dir, df)
-    val schemaJson = normSchemaJson(df.schema)
-    var attempt = 0
-    while (attempt < MaxRetries) {
-      val snap = snapshot(spark, dir, None)
-      if (snap.txns.get(appId).exists(_ >= batchId)) return snap.version // raced replay
-      if (snap.files.nonEmpty && snap.schema.json != schemaJson)
-        throw new IllegalArgumentException(
-          s"txlog append schema mismatch in $dir: table ${snap.schema.simpleString} vs data ${df.schema.simpleString}")
-      val entry = Entry(snap.version + 1, "append", schemaJson, addRel,
-        Seq.empty, counts, stats, Map(appId -> batchId))
-      if (tryClaim(spark, dir, entry)) {
-        maybeCheckpoint(spark, dir, snap.version + 1)
-        return snap.version + 1
-      }
-      attempt += 1
-    }
-    throw new IllegalStateException(s"txlog commit contention in $dir: $MaxRetries retries exhausted")
+    commitLoop(spark, dir, df, overwriteAll = false, Map(appId -> batchId))
   }
 
   /** Copy-on-write keyed MERGE (upsert): rows of `source` replace target
@@ -573,18 +556,27 @@ object TxLog {
     created
   }
 
-  private def commitLoop(spark: SparkSession, dir: String, df: DataFrame, overwriteAll: Boolean): Long = {
+  /** THE optimistic commit: write the data files once, then retry
+    * snapshot → schema check → claim of the next version until a claim
+    * wins. `txns` (appId -> batchId, empty for a plain append/overwrite)
+    * rides the entry, and a batch some racing commit already recorded
+    * commits nothing ([[idempotentAppend]]'s replay rule).
+    */
+  private def commitLoop(spark: SparkSession, dir: String, df: DataFrame, overwriteAll: Boolean,
+      txns: Map[String, Long]): Long = {
     val (addRel, counts, stats) = writeData(spark, dir, df)
     val schemaJson = normSchemaJson(df.schema)
     var attempt = 0
     while (attempt < MaxRetries) {
       val snap = snapshot(spark, dir, None)
+      if (txns.exists { case (app, batch) => snap.txns.get(app).exists(_ >= batch) })
+        return snap.version // raced replay
       if (!overwriteAll && snap.files.nonEmpty && snap.schema.json != schemaJson)
         throw new IllegalArgumentException(
           s"txlog append schema mismatch in $dir: table ${snap.schema.simpleString} vs data ${df.schema.simpleString}")
       val v = snap.version + 1
       val entry = Entry(v, if (overwriteAll) "overwrite" else "append", schemaJson,
-        addRel, if (overwriteAll) snap.files else Seq.empty, counts, stats)
+        addRel, if (overwriteAll) snap.files else Seq.empty, counts, stats, txns)
       if (tryClaim(spark, dir, entry)) {
         maybeCheckpoint(spark, dir, v)
         return v

@@ -126,6 +126,46 @@ class GraftInstallSpec extends SparkTestBase {
     assert(sites.toSet == allowed, s"temp-view sites: ${sites.mkString("; ")}")
   }
 
+  /** The trimmed lines of the member `def name` in `file`: its def line and
+    * every following line indented deeper (or blank).
+    */
+  private def defBody(file: String, name: String): Seq[String] = {
+    val lines = new String(java.nio.file.Files.readAllBytes(
+      java.nio.file.Paths.get(file)), "UTF-8").split("\n").toSeq
+    val start = lines.indexWhere(l => l.trim.matches(s"(private(\\[\\w+\\])? )?def $name\\b.*"))
+    assert(start >= 0, s"no def $name in $file")
+    val indent = lines(start).indexWhere(_ != ' ')
+    (lines(start) +: lines.drop(start + 1).takeWhile(l =>
+      l.trim.isEmpty || l.indexWhere(_ != ' ') > indent)).map(_.trim)
+  }
+
+  test("src/main walks each byte format once: every walk's marker stays inside its walk") {
+    // A copied container walk has to be fuzzed, and every crash fixed,
+    // once per copy. Each marker below belongs to one walk; consumers call
+    // the walk or extend its layout. This list may only grow.
+    val mm = "src/main/scala/graft/multimodal/Multimodal.scala"
+    val sh = "src/main/scala/graft/multimodal/Shards.scala"
+    val walks = Seq(
+      (sh, "walkTar", "isUstar("),                    // ustar header check
+      (mm, "walkAviList", "\"LIST\")"),               // AVI LIST fourcc match
+      (mm, "walkFlac", "0xfffffffffL"),               // STREAMINFO sample count
+      (sh, "readCapped", "> maxOut)"),                // capped inflate
+      (mm, "synchsafe", "0x7f) << 21"),               // ID3v2 synchsafe size
+      (mm, "withReader", "ImageIO.getImageReaders("), // image reader open
+      (mm, "read", "addIIOReadWarningListener("),     // full image decode
+      (mm, "write", "ImageIO.write("))                // image encode
+    val all = sourceLines("src/main")
+    walks.foreach { case (file, walk, marker) =>
+      val sites = all.filter(_._2.contains(marker))
+      val inside = defBody(file, walk).count(_.contains(marker))
+      assert(inside > 0 && sites.length == inside,
+        s"'$marker' outside $walk: ${sites.mkString("; ")}")
+    }
+    // the one decode is ImageOps.read; the cache flag is set once, by it
+    assert(!all.exists(_._2.contains("ImageIO.read(")))
+    assert(all.filter(_._2.contains("ImageIO.setUseCache(")).map(_._1) == Seq(mm))
+  }
+
   /** Runs `body` on a factory-built session over `spark.newSession()`: a
     * session no test has called `install` on (the builder hands back the
     * thread's active session).
