@@ -1,103 +1,85 @@
 package graft.functions
 
-import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.expressions.Window
+import java.util.regex.{Matcher, Pattern}
+import scala.annotation.tailrec
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
-import graft.Graft
 
-/** Relational BPE (Sennrich et al., ACL 2016): learn pair merges over a
-  * word-frequency dictionary and apply them, entirely as DataFrame ops.
+/** BPE (Sennrich et al., ACL 2016): learn pair merges over a
+  * word-frequency dictionary and apply them.
   *
-  * Shared by q150 (the merge trace) and q156 (encoding with the trained
-  * merges) so the training semantics cannot drift between gates; the
-  * [[oracle]] builders emit the DuckDB replay of the SAME rounds so both
-  * queries' oracles come from one template too.
+  * Shared by q150 (the merge trace), q156 (encoding with the trained
+  * merges) and q228 (tokenizing) so the training semantics cannot drift
+  * between gates; the [[oracle]] builders emit the DuckDB replay of the
+  * SAME rounds so the queries' oracles come from one template too.
   *
   * Scale: BPE trains on the DICTIONARY (|vocab| rows) — the only
-  * corpus-sized work is the word-count aggregation the caller does; each
-  * round shuffles ≤ Σ|word| symbol rows, constant rounds, localCheckpoint
-  * per round keeps plan depth flat (q68's pattern).
+  * corpus-sized work is the word-count aggregation the caller does. Each
+  * word's symbols are one `array<string>` column over the dictionary, and
+  * the carried state is the merge list (at most `nRounds` pairs), so it
+  * lives on the driver: a round is one weighted pair-count aggregate whose
+  * best pair is collected, and the merge is one codegen'd `regexp_replace`
+  * over the space-joined symbols in the next round's projection.
   */
 object Bpe {
 
-  // MEMORY_AND_DISK, not MEMORY_ONLY: localCheckpoint truncates lineage,
-  // so an LRU-evicted MEMORY_ONLY block is unrecomputable — a hard crash
-  // under storage pressure (ADVICE r8). This level spills only ON
-  // eviction; the healthy path never touches disk.
-  private val CkptLevel = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-
-  final case class Trained(merges: Vector[DataFrame], syms: DataFrame)
-
-  /** (word, pos, sym) char-level symbol rows, pos 1-based. Callers must
-    * have filtered empty words (Spark's sequence(1,0) is the descending
-    * [1,0], not empty — see q150's guard).
+  /** `merges` is (round, a, b, c) in round order, a local relation; `syms`
+    * is (word, pos, sym), pos 1-based.
     */
-  def initialSymbols(words: DataFrame): DataFrame =
-    words.select(col("word"),
-      posexplode(expr(
-        "transform(sequence(1, length(word)), i -> substring(word, i, 1))")))
-      .select(col("word"), (col("pos") + 1).cast("long").as("pos"),
-        col("col").as("sym"))
+  final case class Trained(merges: DataFrame, syms: DataFrame)
 
-  /** Run `nRounds` merge rounds. Each round: weighted adjacent-pair
-    * counts, argmax pair (count desc, pair lexical asc), greedy
-    * left-to-right non-overlapping replacement (island detection over
-    * consecutive matched positions, odd-index take), renumber.
+  /** (round, a, b, c): round's pair a b, merged into a + b, had count c. */
+  private type Merge = (Long, String, String, Long)
+
+  /** Run up to `nRounds` merge rounds over `words` (word, cnt): weighted
+    * adjacent-pair counts, argmax pair (count desc, pair lexical asc),
+    * greedy left-to-right non-overlapping replacement. Training stops early
+    * once no word has two symbols left. Words must hold no space: the
+    * merge splits the joined symbols on " ".
     */
   def train(words: DataFrame, nRounds: Int): Trained = {
-    val wOrd = Window.partitionBy(col("word")).orderBy(col("pos"))
-    // checkpoint the char-level symbol table (round 1 reads it through two
-    // consumers) and size the per-round shuffles to the measured symbol
-    // count (r10, guide §2.2 — the dictionary is |vocab|·avg-len rows, so
-    // a fixed 32-partition round pays far more scheduling than compute;
-    // the clamp keeps corpus-scale dictionaries at full parallelism). The
-    // count materializes the one corpus-sized word aggregate, a job round 1
-    // was about to run anyway.
-    val spark = words.sparkSession
-    var syms = initialSymbols(words).localCheckpoint(false, CkptLevel)
-    val loop = IterLoop.session(spark, IterLoop.partitionsFor(spark, syms.count()))
-    val dict = Graft.onSession(loop, words)
-    syms = Graft.onSession(loop, syms)
-    var bests = Vector.empty[DataFrame]
-    for (r <- 1 to nRounds) {
-      val withNext = syms.withColumn("nxt", lead(col("sym"), 1).over(wOrd))
-      val best = withNext.filter(col("nxt").isNotNull)
-        .join(dict, Seq("word"))
-        .groupBy(col("sym"), col("nxt")).agg(sum(col("cnt")).as("c"))
-        .select(col("sym").as("a"), col("nxt").as("b"), col("c"))
-        .orderBy(col("c").desc, col("a").asc, col("b").asc).limit(1)
-        // consumed by the merge AND the caller; spill-on-eviction — these are
-        // 1-row / dictionary-sized tables, eviction-spill is free and the
-        // lineage-free block can never be lost to LRU (ADVICE r8)
-        .localCheckpoint(false, CkptLevel)
-      bests :+= best.select(lit(r.toLong).as("round"), col("a"), col("b"), col("c"))
-      // LEFT join on a constant key, not crossJoin: once pairs are
-      // exhausted `best` is EMPTY and a cross join would silently collapse
-      // every remaining symbol row (q156's encoder would lose the corpus);
-      // with the left join a/b are null → no match → symbols pass through
-      val marked = withNext.withColumn("_k", lit(1))
-        .join(broadcast(best.select(lit(1).as("_k"), col("a"), col("b"))),
-          Seq("_k"), "left")
-        .drop("_k")
-        .withColumn("m",
-          coalesce(col("sym") === col("a") && col("nxt") === col("b"), lit(false)))
-        .withColumn("rnm", sum(when(col("m"), 1L).otherwise(0L)).over(wOrd))
-        .withColumn("island", when(col("m"), col("pos") - col("rnm")))
-        .withColumn("irn", row_number().over(
-          Window.partitionBy(col("word"), col("island")).orderBy(col("pos"))))
-        .withColumn("take", col("m") && col("irn") % 2 === 1)
-        .withColumn("consumed",
-          coalesce(lag(col("take"), 1).over(wOrd), lit(false)))
-      syms = marked.filter(!col("consumed"))
-        .select(col("word"), col("pos"),
-          when(col("take"), concat(col("sym"), col("nxt")))
-            .otherwise(col("sym")).as("sym"))
-        .withColumn("pos2", row_number().over(wOrd).cast("long"))
-        .select(col("word"), col("pos2").as("pos"), col("sym"))
-        .localCheckpoint(true, CkptLevel)
-    }
-    Trained(bests.map(Graft.onSession(spark, _)), Graft.onSession(spark, syms))
+    @tailrec def rounds(r: Int, symbols: Column, merges: Vector[Merge]): (Column, Vector[Merge]) =
+      if (r > nRounds) (symbols, merges)
+      else bestPair(words, symbols) match {
+        case Some((a, b, c)) => rounds(r + 1, merge(symbols, a, b), merges :+ ((r.toLong, a, b, c)))
+        case None => (symbols, merges)
+      }
+    // one symbol per code point, as substring counts them; (?s) keeps an
+    // inner line terminator as a symbol
+    val (symbols, merges) = rounds(1, regexp_extract_all(col("word"), lit("(?s)."), lit(0)), Vector.empty)
+    Trained(
+      words.sparkSession.createDataFrame(merges).toDF("round", "a", "b", "c"),
+      words.select(col("word"), posexplode(symbols))
+        .select(col("word"), (col("pos") + 1).cast("long").as("pos"), col("col").as("sym")))
   }
+
+  /** The (a, b) pair with the highest count summed over `cnt` (then a, then
+    * b ascending) in the `symbols` of `words`; None when no word has two
+    * symbols left.
+    */
+  private def bestPair(words: DataFrame, symbols: Column): Option[(String, String, Long)] = {
+    val s = col("s")
+    val n = size(s) - 1
+    words.select(col("cnt"), symbols.as("s"))
+      .filter(size(s) > 1)
+      .select(col("cnt"), explode(arrays_zip(slice(s, lit(1), n), slice(s, lit(2), n))).as("p"))
+      .groupBy(col("p").getField("0").as("a"), col("p").getField("1").as("b"))
+      .agg(sum(col("cnt")).as("c"))
+      .orderBy(col("c").desc, col("a").asc, col("b").asc)
+      .head(1).headOption.map(r => (r.getString(0), r.getString(1), r.getLong(2)))
+  }
+
+  /** Replace every adjacent (a, b) in `symbols` with `a + b`. The symbols
+    * are joined on " " and each match must span two whole symbols; Java's
+    * left-to-right, non-overlapping scan is BPE's greedy rule (a a a ->
+    * aa a). The pair is data, so it is quoted for the pattern and the
+    * replacement, and the end anchor is \z: $ also matches before a final
+    * line terminator.
+    */
+  private def merge(symbols: Column, a: String, b: String): Column =
+    split(regexp_replace(array_join(symbols, " "),
+      "(?<=\\A| )" + Pattern.quote(a) + " " + Pattern.quote(b) + "(?= |\\z)",
+      Matcher.quoteReplacement(a + b)), " ")
 
   /** DuckDB oracle fragments replaying the identical rounds. */
   object oracle {

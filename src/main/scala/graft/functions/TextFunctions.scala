@@ -185,9 +185,6 @@ object TextFunctions {
     * codepoint-consistent, astral chars included — verified, not
     * assumed). Empty text → empty array.
     */
-  val CdcBase = graft.expressions.CdcChunks.Base
-  val CdcMod = graft.expressions.CdcChunks.Mod
-
   def cdcChunks(text: Column): Column =
     // native codegen'd kernel (graft.expressions.CdcChunks) since r9: the
     // previous filter/transform higher-order composition was semantically

@@ -80,7 +80,6 @@ object FlacCodec {
     def alignByte(): Unit = if (nbits != 0) writeBits(0L, 8 - nbits)
 
     def size: Int = { require(nbits == 0); buf.length }
-    def byteAt(i: Int): Byte = buf(i)
     def writeByte(b: Int): Unit = writeBits(b.toLong & 0xff, 8)
     def toBytes: Array[Byte] = { require(nbits == 0); buf.toArray }
   }

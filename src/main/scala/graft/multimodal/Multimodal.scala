@@ -249,7 +249,6 @@ object Multimodal {
       * sample counts — the real frame count, no decode needed.
       */
     def parseMp4(p: Array[Byte]): (Long, Long, Int, Int, Int, Long) = {
-      def be16(o: Int) = ((p(o) & 0xff) << 8) | (p(o + 1) & 0xff)
       def be32(o: Int) = (p(o) & 0xffL) << 24 | (p(o + 1) & 0xffL) << 16 |
         (p(o + 2) & 0xffL) << 8 | (p(o + 3) & 0xffL)
       def be64(o: Int) = (0 until 8).foldLeft(0L)((a, i) => (a << 8) | (p(o + i) & 0xffL))

@@ -54,20 +54,7 @@ object Projector {
   def byNameAs(n: String, as: String): ProjectorSpec = ByName(n, Some(as))
   def byPosition(p: Int): ProjectorSpec = ByPosition(p)
   def byPositionAs(p: Int, as: String): ProjectorSpec = ByPosition(p, Some(as))
-  def allAttributes: ProjectorSpec = AllAttributes(None)
   def allPrefixed(prefix: String): ProjectorSpec = AllAttributes(Some(prefix))
 
   def of(specs: ProjectorSpec*): SingleSourceProjector = SingleSourceProjector(specs)
-}
-
-/** Multi-input projection (the reference's `MultiSourceProjector`,
-  * src/projector.rs:128-132, whose bind is unimplemented there): resolve
-  * by-name across several schemas with prefix disambiguation. On Spark the
-  * analyzer does cross-input resolution natively; this wrapper exists to
-  * preserve the reference's bind-time duplicate/missing checks for join
-  * outputs.
-  */
-object MultiSourceProjector {
-  def prefixAll(df: DataFrame, prefix: String): DataFrame =
-    df.select(df.columns.map(c => col(c).as(prefix + c)).toSeq: _*)
 }

@@ -14,38 +14,60 @@ import graft.sources.Tables
   *
   * Scale shapes: q160's shuffle carries one d(d+1)/2-long buffer per
   * partition regardless of N (TypedImperativeAggregate with map-side
-  * combine — the naive spelling ships d²/2 × N exploded rows); q161 runs
-  * entirely on the d×d ARTIFACT (dictionary-sized joins), so its cost is
-  * independent of corpus size once the Gram pass is done.
+  * combine — the naive spelling ships d²/2 × N exploded rows); q161
+  * collects that one d(d+1)/2-long buffer and iterates on the driver, so
+  * its cost is independent of corpus size once the Gram pass is done.
   *
   * Determinism: embeddings are quantized to integers (⌊1000·v⌋) before any
   * arithmetic, so every sum/product is exact 64-bit integer math in both
-  * engines; the power-iteration normalization divides with `div` / `//`,
-  * which BOTH truncate toward zero on integer types (the ADVICE-r3 floor
-  * divergence is specific to the double `/` + floor()/CAST path — integer
-  * division is already cross-engine-exact).
+  * engines; the power-iteration normalization divides with BigInt `/`
+  * (q161) and `//` (its oracle), which BOTH truncate toward zero on
+  * integers (the ADVICE-r3 floor divergence is specific to the double `/`
+  * + floor()/CAST path — integer division is already cross-engine-exact).
   */
 object MatrixQueries {
 
   private val D = 64
   private val Rounds = 6
 
+  /** The one-row Gram aggregate: `g`, the quantized upper triangle row by
+    * row (cell (i, j ≥ i) at i·D − i(i−1)/2 + (j − i)), and the row count.
+    */
+  private def gramAgg(s: SparkSession, d: String): DataFrame =
+    Tables.embeddings(s, d)
+      .select(transform(col("embedding"),
+        v => floor(v.cast("double") * 1000).cast("long")).as("qv"))
+      .agg(GramAggregate(col("qv"), D).as("g"), count(lit(1)).as("n"))
+
   /** Quantized upper-triangular Gram cells (i, j, gram, n) via
     * [[GramAggregate]] + a broadcast (t → i, j) spine.
     */
   private def gramTri(s: SparkSession, d: String): DataFrame = {
-    val q = Tables.embeddings(s, d)
-      .select(transform(col("embedding"),
-        v => floor(v.cast("double") * 1000).cast("long")).as("qv"))
-    val agg = q.agg(GramAggregate(col("qv"), D).as("g"), count(lit(1)).as("n"))
     val spine = s.range(D).select(col("id").cast("int").as("i"))
       .crossJoin(s.range(D).select(col("id").cast("int").as("j")))
       .filter(col("j") >= col("i"))
       // i(i−1) is always even, so the double division is exact
       .withColumn("t", expr(s"CAST(i * $D - CAST(i * (i - 1) / 2 AS INT) + (j - i) AS INT)"))
-    agg.select(col("n"), posexplode(col("g")).as(Seq("t2", "gram")))
+    gramAgg(s, d).select(col("n"), posexplode(col("g")).as(Seq("t2", "gram")))
       .join(broadcast(spine), col("t2") === col("t"))
       .select(col("i"), col("j"), col("gram"), col("n"))
+  }
+
+  /** q161: [[Rounds]] power rounds on the collected Gram buffer, in exact
+    * Long arithmetic on the driver (`multiplyExact`/`addExact` fail loudly
+    * on overflow, as Spark ANSI does), as (dim, v) in dim order.
+    */
+  private def powerIteration(s: SparkSession, d: String): DataFrame = {
+    val g = gramAgg(s, d).head().getSeq[Long](0).toIndexedSeq
+    def cell(i: Int, j: Int): Long =
+      if (i <= j) g(i * D - i * (i - 1) / 2 + (j - i)) else cell(j, i)
+    val v = (1 to Rounds).foldLeft(IndexedSeq.fill(D)(1000L)) { (v, _) =>
+      val w = (0 until D).map(i => (0 until D).foldLeft(0L)((acc, j) =>
+        Math.addExact(acc, Math.multiplyExact(cell(i, j), v(j)))))
+      val mx = BigInt(w.map(x => Math.absExact(x)).max)
+      w.map(x => (BigInt(x) * 1000 / mx).toLong)
+    }
+    s.createDataFrame(v.zipWithIndex.map { case (x, dim) => (dim, x) }).toDF("dim", "v")
   }
 
   /** Shared oracle prefix: quantized Gram upper triangle as DuckDB CTEs
@@ -113,53 +135,22 @@ object MatrixQueries {
     // ------------------------------------------------------------------
     // q161: dominant eigenvector by power iteration (Mises & Geiringer
     // 1929; the PCA/PageRank workhorse) in exact fixed point. After the
-    // q160 Gram pass, every round is a d²-row join + d-row aggregate —
-    // ARTIFACT-sized, corpus-independent, constant plan depth via
-    // localCheckpoint. Normalization is L∞ at
-    // scale 1000: v′ = trunc(1000·w / max|w|) — integer div truncates
-    // identically in both engines (max|w| > 0 always: the Gram matrix
-    // is PSD with positive diagonal and v₀ > 0). The w·1000 multiply
-    // runs in DECIMAL(38,0) (HUGEINT in DuckDB), so the post-aggregate
-    // ×1000 can never overflow at any SF and `div` still truncates to
-    // BIGINT. w's own BIGINT accumulation is bounded by d·max|gram|·1000
-    // (measured ~2·10¹³ at sf1; the bound grows linearly with corpus
-    // size toward the 9·10¹⁸ limit around ~10⁹ input rows) — if a corpus
-    // ever crosses it, Spark ANSI and DuckDB both fail LOUDLY and the
-    // gram terms move to DECIMAL the same way.
+    // q160 Gram pass, the state is a d-vector over a d(d+1)/2-cell buffer
+    // — ARTIFACT-sized and corpus-independent — so the one Gram row is
+    // collected and the rounds run on the driver with no job
+    // ([[powerIteration]]). Normalization is L∞ at scale 1000:
+    // v′ = trunc(1000·w / max|w|) — integer division truncates identically
+    // in both engines (max|w| > 0 always: the Gram matrix is PSD with
+    // positive diagonal and v₀ > 0). The w·1000 multiply runs in BigInt
+    // (HUGEINT in DuckDB), so the ×1000 can never overflow at any SF.
+    // w's own Long accumulation is bounded by d·max|gram|·1000 (measured
+    // ~2·10¹³ at sf1; the bound grows linearly with corpus size toward the
+    // 9·10¹⁸ limit around ~10⁹ input rows) — if a corpus ever crosses it,
+    // the driver's exact arithmetic and DuckDB both fail LOUDLY and the
+    // gram terms move to BigInt/HUGEINT the same way.
     GQuery(
       "q161_pca_power",
-      (s, d) => {
-        // The 6 power rounds run on the d×d ARTIFACT (≤ d² = 4096 rows by
-        // construction, corpus-independent), so they plan on a loop session
-        // whose shuffles are sized to the artifact, not the session default
-        // (r10, guide §2.2 — the r9-verdict iterative-loop item). The
-        // corpus-sized Gram pass materializes inside round 1's job with its
-        // map-side parallelism governed by the scan.
-        val loop = graft.functions.IterLoop.session(s,
-          graft.functions.IterLoop.partitionsFor(s, D.toLong * D))
-        val tri = gramTri(s, d)
-        val sym = graft.Graft.onSession(loop,
-          tri.select(col("i").as("gi"), col("j").as("gj"), col("gram"))
-            .unionByName(tri.filter(col("i") =!= col("j"))
-              .select(col("j").as("gi"), col("i").as("gj"), col("gram")))
-            .localCheckpoint(false)) // consumed once per round
-        var v = loop.range(D).select(col("id").cast("int").as("dim"), lit(1000L).as("v"))
-        for (_ <- 1 to Rounds) {
-          val w = sym.join(v, col("gj") === col("dim"))
-            .groupBy(col("gi"))
-            .agg(sum(col("gram") * col("v")).as("w"))
-          val mx = w.agg(max(abs(col("w"))).as("mx"))
-          v = w.crossJoin(broadcast(mx)) // 1-row side
-            .select(col("gi").as("dim"),
-              // INTEGER division truncates toward zero in BOTH engines
-              // (Spark `div`, DuckDB `//` on BIGINT/HUGEINT — verified:
-              // -7//2 = -3; DuckDB only floors on the double `/`+floor
-              // path), so plain div is the cross-engine-exact spelling.
-              expr("(CAST(w AS DECIMAL(38,0)) * 1000) div mx").cast("long").as("v"))
-            .localCheckpoint()
-        }
-        graft.Graft.onSession(s, v).orderBy(col("dim").asc)
-      },
+      powerIteration,
       Some(powerOracle),
       doc = "PCA dominant eigenvector: fixed-point power iteration on the Gram artifact")
   )

@@ -79,7 +79,7 @@ object MiningQueries {
   private val KcoreRounds = 12
 
   /** q162 oracle: replay the identical peel rounds as stacked CTEs (the
-    * q150/q161 fixed-point discipline — the trace is the contract).
+    * discipline of the q150/q161 oracles — the trace is the contract).
     */
   private def kcoreOracle: String = {
     val rounds = (1 to KcoreRounds).map { r =>

@@ -320,26 +320,23 @@ object RetrievalQueries {
 
     // ------------------------------------------------------------------
     // q150: BPE merge training (Sennrich et al., ACL 2016) — learn the
-    // first 5 byte-pair merges over the corpus word-frequency dictionary,
-    // RELATIONALLY. Each round: (1) adjacent-symbol pair counts weighted
-    // by word frequency (lead() per word — words are short, the window
-    // partition is per-word), (2) argmax pair (count desc, pair lexical —
-    // deterministic both engines), (3) greedy LEFT-TO-RIGHT non-
-    // overlapping replacement: island-detect runs of consecutive matches
-    // (pos − match-index), take odd positions within each run (a taken
-    // match consumes pos+1, so the 2nd of two adjacent matches must not
-    // fire — the "aaa"→("aa","a") case), drop consumed positions,
-    // renumber. The 100 TB story: BPE trains on the DICTIONARY (|vocab|
-    // rows), not the corpus — the single corpus-sized shuffle is the
-    // word-count agg; each merge round shuffles ≤ Σ|word| symbol rows.
-    // Constant rounds, localCheckpoint per round (q68's plan-depth
-    // pattern). The oracle replays the identical 5 rounds as stacked
-    // window CTEs — merges AND their counts gate exactly.
+    // first 5 byte-pair merges over the corpus word-frequency dictionary.
+    // Each round: (1) adjacent-symbol pair counts weighted by word
+    // frequency, (2) argmax pair (count desc, pair lexical — deterministic
+    // both engines), (3) greedy LEFT-TO-RIGHT non-overlapping replacement
+    // (a taken match consumes its second symbol, so the 2nd of two
+    // adjacent matches must not fire — the "aaa"→("aa","a") case). The
+    // 100 TB story: BPE trains on the DICTIONARY (|vocab| rows), not the
+    // corpus — the single corpus-sized shuffle is the word-count agg; each
+    // round is one pair-count aggregate over the dictionary's symbol
+    // arrays, and the merge list it grows stays on the driver
+    // ([[Bpe.train]]). The oracle replays the 5 rounds as stacked window
+    // CTEs (lead, island detection, renumbering) — merges AND their
+    // counts gate exactly.
     GQuery(
       "q150_bpe_merges",
       (s, d) => {
-        Bpe.train(RetrievalQueries.bpeWords(s, d), 5).merges
-          .reduce(_ unionAll _).orderBy(col("round").asc)
+        Bpe.train(RetrievalQueries.bpeWords(s, d), 5).merges // in round order
       },
       Some {
         val out = (1 to 5)
@@ -349,7 +346,7 @@ object RetrievalQueries {
            |$out
            |ORDER BY round ASC""".stripMargin
       },
-      "BPE trainer: 5 relational merge rounds over the word-frequency dict"),
+      "BPE trainer: 5 merge rounds over the word-frequency dict, merge list on the driver"),
 
     // ------------------------------------------------------------------
     // q156: BPE ENCODING with the q150-trained merges — the apply half of
@@ -370,7 +367,6 @@ object RetrievalQueries {
           .join(words, Seq("word"))
           .select(col("word"), col("n_syms"), col("cnt"),
             length(col("word")).cast("long").as("n_chars"))
-          .localCheckpoint(false) // rows + totals share it
         val totals = perWord.agg(
           sum(col("cnt") * col("n_syms")).as("total_subwords"),
           sum(col("cnt") * col("n_chars")).as("total_chars"))
@@ -630,11 +626,9 @@ object RetrievalQueries {
       "BPE tokenize: per-doc token-ID sequences (dictionary encode + stream join), content-exact sig == DuckDB replay"),
   )
 
-  /** Word-frequency dictionary for the BPE gates. Empty-token guard:
-    * Spark's sequence(1, 0) yields DESCENDING [1, 0] (two phantom ''
-    * symbols) while DuckDB's range(1, 1) is empty — an empty word (double
-    * space in a future fixture) would silently diverge the pair counts.
-    * Filtered identically in [[Bpe.oracle.baseCtes]].
+  /** Word-frequency dictionary for the BPE gates. An empty token (a
+    * double space) is no word: filtered here and identically in
+    * [[Bpe.oracle.baseCtes]].
     */
   private def bpeWords(s: org.apache.spark.sql.SparkSession, d: String): DataFrame =
     Tables.spread(Tables.documents(s, d), col("doc_id"))

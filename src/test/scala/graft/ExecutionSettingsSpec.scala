@@ -97,15 +97,6 @@ class ExecutionSettingsSpec extends SparkTestBase {
     Components.starWithRounds(chain.toDF("s", "t"), "s", "t")._1.collect()
   }
 
-  loopTest("q150 BPE training", 1, Budget(jobs = 38, exchanges = 19, atDefault = 3)) {
-    q("q150_bpe_merges").collect()
-  }
-
-  loopTest("q161 power iteration", IterLoop.partitionsFor(spark, 64L * 64),
-      Budget(jobs = 32, exchanges = 15, atDefault = 1)) {
-    q("q161_pca_power").collect()
-  }
-
   loopTest("q162 k-core peel", 1, Budget(jobs = 13, exchanges = 7, atDefault = 4)) {
     q("q162_kcore").collect()
   }

@@ -166,6 +166,17 @@ class GraftInstallSpec extends SparkTestBase {
     assert(all.filter(_._2.contains("ImageIO.setUseCache(")).map(_._1) == Seq(mm))
   }
 
+  test("BPE training and q161 keep their bounded state on the driver") {
+    // Both loops carry a small state (a merge list, a 64-long vector), so a
+    // round is an aggregate whose result is collected, not a relation
+    // carried through windows and checkpoints on a loop session.
+    val bpe = sourceLines("src/main/scala/graft/functions/Bpe.scala").map(_._2)
+    val q161 = defBody("src/main/scala/graft/queries/MatrixQueries.scala", "powerIteration")
+    for ((what, lines) <- Seq("Bpe.scala" -> bpe, "q161" -> q161);
+         marker <- Seq("localCheckpoint(", "Window", "IterLoop"))
+      assert(!lines.exists(_.contains(marker)), s"$what holds $marker")
+  }
+
   /** Runs `body` on a factory-built session over `spark.newSession()`: a
     * session no test has called `install` on (the builder hands back the
     * thread's active session).

@@ -20,8 +20,10 @@ class JobBudgetSpec extends SparkTestBase {
     assert(started.forall(_._2 == 0), started.mkString(", "))
   }
 
-  // build plus the noop write perfbench times
-  for ((name, budget) <- Seq("q177_bloom_semijoin" -> 6, "q68_ivf_kmeans" -> 10))
+  // build plus the noop write perfbench times; q150 trains 5 BPE rounds of
+  // one pair-count aggregate and one argmax each, q161 collects one Gram row
+  for ((name, budget) <- Seq("q177_bloom_semijoin" -> 6, "q68_ivf_kmeans" -> 10,
+      "q150_bpe_merges" -> 13, "q161_pca_power" -> 3))
     test(s"$name starts at most $budget jobs per execution") {
       val jobs = jobsStartedBy(
         SparkEntry.queries(name)(spark, sf01).write.format("noop").mode("overwrite").save())
