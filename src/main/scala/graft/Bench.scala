@@ -85,18 +85,6 @@ object Bench {
       .filter { case (n, _) => filter.forall(_.findFirstIn(n).isDefined) }
     val failed = scala.collection.mutable.LinkedHashSet[String]()
 
-    // Once a query's action returns, any RDD blocks it persisted (the
-    // heavy pipelines' lazy localCheckpoints) are garbage — but the block
-    // manager holds them until a GC lets ContextCleaner notice. Under a
-    // 200-query × 5-round suite that is hundreds of corpus-sized block
-    // sets, and in a memory-pressured environment the MEMORY_AND_DISK
-    // eviction churn dominates the very queries that checkpoint (the r4
-    // driver run: q125 25.5 s vs 0.88 s recorded, q170 17.3 s vs 2.2 s).
-    // Dropping the blocks explicitly after every query is deterministic —
-    // no reliance on GC timing — and costs one async RPC per leftover RDD.
-    def dropLeftoverBlocks(): Unit =
-      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = false))
-
     def fmt(d: Double): String = BigDecimal(d).setScale(4, BigDecimal.RoundingMode.HALF_UP).toString
 
     // per-round observations: rounds(r)(name) = seconds. A budget-cut
@@ -189,8 +177,13 @@ object Bench {
           } else {
             val t0 = System.nanoTime()
             try {
-              fn(spark, sfDir).count()
-              roundTimes(name) = (System.nanoTime() - t0) / 1e9
+              // the query's blocks and directories go after the clock stops,
+              // not at a later GC: left to the ContextCleaner, a 5-round suite's
+              // blocks churned the cache (r4: q125 25.5 s against 0.88 s)
+              roundTimes(name) = Graft.execution {
+                fn(spark, sfDir).count()
+                (System.nanoTime() - t0) / 1e9
+              }
               // opt-in per-query trace (stderr): diagnosing a stall in a
               // full-suite run needs to know WHICH query was running when
               if (sys.env.contains("SPARK_GRAFT_BENCH_TRACE"))
@@ -200,9 +193,6 @@ object Bench {
                 System.err.println(s"[bench] $name FAILED (round $r): ${e.getMessage}")
                 failed += name
             }
-            // outside the timed window: the drop is suite hygiene, not part
-            // of the query's work
-            dropLeftoverBlocks()
           }
         }
       }

@@ -22,6 +22,8 @@ import graft.plans.AsOfStrategy
   *  - [[Graft.scratch]] is where every query writes its own files: a
   *    fresh, empty directory per call, under one root per JVM that is
   *    deleted at exit. The session's warehouse lives under the same root.
+  *  - [[Graft.execution]] releases what a query holds as it closes: blocks
+  *    of [[Graft.checkpoint]]/[[Graft.persist]] (the only materializations), scratch dirs.
   *  - SQL text binds its tables on a throwaway clone
   *    ([[graft.sql.GraftSql.sql]]), never as views on a caller's session.
   *
@@ -58,15 +60,46 @@ object Graft {
   }
 
   // One per JVM, under java.io.tmpdir; Spark's shutdown hook deletes it.
-  private lazy val scratchRoot: java.io.File = graftbridge.shutdownDeletedTempDir("graft")
+  private[graft] lazy val scratchRoot: java.io.File = graftbridge.shutdownDeletedTempDir("graft")
 
   /** A fresh, empty directory `<root>/<name>-<unique>` for one execution's
     * writes. No two calls share a directory, so queries that run at once
-    * never see each other's files. Nothing is deleted before exit: a
-    * returned DataFrame may read its directory lazily.
+    * never see each other's files. The open [[execution]] deletes it as it
+    * closes; outside one it stays until exit: a returned DataFrame may read it lazily.
     */
-  def scratch(name: String): String =
-    java.nio.file.Files.createTempDirectory(scratchRoot.toPath, s"$name-").toString
+  def scratch(name: String): String = {
+    val dir = java.nio.file.Files.createTempDirectory(scratchRoot.toPath, s"$name-").toFile
+    hold(() => graftbridge.deleteRecursively(dir))
+    dir.toString
+  }
+
+  // the releases of the execution open on this thread, if any
+  private val held = new ThreadLocal[scala.collection.mutable.ArrayBuffer[() => Unit]]
+  private def hold(release: () => Unit): Unit = Option(held.get).foreach(_ += release)
+
+  /** Runs `body` as one execution on this thread (inside the open one, if
+    * any: they do not nest) and, when it returns or throws, releases what
+    * it made and nothing else: it unpersists each RDD of [[checkpoint]] and
+    * [[persist]], without blocking, and deletes each [[scratch]] directory.
+    */
+  def execution[T](body: => T): T = if (held.get != null) body else {
+    val releases = scala.collection.mutable.ArrayBuffer[() => Unit]()
+    held.set(releases)
+    try body finally { held.remove(); releases.foreach(_()) }
+  }
+
+  /** `df.localCheckpoint(eager)`, released by the open execution. It holds
+    * the RDD weakly, so a generation a loop drops goes to the ContextCleaner. */
+  def checkpoint(eager: Boolean): DataFrame => DataFrame = df => {
+    val out = df.localCheckpoint(eager)
+    val rdd = new java.lang.ref.WeakReference(graftbridge.checkpointedRdd(out))
+    hold(() => Option(rdd.get).foreach(_.unpersist(blocking = false)))
+    out
+  }
+
+  /** `df.persist(level)`, unpersisted when the open execution closes. */
+  def persist(level: org.apache.spark.storage.StorageLevel): DataFrame => DataFrame =
+    df => { hold(() => df.unpersist(blocking = false)); df.persist(level) }
 
   /** Idempotently install on a live session. */
   def install(spark: SparkSession): Unit = {

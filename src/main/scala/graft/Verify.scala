@@ -13,21 +13,27 @@ object Verify {
     val spark = Graft.session(sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt)
     new java.io.File(outDir).mkdirs()
     def views = spark.catalog.listTables().collect().filter(_.isTemporary).map(_.name).toSet
+    def held = spark.sparkContext.getRDDStorageInfo.map(i => s"cached RDD ${i.id}").toSet ++
+      (Graft.scratchRoot.list().toSet - "warehouse")
     SparkEntry.queries.filter(kv => keep(kv._1)).foreach { case (name, fn) =>
-      val (before, viewsBefore) = (spark.conf.getAll, views)
+      val (before, viewsBefore, heldBefore) = (spark.conf.getAll, views, held)
       try {
-        val df = fn(spark, sfDir)
-        // Output-type lint (OutputPolicy): fail LOUDLY here rather than
-        // reach the driver as a silent hash mismatch / comparator crash.
-        OutputPolicy.enforce(name, df.schema)
-        df.coalesce(1).write.mode("overwrite").parquet(s"$outDir/$name")
-        // a query is a function of (session, dir): one that leaves a
-        // setting or a temp view behind changes every query after it
-        val (after, viewsAfter) = (spark.conf.getAll, views)
+        Graft.execution {
+          val df = fn(spark, sfDir)
+          // Output-type lint (OutputPolicy): fail LOUDLY here rather than
+          // reach the driver as a silent hash mismatch / comparator crash.
+          OutputPolicy.enforce(name, df.schema)
+          df.coalesce(1).write.mode("overwrite").parquet(s"$outDir/$name")
+        }
+        // a query is a function of (session, dir): one that leaves a setting,
+        // a temp view, blocks or files behind changes every query after it
+        val (after, viewsAfter, heldAfter) = (spark.conf.getAll, views, held)
         if (after != before) throw new IllegalStateException("changed session conf from " +
           s"${before.toSet -- after.toSet} to ${after.toSet -- before.toSet}")
         if (viewsAfter != viewsBefore) throw new IllegalStateException("changed temp views: " +
           s"added ${viewsAfter -- viewsBefore}, dropped ${viewsBefore -- viewsAfter}")
+        if (heldAfter != heldBefore) throw new IllegalStateException(
+          s"held after its execution closed: ${heldAfter -- heldBefore}")
       } catch { case e: Throwable =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
         // a STALE dump from an earlier run would otherwise be compared in
@@ -35,11 +41,6 @@ object Verify {
         // query is an explicit per-query red at the driver, never silent
         org.apache.spark.sql.graftbridge.deleteRecursively(new java.io.File(s"$outDir/$name"))
       }
-      // Blocks persisted by this query (lazy localCheckpoints) are garbage
-      // once its dump completes; drop them now instead of waiting for a GC
-      // to let ContextCleaner notice — same suite-hygiene rule as Bench
-      // (the r4 driver-run slowdown was accumulated-block churn).
-      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = false))
     }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
     // — a tab or CR in builder-authored SQL would otherwise make the

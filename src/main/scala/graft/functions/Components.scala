@@ -40,7 +40,7 @@ object Components {
     // it, and an un-checkpointed expensive upstream (e.g. the MinHash
     // pipeline in q81) would execute once per branch inside a single job
     val e = edges.select(col(srcCol).cast("long").as("src"),
-      col(dstCol).cast("long").as("dst")).localCheckpoint()
+      col(dstCol).cast("long").as("dst")).transform(Graft.checkpoint(eager = true))
     val spark = e.sparkSession
     // loop partitions sized to the measured edge count (r10, guide §2.2 —
     // the r9-verdict inverse-scaling item: per-round fixed cost is one
@@ -56,9 +56,9 @@ object Components {
     // could not co-partition with it.
     val loop = IterLoop.session(spark, parts)
     val und = Graft.onSession(loop, e.union(e.select(col("dst").as("src"), col("src").as("dst")))
-      .distinct().repartition(parts, col("dst")).localCheckpoint())
+      .distinct().repartition(parts, col("dst")).transform(Graft.checkpoint(eager = true)))
     var labels = und.select(col("src").as("id")).distinct()
-      .select(col("id"), col("id").as("comp")).localCheckpoint()
+      .select(col("id"), col("id").as("comp")).transform(Graft.checkpoint(eager = true))
     // Round shape (r9 rework): one join + one union-aggregate per round —
     // new comp(id) = min(own comp, min over neighbors' comps), identical
     // to the previous join+agg+left-join form by the min identity. The
@@ -82,7 +82,7 @@ object Components {
         .select(und("src").as("id"), col("comp"))
         .union(labels)
         .groupBy(col("id")).agg(min(col("comp")).as("comp"))
-        .localCheckpoint(false)
+        .transform(Graft.checkpoint(eager = false))
       val s = labelSum(next)
       changed = s.compareTo(lastSum) != 0
       lastSum = s
@@ -135,15 +135,15 @@ object Components {
       dstCol: String,
       maxIters: Int = 30): (DataFrame, Int) = {
     val e0 = edges.select(col(srcCol).cast("long").as("src"),
-      col(dstCol).cast("long").as("dst")).localCheckpoint()
+      col(dstCol).cast("long").as("dst")).transform(Graft.checkpoint(eager = true))
     // all vertices of the contract ("appears in an edge"), incl. self-loop-
     // only vertices that the star iteration itself drops with the loops
     val vertices = e0.select(col("src").as("id"))
-      .union(e0.select(col("dst").as("id"))).distinct().localCheckpoint()
+      .union(e0.select(col("dst").as("id"))).distinct().transform(Graft.checkpoint(eager = true))
     var cur = e0.filter(col("src") =!= col("dst"))
       .select(greatest(col("src"), col("dst")).as("src"),
         least(col("src"), col("dst")).as("dst"))
-      .distinct().localCheckpoint()
+      .distinct().transform(Graft.checkpoint(eager = true))
     // orderless edge-set signature: (count, XOR of xxhash64(src,dst)) in
     // ONE scalar job (which doubles as the lazy-checkpoint materializer);
     // XOR is orderless and overflow-free (a Long sum would trip ANSI
@@ -185,7 +185,7 @@ object Components {
       val ss = withM.select(col("u").as("src"), col("m").as("dst"))
         .union(withM.filter(col("dst") =!= col("m"))
           .select(col("dst").as("src"), col("m").as("dst")))
-        .distinct().localCheckpoint(false)
+        .distinct().transform(Graft.checkpoint(eager = false))
       // fixpoint test: both sets are distinct canonical (src > dst), so
       // equality == equal signature (fast negative) + except-empty confirm
       val ssSig = signature(ss)

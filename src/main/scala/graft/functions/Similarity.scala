@@ -259,7 +259,7 @@ object Similarity {
       .agg(max(col("sc")).as("b"))
       .select((-col("b.ngid")).as("gid"), col("cid"), col("cvec"))
       // consumed by the used-gid restriction AND the refine join
-      .localCheckpoint(false)
+      .transform(graft.Graft.checkpoint(eager = false))
     // only coarse cells that own ≥1 fine child are probe targets —
     // otherwise a vector could land in a childless cell
     val usedCoarse = coarse.join(child.select(col("gid")).distinct(), Seq("gid"))

@@ -3,7 +3,7 @@ package graft.queries
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.GQuery
+import graft.{GQuery, Graft}
 import graft.functions.{Similarity, TextFunctions => TF}
 import graft.sources.Tables
 
@@ -145,7 +145,7 @@ object CurationDagQueries {
           .select(col("doc_id"), col("lang"), col("clean_text"),
             col("score_fp"), col("pass1"), col("pass2"), col("pass3"))
           // consumed by the chunk stage AND the flag chain
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+          .transform(Graft.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
 
         // ---- stage 4: chunk dedup over stage-3 survivors only ----
         val chunks = flags3.filter(col("pass3"))
@@ -153,7 +153,7 @@ object CurationDagQueries {
           .select(col("doc_id"), posexplode(
             expr("transform(sequence(0, CAST(ceil(size(ws)/10.0) AS INT) - 1)," +
               " i -> array_join(slice(ws, i*10+1, 10), ' '))")).as(Seq("ci", "chunk")))
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+          .transform(Graft.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
         val canon = chunks.groupBy(col("chunk"))
           .agg(min(struct(col("doc_id"), col("ci"))).as("c"))
           .select(col("chunk"), col("c.doc_id").as("cd"), col("c.ci").as("cc"))
@@ -186,7 +186,7 @@ object CurationDagQueries {
           .select(col("doc_id"), col("lang"), col("score_fp"),
             col("pass1"), col("pass2"), col("pass3"), col("pass4"), col("pass5"))
           // consumed by the stage accounting AND the bucket histogram
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+          .transform(Graft.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
 
         // ---- stage accounting (one aggregate; observe() telemetry
         // rides the same pass) ----

@@ -4,7 +4,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 
-import graft.GQuery
+import graft.{GQuery, Graft}
 import graft.functions.{TextFunctions => TF}
 import graft.sources.Tables
 
@@ -288,7 +288,7 @@ object CurationQueries {
           .withColumn("mean", col("s").cast("double") / col("n"))
           .withColumn("m2", col("ss").cast("double") -
             col("s").cast("double") * col("s").cast("double") / col("n"))
-          .localCheckpoint(false) // lazy: the consuming action materializes it
+          .transform(Graft.checkpoint(eager = false)) // lazy: the consuming action materializes it
         val outliers = li.join(broadcast(stats), Seq("l_returnflag"))
           .filter((col("q").cast("double") - col("mean")) *
             (col("q").cast("double") - col("mean")) *
@@ -395,7 +395,7 @@ object CurationQueries {
             expr("transform(sequence(0, CAST(ceil(size(ws)/10.0) AS INT) - 1)," +
               " i -> array_join(slice(ws, i*10+1, 10), ' '))")).as(Seq("ci", "chunk")))
           // consumed by the canonical election AND the verdict join
-          .localCheckpoint(false)
+          .transform(Graft.checkpoint(eager = false))
         val canon = chunks.groupBy(col("chunk"))
           .agg(min(struct(col("doc_id"), col("ci"))).as("c"))
           .select(col("chunk"), col("c.doc_id").as("cd"), col("c.ci").as("cc"))

@@ -4,7 +4,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 
-import graft.GQuery
+import graft.{GQuery, Graft}
 import graft.functions.{TextFunctions => TF}
 import graft.sources.Tables
 
@@ -31,7 +31,7 @@ object DepthQueries {
       init: org.apache.spark.sql.DataFrame,
       iters: Int): org.apache.spark.sql.DataFrame = {
     val deg = edges.groupBy(col("src")).agg(count(lit(1)).as("degree"))
-      .localCheckpoint(false)
+      .transform(Graft.checkpoint(eager = false))
     var ranks = init
     for (_ <- 1 to iters) {
       val contribs = edges
@@ -44,7 +44,7 @@ object DepthQueries {
         .select(col("node"),
           (col("base_fp") + expr("85 * coalesce(in_sum, 0L) div 100"))
             .as("rank_fp"))
-        .localCheckpoint(false)
+        .transform(Graft.checkpoint(eager = false))
     }
     ranks
   }
@@ -302,14 +302,14 @@ object DepthQueries {
         val edges = Tables.lineitem(s, d)
           .select(pmod(col("l_partkey"), lit(100L)).as("src"),
             pmod(col("l_suppkey"), lit(100L)).as("dst"))
-          .localCheckpoint(false)
+          .transform(Graft.checkpoint(eager = false))
         // tiny (≤100-row) results consumed every iteration — checkpoint
         // them or each ranks materialization re-scans the full edge set
         // to re-derive them (the NOTES "tiny results → localCheckpoint"
         // pattern)
         val nodes = edges.select(col("src").as("node"))
           .union(edges.select(col("dst").as("node"))).distinct()
-          .localCheckpoint(false)
+          .transform(Graft.checkpoint(eager = false))
         pagerankIterate(edges,
           base = nodes.withColumn("base_fp", lit(150000L)),
           init = nodes.withColumn("rank_fp", lit(1000000L)),
@@ -359,17 +359,17 @@ object DepthQueries {
         val edges = Tables.lineitem(s, d)
           .select(pmod(col("l_partkey"), lit(100L)).as("src"),
             pmod(col("l_suppkey"), lit(100L)).as("dst"))
-          .localCheckpoint(false)
+          .transform(Graft.checkpoint(eager = false))
         val nodes = edges.select(col("src").as("node"))
           .union(edges.select(col("dst").as("node"))).distinct()
-          .localCheckpoint(false)
+          .transform(Graft.checkpoint(eager = false))
         val counts = nodes.agg(count(lit(1)).as("n_nodes"),
           sum(when(col("node") % 10 === 0, 1L).otherwise(0L)).as("n_seeds"))
         val base = nodes.crossJoin(broadcast(counts))
           .select(col("node"),
             when(col("node") % 10 === 0,
               expr("(150000 * n_nodes) DIV n_seeds")).otherwise(lit(0L)).as("base_fp"))
-          .localCheckpoint(false)
+          .transform(Graft.checkpoint(eager = false))
         pagerankIterate(edges, base,
           init = base.select(col("node"), col("base_fp").as("rank_fp")),
           iters = 3)

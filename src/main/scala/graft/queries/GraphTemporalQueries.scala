@@ -4,7 +4,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 
-import graft.GQuery
+import graft.{GQuery, Graft}
 import graft.functions.{TextFunctions => TF}
 import graft.sources.Tables
 import graft.sql.GraftSql
@@ -49,7 +49,7 @@ object GraphTemporalQueries {
       // the self-join references fps on BOTH sides: un-checkpointed,
       // the whole corpus pipeline executes twice inside one job
       // (measured 2× the stage cost — the q81 lesson)
-      .localCheckpoint(false)
+      .transform(Graft.checkpoint(eager = false))
     val capped = graft.ops.Skew.capHotBuckets(fps, Seq(col("fp")), maxBucket,
       "winnow_cap", "dropped_fp_rows", "fp_rows")
     // merge-hinted: fps is corpus-sized — at scale this join must NEVER
@@ -87,7 +87,7 @@ object GraphTemporalQueries {
           .filter(col("x") =!= col("y"))
           .select(least(col("x"), col("y")).as("a"),
             greatest(col("x"), col("y")).as("b"))
-          .distinct().localCheckpoint(false)
+          .distinct().transform(Graft.checkpoint(eager = false))
         val tri = e.as("e1")
           .join(e.as("e2"), col("e1.b") === col("e2.a"))
           .join(e.as("e3"),
@@ -237,7 +237,7 @@ object GraphTemporalQueries {
         val bi = Tables.spread(Tables.documents(s, d), col("doc_id"))
           .select(explode(TF.bigramPairs(col("text"))).as("b"))
           .select(col("b.w1"), col("b.w2"))
-          .localCheckpoint(false)
+          .transform(Graft.checkpoint(eager = false))
         val left = bi.groupBy(col("w2").as("w"))
           .agg(countDistinct(col("w1")).as("n_left_types"),
             count(lit(1)).as("n_tokens_right"))
@@ -289,7 +289,7 @@ object GraphTemporalQueries {
         val uni = docs
           .select(explode(toks).as("w"))
           .groupBy(col("w")).agg(count(lit(1)).as("c1"))
-          .localCheckpoint(false)
+          .transform(Graft.checkpoint(eager = false))
         // total token mass from the unigram aggregate — NOT a third scan
         // of the corpus
         val n = uni.agg(sum(col("c1")).as("n"))
@@ -394,7 +394,7 @@ object GraphTemporalQueries {
           // two consumers (cohort aggregation + join probe side, which
           // cannot share an exchange) — checkpoint so the events scan runs
           // once (the q81 lesson)
-          .localCheckpoint(false)
+          .transform(Graft.checkpoint(eager = false))
         val cohort = ev.groupBy(col("user_id")).agg(min(col("day")).as("cohort_day"))
         ev.join(cohort, Seq("user_id"))
           .select(col("user_id"), col("cohort_day"),
@@ -490,7 +490,7 @@ object GraphTemporalQueries {
           .filter(size(TF.tokens(col("text"))) >= 3)
           .select(col("doc_id"), TF.wordShingleHashes(col("text"), 3).as("ts"))
           .select(col("doc_id"), col("ts"), size(col("ts")).as("sz"))
-          .localCheckpoint(false) // 2 consumers: prefix build, verify
+          .transform(Graft.checkpoint(eager = false)) // 2 consumers: prefix build, verify
         val toks = tokset.select(col("doc_id"), col("sz"), explode(col("ts")).as("tok"))
         val df = toks.groupBy(col("tok")).agg(count(lit(1)).as("df"))
         val ranked = toks.join(df, "tok")
@@ -547,7 +547,7 @@ object GraphTemporalQueries {
           .filter(col("user_id") < 5)
           .select(col("user_id"), col("event_id"), epochSec(col("ts")).as("s0"),
             (epochSec(col("ts")) + 600).as("s1"))
-          .localCheckpoint(false) // both join sides
+          .transform(Graft.checkpoint(eager = false)) // both join sides
         // floor division, not `div` (truncation): the bin invariant
         // "overlapping intervals share ≥1 bin" must hold for pre-1970
         // (negative-epoch) timestamps too, where truncation and floor

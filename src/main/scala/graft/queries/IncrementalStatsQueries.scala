@@ -3,7 +3,7 @@ package graft.queries
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.GQuery
+import graft.{GQuery, Graft}
 import graft.sources.Tables
 
 /** Round-4 (post-closing) incremental-maintenance and statistics operators:
@@ -43,7 +43,7 @@ object IncrementalStatsQueries {
         val baseMv = withDay.filter(col("day") < SplitDay)
           .groupBy(col("o_custkey"))
           .agg(count(lit(1)).as("n_orders"), sum(col("cents")).as("spend_cents"))
-          .localCheckpoint(false) // the persisted-MV stand-in: base lineage ends here
+          .transform(Graft.checkpoint(eager = false)) // the persisted-MV stand-in: base lineage ends here
         val deltaMv = withDay.filter(col("day") >= SplitDay)
           .groupBy(col("o_custkey"))
           .agg(count(lit(1)).as("n_orders"), sum(col("cents")).as("spend_cents"))
@@ -77,7 +77,7 @@ object IncrementalStatsQueries {
           .select(floor(epochSec(col("ts")) / 86400).cast("long").as("day"),
             col("user_id"))
           .distinct()
-          .localCheckpoint(false) // consumed by the fan-out AND the horizon scalar
+          .transform(Graft.checkpoint(eager = false)) // consumed by the fan-out AND the horizon scalar
         val horizon = du.agg(max(col("day")).as("max_day"))
         du.select(explode(sequence(col("day"), col("day") + 6)).as("window_day"),
             col("user_id"))

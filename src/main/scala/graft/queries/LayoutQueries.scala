@@ -211,7 +211,7 @@ object LayoutQueries {
         // re-scanning + re-decoding the fixture per version
         val li = Tables.lineitem(s, d)
           .select(col("l_orderkey"), col("l_quantity"), col("l_returnflag"))
-          .localCheckpoint(false)
+          .transform(Graft.checkpoint(eager = false))
         graft.sources.TxLog.append(s, dir, li.filter(col("l_orderkey") % 5 === 0))
         graft.sources.TxLog.append(s, dir, li.filter(col("l_orderkey") % 5 === 1))
         graft.sources.TxLog.overwrite(s, dir, li.filter(col("l_orderkey") % 5 === 2))
@@ -242,7 +242,7 @@ object LayoutQueries {
         val dir = Graft.scratch("txlogtt")
         // one scan feeds the four versioned writes (r10, guide §6)
         val li = Tables.lineitem(s, d).select(col("l_orderkey"), col("l_quantity"))
-          .localCheckpoint(false)
+          .transform(Graft.checkpoint(eager = false))
         graft.sources.TxLog.append(s, dir, li.filter(col("l_orderkey") % 7 === 0))
         graft.sources.TxLog.append(s, dir, li.filter(col("l_orderkey") % 7 === 1))
         graft.sources.TxLog.overwrite(s, dir, li.filter(col("l_orderkey") % 7 === 2))
@@ -294,7 +294,7 @@ object LayoutQueries {
         // one scan feeds the seed append and both merge-source slices (r10)
         val ords = Tables.orders(s, d)
           .select(col("o_orderkey"), col("o_custkey"), col("o_orderstatus"))
-          .localCheckpoint(false)
+          .transform(Graft.checkpoint(eager = false))
         graft.sources.TxLog.append(s, dir, ords.filter(col("o_orderkey") % 3 === 0))
         val src = ords.filter(col("o_orderkey") % 6 === 0)
           .withColumn("o_custkey", col("o_custkey") + 1000000L)
@@ -365,7 +365,7 @@ object LayoutQueries {
         // one scan feeds both interleaved appends (r10, guide §6)
         val li = Tables.lineitem(s, d)
           .select(col("l_orderkey"), col("l_quantity"), col("l_returnflag"))
-          .localCheckpoint(false)
+          .transform(Graft.checkpoint(eager = false))
         graft.sources.TxLog.append(s, dir, li.filter(col("l_orderkey") % 2 === 0))
         graft.sources.TxLog.append(s, dir, li.filter(col("l_orderkey") % 2 === 1))
         graft.sources.TxLog.optimize(s, dir, Seq("l_orderkey"), targetFiles = 8)
@@ -397,7 +397,7 @@ object LayoutQueries {
         val dir = Graft.scratch("txlogcdc")
         // one scan feeds the four lifecycle writes (r10, guide §6)
         val ords = Tables.orders(s, d).select(col("o_orderkey"), col("o_custkey"))
-          .localCheckpoint(false)
+          .transform(Graft.checkpoint(eager = false))
         graft.sources.TxLog.append(s, dir, ords.filter(col("o_orderkey") % 4 === 0))
         graft.sources.TxLog.append(s, dir, ords.filter(col("o_orderkey") % 4 === 1))
         graft.sources.TxLog.overwrite(s, dir, ords.filter(col("o_orderkey") % 4 === 2))

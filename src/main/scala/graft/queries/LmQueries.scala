@@ -2,7 +2,7 @@ package graft.queries
 
 import org.apache.spark.sql.functions._
 
-import graft.GQuery
+import graft.{GQuery, Graft}
 import graft.sources.Tables
 import graft.functions.{TextFunctions => TF}
 
@@ -35,10 +35,10 @@ object LmQueries {
         val pairs = Tables.spread(Tables.documents(s, d), col("doc_id"))
           .select(col("doc_id"), explode(TF.bigramPairs(col("text"))).as("pr"))
           .select(col("doc_id"), col("pr.w1").as("w1"), col("pr.w2").as("w2"))
-          .localCheckpoint(false) // model build + doc scoring share it
+          .transform(Graft.checkpoint(eager = false)) // model build + doc scoring share it
         val big = pairs.groupBy(col("w1"), col("w2"))
           .agg(count(lit(1)).as("c12"))
-          .localCheckpoint(false) // c1/nr/t/model all derive from it
+          .transform(Graft.checkpoint(eager = false)) // c1/nr/t/model all derive from it
         val c1 = big.groupBy(col("w1"))
           .agg(sum(col("c12")).as("c1"), count(lit(1)).as("n1p_l"))
         val nr = big.groupBy(col("w2")).agg(count(lit(1)).as("n1p_r"))

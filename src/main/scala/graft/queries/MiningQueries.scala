@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.GQuery
+import graft.{GQuery, Graft}
 import graft.functions.{TextFunctions => TF}
 import graft.sources.Tables
 
@@ -112,11 +112,11 @@ object MiningQueries {
         sum(when(col("l_quantity").isNull, 1L).otherwise(0L)).as("v_null"),
         sum(when(!col("l_returnflag").isin("A", "N", "R"), 1L).otherwise(0L)).as("v_domain"),
         sum(when(col("l_quantity") < 1 || col("l_quantity") > 50, 1L).otherwise(0L)).as("v_range"))
-      .localCheckpoint(false) // 1 row; consumed by the stack AND ref_lineitem_orders
+      .transform(Graft.checkpoint(eager = false)) // 1 row; consumed by the stack AND ref_lineitem_orders
     val ordAgg = ord.agg(
         count(lit(1)).as("n"),
         (count(lit(1)) - countDistinct(col("o_orderkey"))).as("v_dup"))
-      .localCheckpoint(false) // 1 row; consumed by the stack AND ref_orders_customer
+      .transform(Graft.checkpoint(eager = false)) // 1 row; consumed by the stack AND ref_orders_customer
     val liChecks = liAgg.select(expr(
       """stack(3,
         |  'completeness_l_quantity', v_null, n,
@@ -190,7 +190,7 @@ object MiningQueries {
           .agg(
             sum(expr("CAST(round(o_totalprice * 100) AS BIGINT)")).as("spend_cents"),
             max(floor(epochSec(col("o_orderdate")) / 86400).cast("long")).as("last_day"))
-          .localCheckpoint(false) // consumed by the frontier scan AND the join-back
+          .transform(Graft.checkpoint(eager = false)) // consumed by the frontier scan AND the join-back
         val byX = pts.groupBy(col("spend_cents"))
           .agg(max(col("last_day")).as("best_day"))
           .withColumn("bucket", floor(col("spend_cents") / lit(bucketW.toDouble)).cast("long"))
@@ -299,7 +299,7 @@ object MiningQueries {
       (s, d) => {
         var edges = copurchasePairs(s, d, minSupport = 2)
           .select(col("p1").as("u"), col("p2").as("v"))
-          .localCheckpoint(false) // round 1 reads it twice (degrees + semi joins)
+          .transform(Graft.checkpoint(eager = false)) // round 1 reads it twice (degrees + semi joins)
         // Early exit at the peel FIXPOINT (r9): peeling only ever REMOVES
         // edges, so an unchanged edge count means the keep-set is
         // unchanged and every remaining round is the identity — the
@@ -325,11 +325,11 @@ object MiningQueries {
             .groupBy(col("node")).agg(count(lit(1)).as("deg"))
             .filter(col("deg") >= KcoreK)
             .select(col("node"))
-            .localCheckpoint(false) // consumed by both semi joins
+            .transform(Graft.checkpoint(eager = false)) // consumed by both semi joins
           val next = edges
             .join(keep, edges("u") === keep("node"), "left_semi")
             .join(keep, edges("v") === keep("node"), "left_semi")
-            .localCheckpoint(false) // constant plan depth across rounds
+            .transform(Graft.checkpoint(eager = false)) // constant plan depth across rounds
           val m = next.count()
           converged = m == nEdges
           edges = next

@@ -229,12 +229,12 @@ object PipelineQueries {
           .select(col("user_id"), col("ts"), col("event_type"))
         val v = ev.filter(col("event_type") === "view")
           .groupBy(col("user_id")).agg(min(col("ts")).as("t_view"))
-          .localCheckpoint()
+          .transform(Graft.checkpoint(eager = true))
         val c = ev.filter(col("event_type") === "click").as("e")
           .join(v.as("v"),
             col("e.user_id") === col("v.user_id") && col("e.ts") > col("v.t_view"))
           .groupBy(col("e.user_id")).agg(min(col("e.ts")).as("t_click"))
-          .localCheckpoint()
+          .transform(Graft.checkpoint(eager = true))
         val p = ev.filter(col("event_type") === "purchase").as("e")
           .join(c.as("c"),
             col("e.user_id") === col("c.user_id") && col("e.ts") > col("c.t_click"))
@@ -572,7 +572,7 @@ object PipelineQueries {
         val counts = Tables.spread(Tables.documents(s, d), col("doc_id"))
           .select(explode(TF.tokens(col("text"))).as("tok"))
           .groupBy(col("tok")).agg(count(lit(1)).as("true_cnt"))
-          .localCheckpoint(false) // sketch build + probe selection share it
+          .transform(Graft.checkpoint(eager = false)) // sketch build + probe selection share it
         val rs = explode(array((0 until depth).map(lit(_)): _*)).as("r")
         val sketch = counts.select(rs, col("tok"), col("true_cnt"))
           .select(col("r"), cell(col("tok"), col("r")).as("cell"), col("true_cnt"))

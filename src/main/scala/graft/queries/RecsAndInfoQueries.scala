@@ -3,7 +3,7 @@ package graft.queries
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.GQuery
+import graft.{GQuery, Graft}
 import graft.functions.{TextFunctions => TF}
 import graft.sources.Tables
 
@@ -50,7 +50,7 @@ object RecsAndInfoQueries {
           .join(broadcast(topOrders), col("l_orderkey") === col("tok"))
           .select(col("c"), col("l_partkey").as("p"))
           .distinct()
-          .localCheckpoint(false) // consumed by scoring AND the anti join
+          .transform(Graft.checkpoint(eager = false)) // consumed by scoring AND the anti join
         // the shared candidate core (q157/q162 — one implementation)
         val tri = MiningQueries.copurchasePairs(s, d, minSupport = 2)
           .select(col("p1").as("pa"), col("p2").as("pb"), col("support").as("w"))
@@ -128,7 +128,7 @@ object RecsAndInfoQueries {
           .select(col("tok"),
             coalesce(col("cp"), lit(0L)).as("cp"),
             coalesce(col("cq"), lit(0L)).as("cq"))
-          .localCheckpoint(false) // consumed by the scalar aggregates AND scoring
+          .transform(Graft.checkpoint(eager = false)) // consumed by the scalar aggregates AND scoring
         val scalars = merged.agg(
             sum(col("cp")).as("np"),
             sum(col("cq")).as("nq"),

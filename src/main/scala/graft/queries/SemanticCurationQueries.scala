@@ -3,7 +3,7 @@ package graft.queries
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.GQuery
+import graft.{GQuery, Graft}
 import graft.functions.{Similarity, TextFunctions => TF}
 import graft.sources.Tables
 
@@ -61,7 +61,7 @@ object SemanticCurationQueries {
         // consumed by the pair join AND the final output — materialize once
         val assigned = Similarity.hierarchicalAssign(
             emb, "vec_id", "embedding", k)
-          .localCheckpoint(false)
+          .transform(Graft.checkpoint(eager = false))
         val withVec = emb.select(col("vec_id"), col("embedding"))
           .join(assigned, Seq("vec_id"))
         val pruned = Similarity.blockedNearDupPairs(withVec,

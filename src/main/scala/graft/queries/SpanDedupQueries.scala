@@ -4,7 +4,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.GQuery
+import graft.{GQuery, Graft}
 import graft.functions.{TextFunctions => TF}
 import graft.sources.Tables
 
@@ -65,7 +65,7 @@ object SpanDedupQueries {
       // MEMORY_ONLY costs a cheap CPU recompute instead of a disk write
       // + read; lineage here is one scan + one generator, so losing the
       // truncation property is free.
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_ONLY)
+      .transform(Graft.persist(org.apache.spark.storage.StorageLevel.MEMORY_ONLY))
     val capped = graft.ops.Skew.capHotBuckets(grams, Seq(col("h")), maxBucket,
       "spans_cap", "dropped_gram_rows", "gram_rows")
     // merge-hinted: grams is corpus-sized — this join must NEVER broadcast

@@ -4,7 +4,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 
-import graft.GQuery
+import graft.{GQuery, Graft}
 import graft.functions.{TextFunctions => TF}
 import graft.sources.Tables
 import graft.sql.GraftSql
@@ -237,7 +237,7 @@ object SqlFeatureQueries {
             lag(col("o_orderkey"), 1).over(Window.partitionBy(col("o_custkey"))
               .orderBy(col("o_orderdate").asc, col("o_orderkey").asc)).as("prev_ok"))
           .coalesce(edgeParts)
-          .localCheckpoint(false)
+          .transform(Graft.checkpoint(eager = false))
         GraftSql.sql(iso, """
             |WITH RECURSIVE walk(ck, ok, step) AS (
             |  SELECT ck, ok, CAST(1 AS BIGINT) FROM edges WHERE prev_ok IS NULL
@@ -250,7 +250,7 @@ object SqlFeatureQueries {
             |       MAX(step) = COUNT(*) AS complete
             |FROM walk GROUP BY ck
             |ORDER BY custkey ASC
-            |""".stripMargin, "edges" -> edges).localCheckpoint()
+            |""".stripMargin, "edges" -> edges).transform(Graft.checkpoint(eager = true))
       },
       Some("""WITH RECURSIVE e AS (
              |  SELECT o_custkey AS ck, o_orderkey AS ok,
@@ -309,7 +309,7 @@ object SqlFeatureQueries {
           .select(col("c_custkey"), col("c_acctbal"))
           .coalesce(graft.functions.IterLoop.partitionsFor(
             iso, Tables.parquetRowCount(iso, s"$d/customer.parquet")))
-          .localCheckpoint(false)
+          .transform(Graft.checkpoint(eager = false))
         GraftSql.sql(iso, """
           |WITH RECURSIVE sub(root, node) AS (
           |  SELECT CAST(r AS BIGINT), CAST(r AS BIGINT)

@@ -385,17 +385,17 @@ object EventStreams {
     * needs (one authoritative copy — the idiom previously lived in
     * three places): unique per-run sink name, caller's projection/
     * ordering applied via `post`, result DETACHED from the memory sink
-    * by an eager localCheckpoint, and the temp view dropped immediately
+    * by an eager checkpoint, and the temp view dropped immediately
     * — a long bench session would otherwise accumulate one table per
     * execution, unbounded. The checkpoint blocks are gate-output-sized
-    * and reclaimed by Bench.dropLeftoverBlocks after the query.
+    * and released when the caller's [[graft.Graft.execution]] closes.
     */
   def runToMemoryDetached(df: DataFrame, namePrefix: String,
       outputMode: String)(post: DataFrame => DataFrame): DataFrame = {
     val name = s"${namePrefix}_${gateRunN.incrementAndGet()}"
     val spark = df.sparkSession
     val sunk = post(runToMemory(df, name, outputMode))
-    val out = sunk.localCheckpoint(true)
+    val out = graft.Graft.checkpoint(eager = true)(sunk)
     spark.catalog.dropTempView(name)
     out
   }

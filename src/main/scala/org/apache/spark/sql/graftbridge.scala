@@ -27,6 +27,10 @@ package object graftbridge {
   def analyzedPlan(df: DataFrame): org.apache.spark.sql.catalyst.plans.logical.LogicalPlan =
     df.queryExecution.analyzed
 
+  /** The RDD a locally checkpointed DataFrame reads: its `LogicalRDD`'s. */
+  def checkpointedRdd(df: DataFrame): org.apache.spark.rdd.RDD[_] =
+    df.queryExecution.logical.asInstanceOf[org.apache.spark.sql.execution.LogicalRDD].rdd
+
   /** A new directory under `java.io.tmpdir` that Spark's shutdown hook
     * deletes, recursively, when the JVM exits. */
   def shutdownDeletedTempDir(namePrefix: String): java.io.File =

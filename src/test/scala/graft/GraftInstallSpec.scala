@@ -98,7 +98,7 @@ class GraftInstallSpec extends SparkTestBase {
     // list may only shrink.
     val allowed = Set(
       "src/main/scala/graft/Graft.scala" ->
-        """java.nio.file.Files.createTempDirectory(scratchRoot.toPath, s"$name-").toString""",
+        """val dir = java.nio.file.Files.createTempDirectory(scratchRoot.toPath, s"$name-").toFile""",
       "src/main/scala/org/apache/spark/sql/graftbridge.scala" ->
         "org.apache.spark.util.Utils.createTempDir(namePrefix = namePrefix)",
       // a robots.txt path in the data, not a file the query writes
@@ -173,8 +173,23 @@ class GraftInstallSpec extends SparkTestBase {
     val bpe = sourceLines("src/main/scala/graft/functions/Bpe.scala").map(_._2)
     val q161 = defBody("src/main/scala/graft/queries/MatrixQueries.scala", "powerIteration")
     for ((what, lines) <- Seq("Bpe.scala" -> bpe, "q161" -> q161);
-         marker <- Seq("localCheckpoint(", "Window", "IterLoop"))
+         marker <- Seq("checkpoint(", "Window", "IterLoop"))
       assert(!lines.exists(_.contains(marker)), s"$what holds $marker")
+  }
+
+  test("src/main materializes only through Graft and never lists the context's RDDs") {
+    // Graft.checkpoint and Graft.persist hand what they materialize to the
+    // open execution, which releases exactly that. A direct call leaves its
+    // blocks to a GC, and a drop of every persistent RDD of the context
+    // also drops the checkpoints a concurrent query still reads.
+    val graftFile = "src/main/scala/graft/Graft.scala"
+    val materialize = """localCheckpoint\(|(?<!Graft)\.persist\(|\.cache\(\)|unpersist\(""".r
+    val all = sourceLines("src/main")
+    val outside = all.filter { case (f, l) => f != graftFile && materialize.findFirstIn(l).isDefined }
+    assert(outside.isEmpty, s"materialization outside Graft: ${outside.mkString("; ")}")
+    assert(all.exists { case (f, l) => f == graftFile && l.contains("df.localCheckpoint(eager)") })
+    val listing = all.filter(_._2.contains("getPersistentRDDs"))
+    assert(listing.isEmpty, s"getPersistentRDDs in src/main: ${listing.mkString("; ")}")
   }
 
   /** Runs `body` on a factory-built session over `spark.newSession()`: a

@@ -581,12 +581,11 @@ class PlanShapeSpec extends SparkTestBase {
       ("q223_cdc_chunks",     /*  4.0k/225k */ 11000L,  700000L))
     caps.foreach { case (name, recCap, byteCap) =>
       val (rec, byt) = ShuffleVolumes.measured(spark) {
-        SparkEntry.queries(name)(spark, sf).collect()
+        Graft.execution(SparkEntry.queries(name)(spark, sf).collect())
       }
       assert(rec > 0, s"$name: no shuffle traffic recorded (instrument broken?)")
       assert(rec <= recCap, s"$name shuffle records $rec > cap $recCap")
       assert(byt <= byteCap, s"$name shuffle bytes $byt > cap $byteCap")
-      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = false))
     }
   }
 
