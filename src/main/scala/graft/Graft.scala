@@ -23,7 +23,7 @@ import graft.plans.AsOfStrategy
   *    fresh, empty directory per call, under one root per JVM that is
   *    deleted at exit. The session's warehouse lives under the same root.
   *  - [[Graft.execution]] releases what a query holds as it closes: blocks
-  *    of [[Graft.checkpoint]]/[[Graft.persist]] (the only materializations), scratch dirs.
+  *    of [[Graft.checkpoint]] (the only materialization), scratch dirs.
   *  - SQL text binds its tables on a throwaway clone
   *    ([[graft.sql.GraftSql.sql]]), never as views on a caller's session.
   *
@@ -79,8 +79,8 @@ object Graft {
 
   /** Runs `body` as one execution on this thread (inside the open one, if
     * any: they do not nest) and, when it returns or throws, releases what
-    * it made and nothing else: it unpersists each RDD of [[checkpoint]] and
-    * [[persist]], without blocking, and deletes each [[scratch]] directory.
+    * it made and nothing else: it unpersists each RDD of [[checkpoint]],
+    * without blocking, and deletes each [[scratch]] directory.
     */
   def execution[T](body: => T): T = if (held.get != null) body else {
     val releases = scala.collection.mutable.ArrayBuffer[() => Unit]()
@@ -96,10 +96,6 @@ object Graft {
     hold(() => Option(rdd.get).foreach(_.unpersist(blocking = false)))
     out
   }
-
-  /** `df.persist(level)`, unpersisted when the open execution closes. */
-  def persist(level: org.apache.spark.storage.StorageLevel): DataFrame => DataFrame =
-    df => { hold(() => df.unpersist(blocking = false)); df.persist(level) }
 
   /** Idempotently install on a live session. */
   def install(spark: SparkSession): Unit = {

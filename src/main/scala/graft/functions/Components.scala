@@ -36,11 +36,12 @@ object Components {
       srcCol: String,
       dstCol: String,
       maxIters: Int = 20): DataFrame = {
-    // materialize the edge list FIRST: both union branches below reference
-    // it, and an un-checkpointed expensive upstream (e.g. the MinHash
-    // pipeline in q81) would execute once per branch inside a single job
+    // materialize the edge list FIRST: the count below and the loop's
+    // edge set both read it, in two jobs; the count is the lazy
+    // checkpoint's materializer, so an expensive upstream (e.g. the
+    // MinHash pipeline in q81) runs once
     val e = edges.select(col(srcCol).cast("long").as("src"),
-      col(dstCol).cast("long").as("dst")).transform(Graft.checkpoint(eager = true))
+      col(dstCol).cast("long").as("dst")).transform(Graft.checkpoint(eager = false))
     val spark = e.sparkSession
     // loop partitions sized to the measured edge count (r10, guide §2.2 —
     // the r9-verdict inverse-scaling item: per-round fixed cost is one
@@ -143,7 +144,7 @@ object Components {
     var cur = e0.filter(col("src") =!= col("dst"))
       .select(greatest(col("src"), col("dst")).as("src"),
         least(col("src"), col("dst")).as("dst"))
-      .distinct().transform(Graft.checkpoint(eager = true))
+      .distinct().transform(Graft.checkpoint(eager = false))
     // orderless edge-set signature: (count, XOR of xxhash64(src,dst)) in
     // ONE scalar job (which doubles as the lazy-checkpoint materializer);
     // XOR is orderless and overflow-free (a Long sum would trip ANSI

@@ -258,8 +258,6 @@ object Similarity {
       .groupBy(col("cid"), col("cvec"))
       .agg(max(col("sc")).as("b"))
       .select((-col("b.ngid")).as("gid"), col("cid"), col("cvec"))
-      // consumed by the used-gid restriction AND the refine join
-      .transform(graft.Graft.checkpoint(eager = false))
     // only coarse cells that own ≥1 fine child are probe targets —
     // otherwise a vector could land in a childless cell
     val usedCoarse = coarse.join(child.select(col("gid")).distinct(), Seq("gid"))

@@ -45,11 +45,12 @@ object CurationDagQueries {
     //    pipeline would compute them on supersets).
     // Per-stage survivor counts ride the output AND an observe() metric
     // (telemetry without a second pass). The narrow flag relation is
-    // persisted MEMORY_AND_DISK where two stages consume it (r8 verdict:
-    // MEMORY_ONLY made the persist recompute-fragile — one eviction under
-    // memory pressure re-ran the md5-per-gram quality projection for the
-    // whole corpus, a 13 s → 100 s bench storm; spilling the narrow flag
-    // rows is cheap, recomputing the signal projection is not);
+    // checkpointed where two stages consume it: the consumers exchange on
+    // different keys, so no exchange is shared and the costly signal
+    // projection would run once per consumer (r8 verdict: one eviction of
+    // a MEMORY_ONLY copy re-ran it for the whole corpus, a 13 s → 100 s
+    // bench storm; checkpoint blocks spill to disk instead; at sf0.1 the
+    // query takes 2.1 s with checkpoints, 6.5 s with persists);
     // clean_text is carried only into the chunk stage's explode.
     //
     // GATE SUBSET (r8 verdict #1, the q175/q176 precedent): the sf0.1
@@ -145,7 +146,7 @@ object CurationDagQueries {
           .select(col("doc_id"), col("lang"), col("clean_text"),
             col("score_fp"), col("pass1"), col("pass2"), col("pass3"))
           // consumed by the chunk stage AND the flag chain
-          .transform(Graft.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+          .transform(Graft.checkpoint(eager = false))
 
         // ---- stage 4: chunk dedup over stage-3 survivors only ----
         val chunks = flags3.filter(col("pass3"))
@@ -153,7 +154,7 @@ object CurationDagQueries {
           .select(col("doc_id"), posexplode(
             expr("transform(sequence(0, CAST(ceil(size(ws)/10.0) AS INT) - 1)," +
               " i -> array_join(slice(ws, i*10+1, 10), ' '))")).as(Seq("ci", "chunk")))
-          .transform(Graft.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+          .transform(Graft.checkpoint(eager = false))
         val canon = chunks.groupBy(col("chunk"))
           .agg(min(struct(col("doc_id"), col("ci"))).as("c"))
           .select(col("chunk"), col("c.doc_id").as("cd"), col("c.ci").as("cc"))
@@ -186,7 +187,7 @@ object CurationDagQueries {
           .select(col("doc_id"), col("lang"), col("score_fp"),
             col("pass1"), col("pass2"), col("pass3"), col("pass4"), col("pass5"))
           // consumed by the stage accounting AND the bucket histogram
-          .transform(Graft.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+          .transform(Graft.checkpoint(eager = false))
 
         // ---- stage accounting (one aggregate; observe() telemetry
         // rides the same pass) ----

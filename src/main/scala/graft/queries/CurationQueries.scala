@@ -4,7 +4,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 
-import graft.{GQuery, Graft}
+import graft.GQuery
 import graft.functions.{TextFunctions => TF}
 import graft.sources.Tables
 
@@ -273,8 +273,7 @@ object CurationQueries {
     // be accumulation-order-dependent and not hash-gateable). The outlier
     // test uses the squared form (q-mean)² · (n-1) > 4 · m2 — sqrt-free
     // and safe for n=1 groups (0 > 0 is false; no division anywhere).
-    // Two passes over the fact: tiny per-group stats (localCheckpoint'd —
-    // the memory-documented small-result pattern) broadcast back for the
+    // Two passes over the fact: tiny per-group stats broadcast back for the
     // per-row test; a 3-partition window over the whole fact would be the
     // wrong shape at scale.
     GQuery(
@@ -288,7 +287,6 @@ object CurationQueries {
           .withColumn("mean", col("s").cast("double") / col("n"))
           .withColumn("m2", col("ss").cast("double") -
             col("s").cast("double") * col("s").cast("double") / col("n"))
-          .transform(Graft.checkpoint(eager = false)) // lazy: the consuming action materializes it
         val outliers = li.join(broadcast(stats), Seq("l_returnflag"))
           .filter((col("q").cast("double") - col("mean")) *
             (col("q").cast("double") - col("mean")) *
@@ -394,8 +392,6 @@ object CurationQueries {
           .select(col("doc_id"), posexplode(
             expr("transform(sequence(0, CAST(ceil(size(ws)/10.0) AS INT) - 1)," +
               " i -> array_join(slice(ws, i*10+1, 10), ' '))")).as(Seq("ci", "chunk")))
-          // consumed by the canonical election AND the verdict join
-          .transform(Graft.checkpoint(eager = false))
         val canon = chunks.groupBy(col("chunk"))
           .agg(min(struct(col("doc_id"), col("ci"))).as("c"))
           .select(col("chunk"), col("c.doc_id").as("cd"), col("c.ci").as("cc"))

@@ -87,7 +87,7 @@ object GraphTemporalQueries {
           .filter(col("x") =!= col("y"))
           .select(least(col("x"), col("y")).as("a"),
             greatest(col("x"), col("y")).as("b"))
-          .distinct().transform(Graft.checkpoint(eager = false))
+          .distinct()
         val tri = e.as("e1")
           .join(e.as("e2"), col("e1.b") === col("e2.a"))
           .join(e.as("e3"),
@@ -289,7 +289,6 @@ object GraphTemporalQueries {
         val uni = docs
           .select(explode(toks).as("w"))
           .groupBy(col("w")).agg(count(lit(1)).as("c1"))
-          .transform(Graft.checkpoint(eager = false))
         // total token mass from the unigram aggregate — NOT a third scan
         // of the corpus
         val n = uni.agg(sum(col("c1")).as("n"))
@@ -391,10 +390,6 @@ object GraphTemporalQueries {
           // diverge from DuckDB's floor(epoch/86400) (ADVICE r3)
           .select(col("user_id"),
             floor(epochSec(col("ts")) / 86400).cast("int").as("day"))
-          // two consumers (cohort aggregation + join probe side, which
-          // cannot share an exchange) — checkpoint so the events scan runs
-          // once (the q81 lesson)
-          .transform(Graft.checkpoint(eager = false))
         val cohort = ev.groupBy(col("user_id")).agg(min(col("day")).as("cohort_day"))
         ev.join(cohort, Seq("user_id"))
           .select(col("user_id"), col("cohort_day"),

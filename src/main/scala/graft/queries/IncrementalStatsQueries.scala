@@ -77,7 +77,6 @@ object IncrementalStatsQueries {
           .select(floor(epochSec(col("ts")) / 86400).cast("long").as("day"),
             col("user_id"))
           .distinct()
-          .transform(Graft.checkpoint(eager = false)) // consumed by the fan-out AND the horizon scalar
         val horizon = du.agg(max(col("day")).as("max_day"))
         du.select(explode(sequence(col("day"), col("day") + 6)).as("window_day"),
             col("user_id"))

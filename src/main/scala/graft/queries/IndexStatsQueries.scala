@@ -3,7 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
-import graft.{GQuery, Graft}
+import graft.GQuery
 import graft.sources.Tables
 import graft.functions.{Packing, TextFunctions => TF}
 
@@ -98,7 +98,6 @@ object IndexStatsQueries {
           .withColumn("okey",
             col("cents") * lit(1073741824L) + col("o_orderkey"))
           .withColumn("one", lit(1L))
-          .transform(Graft.checkpoint(eager = false)) // count + rank pass share it
         // n is invariant under ranking — count the INPUT, never a second
         // evaluation of the prefix-sum pass
         val n = o.agg(count(lit(1)).as("n"))
@@ -142,7 +141,7 @@ object IndexStatsQueries {
     GQuery(
       "q153_bitmap_index",
       (s, d) => {
-        val o = Tables.orders(s, d).transform(Graft.checkpoint(eager = false)) // 3 consumers
+        val o = Tables.orders(s, d)
         def bitmap(pred: Column, name: String): DataFrame =
           o.filter(pred)
             .select((col("o_orderkey") / 32).cast("long").as("word_id"),
@@ -157,7 +156,6 @@ object IndexStatsQueries {
             coalesce(col("w_prio"), lit(0L)).as("w_prio"))
           .withColumn("and_pop",
             expr("CAST(bit_count(w_status & w_prio) AS BIGINT)"))
-          .transform(Graft.checkpoint(eager = false)) // rows + popcount total share it
         val popTotal = words.agg(sum(col("and_pop")).as("bitmap_count"))
         val direct = o.filter(col("o_orderstatus") === "F" &&
           col("o_orderpriority") === "1-URGENT")

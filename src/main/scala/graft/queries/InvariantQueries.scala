@@ -1,7 +1,7 @@
 package graft.queries
 
 import org.apache.spark.sql.functions._
-import graft.{GQuery, Graft}
+import graft.GQuery
 import graft.sources.Tables
 import graft.functions.{KMeans, Similarity}
 
@@ -92,10 +92,8 @@ object InvariantQueries {
       (s, d) => {
         val emb = Tables.embeddings(s, d)
         val queries = emb.filter(col("vec_id") < 10)
-        // ≤ 50 rows, consumed twice (sim check + recall join): materialize
-        // once instead of re-running the whole LSH pipeline per consumer
-        val lsh = Graft.checkpoint(eager = true)(Similarity.lshTopK(emb, queries, "vec_id",
-          "embedding", dims = 64, k = 5, planes = 4, tables = 8, probeRadius = 1))
+        val lsh = Similarity.lshTopK(emb, queries, "vec_id",
+          "embedding", dims = 64, k = 5, planes = 4, tables = 8, probeRadius = 1)
         val exact = Similarity.bruteForceTopK(emb, queries, "vec_id", "embedding", k = 5)
         val vecs = emb.select(col("vec_id"), col("embedding"))
         val checked = lsh

@@ -190,7 +190,6 @@ object MiningQueries {
           .agg(
             sum(expr("CAST(round(o_totalprice * 100) AS BIGINT)")).as("spend_cents"),
             max(floor(epochSec(col("o_orderdate")) / 86400).cast("long")).as("last_day"))
-          .transform(Graft.checkpoint(eager = false)) // consumed by the frontier scan AND the join-back
         val byX = pts.groupBy(col("spend_cents"))
           .agg(max(col("last_day")).as("best_day"))
           .withColumn("bucket", floor(col("spend_cents") / lit(bucketW.toDouble)).cast("long"))

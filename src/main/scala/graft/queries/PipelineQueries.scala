@@ -99,9 +99,9 @@ object PipelineQueries {
     // explode→agg, then df as count() over a term-partitioned window on
     // tf's (doc,term) rows — at web-corpus scale the vocabulary is
     // billions of terms, so neither a broadcast of df nor a second
-    // tokenize pass (Spark has no CTE sharing) would survive; the window
-    // is one shuffle of the already-aggregated tf rows. Score is tf/df
-    // via ONE double division — IEEE division is correctly rounded, so
+    // tokenize pass would survive; the window is one shuffle of the
+    // already-aggregated tf rows. Score is tf/df via ONE double
+    // division — IEEE division is correctly rounded, so
     // Spark and DuckDB agree bit-for-bit (a log-based idf would be at the
     // mercy of each engine's libm and could not be hash-gated; rankings
     // are identical either way since log(N/df) is monotone in 1/df).
@@ -218,10 +218,9 @@ object PipelineQueries {
     // q88: funnel analysis — first view → first later click → first later
     // purchase per user. Each stage is a groupBy(user_id) aggregate joined
     // back on user_id. Stage outputs are |users|-sized, not |events|-sized,
-    // and each is consumed twice (next stage + final join) — Spark has no
-    // CTE sharing, so without the localCheckpoints one execution would
-    // re-scan events ~6×; checkpointing the tiny stage tables caps it at
-    // one scan per stage (the memory-documented small-result pattern).
+    // and each is consumed twice (next stage + final join): both reads
+    // share the stage's exchange (ReusedExchange in the plan), so no stage
+    // is materialized and no job runs before the write.
     GQuery(
       "q88_funnel",
       (s, d) => {
@@ -229,12 +228,10 @@ object PipelineQueries {
           .select(col("user_id"), col("ts"), col("event_type"))
         val v = ev.filter(col("event_type") === "view")
           .groupBy(col("user_id")).agg(min(col("ts")).as("t_view"))
-          .transform(Graft.checkpoint(eager = true))
         val c = ev.filter(col("event_type") === "click").as("e")
           .join(v.as("v"),
             col("e.user_id") === col("v.user_id") && col("e.ts") > col("v.t_view"))
           .groupBy(col("e.user_id")).agg(min(col("e.ts")).as("t_click"))
-          .transform(Graft.checkpoint(eager = true))
         val p = ev.filter(col("event_type") === "purchase").as("e")
           .join(c.as("c"),
             col("e.user_id") === col("c.user_id") && col("e.ts") > col("c.t_click"))
@@ -572,7 +569,6 @@ object PipelineQueries {
         val counts = Tables.spread(Tables.documents(s, d), col("doc_id"))
           .select(explode(TF.tokens(col("text"))).as("tok"))
           .groupBy(col("tok")).agg(count(lit(1)).as("true_cnt"))
-          .transform(Graft.checkpoint(eager = false)) // sketch build + probe selection share it
         val rs = explode(array((0 until depth).map(lit(_)): _*)).as("r")
         val sketch = counts.select(rs, col("tok"), col("true_cnt"))
           .select(col("r"), cell(col("tok"), col("r")).as("cell"), col("true_cnt"))

@@ -50,7 +50,6 @@ object RecsAndInfoQueries {
           .join(broadcast(topOrders), col("l_orderkey") === col("tok"))
           .select(col("c"), col("l_partkey").as("p"))
           .distinct()
-          .transform(Graft.checkpoint(eager = false)) // consumed by scoring AND the anti join
         // the shared candidate core (q157/q162 — one implementation)
         val tri = MiningQueries.copurchasePairs(s, d, minSupport = 2)
           .select(col("p1").as("pa"), col("p2").as("pb"), col("support").as("w"))

@@ -50,7 +50,6 @@ object RetrievalQueries {
         val counts = Tables.spread(Tables.documents(s, d), col("doc_id"))
           .select(explode(TF.tokens(col("text"))).as("tok"))
           .groupBy(col("tok")).agg(count(lit(1)).as("cnt"))
-          .transform(Graft.checkpoint(eager = false)) // filter build + member probes share it
         val cells = counts.select(col("tok")).select(col("tok"), rs)
           .select(col("tok"), bitIdx(col("tok"), col("r")).as("idx"))
           .select((col("idx") / 32).cast("long").as("word_id"),
@@ -61,7 +60,6 @@ object RetrievalQueries {
         val spine = s.range(32).select(col("id").as("word_id"))
         val filterWords = spine.join(words, Seq("word_id"), "left")
           .select(col("word_id"), coalesce(col("word_val"), lit(0L)).as("word_val"))
-          .transform(Graft.checkpoint(eager = false)) // consumed by output + both probe joins
         def probe(probes: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame =
           probes.select(col("tok"), rs)
             .select(col("tok"), bitIdx(col("tok"), col("r")).as("idx"))
@@ -139,7 +137,6 @@ object RetrievalQueries {
       (s, d) => {
         val k = 64
         val vals = Tables.orders(s, d).select(col("o_custkey")).distinct()
-          .transform(Graft.checkpoint(eager = false)) // sketch + true-count share it
         val hashed = vals.select(col("o_custkey"),
           TF.md5Hash60(concat(lit("ck#"), col("o_custkey").cast("string"))).as("h"))
         // TakeOrderedAndProject: per-partition heap of k, merge — never a
@@ -148,7 +145,6 @@ object RetrievalQueries {
           .withColumn("rank", row_number().over(
             org.apache.spark.sql.expressions.Window
               .orderBy(col("h").asc, col("o_custkey").asc)).cast("long"))
-          .transform(Graft.checkpoint(eager = false)) // rows + kth-hash aggregate share it
         // under-filled sketch (fewer than k distinct keys): the k-th-hash
         // formula does not apply — the sketch holds the WHOLE keyspace and
         // reports the exact count instead
@@ -421,7 +417,6 @@ object RetrievalQueries {
           .groupBy(col("r"), col("cell")).agg(sum(col("cnt")).as(cntName))
         val urgent = Tables.orders(s, d)
           .filter(col("o_orderpriority") === "1-URGENT")
-          .transform(Graft.checkpoint(eager = false)) // sketch build + exact join share it
         val aCms = cms(Tables.lineitem(s, d)
           .groupBy(col("l_orderkey").as("key")).agg(count(lit(1)).as("cnt")), "cnt_a")
         val bCms = cms(urgent
@@ -489,7 +484,6 @@ object RetrievalQueries {
           .agg(
             max(when(col("o_orderpriority") === "1-URGENT", 1L).otherwise(0L)).as("in_a"),
             max(when(col("o_orderpriority") === "2-HIGH", 1L).otherwise(0L)).as("in_b"))
-          .transform(Graft.checkpoint(eager = false)) // sketch + exact truth share it
         val hashed = flags.select(col("o_custkey"), col("in_a"), col("in_b"),
           TF.md5Hash60(concat(lit("ku#"), col("o_custkey").cast("string"))).as("h"))
         // TakeOrderedAndProject: per-partition heap of k, no global sort

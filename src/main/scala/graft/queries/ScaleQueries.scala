@@ -3,7 +3,7 @@ package graft.queries
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
-import graft.{GQuery, Graft}
+import graft.GQuery
 import graft.sources.Tables
 
 /** Scale-shape gates: the salted skew join promoted from test-only to a
@@ -353,7 +353,6 @@ object ScaleQueries {
       (s, d) => {
         val sel = Tables.orders(s, d).filter(col("o_totalprice") > 450000.0)
           .select(col("o_orderkey"), col("o_orderpriority"))
-          .transform(Graft.checkpoint(eager = false)) // consumed by the build AND the exact join
         val bf = typedLit(bloomWords(sel, "o_orderkey"))
         val probe = Tables.lineitem(s, d)
           .select(col("l_orderkey"), col("l_quantity"),
@@ -475,16 +474,14 @@ object ScaleQueries {
         val keyed = Tables.lineitem(s, d)
           .select(when(col("l_orderkey") % 10 < 3, lit(0L))
             .otherwise(pmod(col("l_partkey"), lit(997L))).as("key"))
-        // the one corpus shuffle, materialized once — every downstream
-        // consumer (stats + both percentile probes) reads the
-        // keys-cardinality result, not the corpus
+        // the one corpus shuffle: every downstream consumer (stats + both
+        // percentile probes) reads the keys-cardinality result through
+        // one reused exchange, not the corpus
         val sizes = keyed.groupBy(col("key")).agg(count(lit(1)).as("sz"))
-          .transform(Graft.checkpoint(eager = false))
         val stats = sizes.agg(
           count(lit(1)).as("n_keys"),
           sum(col("sz")).as("total_rows"),
           max(col("sz")).as("max_size"))
-          .transform(Graft.checkpoint(eager = false))
         // single ranked pass serves BOTH percentiles (the global sort is
         // the acknowledged exactness price — pay it once)
         val pct = sizes.withColumn("rn",

@@ -3,7 +3,7 @@ package graft.queries
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.{GQuery, Graft}
+import graft.GQuery
 import graft.functions.{Similarity, TextFunctions => TF}
 import graft.sources.Tables
 
@@ -58,10 +58,8 @@ object SemanticCurationQueries {
         val emb = Tables.embeddings(s, d)
         val n = emb.count()
         val k = math.max(4, math.ceil(n / 256.0).toInt)
-        // consumed by the pair join AND the final output — materialize once
         val assigned = Similarity.hierarchicalAssign(
             emb, "vec_id", "embedding", k)
-          .transform(Graft.checkpoint(eager = false))
         val withVec = emb.select(col("vec_id"), col("embedding"))
           .join(assigned, Seq("vec_id"))
         val pruned = Similarity.blockedNearDupPairs(withVec,

@@ -4,7 +4,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.{GQuery, Graft}
+import graft.GQuery
 import graft.functions.{TextFunctions => TF}
 import graft.sources.Tables
 
@@ -56,16 +56,10 @@ object SpanDedupQueries {
         posexplode(TF.wordShingleHashesAll(col("text"), t))
           .as(Seq("pos0", "h")))
       .select(col("doc_id"), (col("pos0") + 1).as("pos"), col("h"))
-      // both sides of the self-join reference grams: un-persisted, the
-      // corpus explode executes twice inside one job (the q81 lesson).
-      // MEMORY_ONLY persist, NOT localCheckpoint: checkpoint's
-      // MEMORY_AND_DISK blocks hit disk under storage-pool pressure, and
-      // the r7 driver's 9x-warm q175 pointed at exactly that (slow-disk
-      // materialization of a corpus-sized explode). Eviction under
-      // MEMORY_ONLY costs a cheap CPU recompute instead of a disk write
-      // + read; lineage here is one scan + one generator, so losing the
-      // truncation property is free.
-      .transform(Graft.persist(org.apache.spark.storage.StorageLevel.MEMORY_ONLY))
+      // both sides of the self-join read grams: they share the corpus
+      // shuffle (a ReusedExchange) and each runs the generator, which at
+      // sf0.1 costs less than materializing grams (q175: 0.37 s against
+      // 0.42 s)
     val capped = graft.ops.Skew.capHotBuckets(grams, Seq(col("h")), maxBucket,
       "spans_cap", "dropped_gram_rows", "gram_rows")
     // merge-hinted: grams is corpus-sized — this join must NEVER broadcast

@@ -250,7 +250,7 @@ object SqlFeatureQueries {
             |       MAX(step) = COUNT(*) AS complete
             |FROM walk GROUP BY ck
             |ORDER BY custkey ASC
-            |""".stripMargin, "edges" -> edges).transform(Graft.checkpoint(eager = true))
+            |""".stripMargin, "edges" -> edges)
       },
       Some("""WITH RECURSIVE e AS (
              |  SELECT o_custkey AS ck, o_orderkey AS ok,

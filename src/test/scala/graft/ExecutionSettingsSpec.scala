@@ -202,6 +202,19 @@ class ExecutionSettingsSpec extends SparkTestBase {
     assert((scratchEntries -- before).size == 1, "outside an execution the directory goes")
   }
 
+  test("q175 and q229 leave the session's CacheManager empty, outside an execution too") {
+    // A persisted frame stays in the shared CacheManager until something
+    // unpersists it, and outside an execution nothing does: a second run
+    // on the same dir read the first run's cached plan ("Asked to cache
+    // already cached data").
+    val cache = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+      .sharedState.cacheManager
+    for (name <- Seq("q175_exact_spans", "q229_curation_dag"); run <- 1 to 2) {
+      q(name).collect()
+      assert(cache.isEmpty, s"$name run $run left a cached plan")
+    }
+  }
+
   test("q79's first executions on a fresh fixture dir run side by side") {
     // Two first executions of q79 on each of four fresh copies of the
     // fixture: each must return the sequential rows. The catalog check and

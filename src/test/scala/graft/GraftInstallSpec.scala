@@ -178,18 +178,31 @@ class GraftInstallSpec extends SparkTestBase {
   }
 
   test("src/main materializes only through Graft and never lists the context's RDDs") {
-    // Graft.checkpoint and Graft.persist hand what they materialize to the
-    // open execution, which releases exactly that. A direct call leaves its
-    // blocks to a GC, and a drop of every persistent RDD of the context
-    // also drops the checkpoints a concurrent query still reads.
+    // Graft.checkpoint hands what it materializes to the open execution,
+    // which releases exactly that. A direct call leaves its blocks to a GC,
+    // and a drop of every persistent RDD of the context also drops the
+    // checkpoints a concurrent query still reads. A persist outside an
+    // execution stays in the session's CacheManager, so none is left.
     val graftFile = "src/main/scala/graft/Graft.scala"
-    val materialize = """localCheckpoint\(|(?<!Graft)\.persist\(|\.cache\(\)|unpersist\(""".r
+    val materialize = """localCheckpoint\(|\.persist\(|\.cache\(\)|unpersist\(""".r
     val all = sourceLines("src/main")
     val outside = all.filter { case (f, l) => f != graftFile && materialize.findFirstIn(l).isDefined }
     assert(outside.isEmpty, s"materialization outside Graft: ${outside.mkString("; ")}")
     assert(all.exists { case (f, l) => f == graftFile && l.contains("df.localCheckpoint(eager)") })
+    assert(!all.exists(_._2.contains(".persist(")), "a persist in src/main")
     val listing = all.filter(_._2.contains("getPersistentRDDs"))
     assert(listing.isEmpty, s"getPersistentRDDs in src/main: ${listing.mkString("; ")}")
+  }
+
+  test("Graft.checkpoint call sites in src/main only shrink") {
+    // A checkpoint earns its place as loop state, as a snapshot, or where
+    // measurement shows that it pays: two consumers in one plan mostly
+    // share the branch through a reused exchange. This budget may only
+    // shrink.
+    val budget = 37
+    val sites = sourceLines("src/main").filter(_._2.contains("Graft.checkpoint("))
+    assert(sites.length <= budget,
+      s"${sites.length} Graft.checkpoint( sites, budget $budget: ${sites.mkString("; ")}")
   }
 
   /** Runs `body` on a factory-built session over `spark.newSession()`: a

@@ -21,9 +21,19 @@ class JobBudgetSpec extends SparkTestBase {
   }
 
   // build plus the noop write perfbench times; q150 trains 5 BPE rounds of
-  // one pair-count aggregate and one argmax each, q161 collects one Gram row
+  // one pair-count aggregate and one argmax each, q161 collects one Gram row.
+  // q81 and q117 enter the two connected-components loops, whose first
+  // checkpoints are lazy: the count or signature that follows materializes
+  // them. The star loop's count varies by a job or two from run to run (an
+  // AQE stage can start before a re-plan drops it): in 33 warm runs each,
+  // q117 ran 72-74 jobs and q145 75-76 (73-76 and 76-77 with the eager
+  // checkpoints), so each budget is that maximum. q88 and q72 read their
+  // shared stages through reused exchanges, where an eager checkpoint was
+  // a job of its own.
   for ((name, budget) <- Seq("q177_bloom_semijoin" -> 6, "q68_ivf_kmeans" -> 10,
-      "q150_bpe_merges" -> 13, "q161_pca_power" -> 3))
+      "q150_bpe_merges" -> 13, "q161_pca_power" -> 3, "q81_dedup_clusters" -> 30,
+      "q117_chain_components" -> 74, "q145_leakage_free_split" -> 76, "q88_funnel" -> 9,
+      "q72_lsh_invariants" -> 12))
     test(s"$name starts at most $budget jobs per execution") {
       val jobs = jobsStartedBy(
         SparkEntry.queries(name)(spark, sf01).write.format("noop").mode("overwrite").save())

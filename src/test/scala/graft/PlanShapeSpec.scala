@@ -1,6 +1,8 @@
 package graft
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.SparkPlan
+import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.functions.Similarity
@@ -341,6 +343,58 @@ class PlanShapeSpec extends SparkTestBase {
     }
   }
 
+  /** Every node of a physical plan, into AQE's final plan and its query stages. */
+  private def finalNodes(p: SparkPlan): Seq[SparkPlan] = p match {
+    case a: AdaptiveSparkPlanExec => finalNodes(a.executedPlan)
+    case s: QueryStageExec => s +: finalNodes(s.plan)
+    case other => other +: other.children.flatMap(finalNodes)
+  }
+
+  /** The plan a noop write of `name` ran, as AQE finally executed it. */
+  private def finalWritePlan(name: String): SparkPlan = {
+    val df = SparkEntry.queries(name)(spark, sf)
+    val seen = new java.util.concurrent.LinkedBlockingQueue[SparkPlan]
+    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
+      override def onSuccess(f: String,
+          qe: org.apache.spark.sql.execution.QueryExecution, ns: Long): Unit =
+        seen.put(qe.executedPlan)
+      override def onFailure(f: String,
+          qe: org.apache.spark.sql.execution.QueryExecution, e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    try {
+      df.write.format("noop").mode("overwrite").save()
+      Iterator.continually(seen.poll(60, java.util.concurrent.TimeUnit.SECONDS))
+        .map { p => assert(p != null, s"$name: no write execution reported"); p }
+        .find(_.isInstanceOf[org.apache.spark.sql.execution.datasources.v2.V2TableWriteExec])
+        .get
+    } finally spark.listenerManager.unregister(listener)
+  }
+
+  test("a branch two consumers read in one plan runs once, through a ReusedExchange") {
+    // These queries read a shared branch twice in the plan their noop write
+    // runs, with no checkpoint: the second read must be a ReusedExchange of
+    // the first (AQE's stage reuse), or the branch runs twice. Each entry
+    // names a column of the shared branch's exchange.
+    import org.apache.spark.sql.execution.exchange.ReusedExchangeExec
+    val shared = Seq(
+      "q118_triangle_count" -> "a", "q122_collocations" -> "w",
+      "q179_chunk_dedup" -> "text", "q158_skyline" -> "o_custkey",
+      "q220_semdedup" -> "cvec", "q146_bloom_filter" -> "word_val",
+      "q147_bottomk_sample" -> "o_custkey", "q198_kmv_intersection" -> "o_custkey",
+      "q72_lsh_invariants" -> "neighbor_id", "q255_skew_audit" -> "key",
+      "q153_bitmap_index" -> "word_id", "q88_funnel" -> "user_id",
+      "q144_countmin_sketch" -> "tok", "q175_exact_spans" -> "text",
+      "q176_span_cut" -> "text", "q170_copurchase_recs" -> "p")
+    val missing = shared.filterNot { case (name, column) =>
+      finalNodes(finalWritePlan(name)).exists {
+        case r: ReusedExchangeExec => r.child.output.exists(_.name == column)
+        case _ => false
+      }
+    }
+    assert(missing.isEmpty, s"no ReusedExchange over the shared branch: ${missing.mkString(", ")}")
+  }
+
   test("media-synthesis gates: ids spread before synthesis; sortDecoded gates shuffle before the range sort") {
     // the codec-boundary rule (Multimodal scaladoc), read from the plan a
     // noop write finally ran: (1) in all 31 gates the exchange beneath the
@@ -352,15 +406,9 @@ class PlanShapeSpec extends SparkTestBase {
     // MapPartitions pipeline — RangePartitioner's sample job evaluates its
     // child, which would otherwise run the whole synthesis + decode a
     // second time.
-    import org.apache.spark.sql.execution.{MapElementsExec, MapPartitionsExec, SparkPlan}
-    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+    import org.apache.spark.sql.execution.{MapElementsExec, MapPartitionsExec}
     import org.apache.spark.sql.execution.exchange.{Exchange, ShuffleExchangeExec}
     import org.apache.spark.sql.catalyst.plans.physical.{HashPartitioning, RangePartitioning}
-    def finalNodes(p: SparkPlan): Seq[SparkPlan] = p match {
-      case a: AdaptiveSparkPlanExec => finalNodes(a.executedPlan)
-      case s: QueryStageExec => s +: finalNodes(s.plan)
-      case other => other +: other.children.flatMap(finalNodes)
-    }
     def isTypedMap(p: SparkPlan) =
       p.isInstanceOf[MapPartitionsExec] || p.isInstanceOf[MapElementsExec]
     // the operators a task runs beneath p, down to the nearest exchanges
@@ -376,25 +424,6 @@ class PlanShapeSpec extends SparkTestBase {
       case e: ShuffleExchangeExec => Some(e)
       case s: QueryStageExec => shuffleOf(s.plan)
       case _ => None
-    }
-    def finalWritePlan(name: String): SparkPlan = {
-      val df = SparkEntry.queries(name)(spark, sf)
-      val seen = new java.util.concurrent.LinkedBlockingQueue[SparkPlan]
-      val listener = new org.apache.spark.sql.util.QueryExecutionListener {
-        override def onSuccess(f: String,
-            qe: org.apache.spark.sql.execution.QueryExecution, ns: Long): Unit =
-          seen.put(qe.executedPlan)
-        override def onFailure(f: String,
-            qe: org.apache.spark.sql.execution.QueryExecution, e: Exception): Unit = ()
-      }
-      spark.listenerManager.register(listener)
-      try {
-        df.write.format("noop").mode("overwrite").save()
-        Iterator.continually(seen.poll(60, java.util.concurrent.TimeUnit.SECONDS))
-          .map { p => assert(p != null, s"$name: no write execution reported"); p }
-          .find(_.isInstanceOf[org.apache.spark.sql.execution.datasources.v2.V2TableWriteExec])
-          .get
-      } finally spark.listenerManager.unregister(listener)
     }
     val gates = Seq(
       "q143_pcm_stats", "q173_container_meta", "q195_image_dhash", "q201_gif_frames",
@@ -465,8 +494,7 @@ class PlanShapeSpec extends SparkTestBase {
     // shuffle join regardless of how small the gate-scale table is; the
     // only broadcasts in the assignment plan are the O(√K) coarse tables
     // (cross-join argmax → BroadcastNestedLoopJoin) and gate-constant
-    // artifacts. Inspect the assignment sub-plan directly (the gate
-    // checkpoints it, which would hide the joins behind a LogicalRDD).
+    // artifacts. Inspect the assignment sub-plan directly.
     // (the used-gid restriction join IS allowed to broadcast — its build
     // side is the O(√K) distinct-gid set, not the child table; the
     // defect is specifically a broadcast that carries the fine-centroid
@@ -616,7 +644,6 @@ class PlanShapeSpec extends SparkTestBase {
   }
 
   test("q68 top-k is one rank window: a partial WindowGroupLimit below the hash exchange, no _pid") {
-    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
     import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
     import org.apache.spark.sql.execution.window.{Partial, WindowGroupLimitExec}
     val plan = SparkEntry.queries("q68_ivf_kmeans")(spark, sf).queryExecution.executedPlan match {
