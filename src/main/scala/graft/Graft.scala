@@ -93,7 +93,7 @@ object Graft {
   def checkpoint(eager: Boolean): DataFrame => DataFrame = df => {
     val out = df.localCheckpoint(eager)
     val rdd = new java.lang.ref.WeakReference(graftbridge.checkpointedRdd(out))
-    hold(() => Option(rdd.get).foreach(_.unpersist(blocking = false)))
+    hold(() => Option(rdd.get).foreach(graftbridge.unpersistRdd))
     out
   }
 

@@ -2,8 +2,9 @@ package graft.functions
 
 import scala.collection.immutable.ArraySeq
 import scala.collection.mutable
-import org.apache.spark.sql.{Column, DataFrame, Encoder}
-import org.apache.spark.sql.catalyst.CatalystTypeConverters
+import org.apache.spark.rdd.RDD
+import org.apache.spark.sql.{Column, Encoder}
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
 import org.apache.spark.sql.expressions.Aggregator
 import org.apache.spark.sql.functions.udaf
@@ -48,26 +49,25 @@ object Aggregators {
   def vectorCentroid(vec: Column, dims: Int): Column =
     udaf(new VectorCentroid(dims), ExpressionEncoder[Seq[Float]]()).apply(vec)
 
-  /** One [[VectorCentroid]] buffer per non-null key of `keyed`'s
-    * (key, array<float> vector) rows, folded on the driver in ONE Spark
-    * job: each task reduces its rows into a buffer per key with the
+  /** One [[VectorCentroid]] buffer per non-null `key` of `rows`, whose
+    * ordinal 1 holds the array<float> vector, folded on the driver in ONE
+    * Spark job: each task reduces its rows into a buffer per key with the
     * aggregate's own `reduce`, and `treeAggregate` (depth 2) merges the
     * per-task maps on the way to the driver. A null or wrong-arity vector
     * still creates its key's buffer, holding no rows, as a relational group
-    * of such rows does. Keys come back as Scala values.
+    * of such rows does. `key` gives a row's key, null to skip the row.
     *
     * For state bounded by the key count (k-means clusters, IVF cells): the
     * relational `groupBy(key).agg(vectorCentroid)` costs an exchange, and
     * under AQE a job of its own, every time it is read.
     */
-  private[graft] def centroidBuffers(keyed: DataFrame, dims: Int): collection.Map[Any, CentroidBuf] = {
+  private[graft] def centroidBuffers(rows: RDD[InternalRow], dims: Int)(
+      key: InternalRow => Any): collection.Map[Any, CentroidBuf] = {
     val agg = new VectorCentroid(dims)
-    val keyType = keyed.schema.head.dataType
-    val toKey = CatalystTypeConverters.createToScalaConverter(keyType)
-    keyed.queryExecution.toRdd.treeAggregate(mutable.HashMap.empty[Any, CentroidBuf])(
+    rows.treeAggregate(mutable.HashMap.empty[Any, CentroidBuf])(
       (m, r) => {
-        if (!r.isNullAt(0)) {
-          val k = toKey(r.get(0, keyType))
+        val k = key(r)
+        if (k != null) {
           val v = if (r.isNullAt(1)) null else ArraySeq.unsafeWrapArray(r.getArray(1).toFloatArray())
           m(k) = agg.reduce(m.getOrElse(k, agg.zero), v)
         }

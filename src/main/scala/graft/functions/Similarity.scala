@@ -1,6 +1,7 @@
 package graft.functions
 
 import org.apache.spark.sql.{Column, DataFrame, Row, graftbridge}
+import org.apache.spark.sql.catalyst.CatalystTypeConverters
 import org.apache.spark.sql.catalyst.expressions.Literal
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -143,33 +144,31 @@ object Similarity {
     * search", TPAMI 2011 — without the PQ refinement) — the other classic
     * ANN scale path next to [[lshTopK]]:
     *
-    *   1. a coarse quantizer: the centroid of each non-null value of a
-    *      partition column (here any blocking key; with k-means labels it
-    *      is textbook IVF), folded on the driver by [[cellCentroids]] in one
-    *      job; the cells ride the plan as a literal (bounded by driver
-    *      memory, like any broadcast), which each query row explodes — no
-    *      join, and no broadcast job;
+    *   1. a coarse quantizer: `cells`, (cell, centroid array<float>) rows
+    *      held on the driver — [[cellCentroids]] of any blocking key, or
+    *      [[KMeans.fit]]'s centroids (textbook IVF). They ride the plan as
+    *      a literal (bounded by driver memory, like any broadcast), which
+    *      each query row explodes — no join, and no broadcast job;
     *   2. each query probes the `nprobe` nearest centroids (a rank window
     *      over queries × cells; skipped when `nprobe` covers every cell);
     *   3. exact cosine only within the probed cells.
     *
     * Pairwise work drops from Q×N to Q×(N·nprobe/cells); the corpus is
-    * scanned once for the centroids and once for the search, and the
-    * probed (query, cell) pairs broadcast to it.
+    * scanned once for the search, and the probed (query, cell) pairs
+    * broadcast to it.
     */
   def ivfTopK(
       corpus: DataFrame, queries: DataFrame,
       idCol: String, vecCol: String, cellCol: String,
-      dims: Int, k: Int, nprobe: Int): DataFrame = {
-    val centroids = cellCentroids(corpus, cellCol, vecCol, dims)
-    val cells = graftbridge.toColumn(Literal.create(centroids, ArrayType(StructType(Seq(
+      cells: Seq[Row], k: Int, nprobe: Int): DataFrame = {
+    val cellLit = graftbridge.toColumn(Literal.create(cells, ArrayType(StructType(Seq(
       StructField("cell", corpus.schema(cellCol).dataType),
       StructField("centroid", ArrayType(FloatType)))))))
     val pairs = queries.select(col(idCol).as("query_id"), col(vecCol).as("qvec"),
-        explode(cells).as("c"))
+        explode(cellLit).as("c"))
       .select(col("query_id"), col("qvec"), col("c.cell").as("cell"), col("c.centroid").as("centroid"))
     val probed =
-      if (nprobe >= centroids.size) pairs // every cell is probed: nothing to rank
+      if (nprobe >= cells.size) pairs // every cell is probed: nothing to rank
       else pairs
         .withColumn("cr", row_number().over(Window.partitionBy(col("query_id"))
           .orderBy(cosine(col("qvec"), col("centroid")).desc, col("cell").asc)))
@@ -192,7 +191,10 @@ object Similarity {
   private[graft] def cellCentroids(corpus: DataFrame, cellCol: String, vecCol: String,
       dims: Int): Seq[Row] = {
     val agg = new Aggregators.VectorCentroid(dims)
-    Aggregators.centroidBuffers(corpus.select(col(cellCol), col(vecCol)), dims).toSeq
+    val keyType = corpus.schema(cellCol).dataType
+    val toKey = CatalystTypeConverters.createToScalaConverter(keyType)
+    Aggregators.centroidBuffers(corpus.select(col(cellCol), col(vecCol)).queryExecution.toRdd, dims)(r =>
+      if (r.isNullAt(0)) null else toKey(r.get(0, keyType))).toSeq
       .map { case (cell, b) => Row(cell, agg.finish(b).map(_.toFloat)) }
   }
 

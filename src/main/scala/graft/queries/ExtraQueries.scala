@@ -174,7 +174,9 @@ object ExtraQueries {
       (s, d) => {
         val emb = Tables.embeddings(s, d)
         graft.functions.Similarity.ivfTopK(emb, emb.filter(col("vec_id") < 10),
-            "vec_id", "embedding", "label", dims = 64, k = 5, nprobe = 10)
+            "vec_id", "embedding", "label",
+            graft.functions.Similarity.cellCentroids(emb, "label", "embedding", dims = 64),
+            k = 5, nprobe = 10)
           .orderBy(col("query_id").asc, col("rank").asc)
       },
       Some("""WITH q AS (SELECT vec_id AS query_id, embedding AS qvec FROM embeddings WHERE vec_id < 10),

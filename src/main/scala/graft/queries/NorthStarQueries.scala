@@ -560,14 +560,15 @@ object NorthStarQueries {
       "q68_ivf_kmeans",
       (s, d) => {
         val emb = Tables.embeddings(s, d)
-        val (_, centroids) = graft.functions.KMeans.fit(
+        val centroids = graft.functions.KMeans.fit(
           emb, "vec_id", "embedding", k = 8, dims = 64, iterations = 3)
         // assignment is a projection against the centroids as a literal:
         // the cell id lands next to the vector in one pass — no corpus
         // self-join by id to re-attach the embedding to its cluster
         val cells = graft.functions.KMeans.assignAll(emb, "embedding", centroids)
         graft.functions.Similarity.ivfTopK(cells, cells.filter(col("vec_id") < 10),
-            "vec_id", "embedding", "cluster", dims = 64, k = 5, nprobe = 8)
+            "vec_id", "embedding", "cluster", centroids, k = 5, nprobe = 8)
+          .coalesce(1) // k × |queries| = 5 × 10 rows: one task sorts them
           .orderBy(col("query_id").asc, col("rank").asc)
       },
       Some("""WITH q AS (SELECT vec_id AS query_id, embedding AS qvec FROM embeddings WHERE vec_id < 10),

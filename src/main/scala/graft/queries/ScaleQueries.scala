@@ -1,8 +1,11 @@
 package graft.queries
 
+import org.apache.spark.sql.{Column, DataFrame, graftbridge}
+import org.apache.spark.sql.catalyst.expressions.{BloomFilterMightContain, Literal}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.DecimalType
+import org.apache.spark.sql.types.{BinaryType, DecimalType}
+import org.apache.spark.util.sketch.BloomFilter
 import graft.GQuery
 import graft.sources.Tables
 
@@ -13,37 +16,31 @@ import graft.sources.Tables
   */
 object ScaleQueries {
 
-  private def dec(c: org.apache.spark.sql.Column) = c.cast(DecimalType(18, 2))
+  private def dec(c: Column) = c.cast(DecimalType(18, 2))
 
-  /** q177's Bloom filter: m = 65536 bits in 2048 longs of 32 bits each,
-    * k = 3 hashes. Its bit layout is engine-internal (the oracle is the
-    * plain join), so bit r of a key is one codegen'd xxhash64 over
-    * (key, r) rather than an oracle-replayable md5 chain (r9; was 3 md5s
-    * per lineitem row — the probe side's dominant cost).
+  /** q177's Bloom filter over `df`'s bigint `key` column: Spark's own
+    * sketch, m = 65,536 bits and k = 3 hashes, folded on the driver in one
+    * `treeAggregate` job. `BloomFilter.create(n, m)` derives k as
+    * round(m/n · ln 2), so n is the one that gives k = 3 (at n = 4,096,
+    * k = 11 let 266k of 600k lineitem rows through at sf0.1).
     */
-  private[graft] val BloomBits = 65536L
-  private[graft] val BloomHashes = 3
-  private[graft] def bloomIndex(key: org.apache.spark.sql.Column, r: Int) =
-    pmod(xxhash64(key, lit(r)), lit(BloomBits))
+  private[graft] def bloomFilter(df: DataFrame, key: String): BloomFilter = {
+    val bits = 65536L
+    val zero = BloomFilter.create(math.round(bits * math.log(2) / 3), bits)
+    df.select(col(key)).queryExecution.toRdd.treeAggregate(zero)(
+      (bf, row) => { if (!row.isNullAt(0)) bf.putLong(row.getLong(0)); bf },
+      (a, b) => a.mergeInPlace(b),
+      depth = 2)
+  }
 
-  /** The Bloom filter words of `df`'s `key` column, folded on the driver:
-    * each task ORs its keys' bits into one 2048-long array and
-    * `treeAggregate` (depth 2) ORs the arrays together — one job, where a
-    * relational `bit_or` per word pays a shuffle, a join against the word
-    * ids and a collecting aggregate, each under AQE a job of its own.
-    */
-  private[graft] def bloomWords(df: org.apache.spark.sql.DataFrame, key: String): Array[Long] =
-    df.select((0 until BloomHashes).map(bloomIndex(col(key), _)): _*).queryExecution.toRdd
-      .treeAggregate(new Array[Long]((BloomBits / 32).toInt))(
-        (w, row) => {
-          for (r <- 0 until BloomHashes) {
-            val i = row.getLong(r)
-            w((i / 32).toInt) |= 1L << (i % 32)
-          }
-          w
-        },
-        (a, b) => { for (i <- a.indices) a(i) |= b(i); a },
-        depth = 2)
+  /** `key` might be in `bf`: Spark's codegen'd `BloomFilterMightContain`
+    * over the sketch's serialized bytes as a binary literal. */
+  private def mightContain(bf: BloomFilter, key: Column): Column = {
+    val bytes = new java.io.ByteArrayOutputStream
+    bf.writeTo(bytes)
+    graftbridge.toColumn(BloomFilterMightContain(
+      Literal(bytes.toByteArray, BinaryType), graftbridge.toExpression(key)))
+  }
 
   val all: Seq[GQuery] = Seq(
     // ------------------------------------------------------------------
@@ -338,36 +335,26 @@ object ScaleQueries {
     // joins, spelled explicitly so it composes anywhere (pre-shuffle
     // probe pruning, multi-stage reuse of one filter, cross-job reuse).
     // Build side: the SELECTIVE orders subset's keys fold ON THE DRIVER
-    // into a 2048-word bitset ([[bloomWords]]: one treeAggregate job, no
-    // shuffle); the 16 KB word array rides the plan as a literal. Probe
-    // side: 3 hash bit-tests evaluate MAP-SIDE (codegen arithmetic over
-    // element_at — no explode, no join, no UDF) BEFORE lineitem reaches
-    // the join shuffle, cutting shuffled probe volume to ~|match| +
-    // FPR·|probe| (m=65536, k=3, n≈1.5k keys → FPR ≈ 3e-4). The exact
-    // join then removes false positives, which is why the oracle is the
-    // PLAIN join — bloom correctness shows up as result invariance, and
-    // PlanShapeSpec pins the reduction + the no-false-negative guarantee
-    // via observe() telemetry.
+    // into Spark's Bloom sketch ([[bloomFilter]]: one job, no shuffle),
+    // whose 8 KB ride the plan as a binary literal. Probe side: Spark's
+    // `might_contain` runs MAP-SIDE in the lineitem scan's generated code,
+    // cutting shuffled probe volume to ~|match| + FPR·|probe|, FPR ≈
+    // (1 − e^(−3n/65536))³: 3e-4 at sf0.01 (n ≈ 1.5k keys), 0.12 at sf0.1
+    // (n = 14,957; 600k → 125k rows). The exact join then removes false
+    // positives, which is why the oracle is the PLAIN join — bloom
+    // correctness shows up as result invariance, and PlanShapeSpec pins the
+    // reduction + the no-false-negative guarantee from SQL metrics. The
+    // final sort orders at most five groups (one per o_orderpriority), so
+    // it runs in one task.
     GQuery(
       "q177_bloom_semijoin",
       (s, d) => {
         val sel = Tables.orders(s, d).filter(col("o_totalprice") > 450000.0)
           .select(col("o_orderkey"), col("o_orderpriority"))
-        val bf = typedLit(bloomWords(sel, "o_orderkey"))
-        val probe = Tables.lineitem(s, d)
+        val filtered = Tables.lineitem(s, d)
           .select(col("l_orderkey"), col("l_quantity"),
             col("l_extendedprice"), col("l_discount"))
-          .observe("bloom_probe_in", count(lit(1)).as("rows_in"))
-        val hit = (0 until BloomHashes).map { r =>
-          val i = col(s"idx_$r")
-          call_function("shiftright", element_at(bf, (i / 32).cast("int") + 1),
-            (i % 32).cast("int")).bitwiseAND(lit(1L)) === lit(1L)
-        }.reduce(_ && _)
-        val filtered = (0 until BloomHashes)
-          .foldLeft(probe)((df, r) => df.withColumn(s"idx_$r", bloomIndex(col("l_orderkey"), r)))
-          .filter(hit)
-          .drop((0 until BloomHashes).map(r => s"idx_$r"): _*)
-          .observe("bloom_probe_out", count(lit(1)).as("rows_out"))
+          .filter(mightContain(bloomFilter(sel, "o_orderkey"), col("l_orderkey")))
         filtered.join(sel, col("l_orderkey") === col("o_orderkey"))
           .groupBy(col("o_orderpriority"))
           .agg(count(lit(1)).as("n_items"),
@@ -375,6 +362,7 @@ object ScaleQueries {
             sum(dec(col("l_extendedprice")) *
               (lit(1).cast(DecimalType(4, 2)) - col("l_discount").cast(DecimalType(4, 2))))
               .cast("double").as("revenue"))
+          .coalesce(1)
           .orderBy(col("o_orderpriority").asc)
       },
       Some("""SELECT o_orderpriority,
@@ -385,7 +373,7 @@ object ScaleQueries {
              |FROM lineitem JOIN orders ON l_orderkey = o_orderkey
              |WHERE o_totalprice > 450000.0
              |GROUP BY o_orderpriority ORDER BY o_orderpriority ASC""".stripMargin),
-      "bloom-filter semi-join reduction: driver-folded bitset build, map-side probe prefilter"),
+      "bloom-filter semi-join reduction: driver-folded sketch build, map-side probe prefilter"),
 
     // ------------------------------------------------------------------
     // q185: canonical-document selection — the dedup APPLICATION step

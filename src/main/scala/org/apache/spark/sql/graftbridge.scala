@@ -31,6 +31,11 @@ package object graftbridge {
   def checkpointedRdd(df: DataFrame): org.apache.spark.rdd.RDD[_] =
     df.queryExecution.logical.asInstanceOf[org.apache.spark.sql.execution.LogicalRDD].rdd
 
+  /** Frees `rdd`'s blocks without blocking: the call `RDD.unpersist`
+    * makes after it warns that a local checkpoint's lineage is gone. */
+  def unpersistRdd(rdd: org.apache.spark.rdd.RDD[_]): Unit =
+    rdd.sparkContext.unpersistRDD(rdd.id, blocking = false)
+
   /** A new directory under `java.io.tmpdir` that Spark's shutdown hook
     * deletes, recursively, when the JVM exits. */
   def shutdownDeletedTempDir(namePrefix: String): java.io.File =

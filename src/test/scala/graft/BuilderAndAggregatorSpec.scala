@@ -70,7 +70,8 @@ class BuilderAndAggregatorSpec extends SparkTestBase {
     val queries = emb.filter(col("vec_id") < 5)
     val exact = Similarity.bruteForceTopK(emb, queries, "vec_id", "embedding", 5)
       .collect().map(r => (r.getLong(0), r.getLong(2))).toSet
-    val ivf = Similarity.ivfTopK(emb, queries, "vec_id", "embedding", "label", 64, 5, nprobe = 4)
+    val ivf = Similarity.ivfTopK(emb, queries, "vec_id", "embedding", "label",
+        Similarity.cellCentroids(emb, "label", "embedding", 64), 5, nprobe = 4)
       .collect()
     assert(ivf.nonEmpty)
     // all sims must be exact cosines (subset of the full ranking universe)

@@ -186,6 +186,36 @@ class ExecutionSettingsSpec extends SparkTestBase {
     } finally pool.shutdown()
   }
 
+  test("an execution frees a lazy checkpoint with no WARN and no cached RDD left") {
+    // RDD.unpersist warns for each local checkpoint it frees that its
+    // lineage is gone: 138 lines in one full test run. The release goes
+    // through the SparkContext call that unpersist makes after the warning.
+    import org.apache.logging.log4j.{Level, LogManager}
+    import org.apache.logging.log4j.core.{LogEvent, Logger}
+    import org.apache.logging.log4j.core.appender.AbstractAppender
+    import org.apache.logging.log4j.core.config.Property
+    val warned = new java.util.concurrent.ConcurrentLinkedQueue[String]
+    val appender = new AbstractAppender("execution-release", null, null, true, Property.EMPTY_ARRAY) {
+      override def append(e: LogEvent): Unit =
+        if (e.getLevel.isMoreSpecificThan(Level.WARN)) warned.add(e.getMessage.getFormattedMessage)
+    }
+    appender.start()
+    val root = LogManager.getRootLogger.asInstanceOf[Logger]
+    root.addAppender(appender)
+    val id = try Graft.execution {
+      val df = spark.range(1000).toDF("x").transform(Graft.checkpoint(eager = false))
+      assert(df.count() == 1000)
+      val id = org.apache.spark.sql.graftbridge.checkpointedRdd(df).id
+      assert(spark.sparkContext.getPersistentRDDs.contains(id))
+      id
+    } finally {
+      root.removeAppender(appender)
+      appender.stop()
+    }
+    assert(!spark.sparkContext.getPersistentRDDs.contains(id))
+    assert(warned.isEmpty, warned)
+  }
+
   /** The entries under the scratch root, but the warehouse. */
   private def scratchEntries: Set[String] = Graft.scratchRoot.list().toSet - "warehouse"
 

@@ -183,12 +183,19 @@ class GraftInstallSpec extends SparkTestBase {
     // and a drop of every persistent RDD of the context also drops the
     // checkpoints a concurrent query still reads. A persist outside an
     // execution stays in the session's CacheManager, so none is left.
+    // The release frees blocks through the bridge's `unpersistRdd`; the
+    // scan allows its definition in the bridge and no other call.
     val graftFile = "src/main/scala/graft/Graft.scala"
-    val materialize = """localCheckpoint\(|\.persist\(|\.cache\(\)|unpersist\(""".r
+    val bridgeFile = "src/main/scala/org/apache/spark/sql/graftbridge.scala"
+    val materialize = """localCheckpoint\(|\.persist\(|\.cache\(\)|unpersist\w*\(""".r
     val all = sourceLines("src/main")
-    val outside = all.filter { case (f, l) => f != graftFile && materialize.findFirstIn(l).isDefined }
+    val hits = all.filter { case (_, l) => materialize.findFirstIn(l).isDefined }
+    val release = (bridgeFile, "rdd.sparkContext.unpersistRDD(rdd.id, blocking = false)")
+    val outside = hits.filter { case (f, l) =>
+      f != graftFile && (f, l) != release && !(f == bridgeFile && l.startsWith("def unpersistRdd(")) }
     assert(outside.isEmpty, s"materialization outside Graft: ${outside.mkString("; ")}")
     assert(all.exists { case (f, l) => f == graftFile && l.contains("df.localCheckpoint(eager)") })
+    assert(hits.contains(release))
     assert(!all.exists(_._2.contains(".persist(")), "a persist in src/main")
     val listing = all.filter(_._2.contains("getPersistentRDDs"))
     assert(listing.isEmpty, s"getPersistentRDDs in src/main: ${listing.mkString("; ")}")

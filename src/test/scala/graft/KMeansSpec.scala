@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 import graft.functions.{Aggregators, KMeans, Similarity}
 
@@ -20,43 +20,29 @@ class KMeansSpec extends SparkTestBase {
       (i.toLong, blob(center, i))
     }
     val df = rows.toDF("vec_id", "embedding")
-    val (assigned, centroids) = KMeans.fit(df, "vec_id", "embedding", k = 2, dims = 8, iterations = 5)
-    val byCluster = assigned.collect()
+    val centroids = KMeans.fit(df, "vec_id", "embedding", k = 2, dims = 8, iterations = 5)
+    val byCluster = KMeans.assign(df, "vec_id", "embedding", centroids).collect()
       .groupBy(_.getInt(1)).map { case (c, rs) => c -> rs.map(_.getLong(0) % 2).toSet }
     // each cluster must be pure: all-even ids or all-odd ids
     assert(byCluster.size == 2)
     assert(byCluster.values.forall(_.size == 1))
-    assert(centroids.count() == 2)
+    assert(centroids.map(_.getInt(0)) == Seq(0, 1))
   }
 
   test("k-means is deterministic across runs") {
     val emb = graft.sources.Tables.embeddings(spark, sf)
-    def run() = KMeans.fit(emb, "vec_id", "embedding", k = 4, dims = 64, iterations = 3)
-      ._1.collect().map(r => r.getLong(0) -> r.getInt(1)).toMap
+    def run() = clusters(KMeans.assign(emb, "vec_id", "embedding",
+      KMeans.fit(emb, "vec_id", "embedding", k = 4, dims = 64, iterations = 3)))
     assert(run() == run())
-  }
-
-  test("k-means plan depth is constant in iteration count (lineage truncated)") {
-    val emb = graft.sources.Tables.embeddings(spark, sf)
-    def depth(df: org.apache.spark.sql.DataFrame): Int = {
-      def d(p: org.apache.spark.sql.catalyst.trees.TreeNode[_]): Int =
-        if (p.children.isEmpty) 1
-        else 1 + p.children.map(c => d(c.asInstanceOf[org.apache.spark.sql.catalyst.trees.TreeNode[_]])).max
-      d(df.queryExecution.analyzed)
-    }
-    val d2 = depth(KMeans.fit(emb, "vec_id", "embedding", k = 4, dims = 64, iterations = 2)._2)
-    val d8 = depth(KMeans.fit(emb, "vec_id", "embedding", k = 4, dims = 64, iterations = 8)._2)
-    assert(d2 == d8, s"centroid plan depth grew with iterations: $d2 -> $d8")
-    assert(d8 <= 3, s"centroid plan not truncated (depth $d8)")
   }
 
   test("IVF over learned k-means cells returns true cosines") {
     val emb = graft.sources.Tables.embeddings(spark, sf)
-    val (assigned, _) = KMeans.fit(emb, "vec_id", "embedding", k = 4, dims = 64, iterations = 2)
-    val cells = emb.join(assigned, "vec_id")
+    val centroids = KMeans.fit(emb, "vec_id", "embedding", k = 4, dims = 64, iterations = 2)
+    val cells = emb.join(KMeans.assign(emb, "vec_id", "embedding", centroids), "vec_id")
     val queries = cells.filter(col("vec_id") < 3)
     val out = Similarity.ivfTopK(cells, queries, "vec_id", "embedding", "cluster",
-      dims = 64, k = 3, nprobe = 2).collect()
+      centroids, k = 3, nprobe = 2).collect()
     assert(out.nonEmpty)
     val truth = Similarity.bruteForceTopK(emb, emb.filter(col("vec_id") < 3),
         "vec_id", "embedding", Int.MaxValue)
@@ -65,8 +51,8 @@ class KMeansSpec extends SparkTestBase {
   }
 
   /** Centroid float bits by cluster id. */
-  private def bits(centroids: DataFrame): Map[Int, Seq[Int]] =
-    centroids.collect().map(r => r.getInt(0) ->
+  private def bits(centroids: Seq[Row]): Map[Int, Seq[Int]] =
+    centroids.map(r => r.getInt(0) ->
       r.getSeq[Float](1).map(java.lang.Float.floatToRawIntBits).toSeq).toMap
 
   private def clusters(assigned: DataFrame): Map[Long, Any] =
@@ -78,9 +64,9 @@ class KMeansSpec extends SparkTestBase {
   test("k-means job budget: one seed job plus one job per Lloyd step, none to assign") {
     val emb = graft.sources.Tables.embeddings(spark, sf)
     for (n <- Seq(0, 3)) {
-      var centroids: DataFrame = null
+      var centroids: Seq[Row] = null
       val fitJobs = jobsStartedBy {
-        centroids = KMeans.fit(emb, "vec_id", "embedding", k = 8, dims = 64, iterations = n)._2
+        centroids = KMeans.fit(emb, "vec_id", "embedding", k = 8, dims = 64, iterations = n)
       }
       assert(fitJobs == 1 + n, s"fit(iterations = $n) started $fitJobs jobs")
       val assignJobs = jobsStartedBy { KMeans.assignAll(emb, "embedding", centroids) }
@@ -90,14 +76,14 @@ class KMeansSpec extends SparkTestBase {
 
   test("one driver Lloyd step matches the relational step bit for bit") {
     val emb = graft.sources.Tables.embeddings(spark, sf)
-    val seeds = KMeans.fit(emb, "vec_id", "embedding", k = 8, dims = 64, iterations = 0)._2
+    val seeds = KMeans.fit(emb, "vec_id", "embedding", k = 8, dims = 64, iterations = 0)
     val relational = bits(KMeans.assignAll(emb, "embedding", seeds)
       .groupBy(col("cluster"))
       .agg(Aggregators.vectorCentroid(col("embedding"), 64).as("c"))
-      .select(col("cluster"), col("c").cast("array<float>")))
+      .select(col("cluster"), col("c").cast("array<float>")).collect().toSeq)
     // every seed captures rows, so no cluster falls back to its seed
     assert(relational.size == 8)
-    val step = KMeans.fit(emb, "vec_id", "embedding", k = 8, dims = 64, iterations = 1)._2
+    val step = KMeans.fit(emb, "vec_id", "embedding", k = 8, dims = 64, iterations = 1)
     assert(bits(step) == relational)
   }
 
@@ -106,10 +92,11 @@ class KMeansSpec extends SparkTestBase {
     val one = emb.coalesce(1)
     val four = emb.repartition(4, col("vec_id"))
     assert(one.rdd.getNumPartitions == 1 && four.rdd.getNumPartitions == 4)
-    val (a1, c1) = KMeans.fit(one, "vec_id", "embedding", k = 8, dims = 64, iterations = 3)
-    val (a4, c4) = KMeans.fit(four, "vec_id", "embedding", k = 8, dims = 64, iterations = 3)
+    val c1 = KMeans.fit(one, "vec_id", "embedding", k = 8, dims = 64, iterations = 3)
+    val c4 = KMeans.fit(four, "vec_id", "embedding", k = 8, dims = 64, iterations = 3)
     assert(bits(c1) == bits(c4))
-    assert(clusters(a1) == clusters(a4))
+    assert(clusters(KMeans.assign(one, "vec_id", "embedding", c1)) ==
+      clusters(KMeans.assign(four, "vec_id", "embedding", c4)))
   }
 
   test("k-means: a cluster that captures no rows keeps its seed") {
@@ -120,7 +107,7 @@ class KMeansSpec extends SparkTestBase {
     // identically and cluster 1 loses every tie to cluster 0
     val rows = (1 until 30).map(i => (i.toLong, blob(if (i % 2 == 0) c1 else c2, i)))
     val df = ((0L, rows.head._2) +: rows).toDF("vec_id", "embedding")
-    val got = bits(KMeans.fit(df, "vec_id", "embedding", k = 3, dims = 8, iterations = 1)._2)
+    val got = bits(KMeans.fit(df, "vec_id", "embedding", k = 3, dims = 8, iterations = 1))
     assert(got(1) == rows.head._2.toSeq.map(java.lang.Float.floatToRawIntBits))
     assert(got(0) != got(1), "cluster 0 should have moved off the shared seed")
   }
@@ -130,11 +117,11 @@ class KMeansSpec extends SparkTestBase {
     val withNull = emb.select(col("vec_id"), col("embedding"))
       .unionByName(emb.agg((max(col("vec_id")) + 1).as("vec_id"))
         .select(col("vec_id"), lit(null).cast("array<float>").as("embedding")))
-    val (plain, cPlain) = KMeans.fit(emb, "vec_id", "embedding", k = 8, dims = 64, iterations = 3)
-    val (nulled, cNulled) = KMeans.fit(withNull, "vec_id", "embedding", k = 8, dims = 64, iterations = 3)
+    val cPlain = KMeans.fit(emb, "vec_id", "embedding", k = 8, dims = 64, iterations = 3)
+    val cNulled = KMeans.fit(withNull, "vec_id", "embedding", k = 8, dims = 64, iterations = 3)
     assert(bits(cNulled) == bits(cPlain))
-    val got = clusters(nulled)
-    assert(got.size == clusters(plain).size + 1)
+    val got = clusters(KMeans.assign(withNull, "vec_id", "embedding", cNulled))
+    assert(got.size == clusters(KMeans.assign(emb, "vec_id", "embedding", cPlain)).size + 1)
     assert(got.count(_._2 == null) == 1)
   }
 
@@ -200,7 +187,8 @@ class KMeansSpec extends SparkTestBase {
       // 11 non-null cells: a partial probe, all of them, and more than all
       for (nprobe <- Seq(3, want.size, want.size + 5)) {
         val got = Similarity.ivfTopK(input, queries, "vec_id", "embedding", "label",
-          dims = 64, k = 5, nprobe = nprobe).collect().toSet
+          Similarity.cellCentroids(input, "label", "embedding", 64), k = 5, nprobe = nprobe)
+          .collect().toSet
         assert(got.nonEmpty)
         assert(got == relationalIvf(input, queries, nprobe).collect().toSet, s"nprobe $nprobe")
       }

@@ -1,5 +1,6 @@
 package graft
 
+import java.nio.file.Paths
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.SparkPlan
 import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
@@ -279,26 +280,106 @@ class PlanShapeSpec extends SparkTestBase {
     }
   }
 
-  test("q177 bloom prefilter cuts probe rows before the join, keeps every match") {
-    // observe() metrics ride the real execution: rows_in = full lineitem,
-    // rows_out = survivors of the map-side bit tests. The cut must be
-    // large (selective build side) and lossless (n_items over the bloom
-    // path == n_items over the plain join — no false negatives, ever).
-    val df = SparkEntry.queries("q177_bloom_semijoin")(spark, sf)
+  /** q177 collected at `dir`: its rows, its final plan, and the probe's
+    * SQL metrics — rows_in is the lineitem scan's `numOutputRows`, rows_out
+    * that of the `might_contain` Filter above it (Catalyst infers a second
+    * one onto the orders side, which passes every build row).
+    */
+  private case class Q177Run(rows: Array[org.apache.spark.sql.Row], plan: SparkPlan,
+      in: Long, out: Long)
+
+  private def runQ177(dir: String): Q177Run = {
+    import org.apache.spark.sql.catalyst.expressions.BloomFilterMightContain
+    import org.apache.spark.sql.execution.{FileSourceScanExec, FilterExec}
+    val df = SparkEntry.queries("q177_bloom_semijoin")(spark, dir)
     val rows = df.collect()
-    val metrics = df.queryExecution.observedMetrics
-    val in = metrics("bloom_probe_in").getAs[Long]("rows_in")
-    val out = metrics("bloom_probe_out").getAs[Long]("rows_out")
+    val plan = df.queryExecution.executedPlan
+    def isLineitemScan(p: SparkPlan) = p match {
+      case s: FileSourceScanExec => s.output.exists(_.name == "l_orderkey")
+      case _ => false
+    }
+    val nodes = finalNodes(plan)
+    val scans = nodes.filter(isLineitemScan)
+    val filters = nodes.collect {
+      case f: FilterExec if f.condition.exists(_.isInstanceOf[BloomFilterMightContain]) => f
+    }
+    val probes = filters.filter(finalNodes(_).exists(isLineitemScan))
+    assert(scans.size == 1 && probes.size == 1, plan.treeString)
+    def rowsOut(p: SparkPlan) = p.metrics("numOutputRows").value
+    info(filters.map(rowsOut).mkString("might_contain filters pass ", ", ", " rows"))
+    Q177Run(rows, plan, rowsOut(scans.head), rowsOut(probes.head))
+  }
+
+  /** The lineitem rows at `dir` that join q177's build side. */
+  private def q177Matches(dir: String): Long = {
+    val sel = sources.Tables.orders(spark, dir).filter(col("o_totalprice") > 450000.0)
+    sources.Tables.lineitem(spark, dir).join(sel, col("l_orderkey") === col("o_orderkey")).count()
+  }
+
+  test("q177 bloom prefilter cuts probe rows before the join, keeps every match") {
+    // the SQL metrics of the real execution: rows_in = full lineitem,
+    // rows_out = survivors of the map-side probe. The cut must be large
+    // (selective build side) and lossless (n_items over the bloom path ==
+    // n_items over the plain join — no false negatives, ever).
+    val run = runQ177(sf)
+    val (in, out) = (run.in, run.out)
     assert(in > 0 && out < in / 2,
       s"bloom prefilter did not reduce probe volume: $in -> $out")
-    val nBloom = rows.map(_.getAs[Long]("n_items")).sum
-    val sel = sources.Tables.orders(spark, sf).filter(col("o_totalprice") > 450000.0)
-    val nPlain = sources.Tables.lineitem(spark, sf)
-      .join(sel, col("l_orderkey") === col("o_orderkey")).count()
+    val nBloom = run.rows.map(_.getAs[Long]("n_items")).sum
+    val nPlain = q177Matches(sf)
     assert(nBloom == nPlain, s"bloom path lost rows: $nBloom != $nPlain")
     // FPR sanity: survivors beyond true matches are bloom false positives;
-    // with m=65536,k=3 over ~1.5k keys they should be a tiny fraction
+    // with m=65536,k=3 over ~150 keys they should be a tiny fraction
     assert(out - nPlain <= in / 100, s"false-positive volume too high: $out vs $nPlain")
+  }
+
+  test("q177 at sf0.1 passes no more false positives than m = 65536, k = 3 predicts") {
+    // 14,957 build keys fill 49.6% of the bits, so about 12% of the
+    // non-matching lineitem rows pass: (1 - e^(-3n/m))^3, with 25% slack
+    val dir = Paths.get(sf).resolveSibling("sf0.1").toString
+    val run = runQ177(dir)
+    val n = sources.Tables.orders(spark, dir).filter(col("o_totalprice") > 450000.0).count()
+    val matches = q177Matches(dir)
+    assert(run.rows.map(_.getAs[Long]("n_items")).sum == matches)
+    val fpr = math.pow(1 - math.exp(-3.0 * n / 65536), 3)
+    val falsePositives = run.out - matches
+    info(s"n $n keys: ${run.out} of ${run.in} lineitem rows passed, $matches match")
+    assert(falsePositives >= 0 && falsePositives <= fpr * 1.25 * (run.in - matches),
+      s"n $n: ${run.out} of ${run.in} rows passed, $matches match (expected FPR $fpr)")
+  }
+
+  test("q177 probes without observe(): no CollectMetricsExec, plan description under 80k") {
+    import org.apache.spark.sql.execution.CollectMetricsExec
+    val store = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+      .sharedState.statusStore
+    val before = store.executionsList().map(_.executionId).maxOption.getOrElse(-1L)
+    val run = runQ177(sf)
+    assert(!finalNodes(run.plan).exists(_.isInstanceOf[CollectMetricsExec]), run.plan.treeString)
+    org.apache.spark.ListenerBusDrain(spark.sparkContext)
+    val recorded = store.executionsList().filter(_.executionId > before)
+    assert(recorded.nonEmpty)
+    // the sketch's 8 KB are a binary literal in the plan; the 2048-long
+    // bitset literal behind three index columns it replaced recorded
+    // 276,146 chars
+    info(recorded.map(_.physicalPlanDescription.length).mkString("plan description chars: ", ", ", ""))
+    recorded.foreach(e => assert(e.physicalPlanDescription.length < 80000,
+      s"execution ${e.executionId}: ${e.physicalPlanDescription.length} chars"))
+  }
+
+  test("q177 and q68 sort their bounded results in one task: no range exchange") {
+    import org.apache.spark.sql.catalyst.plans.physical.RangePartitioning
+    import org.apache.spark.sql.execution.SortExec
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    for (name <- Seq("q177_bloom_semijoin", "q68_ivf_kmeans")) {
+      val df = SparkEntry.queries(name)(spark, sf)
+      df.collect()
+      val nodes = finalNodes(df.queryExecution.executedPlan)
+      assert(nodes.exists { case s: SortExec => s.global; case _ => false }, s"$name: no global sort")
+      val ranged = nodes.collect {
+        case e: ShuffleExchangeExec if e.outputPartitioning.isInstanceOf[RangePartitioning] => e
+      }
+      assert(ranged.isEmpty, s"$name: ${df.queryExecution.executedPlan.treeString}")
+    }
   }
 
   test("q209/q212 shard walks: payload bytes never cross an exchange; samples pre-aggregate map-side") {
@@ -658,23 +739,24 @@ class PlanShapeSpec extends SparkTestBase {
     assert(!plan.exists(_.output.exists(_.name == "_pid")), plan.treeString)
   }
 
-  test("q177's driver-folded Bloom words equal the relational bit_or words") {
-    import graft.queries.ScaleQueries.{BloomBits, BloomHashes, bloomWords}
+  test("q177's Bloom sketch: 1 and 4 partitions fold the same bytes, k = 3, no key lost") {
+    import graft.queries.ScaleQueries.bloomFilter
     val sel = sources.Tables.orders(spark, sf).filter(col("o_totalprice") > 450000.0)
-    val nWords = (BloomBits / 32).toInt
-    // the build as it ran before the fold moved to the driver
-    val words = sel
-      .select(col("o_orderkey"), explode(array((0 until BloomHashes).map(lit(_)): _*)).as("r"))
-      .select(pmod(xxhash64(col("o_orderkey"), col("r")), lit(BloomBits)).as("idx"))
-      .select((col("idx") / 32).cast("long").as("word_id"),
-        expr("shiftleft(1L, CAST(idx % 32 AS INT))").as("contrib"))
-      .groupBy(col("word_id")).agg(expr("bit_or(contrib)").as("w"))
-    val relational = spark.range(nWords).select(col("id").as("word_id"))
-      .join(words, Seq("word_id"), "left")
-      .select(col("word_id"), coalesce(col("w"), lit(0L)).as("w"))
-      .collect().sortBy(_.getLong(0)).map(_.getLong(1))
-    assert(relational.count(_ != 0L) > 100)
-    for (input <- Seq(sel.coalesce(1), sel.repartition(4)))
-      assert(bloomWords(input, "o_orderkey").toSeq == relational.toSeq)
+    def bytes(bf: org.apache.spark.util.sketch.BloomFilter): Array[Byte] = {
+      val o = new java.io.ByteArrayOutputStream
+      bf.writeTo(o)
+      o.toByteArray
+    }
+    val four = sel.repartition(4)
+    assert(four.rdd.getNumPartitions == 4)
+    val bf = bloomFilter(sel.coalesce(1), "o_orderkey")
+    assert(bytes(bloomFilter(four, "o_orderkey")).sameElements(bytes(bf)))
+    assert(bf.bitSize() == 65536)
+    // the serialized header opens with the version, then the hash count
+    val header = new java.io.DataInputStream(new java.io.ByteArrayInputStream(bytes(bf)))
+    header.readInt()
+    assert(header.readInt() == 3)
+    val keys = sel.select(col("o_orderkey")).collect().map(_.getLong(0))
+    assert(keys.length > 10 && keys.forall(bf.mightContainLong))
   }
 }
